@@ -11,29 +11,17 @@ from engine.core import ORACLES, QUERIES, ROWS_ONLY  # noqa: F401
 # Import order mirrors SURVEY.md §2 sections; each import registers keys.
 from engine import io  # noqa: F401  §2.1
 from engine import aggregates  # noqa: F401  §2.4
-
-_OPTIONAL_MODULES = [
-    "relational",  # §2.2, §2.6, §2.7
-    "joins",  # §2.3
-    "windows",  # §2.5
-    "functions",  # §2.8
-    "text",  # §2.9
-    "dedup",  # §2.9
-    "similarity",  # §2.9
-    "events",  # §2.10
-    "streaming",  # §2.10
-    "udfs",  # §2.11
-    "multimodal",  # beyond §2: binary media columns (north-star mandate)
-    "sketches",  # beyond §2: theta/KLL DataSketches natives (Spark 4.1)
-    "features",  # beyond §2: training-data feature engineering
-    "composite",  # beyond §2: TPC-H-shaped end-to-end workloads + sketches
-]
-
-import importlib as _importlib
-
-for _m in _OPTIONAL_MODULES:
-    try:
-        _importlib.import_module(f"engine.{_m}")
-    except ModuleNotFoundError as _e:
-        if f"engine.{_m}" not in str(_e):
-            raise  # real dependency failure inside the module — surface it
+from engine import relational  # noqa: F401  §2.2, §2.6, §2.7
+from engine import joins  # noqa: F401  §2.3
+from engine import windows  # noqa: F401  §2.5
+from engine import functions  # noqa: F401  §2.8
+from engine import text  # noqa: F401  §2.9
+from engine import dedup  # noqa: F401  §2.9
+from engine import similarity  # noqa: F401  §2.9
+from engine import events  # noqa: F401  §2.10
+from engine import streaming  # noqa: F401  §2.10
+from engine import udfs  # noqa: F401  §2.11
+from engine import multimodal  # noqa: F401  beyond §2: binary media columns
+from engine import sketches  # noqa: F401  beyond §2: theta/KLL DataSketches
+from engine import features  # noqa: F401  beyond §2: training-data features
+from engine import composite  # noqa: F401  beyond §2: TPC-H-shaped workloads

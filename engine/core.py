@@ -48,6 +48,7 @@ def query(key: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 
 import contextlib
+import threading
 
 
 @contextlib.contextmanager
@@ -169,3 +170,52 @@ def staged_build_once(base: str, name: str, sf_dir: str, build) -> str:
     with open(marker, "w") as f:
         f.write(fp)
     return d
+
+
+_SESSION_MEMO: dict = {}
+_SESSION_MEMO_LOCK = threading.RLock()
+
+
+def session_memo(spark: SparkSession, name: str, sf_dir: str, build):
+    """Session-lifetime memo for an intermediate that several keys
+    share (a trained model, a routing diamond, a graph partition) — the
+    one way to hold frames across calls, so a long-lived session keeps
+    ONE persisted copy instead of one per consuming key.
+
+    ``build()`` returns ``(value, frames)``: ``frames`` are the
+    persisted DataFrames behind ``value`` in lineage order, shallow to
+    deep (``[]`` for a driver-side value).  The store is keyed on
+    (applicationId, name, sf_dir) — never ``id(spark)``, which CPython
+    reuses after GC — and entries of other applications are dropped.
+
+    On a miss the deepest frame is counted once: a lazy persist that
+    feeds several consumers gets raced and computes its subtree per
+    consumer (r12 rule), and the deepest count fills the shallower
+    caches through lineage.  On a hit every frame whose storage level
+    was dropped (``spark.catalog.clearCache()``, mandated before
+    plan-string tests) is re-persisted and the deepest LOST one counted
+    — counting a deeper intact frame would read through its cache and
+    leave the shallower lost one lazy (r16 rule).  Calls hold a lock,
+    so threads sharing a session build each entry once."""
+    app = spark.sparkContext.applicationId
+    with _SESSION_MEMO_LOCK:
+        for stale in [k for k in _SESSION_MEMO if k[0] != app]:
+            del _SESSION_MEMO[stale]
+        key = (app, name, sf_dir)
+        hit = _SESSION_MEMO.get(key)
+        if hit is None:
+            value, frames = build()
+            if frames:
+                frames[-1].count()
+            _SESSION_MEMO[key] = (value, frames)
+            return value
+        value, frames = hit
+        lost = [
+            df for df in frames
+            if not (df.storageLevel.useMemory or df.storageLevel.useDisk)
+        ]
+        for df in lost:
+            df.persist()
+        if lost:
+            lost[-1].count()
+        return value

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.core import query, scoped_shuffle_partitions
+from engine.core import query, scoped_shuffle_partitions, session_memo
 from engine.io import load
 
 _COPY_OFFSET = 100_000
@@ -2863,32 +2863,20 @@ _SSIM_CTES_SQL = f"""toks AS MATERIALIZED (
     )"""
 
 
-_SSIM_MEMO: dict = {}
-
-
 def _selfsim_spans(spark: SparkSession, sf_dir: str):
     """(toks, spans) frames of the self-sim span chain — the Spark twin
     of :data:`_SSIM_CTES_SQL`, shared by the locate and scrub keys.
     toks = (doc_id, t token-array); spans = maximal >= 12-token
     verbatim cross-doc runs (doc_a < doc_b, diag, a_start, span_len).
-    The df-gated anchor frame persists and eagerly materializes before
-    feeding both sides of its self-join (r12 race rule).  Memoized per
-    (applicationId, sf_dir) with a live storageLevel probe (the
-    _ivf_fixed_ranked discipline) so the locate and scrub keys share
-    one persisted anchor frame per session."""
-    from engine.text import _tokens as _text_tokens
+    The df-gated anchor frame feeds both sides of its self-join; it is
+    persisted and materialized once per session through
+    :func:`engine.core.session_memo`."""
+    return session_memo(spark, "selfsim_spans", sf_dir,
+                        lambda: _build_selfsim_spans(spark, sf_dir))
 
-    app = spark.sparkContext.applicationId
-    memo_key = (app, sf_dir)
-    for stale in [k for k in list(_SSIM_MEMO) if k[0] != app]:
-        _SSIM_MEMO.pop(stale, None)
-    hit = _SSIM_MEMO.get(memo_key)
-    if hit is not None:
-        value, g_c = hit
-        if not (g_c.storageLevel.useMemory or g_c.storageLevel.useDisk):
-            g_c.persist()
-            g_c.count()
-        return value
+
+def _build_selfsim_spans(spark: SparkSession, sf_dir: str):
+    from engine.text import _tokens as _text_tokens
 
     d = load(spark, sf_dir, "documents")
     toks = d.select("doc_id", _text_tokens(F.col("text")).alias("t"))
@@ -2916,7 +2904,6 @@ def _selfsim_spans(spark: SparkSession, sf_dir: str):
         .drop("df")
         .persist()
     )
-    g.count()  # eager: g feeds BOTH sides of the self-join below
     a = g.select(
         F.col("doc_id").alias("doc_a"), F.col("pos").alias("a_pos"), "gram"
     )
@@ -2941,9 +2928,7 @@ def _selfsim_spans(spark: SparkSession, sf_dir: str):
         )
         .filter(F.col("span_len") >= _SSIM_MIN)
     )
-    value = (toks, spans)
-    _SSIM_MEMO[memo_key] = (value, g)
-    return value
+    return (toks, spans), [g]
 
 
 @query(

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.core import query
+from engine.core import query, session_memo
 from engine.io import load
 
 
@@ -817,47 +817,20 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5)
 
 
-_IVF_RANKED_MEMO: dict[tuple[str, str], DataFrame] = {}
-_IVF_RANKED_EAGER: set[tuple[str, str]] = set()
-
-
-def _ivf_fixed_ranked(spark: SparkSession, sf_dir: str,
-                      eager: bool = False) -> DataFrame:
+def _ivf_fixed_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fixed-IVF routing diamond shared by ``sim_ivf_fixed_topk``,
-    ``sim_ivfpq_adc_topk`` and their tests: pinned 6-decimal cosine
-    against the 16 lowest-vec_id centroids, cid tiebreak, rn <= 2
-    probes, persisted (extracted r15 — the block existed in
+    ``sim_ivfpq_adc_topk``, ``sim_hard_negative_ivf`` and their tests:
+    pinned 6-decimal cosine against the 16 lowest-vec_id centroids, cid
+    tiebreak, rn <= 2 probes (extracted r15 — the block existed in
     three hand-copies whose pinning constant / tiebreak / probe count
-    could silently desynchronize).  ``eager`` materializes the cache
-    before multi-consumer fan-out (the ivfpq key reads it from three
-    consumers including a bounded artifact collect).
+    could silently desynchronize).  Persisted and materialized once per
+    session through :func:`engine.core.session_memo`: every consumer
+    fans it out (inverted lists, probes, a bounded artifact collect)."""
+    return session_memo(spark, "ivf_fixed_ranked", sf_dir,
+                        lambda: _build_ivf_fixed_ranked(spark, sf_dir))
 
-    Memoized per (applicationId, sf_dir) — NOT id(spark), which CPython
-    reuses after GC — so a full parity/bench session registers ONE
-    cached copy of the broadcast-16 crossJoin output instead of one per
-    consuming key (r15 ADVICE: three consumers each persisted their own
-    identical plan and never unpersisted).  The memo probes the frame's
-    LIVE storage level before serving it: a spark.catalog.clearCache()
-    (mandated before plan-string tests, r6 rule) unregisters the cache
-    out from under the memo — the entry then re-persists and drops its
-    eager mark so the next eager caller re-materializes instead of
-    silently racing an uncached diamond.  Entries from other
-    applicationIds are pruned (dead lineages in long-lived processes)."""
-    app = spark.sparkContext.applicationId
-    memo_key = (app, sf_dir)
-    for stale in [k for k in _IVF_RANKED_MEMO if k[0] != app]:
-        _IVF_RANKED_MEMO.pop(stale, None)
-        _IVF_RANKED_EAGER.discard(stale)
-    cached = _IVF_RANKED_MEMO.get(memo_key)
-    if cached is not None:
-        lvl = cached.storageLevel
-        if not (lvl.useMemory or lvl.useDisk):  # clearCache() dropped it
-            cached.persist()
-            _IVF_RANKED_EAGER.discard(memo_key)
-        if eager and memo_key not in _IVF_RANKED_EAGER:
-            cached.count()
-            _IVF_RANKED_EAGER.add(memo_key)
-        return cached
+
+def _build_ivf_fixed_ranked(spark: SparkSession, sf_dir: str):
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # Norms hoisted to per-ROW projections before the crossJoin (r17
     # opt): _norm is an interpreted ~128-lambda HOF, and inside the
@@ -886,11 +859,7 @@ def _ivf_fixed_ranked(spark: SparkSession, sf_dir: str,
         .filter(F.col("crn") <= _IVF_PROBES)
         .persist()
     )
-    _IVF_RANKED_MEMO[memo_key] = ranked
-    if eager:
-        ranked.count()
-        _IVF_RANKED_EAGER.add(memo_key)
-    return ranked
+    return ranked, [ranked]
 
 
 @query(
@@ -2922,44 +2891,28 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LPA_MEMO: dict = {}
-
-
 def _lpa_partition(spark: SparkSession, sf_dir: str):
     """(und, labels) — the undirected block-cosine edge stream (u, v)
     and the _LPA_ITERS-round synchronous-LPA partition (node, label),
     the Spark twin of :func:`_lpa_ctes`'s ``und``/``lab`` CTEs.  Shared
-    by graph_label_propagation and graph_modularity_score so the
-    partition the quality metric scores IS the partition the detection
-    key emits — SHARED BY MEMO, not by re-computation: without it each
-    key builds, persists and eagerly materializes its own identical
-    ``und`` and never unpersists (the r15 _ivf_fixed_ranked ADVICE
-    class; r17 review).  Memoized per (applicationId, sf_dir) with the
-    live storageLevel probe: clearCache() under the memo re-persists +
-    re-counts instead of racing an uncached diamond.  ``und`` returns
-    persisted AND materialized (round 1's join consumes it on both
-    sides — the r12 lazy-persist-race class; measured sf0.1, 4 runs
-    one session: lazy [9.48, 2.29, 1.76, 1.58] vs eager [9.03, 1.91,
-    1.58, 1.53] — eager wins every run)."""
-    app = spark.sparkContext.applicationId
-    memo_key = (app, sf_dir)
-    for stale in [k for k in list(_LPA_MEMO) if k[0] != app]:
-        _LPA_MEMO.pop(stale, None)
-    hit = _LPA_MEMO.get(memo_key)
-    if hit is not None:
-        und_c, labels_c = hit
-        lvl = und_c.storageLevel
-        if not (lvl.useMemory or lvl.useDisk):  # clearCache() dropped it
-            und_c.persist()
-            und_c.count()
-        return und_c, labels_c
+    by graph_label_propagation and graph_modularity_score through
+    :func:`engine.core.session_memo`, so the partition the quality
+    metric scores IS the partition the detection key emits and the
+    session holds one persisted ``und`` (r17 review).  ``und`` returns
+    persisted AND materialized: round 1's join consumes it on both
+    sides (measured sf0.1, 4 runs one session: lazy [9.48, 2.29, 1.76,
+    1.58] vs eager [9.03, 1.91, 1.58, 1.53] — eager wins every run)."""
+    return session_memo(spark, "lpa_partition", sf_dir,
+                        lambda: _build_lpa_partition(spark, sf_dir))
+
+
+def _build_lpa_partition(spark: SparkSession, sf_dir: str):
     edges = _cos_block_edges(spark, sf_dir)
     und = (
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .unionAll(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
         .persist()
     )
-    und.count()
     labels = und.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -2972,8 +2925,7 @@ def _lpa_partition(spark: SparkSession, sf_dir: str):
         labels = counted.groupBy("v").agg(
             F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("m")
         ).select(F.col("v").alias("node"), (-F.col("m.nl")).alias("label"))
-    _LPA_MEMO[memo_key] = (und, labels)
-    return und, labels
+    return (und, labels), [und]
 
 
 @query(
@@ -4055,9 +4007,9 @@ def sim_ivfpq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = e.filter(F.col("vec_id") < _IVF_K).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("ec")
     )
-    # shared routing diamond, eager: three consumers (inverted lists,
-    # probes, codebook artifact collect) must read the cache
-    ranked = _ivf_fixed_ranked(spark, sf_dir, eager=True)
+    # shared routing diamond: inverted lists, probes and the codebook
+    # artifact collect all read its cache
+    ranked = _ivf_fixed_ranked(spark, sf_dir)
     inv = ranked.filter(F.col("crn") == 1).select(
         "vec_id", F.col("cid").alias("list_id"), "embedding"
     )
@@ -4530,7 +4482,7 @@ def sim_hard_negative_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n2").alias("nq2"),
         )
     )
-    ranked = _ivf_fixed_ranked(spark, sf_dir, eager=True)  # inv AND probes
+    ranked = _ivf_fixed_ranked(spark, sf_dir)  # inv AND probes
     inv = ranked.filter(F.col("crn") == 1).select(
         F.col("vec_id").alias("cand_id"), F.col("cid").alias("list_id")
     )
@@ -4962,9 +4914,6 @@ def sim_pca_power_topcomp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(out)
 
 
-_PCA_DIR_MEMO: dict = {}
-
-
 def _pca_topdir(spark: SparkSession, sf_dir: str):
     """(v, ray_num, ray_den, trace) — the _PCA_ITERS-round
     power-iteration state over the exact quantized Gram matrix, the
@@ -4978,20 +4927,18 @@ def _pca_topdir(spark: SparkSession, sf_dir: str):
     toward zero on both engines (np.fix here, DuckDB // there — the
     r7 sign rule); v' = floor(s*64/sqrt(sum s^2) + 0.5) with sum s^2
     an EXACT long, so the sqrt+divide is one deterministic IEEE op per
-    component.  Memoized per (applicationId, sf_dir) — plain ints, no
-    persisted frames, so no storageLevel revalidation is needed
-    (unlike _nb_model / _ivf_fixed_ranked)."""
+    component.  Held by :func:`engine.core.session_memo` as plain ints
+    (no persisted frames)."""
+    return session_memo(spark, "pca_topdir", sf_dir,
+                        lambda: _build_pca_topdir(spark, sf_dir))
+
+
+def _build_pca_topdir(spark: SparkSession, sf_dir: str):
     import numpy as np
     import pandas as pd
 
     from engine.core import collect_model_artifact
 
-    app = spark.sparkContext.applicationId
-    memo_key = (app, sf_dir)
-    for stale in [k for k in list(_PCA_DIR_MEMO) if k[0] != app]:
-        _PCA_DIR_MEMO.pop(stale, None)
-    if memo_key in _PCA_DIR_MEMO:
-        return _PCA_DIR_MEMO[memo_key]
     e = load(spark, sf_dir, "embeddings").select("embedding")
 
     def gram(batches):
@@ -5049,9 +4996,7 @@ def _pca_topdir(spark: SparkSession, sf_dir: str):
     # review).  2^49 < 2^52, so float exactness is implied.
     assert abs(num) < 2**63 // 10000, "ray_num would overflow oracle BIGINT"
     assert den * trace < 2**62
-    value = ([int(x) for x in v], int(num), int(den), int(trace))
-    _PCA_DIR_MEMO[memo_key] = value
-    return value
+    return ([int(x) for x in v], int(num), int(den), int(trace)), []
 
 
 @query(
@@ -5092,7 +5037,7 @@ def sim_pca_project_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the direction is a 64-int literal folded into the
     projection expression (~190 interpreted lambda evals/row, under
     the 200 Arrow threshold) — the scan is map-only, no shuffle, no
-    Python; the training pass is shared and memoized."""
+    Python; the training pass is shared through core.session_memo."""
     v, _, den, _ = _pca_topdir(spark, sf_dir)
     vcol = F.array(*[F.lit(int(x)).cast("long") for x in v])
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")

@@ -21,7 +21,6 @@ executors and are bounded by the watermark horizon, not by stream length.
 from __future__ import annotations
 
 import contextlib
-import itertools
 import os
 import shutil
 import tempfile
@@ -31,8 +30,6 @@ from pyspark.sql import functions as F
 
 from engine.core import query, scoped_shuffle_partitions
 from engine.io import configure, load
-
-_SINK_IDS = itertools.count()
 
 # Stateful-streaming parallelism is fixed by spark.sql.shuffle.partitions
 # at query start (recorded in the checkpoint).  The staged sources replay
@@ -161,31 +158,32 @@ def _events_stream(
     return sdf
 
 
-def _run_to_memory(agg: DataFrame, mode: str, name: str) -> str:
-    qname = f"{name}_{next(_SINK_IDS)}"
+def _run_to_memory(agg: DataFrame, mode: str, name: str):
+    """Drain ``agg`` (availableNow) into the memory sink named ``name``
+    and return the terminated StreamingQuery.  The name is fixed per
+    key, so a repeat call replaces the previous temp view and its
+    checkpoint: a long-lived session keeps at most one sink and one
+    checkpoint per key.  A frame a caller already holds from an
+    earlier call keeps reading the sink it was resolved against."""
     with _stream_shuffle(agg.sparkSession):
         q = (
             agg.writeStream.format("memory")
-            .queryName(qname)
+            .queryName(name)
             # Explicit checkpoint on the fast scratch base: without it
             # Spark puts the temp checkpoint under java.io.tmpdir (the
             # disk-backed /tmp) — the fsync-per-microbatch tax the
-            # _fast_scratch_base docstring quantifies.  KB-sized, wiped
-            # with the scratch tree.  The name carries the PID (r17
-            # ADVICE): the _SINK_IDS counter is per-process, so two
-            # concurrent sessions (driver bench + local pytest) would
-            # otherwise compute the SAME path and _scratch would rmtree
-            # the other session's live checkpoint mid-query.
-            .option(
-                "checkpointLocation",
-                _scratch(f"ckpt_{os.getpid()}_{qname}"),
-            )
+            # _fast_scratch_base docstring quantifies.  The name carries
+            # the PID (r17 ADVICE): two concurrent sessions (driver
+            # bench + local pytest) would otherwise compute the SAME
+            # path and _scratch would rmtree the other session's live
+            # checkpoint mid-query.
+            .option("checkpointLocation", _scratch(f"ckpt_{os.getpid()}_{name}"))
             .outputMode(mode)
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-    return qname
+    return q
 
 
 @query(
@@ -220,7 +218,7 @@ def stream_smoke_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    qname = _run_to_memory(agg, "complete", "smoke_tumbling")
+    qname = _run_to_memory(agg, "complete", "smoke_tumbling").name
     return spark.table(qname).select(
         F.col("w.start").alias("hour_start"), "event_type", "n", "sum_value_cents"
     )
@@ -269,7 +267,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", F.session_window(F.col("ts"), "30 minutes").alias("w"))
         .agg(F.count("*").alias("n_events"))
     )
-    qname = _run_to_memory(agg, "complete", "session_window")
+    qname = _run_to_memory(agg, "complete", "session_window").name
     return spark.table(qname).select(
         "user_id",
         F.unix_micros(F.col("w.start")).alias("start_us"),
@@ -338,16 +336,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n"))
     )
-    qname = f"watermark_late_{next(_SINK_IDS)}"
-    with _stream_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    qname = _run_to_memory(agg, "append", "watermark_late").name
     return spark.table(qname).select(
         F.col("w.start").alias("hour_start"), "n"
     )
@@ -380,7 +369,7 @@ def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "1 hour")
         .dropDuplicates(["event_id"])
     )
-    qname = _run_to_memory(deduped, "append", "dedup_state")
+    qname = _run_to_memory(deduped, "append", "dedup_state").name
     return spark.table(qname).agg(
         F.count("*").alias("n_rows"),
         F.countDistinct("event_id").alias("n_distinct_ids"),
@@ -527,7 +516,7 @@ def stream_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    qname = _run_to_memory(counted, "update", "stateful_counter")
+    qname = _run_to_memory(counted, "update", "stateful_counter").name
     # update mode emits one row per (user, batch): the final state is the
     # max (counts are monotone).
     return spark.table(qname).groupBy("user_id").agg(
@@ -586,16 +575,7 @@ def stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = spark.conf.get(prov_key, None)
     spark.conf.set(prov_key, rocksdb)
     try:
-        qname = f"rocksdb_state_{next(_SINK_IDS)}"
-        with _stream_shuffle(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        q = _run_to_memory(agg, "complete", "rocksdb_state")
         progress = q.lastProgress or {}
         ops = progress.get("stateOperators") or []
         metrics = {k for op in ops for k in (op.get("customMetrics") or {})}
@@ -609,7 +589,7 @@ def stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.conf.unset(prov_key)
         else:
             spark.conf.set(prov_key, prev)
-    return spark.table(qname).select(
+    return spark.table(q.name).select(
         F.col("w.start").alias("hour_start"),
         "event_type",
         "n",
@@ -900,7 +880,7 @@ def stream_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    qname = _run_to_memory(agg, "complete", "sliding_agg")
+    qname = _run_to_memory(agg, "complete", "sliding_agg").name
     return spark.table(qname).select(
         (F.unix_micros(F.col("w.start")) / 1_000_000).cast("long").alias(
             "win_start_s"
@@ -998,7 +978,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "AND r_ts <= l_ts + INTERVAL 30 MINUTES"
         ),
     )
-    qname = _run_to_memory(joined, "append", "ss_join")
+    qname = _run_to_memory(joined, "append", "ss_join").name
     # lag in whole seconds via integer div (both engines truncate
     # toward zero; the lag is non-negative by the join band) — the
     # double-division + ANSI-cast form this replaced was also exact
@@ -1059,7 +1039,7 @@ def stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("value").cast("long").alias("total"),
         )
     )
-    qname = f"rate_source_{next(_SINK_IDS)}"
+    qname = "rate_source"
     with _stream_shuffle(spark):
         q = (
             agg.writeStream.format("memory")
@@ -1135,7 +1115,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("cents").alias("sum_cents"),
         )
     )
-    qname = _run_to_memory(agg, "complete", "static_enrich")
+    qname = _run_to_memory(agg, "complete", "static_enrich").name
     return spark.table(qname)
 
 
@@ -1261,7 +1241,7 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "left_outer",
     )
-    qname = _run_to_memory(joined, "append", "ss_left_outer")
+    qname = _run_to_memory(joined, "append", "ss_left_outer").name
     # lag via integer div (truncation agrees across engines; NULL rides
     # through div for unmatched rows on both sides).
     return spark.table(qname).filter(F.col("l_user") >= 0).select(
@@ -1661,7 +1641,7 @@ def stream_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    qname = _run_to_memory(deduped, "append", "dropdup_within_wm")
+    qname = _run_to_memory(deduped, "append", "dropdup_within_wm").name
     agg = spark.table(qname).agg(
         F.count("*").alias("n_rows"),
         F.countDistinct("event_id").alias("n_distinct_ids"),
@@ -1753,17 +1733,8 @@ def stream_listener_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type")
             .agg(F.count("*").alias("n"))
         )
-        qname = f"listener_metrics_{next(_SINK_IDS)}"
-        with _stream_shuffle(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .start()
-            )
-            qid = str(q.id)
-            q.awaitTermination()
+        q = _run_to_memory(agg, "complete", "listener_metrics")
+        qid = str(q.id)
         deadline = _time.time() + 15
         while qid not in cap.terminated_ids and _time.time() < deadline:
             _time.sleep(0.2)
@@ -1776,7 +1747,7 @@ def stream_listener_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     mine = [e for e in cap.progress if e[0] == qid]
     total_rows = sum(e[1] for e in mine)
     state_rows = max((e[2] for e in mine), default=0)
-    sink = spark.table(qname)
+    sink = spark.table(q.name)
     clicks = sink.filter(F.col("event_type") == "click").select(
         F.sum("n").cast("long").alias("n_clicks")
     )
@@ -1909,7 +1880,7 @@ def stream_match_recognize(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    qname = _run_to_memory(matched, "append", "match_recognize")
+    qname = _run_to_memory(matched, "append", "match_recognize").name
     return spark.table(qname)
 
 
@@ -2094,7 +2065,7 @@ def stream_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    qname = _run_to_memory(audited, "update", "state_ttl")
+    qname = _run_to_memory(audited, "update", "state_ttl").name
     return spark.table(qname).select("user_id", "n", "last_us", "evicted")
 
 
@@ -2298,7 +2269,7 @@ def stream_bloom_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    qname = _run_to_memory(gated, "append", "bloom_ingest")
+    qname = _run_to_memory(gated, "append", "bloom_ingest").name
     hits = (
         spark.table(qname)
         .groupBy("row_id", "batch_id")

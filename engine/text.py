@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.core import query
+from engine.core import query, session_memo
 from engine.io import load
 
 
@@ -3029,51 +3029,30 @@ def _nb_label(toks: F.Column) -> F.Column:
     return F.when(n_stop * _NB_STOPK < F.size(toks), 1).otherwise(0)
 
 
-_NB_MODEL_MEMO: dict = {}
-
-
 def _nb_model(spark: SparkSession, sf_dir: str):
-    """(ll, cls) frames of the trained NB model — the Spark twin of
-    :data:`_NB_CTES_SQL`.  ll = per-(class, term) Laplace-smoothed
-    log-likelihood, e4-pinned; cls = per-class totals, prior and the
-    unseen-term default, e4-pinned.  All counts exact BIGINTs; ln is
-    the only transcendental and is floor-pinned IMMEDIATELY (the
-    text_unigram_logprob discipline), so everything downstream is
-    order-independent integer arithmetic.
+    """(lab, ll, cls) frames of the trained NB model — the Spark twin
+    of :data:`_NB_CTES_SQL`.  lab = per-doc tokens + teacher label;
+    ll = per-(class, term) Laplace-smoothed log-likelihood, e4-pinned;
+    cls = per-class totals, prior and the unseen-term default,
+    e4-pinned.  All counts exact BIGINTs; ln is the only transcendental
+    and is floor-pinned IMMEDIATELY (the text_unigram_logprob
+    discipline), so everything downstream is order-independent integer
+    arithmetic.  The consumer keys (train / apply / confusion /
+    feature importance) share ONE persisted lab + tr pair per session
+    through :func:`engine.core.session_memo`."""
+    return session_memo(spark, "nb_model", sf_dir,
+                        lambda: _build_nb_model(spark, sf_dir))
 
-    Memoized per (applicationId, sf_dir) with a live storageLevel
-    probe (the _ivf_fixed_ranked discipline): three consumer keys
-    (train / apply / confusion) share ONE persisted lab + tr pair per
-    session instead of registering their own, and a clearCache() under
-    the memo re-persists + re-materializes instead of racing."""
-    app = spark.sparkContext.applicationId
-    memo_key = (app, sf_dir)
-    for stale in [k for k in list(_NB_MODEL_MEMO) if k[0] != app]:
-        _NB_MODEL_MEMO.pop(stale, None)
-    hit = _NB_MODEL_MEMO.get(memo_key)
-    if hit is not None:
-        value, lab_c, tr_c = hit
-        lost = [
-            df for df in (lab_c, tr_c)
-            if not (df.storageLevel.useMemory or df.storageLevel.useDisk)
-        ]
-        if lost:
-            for df in lost:
-                df.persist()
-            # Materialize the DEEPEST lost frame: tr's count fills lab's
-            # cache too (lineage), but counting tr when only lab was
-            # dropped reads through tr's cache and leaves lab lazy — one
-            # refactor from the r12 lazy-persist race (r16 VERDICT #3).
-            (tr_c if any(df is tr_c for df in lost) else lab_c).count()
-        return value
+
+def _build_nb_model(spark: SparkSession, sf_dir: str):
     d = load(spark, sf_dir, "documents").select(
         "doc_id", _tokens(F.col("text")).alias("toks")
     )
     # lab (tokenize + HOF label) and tr (exploded token stream) feed 4-5
-    # consumers each across the two keys — persist both and eagerly
-    # materialize the DEEPEST one (tr; its count fills lab's cache too,
-    # r15 rule) so the aggregation fan-out below can't race the
-    # uncached tokenize subtree into recomputing per consumer.
+    # consumers each across the keys — persist both; session_memo
+    # materializes the deeper one (tr) so the aggregation fan-out below
+    # can't race the uncached tokenize subtree into recomputing per
+    # consumer.
     lab = d.select(
         "doc_id", "toks", _nb_label(F.col("toks")).alias("hq")
     ).persist()
@@ -3086,7 +3065,6 @@ def _nb_model(spark: SparkSession, sf_dir: str):
         (F.col("doc_id") % _NB_SPLIT != 0) & (F.size("toks") > 0)
     )
     tr = trd.select("doc_id", "hq", F.explode("toks").alias("tok")).persist()
-    tr.count()
     ctc = tr.groupBy("hq", "tok").agg(F.count("*").alias("n_tc"))
     # t_c rides ctc's aggregate (sum of per-term counts == token count);
     # d_c and nd come from the DOC-level frame where doc_id is already
@@ -3132,9 +3110,7 @@ def _nb_model(spark: SparkSession, sf_dir: str):
         .cast("long")
         .alias("ll0_e4"),
     )
-    value = (lab, ll, cls)
-    _NB_MODEL_MEMO[memo_key] = (value, lab, tr)
-    return value
+    return (lab, ll, cls), [lab, tr]
 
 
 @query(

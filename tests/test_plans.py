@@ -254,6 +254,24 @@ def test_no_driver_side_collect_in_engine_source():
     assert not bad, f"driver-side materialization in engine/: {bad}"
 
 
+def test_session_state_has_one_owner_in_engine_source():
+    # Session-lifetime frames are held only through
+    # engine.core.session_memo, and memory sinks take fixed per-key
+    # names: a hand-rolled memo (keyed on applicationId) or a per-call
+    # sink counter anywhere else would regrow the per-module copies and
+    # the per-call residue they replaced.
+    import pathlib
+
+    bad = [
+        (p.name, needle)
+        for p in pathlib.Path("engine").glob("*.py")
+        if p.name != "core.py"
+        for needle in ("applicationId", "_SINK_IDS")
+        if needle in p.read_text()
+    ]
+    assert not bad, f"session state held outside engine.core: {bad}"
+
+
 @pytest.mark.parametrize(
     "key",
     [

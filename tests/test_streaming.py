@@ -65,6 +65,32 @@ def test_stream_dedup_state(spark):
     assert row.n_rows == row.n_distinct_ids == n_events
 
 
+def test_stream_dedup_state_leaves_no_residue(spark):
+    """Repeat calls of a streaming key replace its memory sink and
+    checkpoint instead of adding new ones (one of each per key), and a
+    frame returned by an earlier call still reads its own sink."""
+    import glob
+    import os
+
+    from engine.streaming import scratch_path
+
+    def residue():
+        views = [t for t in spark.catalog.listTables() if t.isTemporary]
+        ckpts = glob.glob(
+            os.path.join(scratch_path(""), f"ckpt_{os.getpid()}_dedup_state*")
+        )
+        return len(views), len(ckpts)
+
+    run = engine.QUERIES["stream_dedup_state"]
+    first = run(spark, SF_DIR)
+    run(spark, SF_DIR)
+    after_second = residue()
+    for _ in range(3):
+        last = run(spark, SF_DIR)
+    assert residue() == after_second
+    assert first.collect() == last.collect()
+
+
 def test_stream_foreach_batch_equals_batch(spark):
     sink = engine.QUERIES["stream_foreach_batch_sink"](spark, SF_DIR)
     batch = (
@@ -99,23 +125,16 @@ def test_stream_stateful_counter_state_size_model(spark):
     user ever seen — running-total semantics forbid dropping idle
     users, so stored-uids == distinct-users is the documented growth
     bound, O(distinct_users/64) per bucket row."""
-    import glob
     import os
 
-    import engine.streaming as st
+    from engine.streaming import scratch_path
 
     engine.QUERIES["stream_stateful_counter"](spark, SF_DIR).collect()
-    ckpts = sorted(
-        glob.glob(
-            os.path.join(
-                st._fast_scratch_base(), "spark_graft_stream",
-                f"ckpt_{os.getpid()}_stateful_counter_*",
-            )
-        ),
-        key=os.path.getmtime,
+    ckpt = scratch_path(f"ckpt_{os.getpid()}_stateful_counter")
+    assert os.path.isdir(ckpt), (
+        "stateful_counter checkpoint not found on the scratch base"
     )
-    assert ckpts, "stateful_counter checkpoint not found on the scratch base"
-    state = spark.read.format("statestore").load(ckpts[-1])
+    state = spark.read.format("statestore").load(ckpt)
     # applyInPandasWithState nests the user-declared state struct under
     # value.groupState (the stream_state_reader key's measured layout)
     rows = state.select(

@@ -1898,43 +1898,54 @@ def test_modularity_identities(spark):
     assert {r.label: r.n_nodes for r in rows} == csize
 
 
-def test_nb_memo_revalidates_after_clear_cache(spark):
-    # spark.catalog.clearCache() unregisters persisted frames UNDER the
-    # _NB_MODEL_MEMO (the r16 _ivf_fixed_ranked lesson): the memo must
-    # probe storageLevel, re-persist what was lost, and eagerly
-    # materialize the DEEPEST lost frame — counting tr when only lab
-    # was dropped reads through tr's cache and leaves lab lazy (r16
-    # VERDICT #3).  Results must be identical through every loss shape.
-    from engine.text import _NB_MODEL_MEMO, _nb_model
+_SESSION_MEMO_CONSUMERS = [
+    ("nb_model", "text_nb_confusion"),
+    ("ivf_fixed_ranked", "sim_ivf_fixed_topk"),
+    ("lpa_partition", "graph_label_propagation"),
+    ("selfsim_spans", "dedup_span_selfsim"),
+]
+
+
+@pytest.mark.parametrize(
+    "memo,key",
+    _SESSION_MEMO_CONSUMERS,
+    ids=[m for m, _ in _SESSION_MEMO_CONSUMERS],
+)
+def test_session_memo_revalidates_after_clear_cache(spark, memo, key):
+    # spark.catalog.clearCache() unregisters persisted frames UNDER a
+    # core.session_memo entry: the next consumer must re-persist what
+    # was lost and materialize the DEEPEST lost frame — counting a
+    # deeper intact frame reads through its cache and leaves a
+    # shallower lost one lazy (r16 VERDICT #3).  Rows must be identical
+    # through every loss shape.
+    from engine.core import _SESSION_MEMO
 
     def _cached(df):
         return df.storageLevel.useMemory or df.storageLevel.useDisk
 
-    spark.catalog.clearCache()
-    _NB_MODEL_MEMO.clear()
-    base = sorted(
-        map(tuple, engine.QUERIES["text_nb_confusion"](spark, SF_DIR).collect())
-    )
-    memo_key = (spark.sparkContext.applicationId, SF_DIR)
-    _, lab, tr = _NB_MODEL_MEMO[memo_key]
-    assert _cached(lab) and _cached(tr)
+    def _rows():
+        return sorted(map(tuple, engine.QUERIES[key](spark, SF_DIR).collect()))
 
-    # full loss: clearCache drops both registrations under the memo
     spark.catalog.clearCache()
-    assert not _cached(lab) and not _cached(tr)
-    _nb_model(spark, SF_DIR)
-    assert _cached(lab) and _cached(tr)
+    memo_key = (spark.sparkContext.applicationId, memo, SF_DIR)
+    _SESSION_MEMO.pop(memo_key, None)
+    base = _rows()
+    _, frames = _SESSION_MEMO[memo_key]
+    assert frames and all(map(_cached, frames))
 
-    # partial loss: only the SHALLOW frame (lab) dropped — the fixed
-    # branch must count lab itself, not read through tr's intact cache
-    lab.unpersist(blocking=True)
-    assert not _cached(lab) and _cached(tr)
-    _nb_model(spark, SF_DIR)
-    assert _cached(lab) and _cached(tr)
-    again = sorted(
-        map(tuple, engine.QUERIES["text_nb_confusion"](spark, SF_DIR).collect())
-    )
-    assert again == base
+    # full loss: clearCache drops every registration under the memo
+    spark.catalog.clearCache()
+    assert not any(map(_cached, frames))
+    assert _rows() == base
+    assert all(map(_cached, frames))
+
+    # partial loss: only the SHALLOW frame dropped — the memo must
+    # count it itself, not read through the deeper intact cache
+    if len(frames) > 1:
+        frames[0].unpersist(blocking=True)
+        assert not _cached(frames[0]) and all(map(_cached, frames[1:]))
+        assert _rows() == base
+        assert all(map(_cached, frames))
 
 
 def test_quantized_norms_nonzero(spark):
