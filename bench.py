@@ -48,7 +48,7 @@ def main() -> None:
     # ($SPARK_GRAFT_LOCAL_DIR → local SSD array at cluster scale, where
     # shuffle volume exceeds RAM); sf0.1 shuffle volumes are ≪ 1 GB so
     # tmpfs is safe here.  Same queries, same timing methodology.
-    from engine.streaming import _usable_tmpfs
+    from engine.core import _usable_tmpfs
 
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR") or (
         # statvfs guard (r17 ADVICE): container runtimes often cap

@@ -47,7 +47,12 @@ def query(key: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
+import atexit
 import contextlib
+import functools
+import os
+import shutil
+import tempfile
 import threading
 
 
@@ -125,26 +130,98 @@ def collect_model_artifact(df: DataFrame, max_rows: int = _MODEL_ARTIFACT_MAX_RO
     return rows
 
 
-def staged_build_once(base: str, name: str, sf_dir: str, build) -> str:
+def _usable_tmpfs(path: str, min_free_bytes: int = 2 * 1024**3) -> bool:
+    """True when ``path`` is a writable dir with ≥ ``min_free_bytes``
+    free (r17 ADVICE: many container runtimes cap /dev/shm at 64 MB —
+    isdir+W_OK alone would route shuffle spills into ENOSPC there)."""
+    if not (os.path.isdir(path) and os.access(path, os.W_OK)):
+        return False
+    try:
+        st = os.statvfs(path)
+    except OSError:
+        return False
+    return st.f_bavail * st.f_frsize >= min_free_bytes
+
+
+def scratch_path(name: str) -> str:
+    """Path of the scratch area ``name`` WITHOUT wiping it — for tests
+    that inspect what a key just wrote, and for a key that must release
+    a handle on the old area before :func:`scratch` wipes it.
+
+    Scratch lives under a per-process root
+    ``<base>/spark_graft_scratch/<pid>``.  ``<base>`` is
+    $SPARK_GRAFT_STREAM_SCRATCH when set, else the RAM-backed /dev/shm
+    when it has room, else tempfile.gettempdir(): checkpoint commits
+    fsync many tiny files per microbatch, and on a disk-backed /tmp
+    that I/O measured as a consistent per-key tax (r17 A/B minima,
+    tmpfs vs disk: stream_stateful_counter 2.84 vs 3.54 s,
+    stream_stream_left_outer 7.29 vs 8.69 s).  At production scale the
+    same override points at the local SSD array."""
+    base = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH")
+    if not base:
+        base = "/dev/shm" if _usable_tmpfs("/dev/shm") else tempfile.gettempdir()
+    return os.path.join(base, "spark_graft_scratch", str(os.getpid()), name)
+
+
+@functools.cache
+def _claim_scratch_root(root: str) -> None:
+    """First use of ``root`` in this process: remove the roots of
+    processes that are gone (a killed run never reaches its atexit),
+    then register this root's own removal at exit."""
+    parent = os.path.dirname(root)
+    for pid in filter(str.isdigit, os.listdir(parent)):
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(parent, pid), ignore_errors=True)
+        except PermissionError:
+            pass  # alive, owned by another user
+    atexit.register(shutil.rmtree, root, True)
+
+
+def scratch(name: str) -> str:
+    """Wipe and return the scratch area ``name`` (layout: see
+    :func:`scratch_path`) — the one place the engine puts ephemeral
+    output: sinks, checkpoints, WALs and state stores.
+
+    The root is per process, so concurrent sessions (a bench run beside
+    a pytest run) never share an area, and a fixed name per key means a
+    repeat call replaces its previous area.  The root is created lazily,
+    never at import (Python workers import engine), and on every call,
+    because a caller may wipe the base between calls."""
+    d = scratch_path(name)
+    if os.path.exists(d):
+        shutil.rmtree(d)
+    os.makedirs(d, exist_ok=True)
+    _claim_scratch_root(os.path.dirname(d))
+    return d
+
+
+def _staged_fingerprint(d: str) -> str | None:
+    try:
+        with open(os.path.join(d, "_STAGING_DONE")) as f:
+            return f.read()
+    except OSError:
+        return None
+
+
+def staged_build_once(name: str, sf_dir: str, build) -> str:
     """Build-once cache for deterministic staged directories (streaming
-    replay sources, derived partitioned tables).
+    replay sources, derived partitioned tables) under
+    ``gettempdir()/spark_graft_staging`` — one directory for every
+    module, so each ``name`` must be unique across the engine.
 
     The staged artifacts are pure functions of the immutable corpus, so
     rebuilding per invocation charges every bench/verify run pure
-    staging cost.  A `_STAGING_DONE` marker is written only after
-    ``build`` completes — partial stages are never reused — and
-    `_`-prefixed files are invisible to Spark's parquet file source.
-    Sinks and checkpoints must NOT be cached — only inputs.
+    staging cost.  ``build`` fills a private ``mkdtemp`` sibling that
+    gets the `_STAGING_DONE` marker and is then renamed into place, so
+    no process ever sees (or wipes) another's half-built directory; a
+    builder that loses the rename discards its copy.  `_`-prefixed
+    files are invisible to Spark's parquet file source.  Sinks and
+    checkpoints must NOT be cached — only inputs (see :func:`scratch`).
     """
-    import os
-    import shutil
-    import tempfile
-
-    d = os.path.join(
-        tempfile.gettempdir(),
-        base,
-        f"{name}_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
+    base = os.path.join(tempfile.gettempdir(), "spark_graft_staging")
+    d = os.path.join(base, f"{name}_{os.path.basename(os.path.normpath(sf_dir))}")
     # The corpus is immutable WITHIN a round but the driver regenerates
     # it BETWEEN rounds (r4 rolled events.ts from ns to µs) — a marker
     # that never expires would replay stale data.  Fingerprint the
@@ -158,17 +235,29 @@ def staged_build_once(base: str, name: str, sf_dir: str, build) -> str:
         )
     except OSError:
         fp = "unknown"
-    marker = os.path.join(d, "_STAGING_DONE")
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if f.read() == fp:
-                return d
-    if os.path.exists(d):
-        shutil.rmtree(d)
-    os.makedirs(d, exist_ok=True)
-    build(d)
-    with open(marker, "w") as f:
-        f.write(fp)
+    if _staged_fingerprint(d) == fp:
+        return d
+    os.makedirs(base, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix=f".{name}_", dir=base)
+    try:
+        build(tmp)
+        with open(os.path.join(tmp, "_STAGING_DONE"), "w") as f:
+            f.write(fp)
+        if _staged_fingerprint(d) != fp and os.path.lexists(d):
+            # A copy built from an older corpus: rename it aside first,
+            # since a directory cannot be renamed over a non-empty one.
+            stale = tempfile.mkdtemp(prefix=f".{name}_stale_", dir=base)
+            with contextlib.suppress(OSError):
+                os.rename(d, stale)
+            shutil.rmtree(stale, ignore_errors=True)
+        try:
+            os.rename(tmp, d)
+        except OSError:
+            # Another builder renamed its complete copy in first.
+            if _staged_fingerprint(d) != fp:
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     return d
 
 

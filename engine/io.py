@@ -12,13 +12,14 @@ on the driver.
 
 from __future__ import annotations
 
+import glob
 import os
-import tempfile
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.core import query
+from engine.core import query, scratch, scratch_path, staged_build_once
 
 TABLES = [
     "region",
@@ -183,10 +184,14 @@ def source_range_synthetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _scratch_dir(name: str) -> str:
-    d = os.path.join(tempfile.gettempdir(), "spark_graft_io", name)
-    os.makedirs(os.path.dirname(d), exist_ok=True)
-    return d
+def _write_one_parquet(df: DataFrame, path: str) -> None:
+    """Write ``df`` as the single parquet file ``path`` — for staged
+    inputs whose file names a key reads back (``_metadata``, globs, a
+    hand-written log)."""
+    tmp = f"{path}._tmp"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    os.replace(glob.glob(os.path.join(tmp, "part-*.parquet"))[0], path)
+    shutil.rmtree(tmp)
 
 
 @query(
@@ -209,7 +214,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_orderkey") % 10 == 0)
         .select("l_orderkey", "l_returnflag", "l_linestatus", "l_quantity")
     )
-    path = _scratch_dir("csv_roundtrip")
+    path = scratch("csv_roundtrip")
     sample.write.mode("overwrite").option("header", True).csv(path)
     back = spark.read.csv(
         path,
@@ -255,7 +260,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     noted here, exercised via the on-read path."""
     o = load(spark, sf_dir, "orders")
     price_cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-    path = _scratch_dir("schema_evolution")
+    path = scratch("schema_evolution")
     # batch 1: original schema (no priority column).  coalesce(4): the
     # sf0.01 batch is ~1.5k rows; 32 shuffle-partition-sized files would
     # mean 64 footers for mergeSchema to union — file count, not bytes,
@@ -305,7 +310,7 @@ def source_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_timestamp("ts").alias("epoch_s"),
         )
     )
-    path = _scratch_dir("json_lines")
+    path = scratch("json_lines")
     sample.write.mode("overwrite").json(path)
     back = spark.read.json(
         path,
@@ -330,7 +335,7 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write orders partitioned by o_orderstatus, read back, count per
     partition — exercises dynamic partition discovery + pruning."""
     orders = load(spark, sf_dir, "orders")
-    path = _scratch_dir("orders_by_status")
+    path = scratch("orders_by_status")
     orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
     back = spark.read.parquet(path)
     return back.groupBy("o_orderstatus").agg(
@@ -361,7 +366,7 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("l_orderkey") % 7 == 0)
         .select("l_orderkey", "l_linestatus", "l_extendedprice")
     )
-    path = _scratch_dir("orc_roundtrip")
+    path = scratch("orc_roundtrip")
     sample.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return back.groupBy("l_linestatus").agg(
@@ -399,7 +404,7 @@ def sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes results).
     """
     configure(spark)
-    path = os.path.join(tempfile.gettempdir(), "spark_graft_io", "bucketed")
+    path = scratch("bucketed")
     for table, key_col in (("orders", "o_custkey"), ("customer", "c_custkey")):
         tbl_name = f"eng_bucketed_{table}"
         spark.sql(f"DROP TABLE IF EXISTS {tbl_name}")
@@ -543,7 +548,7 @@ def source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("doc_id") % 5 == 0) & F.col("text").isNotNull())
         .select(F.replace(F.col("text"), F.lit("\n"), F.lit(" ")).alias("text"))
     )
-    path = _scratch_dir("text_lines")
+    path = scratch("text_lines")
     docs.write.mode("overwrite").text(path)
     back = spark.read.text(path)
     toks = F.filter(F.split(F.lower(F.col("value")), " "), lambda t: t != "")
@@ -554,14 +559,6 @@ def source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_chars", "n_tokens")
         .agg(F.count("*").alias("n_lines"))
     )
-
-
-def _staged_sink(name: str, sf_dir: str, build) -> str:
-    """Build-once cache for deterministic derived TABLES (shared
-    contract: engine.core.staged_build_once)."""
-    from engine.core import staged_build_once
-
-    return staged_build_once("spark_graft_io", name, sf_dir, build)
 
 
 @query(
@@ -611,7 +608,7 @@ def scan_partition_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "order_month"
         ).parquet(dst)
 
-    path = _staged_sink("orders_by_month_1f", sf_dir, build)
+    path = staged_build_once("orders_by_month_1f", sf_dir, build)
     fact = spark.read.parquet(path)
     dim = (
         load(spark, sf_dir, "orders")
@@ -743,8 +740,6 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant (BASELINE.md r7 note), not per-row work; the write/agg
     bodies are sub-second.  The spin-up is paid once per query, so at
     100 TB it amortizes to noise."""
-    import shutil as _shutil
-
     from pyspark import TaskContext
     from pyspark.sql.datasource import (
         DataSource,
@@ -804,10 +799,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(_JsonlDirSink)
         spark.conf.set(marker, "true")
 
-    dst = _scratch_dir("pyds_sink")
-    if os.path.exists(dst):
-        _shutil.rmtree(dst)
-    os.makedirs(dst, exist_ok=True)
+    dst = scratch("pyds_sink")
 
     sample = (
         load(spark, sf_dir, "orders")
@@ -869,16 +861,10 @@ def sink_idempotent_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer).  At 1000 executors the same shape fans out to 1000
     independent idempotent writers with no coordination — the commit
     protocol IS the determinism."""
-    import glob as _glob
-    import shutil as _shutil
-
     import pandas as pd
     from pyspark import TaskContext
 
-    dst = _scratch_dir("idempotent_sink")
-    if os.path.exists(dst):
-        _shutil.rmtree(dst)
-    os.makedirs(dst, exist_ok=True)
+    dst = scratch("idempotent_sink")
 
     upserts = (
         load(spark, sf_dir, "orders")
@@ -919,7 +905,7 @@ def sink_idempotent_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("writes"),
         F.max("price_cents").alias("price_cents"),
     )
-    assert _glob.glob(os.path.join(dst, "*.tmp")) == []
+    assert glob.glob(os.path.join(dst, "*.tmp")) == []
     return per_key.groupBy("o_orderstatus").agg(
         F.count("*").alias("n_keys"),
         F.sum("price_cents").alias("sum_price_cents"),
@@ -959,8 +945,6 @@ def source_csv_malformed_permissive(spark: SparkSession, sf_dir: str) -> DataFra
     costs nothing on good rows; the audit agg is map-side-combinable."""
     import os as _os
 
-    from engine.core import staged_build_once
-
     def build(dst: str) -> None:
         lines = ["id,amount"]
         for i in range(2000):
@@ -972,7 +956,7 @@ def source_csv_malformed_permissive(spark: SparkSession, sf_dir: str) -> DataFra
         with open(_os.path.join(dst, "part-00000.csv"), "w") as f:
             f.write("\n".join(lines) + "\n")
 
-    src = staged_build_once("spark_graft_io", "csv_malformed", sf_dir, build)
+    src = staged_build_once("csv_malformed", sf_dir, build)
     configure(spark)
     df = spark.read.csv(
         src,
@@ -1039,7 +1023,7 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
             F.year("o_orderdate").cast("int").alias("yr"),
         )
     )
-    path = _scratch_dir("dyn_partition_overwrite")
+    path = scratch("dyn_partition_overwrite")
     base.write.mode("overwrite").partitionBy("yr").parquet(path)
     fix = base.filter(F.col("yr") == 1997).withColumn(
         "cents", F.col("cents") * 2
@@ -1092,22 +1076,16 @@ def scan_files_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     join against a listing); grouping by a value parsed from it is a
     plain map-side-combinable aggregate."""
     configure(spark)
-    import glob as _glob
-    import os
-    import shutil
 
     def build(dst: str) -> None:
         o = load(spark, sf_dir, "orders")
         for i in range(4):
-            tmp = os.path.join(dst, f"_tmp_{i}")
-            o.filter(F.col("o_orderkey") % 4 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            shutil.move(part, os.path.join(dst, f"shard_k{i}.parquet"))
-            shutil.rmtree(tmp)
+            _write_one_parquet(
+                o.filter(F.col("o_orderkey") % 4 == i),
+                os.path.join(dst, f"shard_k{i}.parquet"),
+            )
 
-    src = _staged_sink("files_metadata", sf_dir, build)
+    src = staged_build_once("files_metadata", sf_dir, build)
     df = spark.read.parquet(src)
     shard = F.regexp_extract(
         F.col("_metadata.file_name"), r"shard_k(\d+)\.parquet", 1
@@ -1219,10 +1197,10 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: read + write, zero shuffles; the verifying aggregate
     shuffles only the ~|langs| partial rows."""
     d = load(spark, sf_dir, "documents")
-    frag_path = _scratch_dir("compact_fragmented")
+    frag_path = scratch("compact_fragmented")
     d.repartition(64).write.mode("overwrite").parquet(frag_path)
     fragmented = spark.read.parquet(frag_path)
-    compact_path = _scratch_dir("compact_output")
+    compact_path = scratch("compact_output")
     fragmented.coalesce(4).write.mode("overwrite").parquet(compact_path)
     back = spark.read.parquet(compact_path)
     return back.groupBy("lang").agg(
@@ -1271,7 +1249,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_timestamp("ts").alias("epoch_s"),
         )
     )
-    path = _scratch_dir("xml_roundtrip")
+    path = scratch("xml_roundtrip")
     (
         sample.write.mode("overwrite")
         .format("xml")
@@ -1392,7 +1370,6 @@ def sink_managed_table_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
     path sinks (here overwrite-idempotent); at 100 TB it would add
     partitioning/bucketing clauses — exercised by the dedicated
     bucketed/partitioned sink keys."""
-    import shutil
     from urllib.parse import urlparse
 
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 3 == 0)
@@ -1467,8 +1444,6 @@ def source_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Dialect trap (r7): byte length of a VARCHAR in DuckDB is
     `strlen` — `length` counts CHARACTERS and `octet_length` only
     accepts BLOBs."""
-    from engine.core import staged_build_once
-
     def build(dst: str) -> None:
         import pyarrow.parquet as pq
 
@@ -1484,7 +1459,7 @@ def source_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(os.path.join(dst, "decoy.tmp"), "wb") as f:
             f.write(b"not a document")
 
-    src = staged_build_once("spark_graft_io", "binaryfiles", sf_dir, build)
+    src = staged_build_once("binaryfiles", sf_dir, build)
     configure(spark)
     df = (
         spark.read.format("binaryFile")
@@ -1531,8 +1506,6 @@ def sink_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Embedded Derby is single-JVM — at cluster scale the same code
     points at a networked RDBMS; the partitioned-read shape and
     pushdown semantics are identical."""
-    import shutil
-
     sample = load(spark, sf_dir, "lineitem").filter(
         F.col("l_orderkey") % 11 == 0
     ).select(
@@ -1543,12 +1516,14 @@ def sink_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("cents"),
     )
-    db = _scratch_dir("derby_lineitem")
-    # Embedded Derby keeps the DB BOOTED in the JVM after the first run
-    # (r10 ADVICE): rmtree on a live store deletes files the engine
-    # still holds open.  Shut it down first — Derby signals a SUCCESSFUL
-    # shutdown by throwing SQLException 08006, so the except is the
-    # expected path; a "not booted" failure is equally fine.
+    # Derby creates the database directory itself, so it is a child of
+    # the scratch area.  Embedded Derby keeps the DB BOOTED in the JVM
+    # after the first run (r10 ADVICE): wiping a live store deletes
+    # files the engine still holds open.  Shut it down first — Derby
+    # signals a SUCCESSFUL shutdown by throwing SQLException 08006, so
+    # the except is the expected path; a "not booted" failure is
+    # equally fine.
+    db = os.path.join(scratch_path("derby_lineitem"), "db")
     if os.path.isdir(db):
         try:
             spark._jvm.java.sql.DriverManager.getConnection(
@@ -1556,7 +1531,7 @@ def sink_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         except Exception:
             pass
-    shutil.rmtree(db, ignore_errors=True)
+    scratch("derby_lineitem")
     driver = "org.apache.derby.jdbc.EmbeddedDriver"
     (
         sample.write.format("jdbc")
@@ -1597,32 +1572,17 @@ def _stage_glob_orders(spark: SparkSession, sf_dir: str) -> str:
     parquet file per tier (prio=X/orders_pX.parquet) — shared by
     source_glob_filter (glob pruning) and source_file_lineage
     (_metadata provenance); built once per corpus."""
-    from engine.core import staged_build_once
-
     def build(root: str) -> None:
         orders = load(spark, sf_dir, "orders")
         for tier in ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT", "5-LOW"]:
             tag = tier.split("-")[0]
-            sub = os.path.join(root, f"prio={tag}")
-            (
-                orders.filter(F.col("o_orderpriority").startswith(tag))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(sub, "_tmp"))
-            )
             # one deterministic file name per tier, nested one level
-            os.makedirs(sub, exist_ok=True)
-            for f in os.listdir(os.path.join(sub, "_tmp")):
-                if f.endswith(".parquet"):
-                    os.replace(
-                        os.path.join(sub, "_tmp", f),
-                        os.path.join(sub, f"orders_p{tag}.parquet"),
-                    )
-            import shutil
+            _write_one_parquet(
+                orders.filter(F.col("o_orderpriority").startswith(tag)),
+                os.path.join(root, f"prio={tag}", f"orders_p{tag}.parquet"),
+            )
 
-            shutil.rmtree(os.path.join(sub, "_tmp"), ignore_errors=True)
-
-    return staged_build_once("spark_graft_io", "glob_orders", sf_dir, build)
+    return staged_build_once("glob_orders", sf_dir, build)
 
 
 @query(
@@ -1767,7 +1727,6 @@ def sink_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     it is what makes CBO join reordering / broadcast decisions real on
     a 100 TB warehouse — stats-less catalogs force rule-only planning.
     The stats fetch is O(1) catalog metadata."""
-    import shutil
     from urllib.parse import urlparse
 
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 5 == 0)
@@ -1844,13 +1803,11 @@ def source_delta_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint via staged_build_once (r13 ADVICE: the per-invocation
     rmtree+rebuild charged every run 3 parquet writes and could race a
     concurrent reader mid-replay)."""
-    import glob
     import json as _json
-    import shutil
 
     from pyspark.sql import Window as W
 
-    from engine.core import collect_model_artifact, staged_build_once
+    from engine.core import collect_model_artifact
 
     def _build(table: str) -> None:
         log_dir = os.path.join(table, "_delta_log")
@@ -1859,18 +1816,11 @@ def source_delta_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "source", "n_chars"
         )
 
-        def _stage_file(name: str, residue: int) -> None:
-            tmp = os.path.join(table, f"_tmp_{name}")
-            d.filter(F.col("doc_id") % 3 == residue).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            os.replace(part, os.path.join(table, name))
-            shutil.rmtree(tmp)
-
-        _stage_file("part-A.parquet", 0)
-        _stage_file("part-B.parquet", 1)
-        _stage_file("part-C.parquet", 2)
+        for residue, name in enumerate(["A", "B", "C"]):
+            _write_one_parquet(
+                d.filter(F.col("doc_id") % 3 == residue),
+                os.path.join(table, f"part-{name}.parquet"),
+            )
         with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as f:
             f.write(_json.dumps({"protocol": {"minReaderVersion": 1}}) + "\n")
             f.write(_json.dumps({"metaData": {"id": "spark-graft-delta"}}) + "\n")
@@ -1880,8 +1830,7 @@ def source_delta_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write(_json.dumps({"add": {"path": "part-C.parquet"}}) + "\n")
             f.write(_json.dumps({"remove": {"path": "part-A.parquet"}}) + "\n")
 
-    table = staged_build_once("spark_graft_staging", "delta_log_table",
-                              sf_dir, _build)
+    table = staged_build_once("delta_log_table", sf_dir, _build)
     log_dir = os.path.join(table, "_delta_log")
 
     # Action replay: one JSON read per commit (log-bounded loop), then
@@ -1994,7 +1943,7 @@ def source_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
             .text(d)
         )
 
-    path = _staged_sink("fixed_width", sf_dir, _build)
+    path = staged_build_once("fixed_width", sf_dir, _build)
     lines = spark.read.text(path)
     sub = lambda a, b: F.substring(F.col("value"), a, b)  # noqa: E731
     return lines.select(

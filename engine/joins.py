@@ -854,10 +854,9 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     creation side) enable exactly this plan with no conf changes; the
     bloom build is one map-side aggregate over 38-of-2000 dim keys and
     the fact shuffle shrinks by ~the dim selectivity (~50×)."""
-    from engine.core import scoped_sql_conf
-    from engine.io import _scratch_dir
+    from engine.core import scoped_sql_conf, scratch
 
-    path = _scratch_dir("runtime_bloom")
+    path = scratch("runtime_bloom")
     with scoped_sql_conf(spark, _RUNTIME_BLOOM_CONFS):
         _runtime_bloom_join(spark, sf_dir).write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)

@@ -843,7 +843,7 @@ def _wds_tar_dir(spark: SparkSession, sf_dir: str) -> str:
                 .count()  # eager: the staging marker must postdate the files
             )
 
-    return staged_build_once("spark_graft_staging", "wds_tar", sf_dir, _build)
+    return staged_build_once("wds_tar", sf_dir, _build)
 
 
 def _tar_member_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:

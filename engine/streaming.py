@@ -16,19 +16,23 @@ watermark-consistent subset of) its batch twin from engine.events.
 100 TB notes: the same code runs against a continuous file/Kafka source
 by swapping the trigger; state stores (window aggs, dedup state) live on
 executors and are bounded by the watermark horizon, not by stream length.
+
+On-disk layout has two owners in engine.core.  Replay sources are
+INPUTS, staged once per corpus fingerprint by ``staged_build_once``.
+Checkpoints, WALs, state stores and file sinks are SCRATCH from
+``scratch(name)``: wiped per call, one area per key name (a repeat call
+replaces its predecessor) under a per-process root removed at exit.
 """
 
 from __future__ import annotations
 
 import contextlib
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.core import query, scoped_shuffle_partitions
+from engine.core import query, scoped_shuffle_partitions, scratch, staged_build_once
 from engine.io import configure, load
 
 # Stateful-streaming parallelism is fixed by spark.sql.shuffle.partitions
@@ -45,65 +49,6 @@ _STREAM_SHUFFLE_PARTITIONS = 8
 def _stream_shuffle(spark: SparkSession):
     with scoped_shuffle_partitions(spark, _STREAM_SHUFFLE_PARTITIONS):
         yield
-
-
-def _fast_scratch_base() -> str:
-    """Fastest writable local base for streaming SCRATCH (checkpoints,
-    WALs, state stores, per-key sinks — all ephemeral, wiped per run).
-    Checkpoint commits fsync many tiny files per microbatch; on this
-    box's disk-backed /tmp that I/O measured as a consistent per-key
-    tax (r17 A/B minima, tmpfs vs disk: stream_stateful_counter 2.84
-    vs 3.54 s, stream_stream_left_outer 7.29 vs 8.69 s), so prefer the
-    RAM-backed /dev/shm when present — the standard fast-local-storage
-    deployment for ephemeral streaming state; at production scale the
-    same override points at the local SSD array.  Overridable via
-    $SPARK_GRAFT_STREAM_SCRATCH.  STAGED SOURCES deliberately stay
-    under tempfile.gettempdir() (read-once inputs, no fsync pressure,
-    and their build-once markers should survive session churn)."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH")
-    if env:
-        return env
-    if _usable_tmpfs("/dev/shm"):
-        return "/dev/shm"
-    return tempfile.gettempdir()
-
-
-def _usable_tmpfs(path: str, min_free_bytes: int = 2 * 1024**3) -> bool:
-    """True when ``path`` is a writable dir with ≥ ``min_free_bytes``
-    free (r17 ADVICE: many container runtimes cap /dev/shm at 64 MB —
-    isdir+W_OK alone would route shuffle spills into ENOSPC there)."""
-    if not (os.path.isdir(path) and os.access(path, os.W_OK)):
-        return False
-    try:
-        st = os.statvfs(path)
-    except OSError:
-        return False
-    return st.f_bavail * st.f_frsize >= min_free_bytes
-
-
-def scratch_path(name: str) -> str:
-    """Path of a named scratch area WITHOUT wiping it — for tests that
-    inspect a sink a key just wrote (keeps the layout in one place;
-    tests must never re-derive the scratch base themselves)."""
-    return os.path.join(_fast_scratch_base(), "spark_graft_stream", name)
-
-
-def _scratch(name: str) -> str:
-    d = scratch_path(name)
-    if os.path.exists(d):
-        shutil.rmtree(d)
-    os.makedirs(d, exist_ok=True)
-    return d
-
-
-def _staged_src(name: str, sf_dir: str, build) -> str:
-    """Build-once cache for deterministic staged SOURCE directories —
-    phased replay fixtures (watermark phases, doubled events, split
-    halves) are pure functions of the immutable corpus (shared
-    contract: engine.core.staged_build_once)."""
-    from engine.core import staged_build_once
-
-    return staged_build_once("spark_graft_stream", name, sf_dir, build)
 
 
 _PHASE_EPOCH = 1_600_000_000  # fixed base for explicit phase mtimes
@@ -135,7 +80,7 @@ def _stage_events_dir(spark: SparkSession, sf_dir: str) -> str:
     def build(dst: str) -> None:
         load(spark, sf_dir, "events").coalesce(1).write.mode("overwrite").parquet(dst)
 
-    return _staged_src("src", sf_dir, build)
+    return staged_build_once("src", sf_dir, build)
 
 
 def _events_stream(
@@ -172,12 +117,8 @@ def _run_to_memory(agg: DataFrame, mode: str, name: str):
             # Explicit checkpoint on the fast scratch base: without it
             # Spark puts the temp checkpoint under java.io.tmpdir (the
             # disk-backed /tmp) — the fsync-per-microbatch tax the
-            # _fast_scratch_base docstring quantifies.  The name carries
-            # the PID (r17 ADVICE): two concurrent sessions (driver
-            # bench + local pytest) would otherwise compute the SAME
-            # path and _scratch would rmtree the other session's live
-            # checkpoint mid-query.
-            .option("checkpointLocation", _scratch(f"ckpt_{os.getpid()}_{name}"))
+            # engine.core.scratch_path docstring quantifies.
+            .option("checkpointLocation", scratch(f"ckpt_{name}"))
             .outputMode(mode)
             .trigger(availableNow=True)
             .start()
@@ -328,7 +269,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).coalesce(1).write.mode("append").parquet(src)
         _stamp_phase(src, 3, stamped)
 
-    src = _staged_src("watermark_late", sf_dir, build)
+    src = staged_build_once("watermark_late", sf_dir, build)
 
     agg = (
         _events_stream(spark, src, max_files_per_trigger=1)
@@ -362,7 +303,7 @@ def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.coalesce(1).write.mode("append").parquet(src)
         ev.coalesce(1).write.mode("append").parquet(src)
 
-    src = _staged_src("dedup_state", sf_dir, build)
+    src = staged_build_once("dedup_state", sf_dir, build)
 
     deduped = (
         _events_stream(spark, src)
@@ -392,7 +333,7 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     without native streaming writers (JDBC upserts, multi-table fanout).
     Final sink state must equal the batch source (asserted in tests)."""
     src = _stage_events_dir(spark, sf_dir)
-    sink = _scratch("foreach_batch_sink")
+    sink = scratch("foreach_batch_sink")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.select("event_id", "event_type", "value").write.mode(
@@ -457,7 +398,7 @@ def stream_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(us > mid).coalesce(1).write.mode("append").parquet(src)
         _stamp_phase(src, 1, stamped)
 
-    src = _staged_src("stateful_counter", sf_dir, build)
+    src = staged_build_once("stateful_counter", sf_dir, build)
 
     def count_events(key, pdfs, state: GroupState):
         # Bounded-bucket state (r10 rule; r17 opt — the
@@ -631,7 +572,7 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     src = _stage_events_dir(spark, sf_dir)
-    ckpt = _scratch("state_reader_ckpt")
+    ckpt = scratch("state_reader_ckpt")
 
     def count_events(key, pdfs, state: GroupState):
         total = state.get[0] if state.exists else 0
@@ -706,7 +647,7 @@ def stream_rocksdb_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     src = _stage_events_dir(spark, sf_dir)
-    ckpt = _scratch("rocksdb_state_reader_ckpt")
+    ckpt = scratch("rocksdb_state_reader_ckpt")
 
     def accumulate(key, pdfs, state: GroupState):
         n, cents = state.get if state.exists else (0, 0)
@@ -805,7 +746,7 @@ def stream_join_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state shards read in parallel from the checkpoint; no
     source replay."""
     src = _stage_events_dir(spark, sf_dir)
-    ckpt = _scratch("join_state_reader_ckpt")
+    ckpt = scratch("join_state_reader_ckpt")
     clicks = _events_stream(spark, src).filter(
         "event_type = 'click'"
     ).select(
@@ -957,7 +898,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # name bumped ss_join -> ss_join_2p: staged_build_once caches by
     # (name, corpus fingerprint) only — a build-fn change needs a new
     # name or stale 3-phase staging replays forever.
-    src = _staged_src("ss_join_2p", sf_dir, build)
+    src = staged_build_once("ss_join_2p", sf_dir, build)
 
     def side(prefix: str, etype: str) -> DataFrame:
         return (
@@ -1022,7 +963,7 @@ def stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time
 
     configure(spark)
-    ckpt = _scratch("rate_source_ckpt")
+    ckpt = scratch("rate_source_ckpt")
     src = (
         spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", 1000)
@@ -1218,7 +1159,7 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         _stamp_phase(src, 2, stamped)
 
     # name bumped (staged_build_once caches by name + corpus fingerprint)
-    src = _staged_src("ss_left_outer_2p", sf_dir, build)
+    src = staged_build_once("ss_left_outer_2p", sf_dir, build)
 
     def side(prefix: str, etype: str) -> DataFrame:
         # sentinels pass this filter by construction (exact event_type)
@@ -1314,12 +1255,12 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(us >= mid).coalesce(1).write.mode("append").parquet(src)
         _stamp_phase(src, 1, stamped)
 
-    src = _staged_src("ckpt_halves", sf_dir, build)
+    src = staged_build_once("ckpt_halves", sf_dir, build)
     # Sink and checkpoint are NOT cached (staged_build_once is for
     # inputs only — engine.core contract): fresh scratch per invocation
     # so the crash/recover cycle is self-contained and repeatable.
-    sink = _scratch("ckpt_recovery_sink")
-    ckpt = _scratch("ckpt_recovery_ckpt")
+    sink = scratch("ckpt_recovery_sink")
+    ckpt = scratch("ckpt_recovery_ckpt")
 
     def writer(poison: bool):
         def write_batch(bdf: DataFrame, batch_id: int) -> None:
@@ -1413,8 +1354,8 @@ def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).parquet(src)
             _stamp_phase(src, r, stamped)
 
-    src = _staged_src("rate_limit", sf_dir, build)
-    sink = _scratch("rate_limit_ledger")
+    src = staged_build_once("rate_limit", sf_dir, build)
+    sink = scratch("rate_limit_ledger")
 
     def record_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.groupBy().agg(F.count("*").alias("n_rows")).select(
@@ -1509,7 +1450,7 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     if spark.conf.get(marker, None) != "true":
         spark.dataSource.register(_LedgerStreamSource)
         spark.conf.set(marker, "true")
-    sink = _scratch("python_stream_sink")
+    sink = scratch("python_stream_sink")
     ckpt = os.path.join(sink, "_checkpoint")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1635,7 +1576,7 @@ def stream_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
         ).coalesce(1).write.mode("append").parquet(src)
         _stamp_phase(src, 2, stamped)
 
-    src = _staged_src("dropdup_within_wm", sf_dir, build)
+    src = staged_build_once("dropdup_within_wm", sf_dir, build)
     deduped = (
         _events_stream(spark, src, max_files_per_trigger=1)
         .withWatermark("ts", "1 hour")
@@ -1804,7 +1745,7 @@ def stream_match_recognize(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(us > mid).coalesce(1).write.mode("append").parquet(src)
         _stamp_phase(src, 1, stamped)
 
-    src = _staged_src("match_recognize", sf_dir, build)
+    src = staged_build_once("match_recognize", sf_dir, build)
 
     def detect(key, pdfs, state: GroupState):
         # BOUNDED-BUCKET state (r10 rule; r17 opt): grouping per USER
@@ -2024,7 +1965,7 @@ def stream_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
             ph.coalesce(1).write.mode("append").parquet(src)
             _stamp_phase(src, i, stamped)
 
-    src = _staged_src("state_ttl", sf_dir, build)
+    src = staged_build_once("state_ttl", sf_dir, build)
 
     # Per-user grouping is the SEMANTICS here (EventTimeTimeout fires
     # per state row) — ~1500 kernel calls per microbatch are the price
@@ -2213,7 +2154,7 @@ def stream_bloom_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).parquet(src)
             _stamp_phase(src, b, stamped)
 
-    src = _staged_src("bloom_ingest", sf_dir, build)
+    src = staged_build_once("bloom_ingest", sf_dir, build)
 
     def gate(key, pdfs, state: GroupState):
         # Vectorized (r18, guide §4.2): probes answered with one

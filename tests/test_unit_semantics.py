@@ -747,16 +747,16 @@ def test_compaction_file_count_contract(spark):
     oracle's value equality cannot see."""
     import glob
     import os
-    import tempfile
+
+    from engine.core import scratch_path
 
     engine.QUERIES["sink_compact_small_files"](spark, SF_DIR).collect()
-    base = os.path.join(tempfile.gettempdir(), "spark_graft_io")
-    frag = glob.glob(os.path.join(base, "compact_fragmented", "part-*"))
-    comp = glob.glob(os.path.join(base, "compact_output", "part-*"))
+    frag = glob.glob(os.path.join(scratch_path("compact_fragmented"), "part-*"))
+    comp = glob.glob(os.path.join(scratch_path("compact_output"), "part-*"))
     assert len(frag) > 16, f"fragmented write produced {len(frag)} files"
     assert 1 <= len(comp) <= 4, f"compacted write produced {len(comp)} files"
     n_src = load(spark, SF_DIR, "documents").count()
-    n_comp = spark.read.parquet(os.path.join(base, "compact_output")).count()
+    n_comp = spark.read.parquet(scratch_path("compact_output")).count()
     assert n_src == n_comp
 
 

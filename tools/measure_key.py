@@ -38,7 +38,7 @@ def main() -> None:
     # override, /dev/shm with a free-space guard) so measurements here
     # are comparable to bench anchors (r17 ADVICE: the old hard-coded
     # measure_key_shm.py copy is folded in here).
-    from engine.streaming import _usable_tmpfs
+    from engine.core import _usable_tmpfs
 
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR") or (
         "/dev/shm/spark_graft_local" if _usable_tmpfs("/dev/shm") else ""
