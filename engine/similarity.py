@@ -701,105 +701,50 @@ _IVF_PROBES = 2  # centroids probed per query
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k via an IVF (inverted-file) index — the second
     ANN scale path next to `sim_ann_lsh_topk`, and the engine's
-    demonstration of ITERATIVE algorithms on DataFrames (bounded Lloyd
-    iterations orchestrated from the driver; all data stays executor-side,
-    centroids travel as a bounded trained artifact captured in the
-    assign-UDF closure — see engine.core.collect_model_artifact).
+    demonstration of ITERATIVE algorithms on DataFrames.  The index is
+    an offline artifact: it is trained once per session and corpus
+    (:func:`_build_ivf_index` through :func:`engine.core.session_memo`)
+    and then only queried.
 
     1. init: centroids = the K lowest-vec_id vectors (deterministic);
     2. 2× Lloyd: assign each vector to its nearest centroid (K=16
        centroid matrix in the Arrow-UDF closure, one matmul per
-       batch), recompute centroids as
-       elementwise means via posexplode → (cid, pos) avg → ordered
-       reassembly;
-    3. index: the final assignment IS the inverted file;
-    4. search: each query probes its 2 nearest centroids and exact-cosine
-       re-ranks only those lists (~2K/16 of the collection per probe).
+       batch), recompute centroids as elementwise means via posexplode
+       → (cid, pos) avg → ordered reassembly, collected as a bounded
+       trained artifact (engine.core.collect_model_artifact);
+    3. index: the final assignment IS the inverted file, persisted once;
+    4. search (per call): the 5 query vectors are collected (a fixed
+       query set), routed to their 2 nearest centroids on the driver by
+       the SAME kernel that built the index, and exact-cosine re-rank
+       only those lists (~2K/16 of the collection per probe).  A call
+       runs no Python worker and retrains nothing.
     """
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-
     import numpy as np
-    import pandas as pd
 
     from engine.core import collect_model_artifact
 
-    def nearest(df: DataFrame, cents: DataFrame, out: str) -> DataFrame:
-        # Centroids are a TRAINED MODEL ARTIFACT (K=16 rows, bounded by
-        # construction) — bounded collect + closure capture: cloudpickle
-        # ships the ~8 KB numpy block once per TASK.  The previous shape
-        # (crossJoin(broadcast(packed-1-row)) with the centroid table as
-        # a per-row column) was JVM-cheap but duplicated the artifact
-        # into every Arrow ROW crossing into Python.  Vectorized argmin
-        # over all K centroids in one matmul per batch: map-only, no
-        # shuffle, and now no join at all.  (The very first cut
-        # crossJoined every vector with every centroid and folded the
-        # cosine with Catalyst HOFs per pair — measured 3.8 s at sf0.1.)
-        rows = sorted(collect_model_artifact(cents), key=lambda r: r["cid"])
-        cids = np.array([r["cid"] for r in rows], dtype=np.int64)
-        C = np.stack([np.asarray(r["c_emb"], dtype=np.float64) for r in rows])
-        Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-
-        @F.pandas_udf("array<bigint>")
-        def _top_cids(emb):
-            m = np.stack(emb.to_numpy()).astype(np.float64)
-            mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-            # Same pinning as the old sim_key: floor(sim*1e6+0.5),
-            # tiebreak smaller cid first — identical argmin semantics.
-            keys = np.floor(mn @ Cn.T * 1_000_000 + 0.5).astype(np.int64)
-            order = np.lexsort(
-                (np.broadcast_to(cids, keys.shape), -keys), axis=1
-            )
-            top = cids[order[:, :_IVF_PROBES]]
-            return pd.Series(list(top))
-
-        top = df.select(
-            "vec_id", "embedding", _top_cids("embedding").alias("tc")
+    inverted, route = session_memo(spark, "ivf_index", sf_dir,
+                                   lambda: _build_ivf_index(spark, sf_dir))
+    q = load(spark, sf_dir, "embeddings").select("vec_id", "embedding").filter(
+        F.col("vec_id") < 5
+    )
+    qrows = sorted(collect_model_artifact(q), key=lambda r: r["vec_id"])
+    lists = route(np.stack([np.asarray(r["embedding"]) for r in qrows]))
+    # The routing rides the plan as a literal q_id → list_ids map: a
+    # createDataFrame(<python list>) probe frame would run Python tasks.
+    routing = F.create_map(*[
+        c
+        for r, top in zip(qrows, lists)
+        for c in (
+            F.lit(r["vec_id"]).cast("long"),
+            F.array(*[F.lit(int(cid)).cast("long") for cid in top]),
         )
-        if out == "cid":
-            return top.select(
-                "vec_id", "embedding", F.element_at("tc", 1).alias("cid")
-            )
-        return top.select("vec_id", "embedding", F.explode("tc").alias("cid"))
-
-    cents = e.filter(F.col("vec_id") < _IVF_K).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("c_emb")
-    )
-    # Eager checkpoints inside the scoped block: the Lloyd stages (tiny
-    # 16×64 reduces) run NOW at 8 shuffle partitions and their lineage
-    # is truncated; the final search plan below executes later under
-    # the caller's conf.  Lazy checkpoints would defer every Lloyd
-    # stage into the final action — replayed at 32 partitions.
-    from engine.core import scoped_shuffle_partitions
-
-    with scoped_shuffle_partitions(spark, 8):
-        for _ in range(_IVF_ITERS):
-            assigned = nearest(e, cents, "cid")
-            cents = (
-                assigned.select(
-                    "cid", F.posexplode("embedding").alias("pos", "comp")
-                )
-                .groupBy("cid", "pos")
-                .agg(F.avg(F.col("comp").cast("double")).alias("m"))
-                .groupBy("cid")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                        lambda s: s["m"].cast("float"),
-                    ).alias("c_emb")
-                )
-                .localCheckpoint(eager=True)
-            )
-
-    inverted = nearest(e, cents, "cid").select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("e_emb"),
-        F.col("cid").alias("list_id"),
-    )
-    probes = nearest(e.filter(F.col("vec_id") < 5), cents, "probe").select(
+    ])
+    probes = q.select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("eq"),
         _norm(F.col("embedding")).alias("nq"),
-        F.col("cid").alias("list_id"),
+        F.explode(routing[F.col("vec_id")]).alias("list_id"),
     )
     # query norm hoisted (10 evals) instead of per candidate pair;
     # e_emb's norm stays per-pair — candidate volume (~2N/K per query)
@@ -815,6 +760,85 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5)
+
+
+def _build_ivf_index(spark: SparkSession, sf_dir: str):
+    """Train the ``sim_ivf_topk`` codebook and persist its inverted
+    lists ``(neighbor_id, e_emb, list_id)``.  Returns ``((inverted,
+    route), [inverted])`` for :func:`engine.core.session_memo`;
+    ``route`` maps an (n, 64) matrix to each row's ``_IVF_PROBES``
+    nearest centroid ids under the final codebook."""
+    import numpy as np
+    import pandas as pd
+
+    from engine.core import collect_model_artifact, scoped_shuffle_partitions
+
+    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+
+    def router(rows):
+        # Centroids are a TRAINED MODEL ARTIFACT (K=16 rows, bounded by
+        # construction) — bounded collect + closure capture: cloudpickle
+        # ships the ~8 KB numpy block once per TASK.  A closure, never a
+        # module-level function: cloudpickle pickles engine.* functions
+        # by reference, and Python workers cannot import engine.
+        rows = sorted(rows, key=lambda r: r["cid"])
+        cids = np.array([r["cid"] for r in rows], dtype=np.int64)
+        C = np.stack([np.asarray(r["c_emb"], dtype=np.float64) for r in rows])
+        Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+
+        def route(m):
+            m = np.asarray(m, dtype=np.float64)
+            mn = m / np.linalg.norm(m, axis=1, keepdims=True)
+            # Pinned floor(sim*1e6+0.5), tiebreak smaller cid first.
+            keys = np.floor(mn @ Cn.T * 1_000_000 + 0.5).astype(np.int64)
+            order = np.lexsort(
+                (np.broadcast_to(cids, keys.shape), -keys), axis=1
+            )
+            return cids[order[:, :_IVF_PROBES]]
+
+        return route
+
+    def assign(route) -> DataFrame:
+        # Vectorized argmin over all K centroids in one matmul per
+        # batch: map-only, no shuffle, no join.  (The very first cut
+        # crossJoined every vector with every centroid and folded the
+        # cosine with Catalyst HOFs per pair — measured 3.8 s at sf0.1.)
+        @F.pandas_udf("array<bigint>")
+        def _top_cids(emb):
+            return pd.Series(list(route(np.stack(emb.to_numpy()))))
+
+        return e.select(
+            "vec_id", "embedding",
+            F.element_at(_top_cids("embedding"), 1).alias("cid"),
+        )
+
+    rows = collect_model_artifact(e.filter(F.col("vec_id") < _IVF_K).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("c_emb")
+    ))
+    # Each round's tiny 16×64 reduces run at 8 shuffle partitions, and
+    # the next round needs only the collected matrix in its closure.
+    with scoped_shuffle_partitions(spark, 8):
+        for _ in range(_IVF_ITERS):
+            rows = collect_model_artifact(
+                assign(router(rows))
+                .select("cid", F.posexplode("embedding").alias("pos", "comp"))
+                .groupBy("cid", "pos")
+                .agg(F.avg(F.col("comp").cast("double")).alias("m"))
+                .groupBy("cid")
+                .agg(
+                    F.transform(
+                        F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                        lambda s: s["m"].cast("float"),
+                    ).alias("c_emb")
+                )
+            )
+    route = router(rows)
+    inverted = assign(route).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("e_emb"),
+        F.col("cid").alias("list_id"),
+    ).persist()
+    return (inverted, route), [inverted]
 
 
 def _ivf_fixed_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,7 +21,13 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.mark.parametrize(
-    "key", ["stream_dedup_state", "sink_parquet_partitioned", "text_bm25_topk"]
+    "key",
+    [
+        "stream_dedup_state",
+        "sink_parquet_partitioned",
+        "text_bm25_topk",
+        "sim_ivf_topk",
+    ],
 )
 def test_repeat_calls_leave_no_residue(spark, key):
     """From call 2 to call 5 of one key, the temp-view count, the entries

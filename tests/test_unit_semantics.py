@@ -1903,6 +1903,7 @@ _SESSION_MEMO_CONSUMERS = [
     ("ivf_fixed_ranked", "sim_ivf_fixed_topk"),
     ("lpa_partition", "graph_label_propagation"),
     ("selfsim_spans", "dedup_span_selfsim"),
+    ("ivf_index", "sim_ivf_topk"),
 ]
 
 
@@ -1946,6 +1947,31 @@ def test_session_memo_revalidates_after_clear_cache(spark, memo, key):
         assert not _cached(frames[0]) and all(map(_cached, frames[1:]))
         assert _rows() == base
         assert all(map(_cached, frames))
+
+
+def test_sim_ivf_topk_warm_call_collects_only_its_queries(spark, monkeypatch):
+    # The IVF index is trained once per session (core.session_memo
+    # "ivf_index"): a warm call collects its 5 query rows to route them
+    # and no 16-row codebook, and returns the cold call's rows.
+    from engine import core
+
+    def _rows():
+        return sorted(
+            map(tuple, engine.QUERIES["sim_ivf_topk"](spark, SF_DIR).collect())
+        )
+
+    first = _rows()
+    sizes = []
+    collect = core.collect_model_artifact
+
+    def counting(df, *args, **kwargs):
+        rows = collect(df, *args, **kwargs)
+        sizes.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(core, "collect_model_artifact", counting)
+    assert _rows() == first
+    assert sizes == [5]
 
 
 def test_quantized_norms_nonzero(spark):
