@@ -2995,17 +2995,12 @@ def pipeline_corpus_clean_polyhash(spark: SparkSession, sf_dir: str) -> DataFram
     fingerprint shuffle for exact dedup, bucketed banded LSH (never
     all-pairs), persisted `uniq` diamond feeding the near-dup stage and
     both status joins."""
-    from engine.dedup import kr_minhash_near_pairs
+    from engine.dedup import _neardup_corpus, kr_minhash_near_pairs
     from engine.text import _tokens
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     raw = (
-        d.unionByName(
-            d.select(
-                (F.col("doc_id") + 100_000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-            )
-        )
+        _neardup_corpus(d)
         .unionByName(
             d.select((F.col("doc_id") + 200_000).alias("doc_id"), "text")
         )
@@ -3031,10 +3026,7 @@ def pipeline_corpus_clean_polyhash(spark: SparkSession, sf_dir: str) -> DataFram
     uniq = (
         ranked.filter(F.col("rn") == 1).select("doc_id", "text").persist()
     )
-    # arrow=True (r18): kernel-built shingles won every interleaved A/B
-    # round on this key (3.97-4.47 → 3.68-3.84 s); exact-equal chain,
-    # oracle untouched.
-    pairs = kr_minhash_near_pairs(uniq, arrow=True)
+    pairs = kr_minhash_near_pairs(uniq)
     drop = pairs.select(F.col("doc_b").alias("doc_id")).distinct().persist()
     near_dup = uniq.join(drop, "doc_id", "left_semi").select(
         "doc_id", F.lit("near_dup").alias("status")

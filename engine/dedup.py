@@ -2,9 +2,10 @@
 normalized, and MinHash-LSH near-duplicate detection.
 
 The corpus has no native duplicates at test scale, so each key builds a
-deterministic duplicated corpus inline (originals ∪ mutated copies at
-``doc_id + 100000``) — the dedup path is exercised for real, and the
-expected survivor set is exactly the originals.
+deterministic duplicated corpus (originals ∪ mutated copies at
+``doc_id + 100000``; the ' zz yy' near-copy plant is
+:func:`_neardup_corpus`) — the dedup path is exercised for real, and
+the expected survivor set is exactly the originals.
 
 Scale design (SURVEY.md §1.3c): near-dup detection is banded MinHash —
 shingle → per-seed min-hash → band key → bucket self-join — candidate
@@ -28,6 +29,18 @@ def _tokens(col: F.Column) -> F.Column:
 
 
 _TOKENS_SQL = "list_filter(string_split(lower({c}), ' '), t -> t <> '')"
+
+
+def _neardup_corpus(d: DataFrame) -> DataFrame:
+    """(doc_id, text) documents ∪ planted near-copies at doc_id + 100000
+    with text + ' zz yy' — the one Spark home of the planted corpus (SQL
+    twin: the ``corpus`` CTE of :data:`_KR_SHINGLES_SQL`)."""
+    return d.unionByName(
+        d.select(
+            (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
+            F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
+        )
+    )
 
 
 @query(
@@ -278,13 +291,7 @@ def dedup_minhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_unit_semantics.py recall assertion).
     """
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.unionByName(
-        d.select(
-            (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-        )
-    )
-    return minhash_near_pairs(corpus)
+    return minhash_near_pairs(_neardup_corpus(d))
 
 
 @query(
@@ -449,12 +456,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_minhash_near.
     """
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.unionByName(
-        d.select(
-            (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-        )
-    )
+    corpus = _neardup_corpus(d)
     # Materialized token column, not the _tokens(text) tree — see the
     # O(n²) element_at note in minhash_near_pairs above.
     toks = F.col("toks")
@@ -538,8 +540,9 @@ _KR_SHINGLES_SQL = f"""corpus AS (
 
 
 def _kr_t31(tok) -> F.Column:
-    """Per-token Karp-Rabin char fold mod M31 — the Spark twin of the
-    ``list_reduce`` fold in :data:`_KR_TOK_SH_SQL` (one interpreted
+    """Per-token Karp-Rabin char fold mod M31 — the Spark twin of
+    :data:`_KR_T31_SQL`, used where token hashes are computed per
+    vocabulary entry rather than by the shingle kernel (one interpreted
     lambda eval per CHAR of the token, ~6/token — never per gram)."""
     return (
         F.aggregate(
@@ -551,26 +554,24 @@ def _kr_t31(tok) -> F.Column:
     )
 
 
-def _kr_shingles_arrow(corpus: DataFrame) -> DataFrame:
-    """:func:`_kr_shingles` as ONE Arrow/numpy kernel over the raw
-    (doc_id, text) scan — guide §4.2's "hand whole batches to
-    vectorized native code" — replacing the exploded JVM chain
-    (posexplode → per-char interpreted fold → two lead() windows →
-    distinct ≈ 54 tokens × ~6 lambda evals per doc + a generate + a
-    sort + a hash-agg).  The kernel emits the per-doc-DISTINCT shingle
-    set directly, exact-integer EQUAL to :func:`_kr_shingles` (the
-    whole-corpus equality is pinned in tests/test_unit_semantics.py;
-    every consumer's DuckDB oracle replays the chain independently).
+def _kr_shingles(corpus: DataFrame) -> DataFrame:
+    """DISTINCT (doc_id, sh) Karp-Rabin 3-token shingle hashes of a
+    (doc_id, text) corpus with one row per doc_id — the
+    DuckDB-expressible feature set behind the hash-verified near-dup
+    family: `dedup_simhash_polyhash`, `dedup_setsim_prefix_filter`,
+    `dedup_minhash_polyhash`, `dedup_incremental_minhash`,
+    `dedup_minhash_calibration` and `pipeline_corpus_clean_polyhash`
+    (corpus-agnostic SQL twin: :data:`_KR_TOK_SH_SQL`).
 
-    CALLER-SELECTED by measurement (r18 interleaved A/B at sf0.1, both
-    orders): the kernel wins where sh is PERSISTED and feeds
-    window/multi-consumer chains — setsim 5.8→3.1 s mins,
-    corpus_clean_polyhash 3.97→3.68 — because the persisted frame is
-    built in one Python pass and caches the already-distinct rows; it
-    LOSES slightly where sh feeds one direct groupBy whose exchange
-    the JVM form's window partitioning already satisfies (simhash
-    1.83 vs 2.10, incremental 2.35 vs 2.75, calibration tie) — those
-    callers keep the JVM form.
+    ONE Arrow/numpy kernel over the raw scan — guide §4.2's "hand whole
+    batches to vectorized native code" — rather than an exploded JVM
+    chain (posexplode → per-char interpreted fold → two lead() windows
+    → distinct ≈ 54 tokens × ~6 lambda evals per doc + a generate + a
+    sort + a hash-agg).  Each doc's text sits in one row, so the kernel
+    emits its distinct shingle set with no exchange; a consumer's
+    groupBy(doc_id) is the first shuffle.  Measured against that JVM
+    chain on all six consumers at sf0.1 (interleaved sessions, table in
+    CHANGES.md): no consumer is slower.
 
     Exactness argument: Horner fold h=(h·31+c) mod p is linear, so
     h = Σ c_j·31^(L-1-j) mod p — computed vectorized as per-char
@@ -582,8 +583,10 @@ def _kr_shingles_arrow(corpus: DataFrame) -> DataFrame:
     with empties dropped — consecutive spaces yield zero-length
     segments that are skipped, mirroring `_tokens`; codepoints come
     from UTF-32-LE so non-ASCII would match F.ascii's codepoint
-    semantics.  NULL texts produce no rows (posexplode-of-null
-    parity)."""
+    semantics.  NULL texts and docs under 3 tokens produce no rows.
+    tests/test_unit_semantics.py pins the kernel to a plain-Python
+    evaluation of the definition; every consumer's DuckDB oracle
+    replays the chain independently."""
 
     def kernel(it):
         import numpy as np
@@ -656,38 +659,6 @@ def _kr_shingles_arrow(corpus: DataFrame) -> DataFrame:
     )
 
 
-def _kr_shingles(corpus: DataFrame) -> DataFrame:
-    """DISTINCT (doc_id, sh) Karp-Rabin 3-token shingle hashes — the
-    DuckDB-expressible feature set behind the whole hash-verified
-    near-dup family: `dedup_simhash_polyhash`,
-    `dedup_setsim_prefix_filter`, `dedup_minhash_polyhash`,
-    `dedup_incremental_minhash`, and `pipeline_corpus_clean_polyhash`
-    (corpus-agnostic SQL twin: :data:`_KR_TOK_SH_SQL`).
-
-    Shingle hashing is ONE char fold per exploded token (~6 interpreted
-    lambda evals each — never a per-shingle fold over the 3-token
-    string, never a nested per-position fold: the winnowing 6.3 s
-    trap); consecutive token hashes meet via two lead() windows, and
-    ONE doc_id exchange serves window + distinct + any downstream
-    doc_id groupBy (subset rule).  :func:`_kr_shingles_arrow` is the
-    exact-equal Arrow-kernel twin, selected per caller by measurement
-    (see its docstring for the decision table)."""
-    tok = corpus.select(
-        "doc_id", F.posexplode(_tokens(F.col("text"))).alias("pos", "tok")
-    )
-    hashed = tok.select("doc_id", "pos", _kr_t31(F.col("tok")).alias("t31"))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    sh = (
-        (F.col("t31") * 131 + F.lead("t31", 1).over(w)) % _M31 * 131
-        + F.lead("t31", 2).over(w)
-    ) % _M31
-    return (
-        hashed.select("doc_id", sh.alias("sh"))
-        .where(F.col("sh").isNotNull())
-        .distinct()
-    )
-
-
 @query(
     "dedup_simhash_polyhash",
     oracle=f"""
@@ -726,26 +697,12 @@ def dedup_simhash_polyhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted copies: 434/500 at sf0.01, within noise of the xxhash
     sibling's 438 — the family swap costs nothing).
 
-    Shingle hashing is ONE char fold per token (exploded rows, ~6
-    lambda evals each), never a per-shingle fold over the 3-token
-    string (~3× the interpreted-HOF cost) and never a nested
-    per-position fold (>200 evals/row → the winnowing 6.3 s trap);
-    consecutive token hashes meet via two lead() windows.
-
-    Shuffle discipline: ONE exchange on doc_id serves the whole
-    signature stage — the lead window partitions by doc_id, and the
-    downstream distinct on (doc_id, sh) plus the 32-sum groupBy(doc_id)
-    both have their ClusteredDistribution satisfied by that
-    HashPartitioning (subset rule, win_gaps_islands precedent).  The
-    band self-join is bucket-local, never all-pairs."""
+    Shuffle discipline: the shingle kernel (:func:`_kr_shingles`) runs
+    in the scan's partitions, so the 32-sum groupBy(doc_id) is the ONE
+    exchange of the signature stage.  The band self-join is
+    bucket-local, never all-pairs."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.unionByName(
-        d.select(
-            (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-        )
-    )
-    return kr_simhash_pairs(_kr_shingles(corpus))
+    return kr_simhash_pairs(_kr_shingles(_neardup_corpus(d)))
 
 
 def kr_simhash_pairs(feat: DataFrame) -> DataFrame:
@@ -779,13 +736,15 @@ def kr_simhash_pairs_from_sums(
 
     ``eager`` materializes the signature cache with one count() BEFORE
     the band self-join builds.  A lazy persist gets RACED by the join's
-    two stages — each computes the uncached subtree concurrently.  For
-    a cheap JVM subtree the race is nearly free (both passes overlap on
-    idle cores: 1.89 s lazy vs 2.26 s eager for dedup_simhash_polyhash
-    at sf0.1 — the extra serialized pass LOSES), so that caller stays
-    lazy; for a Python-bound Arrow-kernel subtree the race doubles the
-    worker-limited kernel work (~8 s vs ~5 s for the mm byte-gram
-    caller), so it passes eager=True."""
+    two stages — each computes the uncached subtree concurrently.  Where
+    an exchange sits between the cache and the expensive work, only the
+    part above it races: dedup_simhash_polyhash's shingle kernel feeds
+    the 32-sum groupBy's exchange, so the race is nearly free and the
+    extra serialized pass LOSES (sf0.1 warm mins, 2 interleaved
+    sessions: 2.67 s lazy vs 3.00 s eager) — that caller stays lazy.
+    The mm byte-gram caller computes its sums inside the kernel with no
+    exchange, so the race doubles the worker-limited kernel work (~8 s
+    vs ~5 s) — it passes eager=True."""
     sig_col = None
     for b in range(_SIMHASH_BITS):
         bit = F.when(F.col(f"s{b}") >= 0, F.lit(1 << b).cast("long")).otherwise(
@@ -793,8 +752,8 @@ def kr_simhash_pairs_from_sums(
         )
         sig_col = bit if sig_col is None else sig_col + bit
     # sigs feeds both sides of the band self-join — without persist the
-    # whole tokenize→fold→window→distinct→32-sum subtree re-derives per
-    # consumer (graph_triangle_count precedent, ~|docs| rows cached).
+    # whole shingle→32-sum subtree re-derives per consumer
+    # (graph_triangle_count precedent, ~|docs| rows cached).
     sigs = sums.select("doc_id", sig_col.alias("sig")).persist()
     if eager:
         sigs.count()
@@ -885,18 +844,8 @@ def dedup_setsim_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     a shuffle join keyed on the pair ids when it is not, so no stage
     ever forces a corpus-correlated broadcast."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.unionByName(
-        d.select(
-            (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-        )
-    )
-    # Arrow-kernel shingles (r18): this caller persists sh and runs two
-    # windows + three joins over it — the kernel builds the cached frame
-    # in one Python pass with the per-doc distinct already applied
-    # (interleaved A/B mins 5.8 → 3.1 s; exact-equal by the pinned
-    # kernel≡JVM test, oracle untouched).
-    sh = _kr_shingles_arrow(corpus).persist()
+    # sh feeds two windows + three joins: persist the diamond
+    sh = _kr_shingles(_neardup_corpus(d)).persist()
 
     # df as a window count over the sh partitioning — measured faster
     # than the groupBy+join form (2.0 vs 2.4 s to candidates at sf0.1):
@@ -1044,6 +993,84 @@ def _mh_band_fold(b: int):
     ) % _M31
 
 
+def _mh_mins(sh: DataFrame) -> DataFrame:
+    """(doc_id, sh) → (doc_id, m0..m15): the 16 universal-family
+    min-hashes as ONE columnar, map-side-combinable groupBy (no 16× row
+    explosion) — Spark twin of :data:`_MH_MINS_SQL`.  ANSI overflow
+    bound: sh < 2³¹ and a_i < M31 keep a_i·sh + b_i < 2⁶²."""
+    return sh.groupBy("doc_id").agg(
+        *[
+            F.min((F.col("sh") * F.lit(_MH_A[i]) + F.lit(_MH_B[i])) % F.lit(_M31))
+            .alias(f"m{i}")
+            for i in range(_N_HASHES)
+        ]
+    )
+
+
+def _mh_bands(mins: DataFrame) -> DataFrame:
+    """(doc_id, m0..m15) → (doc_id, band, band_key), one row per band —
+    Spark twin of :data:`_MH_BANDS_SQL`."""
+    return mins.select(
+        "doc_id",
+        F.posexplode(
+            F.array(*[_mh_band_fold(b) for b in range(_N_HASHES // _BAND_SIZE)])
+        ).alias("band", "band_key"),
+    )
+
+
+def _mh_cand(bands: DataFrame) -> DataFrame:
+    """DISTINCT (doc_a < doc_b) pairs sharing a band key — the
+    bucket-local band self-join, never all-pairs (Spark twin of the
+    ``cand`` CTE in :data:`_KR_MH_PAIRS_CTES`)."""
+    a = bands.alias("a")
+    b = bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.band_key") == F.col("b.band_key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        )
+        .distinct()
+    )
+
+
+def _kr_overlap(sh: DataFrame, cand: DataFrame) -> DataFrame:
+    """Exact shingle overlap of candidate pairs: (doc_a, doc_b) over a
+    DISTINCT (doc_id, sh) frame → (doc_a, doc_b, n_common, n_a, n_b),
+    ungated — Spark twin of the ``sizes``/``inter`` CTEs in
+    :data:`_KR_MH_PAIRS_CTES`; each caller applies its own gate and
+    projection.  Unhinted joins: pair volume is corpus-proportional,
+    so size selection is AQE's call, not a hard hint (r11
+    broadcast-audit policy)."""
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    sh_a = sh.withColumnRenamed("doc_id", "doc_a")
+    sh_b = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("sh_b"))
+    inter = (
+        sh_a.join(cand, "doc_a")
+        .join(
+            sh_b,
+            (F.col("doc_b") == F.col("b_id")) & (F.col("sh") == F.col("sh_b")),
+        )
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("n_common"))
+    )
+    return (
+        inter.join(
+            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a")),
+            "doc_a",
+        )
+        .join(
+            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b")),
+            "doc_b",
+        )
+        .select("doc_a", "doc_b", "n_common", "n_a", "n_b")
+    )
+
+
 # KR MinHash pair CTEs — consume an `sh` CTE of DISTINCT (doc_id, sh)
 # and yield `mh_pairs` (doc_a, doc_b, n_common, n_a, n_b, exact Jaccard
 # ≥ 0.5).  Shared by dedup_minhash_polyhash and the hash-verified
@@ -1080,21 +1107,13 @@ _KR_MH_PAIRS_CTES = f"""mins AS (
     )"""
 
 
-def kr_minhash_near_pairs(corpus: DataFrame, arrow: bool = False) -> DataFrame:
+def kr_minhash_near_pairs(corpus: DataFrame) -> DataFrame:
     """Exact-Jaccard ≥ 0.5 near-dup pairs over a (doc_id, text) corpus
     via the DuckDB-replayable Karp-Rabin MinHash+LSH chain — the
     hash-verifiable twin of :func:`minhash_near_pairs` (SQL twin:
     :data:`_KR_MH_PAIRS_CTES` over an `sh` CTE).  Returns (doc_a,
-    doc_b, n_common, n_a, n_b, jac_e6).
-
-    ``arrow`` selects the Arrow-kernel shingle builder — per-caller
-    measured decision (the :func:`_kr_shingles_arrow` table):
-    pipeline_corpus_clean_polyhash passes True (its corpus arg is a
-    persisted post-dedup frame and the kernel won every A/B round);
-    dedup_minhash_polyhash keeps the JVM form (direct-groupBy shape,
-    JVM won the minima both orders)."""
-    sh = (_kr_shingles_arrow if arrow else _kr_shingles)(corpus)
-    return kr_pairs_from_sh(sh)
+    doc_b, n_common, n_a, n_b, jac_e6)."""
+    return kr_pairs_from_sh(_kr_shingles(corpus))
 
 
 def kr_pairs_from_sh(sh: DataFrame, eager: bool = False) -> DataFrame:
@@ -1114,65 +1133,17 @@ def kr_pairs_from_sh(sh: DataFrame, eager: bool = False) -> DataFrame:
     sf0.1 (cold cache, min of 2): crosslingual 5.02 s lazy → 4.31 s
     eager (its sh subtree carries the lexicon normalize + window);
     minhash_polyhash 2.05 s lazy → 2.43 s eager (cheap subtree — the
-    extra driver job outweighs the race).  Default lazy; callers with
-    an expensive shingle stream pass eager=True."""
+    extra driver job outweighs the race).  With the shingle kernel
+    (:func:`_kr_shingles`) lazy still wins or ties for both kernel
+    callers (warm mins, 2 interleaved sessions: minhash_polyhash 2.93
+    vs 2.86 s, pipeline_corpus_clean_polyhash 4.65 vs 4.91 s lazy vs
+    eager).  Default lazy; callers with an expensive shingle stream
+    pass eager=True."""
     sh = sh.persist()
     if eager:
         sh.count()
-    mins = sh.groupBy("doc_id").agg(
-        *[
-            F.min((F.col("sh") * F.lit(_MH_A[i]) + F.lit(_MH_B[i])) % F.lit(_M31))
-            .alias(f"m{i}")
-            for i in range(_N_HASHES)
-        ]
-    )
-
-    bands = mins.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[_mh_band_fold(b) for b in range(_N_HASHES // _BAND_SIZE)])
-        ).alias("band", "band_key"),
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    sh_a = sh.withColumnRenamed("doc_id", "doc_a")
-    sh_b = sh.select(
-        F.col("doc_id").alias("b_id"), F.col("sh").alias("sh_b")
-    )
-    # Unhinted cand join — same Heaps'-law reasoning as the xxhash twin
-    # above: pair volume is corpus-proportional, so size selection is
-    # AQE's call, not a hard hint (r11 broadcast-audit policy).
-    inter = (
-        sh_a.join(cand, "doc_a")
-        .join(
-            sh_b,
-            (F.col("doc_b") == F.col("b_id")) & (F.col("sh") == F.col("sh_b")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
     return (
-        inter.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b")),
-            "doc_b",
-        )
+        _kr_overlap(sh, _mh_cand(_mh_bands(_mh_mins(sh))))
         .filter(
             F.col("n_common") * 2 >= F.col("n_a") + F.col("n_b") - F.col("n_common")
         )
@@ -1219,17 +1190,12 @@ def dedup_minhash_polyhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     16 mins reduce COLUMNAR in one map-side-combinable groupBy (no 16×
     row explosion); the band self-join is bucket-local, never
     all-pairs; the exact-intersection verify joins the shingle table
-    against the BROADCAST bounded candidate set.  ANSI overflow bounds:
-    sh < 2³¹ and a_i < M31 keep a_i·sh + b_i < 2⁶²; band folds stay
-    < 2³⁸ between reductions."""
+    against the candidate set UNHINTED — AQE size-selects the join, a
+    broadcast at bench scale (:func:`_kr_overlap`).  ANSI overflow
+    bounds: sh < 2³¹ and a_i < M31 keep a_i·sh + b_i < 2⁶²; band folds
+    stay < 2³⁸ between reductions."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.unionByName(
-        d.select(
-            (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-        )
-    )
-    return kr_minhash_near_pairs(corpus)
+    return kr_minhash_near_pairs(_neardup_corpus(d))
 
 
 # Incremental batch: near-copies (‰3=0), exact copies (‰3=1), and NOVEL
@@ -1329,68 +1295,30 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sh = _kr_shingles(corpus).persist()
-    mins = sh.groupBy("doc_id").agg(
-        *[
-            F.min((F.col("sh") * F.lit(_MH_A[i]) + F.lit(_MH_B[i])) % F.lit(_M31))
-            .alias(f"m{i}")
-            for i in range(_N_HASHES)
-        ]
-    )
-    bands = mins.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[_mh_band_fold(b) for b in range(_N_HASHES // _BAND_SIZE)])
-        ).alias("band", "band_key"),
-    )
+    bands = _mh_bands(_mh_mins(sh))
     idx_bands = bands.filter(F.col("doc_id") < _COPY_OFFSET).select(
-        F.col("doc_id").alias("index_id"), "band", "band_key"
+        F.col("doc_id").alias("doc_b"), "band", "band_key"
     )
     batch_bands = bands.filter(F.col("doc_id") >= _COPY_OFFSET).select(
-        F.col("doc_id").alias("batch_id"), "band", "band_key"
+        F.col("doc_id").alias("doc_a"), "band", "band_key"
     )
     cand = (
         idx_bands.join(batch_bands, ["band", "band_key"])
-        .select("batch_id", "index_id")
+        .select("doc_a", "doc_b")
         .distinct()
     )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    sh_b = sh.withColumnRenamed("doc_id", "batch_id")
-    sh_a = sh.select(
-        F.col("doc_id").alias("a_id"), F.col("sh").alias("sh_a")
-    )
-    inter = (
-        sh_b.join(cand, "batch_id")
-        .join(
-            sh_a,
-            (F.col("index_id") == F.col("a_id")) & (F.col("sh") == F.col("sh_a")),
-        )
-        .groupBy("batch_id", "index_id")
-        .agg(F.count("*").alias("n_common"))
-    )
     return (
-        inter.join(
-            sizes.select(
-                F.col("doc_id").alias("batch_id"), F.col("n").alias("n_batch")
-            ),
-            "batch_id",
-        )
-        .join(
-            sizes.select(
-                F.col("doc_id").alias("index_id"), F.col("n").alias("n_index")
-            ),
-            "index_id",
-        )
+        _kr_overlap(sh, cand)
         .filter(
-            F.col("n_common") * 2
-            >= F.col("n_batch") + F.col("n_index") - F.col("n_common")
+            F.col("n_common") * 2 >= F.col("n_a") + F.col("n_b") - F.col("n_common")
         )
         .select(
-            "batch_id",
-            "index_id",
+            F.col("doc_a").alias("batch_id"),
+            F.col("doc_b").alias("index_id"),
             "n_common",
-            "n_batch",
-            "n_index",
-            F.expr("n_common * 1000000 div (n_batch + n_index - n_common)")
+            F.col("n_a").alias("n_batch"),
+            F.col("n_b").alias("n_index"),
+            F.expr("n_common * 1000000 div (n_a + n_b - n_common)")
             .cast("long")
             .alias("jac_e6"),
         )
@@ -1541,16 +1469,6 @@ def dedup_cosine_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CC_MAX_ITERS = 16
-
-
-def _neardup_corpus(d: DataFrame) -> DataFrame:
-    """documents ∪ planted exact copies (doc_id+offset, text + ' zz yy')."""
-    return d.unionByName(
-        d.select(
-            (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-        )
-    )
 
 
 def _neardup_edges(d: DataFrame) -> DataFrame:
@@ -2393,14 +2311,16 @@ def dedup_crosslingual_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the next language through the lexicon); normalize the unioned
     corpus by the reverse lexicon join (canonical tokens pass through
     via COALESCE onto their own KR hash); shingle the normalized hash
-    stream with the standard lead-window fold; minhash → band →
-    bucket join → exact-Jaccard verify; filter to lang_a <> lang_b.
+    stream with two lead() windows; minhash → band → bucket join →
+    exact-Jaccard verify; filter to lang_a <> lang_b.
 
     Scale design: the lexicon is VOCABULARY-sized (Heaps' law —
     sublinear in corpus size) but not bounded by construction, so both
     lexicon joins are unhinted and AQE size-selects (r12 broadcast-
-    audit policy); the normalize → window → distinct chain keeps the
-    one-doc_id-exchange discipline of :func:`_kr_shingles`; the pair
+    audit policy); the normalize → window → distinct chain runs on ONE
+    doc_id exchange (the lead window's, which the distinct reuses).  Its
+    token hashes come from the lexicon join, not from text, so the text
+    kernel :func:`_kr_shingles` cannot build this stream.  The pair
     chain inherits the banded-LSH never-all-pairs shape.  A planted
     mirror's normalized stream equals its origin's exactly (token-
     level bijection), so recall is deterministic — no banding-draw
@@ -2568,45 +2488,14 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh — lazy is the measured-cheap choice (kr_pairs_from_sh default,
     minhash_polyhash precedent)."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.unionByName(
-        d.select(
-            (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-        )
-    )
-    sh = _kr_shingles(corpus).persist()
-    mins = sh.groupBy("doc_id").agg(
-        *[
-            F.min((F.col("sh") * F.lit(_MH_A[i]) + F.lit(_MH_B[i])) % F.lit(_M31))
-            .alias(f"m{i}")
-            for i in range(_N_HASHES)
-        ]
-    ).persist()
+    sh = _kr_shingles(_neardup_corpus(d)).persist()
+    mins = _mh_mins(sh).persist()
     # Eager: mins feeds the band self-join AND both agreement sides (3
     # racing consumers through one cache) — measured warm mins-of-3 at
     # sf0.1: lazy 3.72 vs eager 3.43 s (sh stays lazy: eager-both 3.27
     # was inside the same noise band, one extra job not justified).
     mins.count()
-    bands = mins.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[_mh_band_fold(b) for b in range(_N_HASHES // _BAND_SIZE)])
-        ).alias("band", "band_key"),
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    cand = _mh_cand(_mh_bands(mins))
     ma = mins.select(
         F.col("doc_id").alias("a_id"),
         *[F.col(f"m{i}").alias(f"ma{i}") for i in range(_N_HASHES)],
@@ -2624,25 +2513,10 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(mb, cand.doc_b == mb.b_id)
         .select("doc_a", "doc_b", n_agree.alias("n_agree"))
     )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    sh_a = sh.withColumnRenamed("doc_id", "doc_a")
-    sh_b = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("sh_b"))
-    inter = (
-        sh_a.join(cand, "doc_a")
-        .join(
-            sh_b,
-            (F.col("doc_b") == F.col("b_id")) & (F.col("sh") == F.col("sh_b")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
-    sz_a = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    sz_b = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
     jac_e4 = F.expr("(10000 * n_common) div (n_a + n_b - n_common)")
     est_e4 = (F.col("n_agree") * 625).cast("long")
     return (
-        inter.join(sz_a, "doc_a")
-        .join(sz_b, "doc_b")
+        _kr_overlap(sh, cand)
         .join(agree, ["doc_a", "doc_b"])
         .select(
             "doc_a",

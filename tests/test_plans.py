@@ -298,6 +298,37 @@ def test_scratch_and_staging_have_one_owner_in_engine_source():
     assert not dupes, f"staged names used twice: {dupes}"
 
 
+def test_kr_near_dup_chain_has_one_spark_home_per_step():
+    # Each step of the Karp-Rabin near-dup chain has one Spark function,
+    # as each has one SQL CTE: shingles come only from the Arrow kernel
+    # _kr_shingles (no second builder, no per-caller builder flag), the
+    # planted-copy corpus only from _neardup_corpus, and the 16-min
+    # signature only from _mh_mins (its one other use of _MH_A[i] is
+    # the _MH_MINS_SQL text).
+    import pathlib
+    import re
+
+    srcs = {p.name: p.read_text() for p in pathlib.Path("engine").glob("*.py")}
+    bad = [
+        name for name, text in srcs.items()
+        if "_kr_shingles_arrow" in text or re.search(r"\barrow\s*[:=]", text)
+    ]
+    assert not bad, f"second shingle builder or builder flag in: {bad}"
+
+    src = srcs["dedup.py"]
+    planted = re.compile(
+        r'\(F\.col\("doc_id"\) \+ _COPY_OFFSET\)\.alias\("doc_id"\),\s*'
+        r'F\.concat\(F\.col\("text"\), F\.lit\(" zz yy"\)\)'
+    )
+    start = src.index("def _neardup_corpus(")
+    end = src.index("\ndef ", start + 1)
+    sites = [m.start() for m in planted.finditer(src)]
+    assert len(sites) == 1 and start < sites[0] < end, (
+        "planted copy union built outside _neardup_corpus"
+    )
+    assert src.count("_MH_A[i]") == 2, "min-hash signature built twice"
+
+
 @pytest.mark.parametrize(
     "key",
     [

@@ -1082,19 +1082,20 @@ def test_pipeline_corpus_clean_polyhash_stage_attribution(spark):
     )
 )
 def test_kr_shingles_match_python_reference(spark, toks):
-    """The Karp-Rabin shingle chain (engine.dedup._kr_shingles) must
+    """The Karp-Rabin shingle kernel (engine.dedup._kr_shingles) must
     equal a direct Python evaluation of its published definition —
     per-token char fold (h*31+ord(c)) mod p40, reduced mod M31, then
-    base-131 3-token combine mod M31, distinct.  Five hash-verified
-    keys (simhash/minhash/setsim/incremental/pipeline polyhash) and
-    their DuckDB twins all assume exactly these constants; a silent
-    drift in either engine implementation breaks them as a family."""
+    base-131 3-token combine mod M31, distinct per doc.  Six
+    hash-verified keys (simhash/setsim/minhash/incremental/calibration/
+    pipeline polyhash) and their DuckDB twins all assume exactly these
+    constants; a silent drift in either engine breaks them as a family.
+    Fixed rows beside the generated doc pin the kernel's edge cases: a
+    NULL text and a 2-token doc yield no rows, and runs of spaces yield
+    no empty tokens."""
     from engine.dedup import _FP_MOD, _M31, _kr_shingles
 
-    text = " ".join(toks)
-    # mirror engine.text._tokens: lower + split on single spaces,
-    # dropping empties (generated tokens are non-empty, no spaces)
-    norm = [t.lower() for t in text.split(" ") if t]
+    fixed = [(2, None), (3, "one two"), (4, "  a  b "), (5, "  a  b  c ")]
+    rows = [(1, " ".join(toks))] + fixed
 
     def fold(tok):
         h = 0
@@ -1102,45 +1103,22 @@ def test_kr_shingles_match_python_reference(spark, toks):
             h = (h * 31 + ord(c)) % _FP_MOD
         return h % _M31
 
-    th = [fold(t) for t in norm]
-    expected = {
-        (((th[i] * 131 + th[i + 1]) % _M31) * 131 + th[i + 2]) % _M31
-        for i in range(len(th) - 2)
-    }
-    corpus = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    got = {r.sh for r in _kr_shingles(corpus).collect()}
-    assert got == expected, f"KR drift: {got ^ expected}"
+    def shingles(text):
+        if text is None:
+            return set()
+        # mirror engine.dedup._tokens: lower + split on single spaces,
+        # dropping empties
+        th = [fold(t.lower()) for t in text.split(" ") if t]
+        return {
+            (((th[i] * 131 + th[i + 1]) % _M31) * 131 + th[i + 2]) % _M31
+            for i in range(len(th) - 2)
+        }
 
-
-def test_kr_shingles_arrow_kernel_equals_jvm_twin(spark):
-    """r18: setsim and corpus_clean_polyhash build shingles via the
-    Arrow/numpy kernel _kr_shingles_arrow (guide §4.2, caller-selected
-    by measurement); it must be EXACT-EQUAL to the JVM chain
-    _kr_shingles on the full planted corpus — the five consumer keys'
-    DuckDB oracles replay the JVM-form arithmetic, so any kernel drift
-    (tokenization, fold, combine, distinct) breaks the family.
-    Includes a NULL-text row (posexplode-of-null parity) and <3-token
-    rows (no shingles)."""
-    from engine.dedup import _COPY_OFFSET, _kr_shingles, _kr_shingles_arrow
-
-    d = load(spark, SF_DIR, "documents").select("doc_id", "text")
-    corpus = d.unionByName(
-        d.select(
-            (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-        )
-    ).unionByName(
-        spark.createDataFrame(
-            [(900_001, None), (900_002, "one two"), (900_003, "  a  b ")],
-            "doc_id long, text string",
-        )
-    )
-    kern = _kr_shingles_arrow(corpus)
-    jvm = _kr_shingles(corpus)
-    assert kern.exceptAll(jvm).count() == 0
-    assert jvm.exceptAll(kern).count() == 0
-    n = kern.count()
-    assert n == jvm.count() and n > 0
+    expected = {(i, sh) for i, text in rows for sh in shingles(text)}
+    corpus = spark.createDataFrame(rows, "doc_id long, text string")
+    got = [(r.doc_id, r.sh) for r in _kr_shingles(corpus).collect()]
+    assert len(got) == len(set(got)), "kernel emitted duplicate shingles"
+    assert set(got) == expected, f"KR drift: {set(got) ^ expected}"
 
 
 def test_decontaminate_spans_recover_planted_slices(spark):
