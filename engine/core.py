@@ -197,7 +197,29 @@ def scratch(name: str) -> str:
     return d
 
 
-def _staged_fingerprint(d: str) -> str | None:
+def fingerprint(path: str) -> str:
+    """``name:size:mtime_ns`` of ``path``, or of each entry of ``path``
+    when it is a directory — the one corpus fingerprint.  The corpus is
+    immutable WITHIN a round but the driver regenerates it BETWEEN rounds
+    (r4 rolled events.ts from ns to µs), so everything resolved from it
+    once (staged copies, registered views, loaded relations) is keyed on
+    this and redone on any mismatch."""
+    try:
+        if os.path.isdir(path):
+            names = sorted(os.listdir(path))
+            stats = [os.stat(os.path.join(path, n)) for n in names]
+        else:
+            names, stats = [os.path.basename(path)], [os.stat(path)]
+    except OSError:
+        return "unknown"
+    return ",".join(
+        f"{n}:{st.st_size}:{st.st_mtime_ns}" for n, st in zip(names, stats)
+    )
+
+
+def staged_marker(d: str) -> str | None:
+    """The ``_STAGING_DONE`` marker of staged directory ``d`` (the corpus
+    fingerprint it was built from), or None while it is not built."""
     try:
         with open(os.path.join(d, "_STAGING_DONE")) as f:
             return f.read()
@@ -222,20 +244,10 @@ def staged_build_once(name: str, sf_dir: str, build) -> str:
     """
     base = os.path.join(tempfile.gettempdir(), "spark_graft_staging")
     d = os.path.join(base, f"{name}_{os.path.basename(os.path.normpath(sf_dir))}")
-    # The corpus is immutable WITHIN a round but the driver regenerates
-    # it BETWEEN rounds (r4 rolled events.ts from ns to µs) — a marker
-    # that never expires would replay stale data.  Fingerprint the
-    # source directory (name/size/mtime per file) into the marker and
-    # rebuild on any mismatch.
-    try:
-        fp = ",".join(
-            f"{f}:{st.st_size}:{st.st_mtime_ns}"
-            for f in sorted(os.listdir(sf_dir))
-            if (st := os.stat(os.path.join(sf_dir, f)))
-        )
-    except OSError:
-        fp = "unknown"
-    if _staged_fingerprint(d) == fp:
+    # A marker that never expires would replay a regenerated corpus's
+    # stale data: the marker holds the corpus fingerprint.
+    fp = fingerprint(sf_dir)
+    if staged_marker(d) == fp:
         return d
     os.makedirs(base, exist_ok=True)
     tmp = tempfile.mkdtemp(prefix=f".{name}_", dir=base)
@@ -243,7 +255,7 @@ def staged_build_once(name: str, sf_dir: str, build) -> str:
         build(tmp)
         with open(os.path.join(tmp, "_STAGING_DONE"), "w") as f:
             f.write(fp)
-        if _staged_fingerprint(d) != fp and os.path.lexists(d):
+        if staged_marker(d) != fp and os.path.lexists(d):
             # A copy built from an older corpus: rename it aside first,
             # since a directory cannot be renamed over a non-empty one.
             stale = tempfile.mkdtemp(prefix=f".{name}_stale_", dir=base)
@@ -254,7 +266,7 @@ def staged_build_once(name: str, sf_dir: str, build) -> str:
             os.rename(tmp, d)
         except OSError:
             # Another builder renamed its complete copy in first.
-            if _staged_fingerprint(d) != fp:
+            if staged_marker(d) != fp:
                 raise
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -265,7 +277,7 @@ _SESSION_MEMO: dict = {}
 _SESSION_MEMO_LOCK = threading.RLock()
 
 
-def session_memo(spark: SparkSession, name: str, sf_dir: str, build):
+def session_memo(spark: SparkSession, name: str, sf_dir: str, build, version=None):
     """Session-lifetime memo for an intermediate that several keys
     share (a trained model, a routing diamond, a graph partition) — the
     one way to hold frames across calls, so a long-lived session keeps
@@ -285,20 +297,29 @@ def session_memo(spark: SparkSession, name: str, sf_dir: str, build):
     plan-string tests) is re-persisted and the deepest LOST one counted
     — counting a deeper intact frame would read through its cache and
     leave the shallower lost one lazy (r16 rule).  Calls hold a lock,
-    so threads sharing a session build each entry once."""
+    so threads sharing a session build each entry once.
+
+    ``version`` names the state of the input the value was built from
+    (a :func:`fingerprint`, a :func:`staged_marker`): an entry built
+    from another version is unpersisted and rebuilt, so a regenerated
+    input is read again."""
     app = spark.sparkContext.applicationId
     with _SESSION_MEMO_LOCK:
         for stale in [k for k in _SESSION_MEMO if k[0] != app]:
             del _SESSION_MEMO[stale]
         key = (app, name, sf_dir)
         hit = _SESSION_MEMO.get(key)
+        if hit is not None and hit[2] != version:
+            for df in hit[1]:
+                df.unpersist()
+            hit = None
         if hit is None:
             value, frames = build()
             if frames:
                 frames[-1].count()
-            _SESSION_MEMO[key] = (value, frames)
+            _SESSION_MEMO[key] = (value, frames, version)
             return value
-        value, frames = hit
+        value, frames, _ = hit
         lost = [
             df for df in frames
             if not (df.storageLevel.useMemory or df.storageLevel.useDisk)

@@ -32,7 +32,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.core import query, scoped_shuffle_partitions, scratch, staged_build_once
+from engine.core import (
+    query,
+    scoped_shuffle_partitions,
+    scratch,
+    session_memo,
+    staged_build_once,
+    staged_marker,
+)
 from engine.io import configure, load
 
 # Stateful-streaming parallelism is fixed by spark.sql.shuffle.partitions
@@ -83,6 +90,20 @@ def _stage_events_dir(spark: SparkSession, sf_dir: str) -> str:
     return staged_build_once("src", sf_dir, build)
 
 
+def _staged_schema(spark: SparkSession, src: str):
+    """Schema of the staged directory ``src``, inferred once per session:
+    a streaming file source needs it up front, and each inference is a
+    Spark job over a directory that ``staged_build_once`` made immutable
+    (until its marker changes)."""
+    return session_memo(
+        spark,
+        "staged_schema",
+        src,
+        lambda: (spark.read.parquet(src).schema, []),
+        version=staged_marker(src),
+    )
+
+
 def _events_stream(
     spark: SparkSession, src: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
@@ -93,7 +114,7 @@ def _events_stream(
     lets the watermark advance between phases.
     """
     configure(spark)
-    schema = spark.read.parquet(src).schema
+    schema = _staged_schema(spark, src)
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -2184,7 +2205,7 @@ def stream_bloom_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"row_id": rid, "batch_id": bid, "j": j, "hit": hit}
         )
 
-    schema = spark.read.parquet(src).schema
+    schema = _staged_schema(spark, src)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -298,6 +298,28 @@ def test_scratch_and_staging_have_one_owner_in_engine_source():
     assert not dupes, f"staged names used twice: {dupes}"
 
 
+def test_corpus_tables_are_read_only_through_io_load():
+    # engine.io.load resolves each corpus table once per session; a
+    # module that builds a path to <table>.parquet under sf_dir itself
+    # would re-list the table and re-infer its schema on every call.
+    import pathlib
+    import re
+
+    from engine.io import TABLES
+
+    corpus_path = re.compile(
+        r"\b(?:%s)\.parquet|os\.path\.join\(\s*sf_dir|\{sf_dir\}|sf_dir\s*\+"
+        % "|".join(TABLES)
+    )
+    bad = [
+        (p.name, m.group(0))
+        for p in pathlib.Path("engine").glob("*.py")
+        if p.name != "io.py"
+        for m in corpus_path.finditer(p.read_text())
+    ]
+    assert not bad, f"corpus read outside engine.io.load: {bad}"
+
+
 def test_kr_near_dup_chain_has_one_spark_home_per_step():
     # Each step of the Karp-Rabin near-dup chain has one Spark function,
     # as each has one SQL CTE: shingles come only from the Arrow kernel

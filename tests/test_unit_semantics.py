@@ -1909,7 +1909,7 @@ def test_session_memo_revalidates_after_clear_cache(spark, memo, key):
     memo_key = (spark.sparkContext.applicationId, memo, SF_DIR)
     _SESSION_MEMO.pop(memo_key, None)
     base = _rows()
-    _, frames = _SESSION_MEMO[memo_key]
+    _, frames, _ = _SESSION_MEMO[memo_key]
     assert frames and all(map(_cached, frames))
 
     # full loss: clearCache drops every registration under the memo
@@ -2205,3 +2205,111 @@ def test_pca_projection_energy_identities(spark):
     assert sum(r.n2 for r in pr_rows) == r0.trace
     assert all(r.p_den == r0.ray_den for r in pr_rows)
     assert all(0 <= r.ev_bp <= 10000 for r in pr_rows)
+
+
+# ---------------------------------------------------------------------------
+# engine.io.load resolves each corpus table once per session
+# (core.session_memo keyed on the table file's fingerprint).
+# ---------------------------------------------------------------------------
+
+
+def _load_jobs(spark, sf_dir, table, group):
+    """``load`` under its own job group: (frame, Spark jobs it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df = load(spark, sf_dir, table)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_repeat_call_launches_no_spark_job(spark, tmp_path):
+    # A fresh sf_dir so the first call is a miss: the miss pays the
+    # schema-inference job, the repeat returns the same frame with none.
+    import shutil
+
+    shutil.copy(f"{SF_DIR}/region.parquet", tmp_path / "region.parquet")
+    first, n_first = _load_jobs(spark, str(tmp_path), "region", "load-miss")
+    again, n_again = _load_jobs(spark, str(tmp_path), "region", "load-hit")
+    assert n_first >= 1 and n_again == 0
+    assert again is first
+
+
+def test_load_rereads_a_rewritten_table(spark, tmp_path):
+    # A corpus regenerated in a live session changes the file's
+    # size/mtime: the next load reads the new rows, not the memoized
+    # relation (whose file index still lists the old file).
+    import duckdb
+
+    path = tmp_path / "nation.parquet"
+
+    def write(where):
+        tmp = tmp_path / "nation.tmp"
+        duckdb.execute(
+            f"COPY (SELECT * FROM read_parquet('{SF_DIR}/nation.parquet') "
+            f"WHERE {where}) TO '{tmp}' (FORMAT PARQUET)"
+        )
+        tmp.replace(path)
+
+    write("true")
+    assert load(spark, str(tmp_path), "nation").count() == 25
+    write("n_regionkey = 0")
+    rows = load(spark, str(tmp_path), "nation").collect()
+    assert len(rows) == 5 and {r.n_regionkey for r in rows} == {0}
+
+
+def test_load_gives_each_session_its_own_frame(spark):
+    # session_memo keys on applicationId, which spark.newSession()
+    # shares; a frame must never cross to the other session.
+    mine = load(spark, SF_DIR, "region")
+    other = spark.newSession()
+    theirs = load(other, SF_DIR, "region")
+    assert theirs.sparkSession is other and theirs is not mine
+    assert load(other, SF_DIR, "region") is theirs
+    assert load(spark, SF_DIR, "region").sparkSession is spark
+
+
+def test_load_events_ts_is_timestamp_after_a_hit(spark):
+    first = load(spark, SF_DIR, "events")
+    again = load(spark, SF_DIR, "events")
+    assert again is first
+    assert dict(again.dtypes)["ts"] == "timestamp"
+
+
+def test_load_self_joins_of_one_memoized_frame(spark, duck):
+    # Two loads of one table are now ONE frame.  Aliased (join_theta_pure)
+    # and per-side filtered joins stay correct; a bare non-equi self-join
+    # raises rather than returning rows, and a bare equi self-join is
+    # resolved per side by Spark, never trivially true.
+    from pyspark.errors import AnalysisException
+
+    def duck_count(sql):
+        return duck.execute(sql).fetchone()[0]
+
+    n1 = load(spark, SF_DIR, "nation").alias("n1")
+    n2 = load(spark, SF_DIR, "nation").alias("n2")
+    theta = n1.join(n2, F.col("n1.n_regionkey") < F.col("n2.n_regionkey"))
+    assert theta.count() == duck_count(
+        "SELECT COUNT(*) FROM nation n1 JOIN nation n2 "
+        "ON n1.n_regionkey < n2.n_regionkey"
+    )
+
+    x = load(spark, SF_DIR, "nation").filter(F.col("n_regionkey") > 1)
+    y = load(spark, SF_DIR, "nation").filter(F.col("n_regionkey") < 3)
+    rows = x.join(y, x.n_nationkey == y.n_nationkey).select(
+        x.n_nationkey, x.n_regionkey
+    ).collect()
+    assert len(rows) == duck_count(
+        "SELECT COUNT(*) FROM nation WHERE n_regionkey > 1 AND n_regionkey < 3"
+    )
+    assert {r.n_regionkey for r in rows} == {2}
+
+    a = load(spark, SF_DIR, "nation")
+    b = load(spark, SF_DIR, "nation")
+    with pytest.raises(AnalysisException):
+        a.join(b, a.n_regionkey < b.n_regionkey).count()
+    assert a.join(b, a.n_regionkey == b.n_regionkey).count() == duck_count(
+        "SELECT COUNT(*) FROM nation n1 JOIN nation n2 "
+        "ON n1.n_regionkey = n2.n_regionkey"
+    )
