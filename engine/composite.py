@@ -244,35 +244,42 @@ def agg_hll_partitioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("pipeline_corpus_clean", oracle=None)  # rows-only: MinHash stage
 def pipeline_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end training-corpus cleaning — the north-star pipeline
-    (BASELINE.json:6) as ONE composed plan:
+    (BASELINE.json:6) as ONE composed plan (:func:`_corpus_clean`) with
+    the xxhash64 MinHash near-dup stage
+    (engine.dedup.minhash_near_pairs); its hash-verified twin is
+    ``pipeline_corpus_clean_polyhash``."""
+    from engine.dedup import minhash_near_pairs
+
+    return _corpus_clean(spark, sf_dir, minhash_near_pairs)
+
+
+def _corpus_clean(spark: SparkSession, sf_dir: str, near_pairs) -> DataFrame:
+    """The corpus-clean plan of both ``pipeline_corpus_clean`` keys:
 
         quality gate → exact dedup → MinHash near-dup removal
 
-    The input corpus plants one failure mode per stage: byte-identical
-    copies at doc_id+200000 (exact stage), near-copies with 2 appended
-    tokens at +100000 (MinHash stage), and 2-token junk docs at +300000
-    (quality gate).  Output labels EVERY input doc with its fate —
-    kept / low_quality / exact_dup / near_dup — the audit trail a data
-    curation run must emit (you never silently drop training data).
+    ``near_pairs`` maps the (doc_id, text) survivors to near-dup pairs
+    (doc_a, doc_b, ...); it is the only part the two keys do not share.
+    The input corpus plants one failure mode per stage: near-copies with
+    2 appended tokens at doc_id+100000 (MinHash stage,
+    engine.dedup._neardup_corpus), byte-identical copies at +200000
+    (exact stage), and 2-token junk docs at +300000 (quality gate).
+    Output labels EVERY input doc with its fate — kept / low_quality /
+    exact_dup / near_dup — the audit trail a data curation run must
+    emit (you never silently drop training data).
 
     100 TB shape: the quality gate is a per-row filter (no shuffle);
     exact dedup shuffles md5 fingerprints (16 bytes), not text; the
-    near-dup stage is the bucketed banded-LSH of
-    engine.dedup.minhash_near_pairs — no all-pairs join anywhere.
-    Drop policy is keep-lowest-doc_id (deterministic); near-dup removal
-    drops the greater member of each verified pair.
+    near-dup stage is a bucketed banded LSH — no all-pairs join
+    anywhere.  Drop policy is keep-lowest-doc_id (deterministic);
+    near-dup removal drops the greater member of each verified pair.
     """
-    from engine.dedup import minhash_near_pairs
+    from engine.dedup import _neardup_corpus
     from engine.text import _tokens
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     raw = (
-        d.unionByName(
-            d.select(
-                (F.col("doc_id") + 100_000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
-            )
-        )
+        _neardup_corpus(d)
         .unionByName(
             d.select((F.col("doc_id") + 200_000).alias("doc_id"), "text")
         )
@@ -284,25 +291,22 @@ def pipeline_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    # Stage 1 — quality gate: ≥ 5 tokens (per-row, no shuffle).
-    n_toks = F.size(_tokens(F.col("text")))
-    # gated feeds BOTH the low_quality status and the dedup path — the
-    # 4-way union + tokenize re-derived per consumer without persist
-    # (measured ~1 s at sf0.1 on the KR twin; same diamond here).
-    gated = raw.withColumn("lowq", n_toks < 5).persist()
+    # Stage 1 — quality gate: ≥ 5 tokens (per-row, no shuffle).  gated
+    # feeds BOTH the low_quality status and the dedup path: persist saves
+    # the re-derived 4-way union + tokenize (5.15 → 3.8 s warm at sf0.1).
+    gated = raw.withColumn("lowq", F.size(_tokens(F.col("text"))) < 5).persist()
     low_quality = gated.filter("lowq").select(
         "doc_id", F.lit("low_quality").alias("status")
     )
-    after_q = gated.filter(~F.col("lowq")).select("doc_id", "text")
 
     # Stage 2 — exact dedup on md5 fingerprint, keep lowest doc_id.
-    fp = after_q.withColumn("fp", F.md5("text"))
+    fp = gated.filter(~F.col("lowq")).withColumn("fp", F.md5("text"))
     w = Window.partitionBy("fp").orderBy("doc_id")
     ranked = fp.withColumn("rn", F.row_number().over(w))
     exact_dup = ranked.filter(F.col("rn") > 1).select(
         "doc_id", F.lit("exact_dup").alias("status")
     )
-    # ``uniq`` feeds THREE consumers (the MinHash stage and both status
+    # ``uniq`` feeds THREE consumers (the near-dup stage and both status
     # joins) and its subtree is the whole 4-way union + fingerprint
     # window — persist it so that runs once, not three times.  At
     # cluster scale this is the natural stage boundary you'd checkpoint
@@ -311,10 +315,10 @@ def pipeline_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranked.filter(F.col("rn") == 1).select("doc_id", "text").persist()
     )
 
-    # Stage 3 — near-dup removal via banded MinHash-LSH + exact-Jaccard
-    # verify; drop the greater member of each pair.  ``drop`` is probed
-    # by both status joins — persist the (tiny) id set too.
-    pairs = minhash_near_pairs(uniq)
+    # Stage 3 — near-dup removal: drop the greater member of each pair.
+    # ``drop`` is probed by both status joins — persist the (tiny) id
+    # set too.
+    pairs = near_pairs(uniq)
     drop = pairs.select(F.col("doc_b").alias("doc_id")).distinct().persist()
     near_dup = uniq.join(drop, "doc_id", "left_semi").select(
         "doc_id", F.lit("near_dup").alias("status")
@@ -322,8 +326,11 @@ def pipeline_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = uniq.join(drop, "doc_id", "left_anti").select(
         "doc_id", F.lit("kept").alias("status")
     )
-
-    return kept.unionByName(near_dup).unionByName(exact_dup).unionByName(low_quality)
+    return (
+        kept.unionByName(near_dup)
+        .unionByName(exact_dup)
+        .unionByName(low_quality)
+    )
 
 
 @query(
@@ -1051,8 +1058,8 @@ def pipeline_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only ~3% of pairs (measured 78k → 75.9k), so pre-verify distinct
     # buys almost nothing while shuffling two 64-float arrays per row;
     # verifying first costs ≤2 duplicate cosines per pair and the
-    # distinct then exchanges ~|true pairs| skinny rows (simhash_pairs
-    # discipline).
+    # distinct then exchanges ~|true pairs| skinny rows (the
+    # kr_simhash_pairs_from_sums discipline).
     verified = (
         a.join(bb, ["t", "b"])
         .filter(F.col("va") < F.col("vb"))
@@ -2979,66 +2986,20 @@ def _corpus_clean_oracle() -> str:
 @query("pipeline_corpus_clean_polyhash", oracle=_corpus_clean_oracle())
 def pipeline_corpus_clean_polyhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The NORTH-STAR corpus-cleaning pipeline, HASH-VERIFIED
-    end-to-end: identical composition to ``pipeline_corpus_clean``
-    (quality gate → md5 exact dedup → MinHash-LSH near-dup removal →
-    per-doc fate label) with the near-dup stage swapped from the
-    xxhash64 family to the DuckDB-replayable Karp-Rabin chain
-    (engine.dedup.kr_minhash_near_pairs) — so the DuckDB oracle replays
-    EVERY stage, including candidate generation inside the LSH, and the
-    driver hash-proves the complete audit trail (md5 is cross-engine by
-    fn_hash_md5; the token gate and fate unions are pure relational).
-    The xxhash sibling stays registered as the production-flavor
-    rows-only twin; this key is the correctness anchor for the whole
-    pipeline shape.
+    end-to-end: the plan of ``pipeline_corpus_clean`` (quality gate →
+    md5 exact dedup → MinHash-LSH near-dup removal → per-doc fate
+    label, :func:`_corpus_clean`) with the near-dup stage's feature
+    hash swapped from xxhash64 to the DuckDB-replayable Karp-Rabin
+    chain (engine.dedup.kr_minhash_near_pairs) — so the DuckDB oracle
+    replays EVERY stage, including candidate generation inside the
+    LSH, and the driver hash-proves the complete audit trail (md5 is
+    cross-engine by fn_hash_md5; the token gate and fate unions are
+    pure relational).  The xxhash sibling stays registered as the
+    production-flavor rows-only twin; this key is the correctness
+    anchor for the whole pipeline shape."""
+    from engine.dedup import kr_minhash_near_pairs
 
-    Same scale shape as the sibling: per-row gate (no shuffle), 16-byte
-    fingerprint shuffle for exact dedup, bucketed banded LSH (never
-    all-pairs), persisted `uniq` diamond feeding the near-dup stage and
-    both status joins."""
-    from engine.dedup import _neardup_corpus, kr_minhash_near_pairs
-    from engine.text import _tokens
-
-    d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    raw = (
-        _neardup_corpus(d)
-        .unionByName(
-            d.select((F.col("doc_id") + 200_000).alias("doc_id"), "text")
-        )
-        .unionByName(
-            d.select(
-                (F.col("doc_id") + 300_000).alias("doc_id"),
-                F.lit("zz spam").alias("text"),
-            )
-        )
-    )
-    # gated diamond (low_quality + dedup path): persist saves the
-    # re-derived 4-way union + tokenize (5.15 → 3.8 s warm at sf0.1).
-    gated = raw.withColumn("lowq", F.size(_tokens(F.col("text"))) < 5).persist()
-    low_quality = gated.filter("lowq").select(
-        "doc_id", F.lit("low_quality").alias("status")
-    )
-    fp = gated.filter(~F.col("lowq")).withColumn("fp", F.md5("text"))
-    w = Window.partitionBy("fp").orderBy("doc_id")
-    ranked = fp.withColumn("rn", F.row_number().over(w))
-    exact_dup = ranked.filter(F.col("rn") > 1).select(
-        "doc_id", F.lit("exact_dup").alias("status")
-    )
-    uniq = (
-        ranked.filter(F.col("rn") == 1).select("doc_id", "text").persist()
-    )
-    pairs = kr_minhash_near_pairs(uniq)
-    drop = pairs.select(F.col("doc_b").alias("doc_id")).distinct().persist()
-    near_dup = uniq.join(drop, "doc_id", "left_semi").select(
-        "doc_id", F.lit("near_dup").alias("status")
-    )
-    kept = uniq.join(drop, "doc_id", "left_anti").select(
-        "doc_id", F.lit("kept").alias("status")
-    )
-    return (
-        kept.unionByName(near_dup)
-        .unionByName(exact_dup)
-        .unionByName(low_quality)
-    )
+    return _corpus_clean(spark, sf_dir, kr_minhash_near_pairs)
 
 
 # -- dataset version diff (r14 breadth: reproducibility audit) --------------

@@ -20,15 +20,9 @@ from pyspark.sql import functions as F
 
 from engine.core import query, scoped_shuffle_partitions, session_memo
 from engine.io import load
+from engine.text import _TOKENS_SQL, _tokens, _trigrams
 
 _COPY_OFFSET = 100_000
-
-
-def _tokens(col: F.Column) -> F.Column:
-    return F.filter(F.split(F.lower(col), " "), lambda t: t != "")
-
-
-_TOKENS_SQL = "list_filter(string_split(lower({c}), ' '), t -> t <> '')"
 
 
 def _neardup_corpus(d: DataFrame) -> DataFrame:
@@ -130,144 +124,45 @@ _N_HASHES = 16
 _BAND_SIZE = 4  # → 4 bands of 4 hashes
 
 
+def _xx_shingles(corpus: DataFrame) -> DataFrame:
+    """(doc_id, sh) xxhash64 hashes of each doc's distinct 3-word
+    shingles (:func:`engine.text._trigrams`) — the xxhash64 feature
+    hash, the only step its near-dup keys do not share with the KR
+    chain (:func:`_kr_shingles` is the KR one).  Shingles travel as
+    longs, not strings: ~6× less payload, long-compare joins, and
+    hashed-set Jaccard equals exact shingle Jaccard up to a ~2^-40
+    collision probability."""
+    # The token column is materialized before _trigrams indexes into it
+    # (the O(n²) element_at note there).
+    return corpus.select("doc_id", _tokens(F.col("text")).alias("toks")).select(
+        "doc_id",
+        F.explode(
+            F.transform(
+                F.array_distinct(_trigrams(F.col("toks"))),
+                lambda s: F.xxhash64(s),
+            )
+        ).alias("sh"),
+    )
+
+
 def minhash_near_pairs(corpus: DataFrame) -> DataFrame:
     """Near-dup pairs (doc_a, doc_b, jaccard ≥ 0.5) over a (doc_id, text)
-    corpus via k-shingle MinHash + LSH banding.
+    corpus: the Karp-Rabin MinHash chain of :func:`kr_pairs_from_sh`
+    with xxhash64 as the feature hash.
 
     Shared engine primitive: backs the ``dedup_minhash_near`` key and the
-    ``pipeline_corpus_clean`` composite.  Every step is a DataFrame op
-    with deterministic seeds (no RNG):
-      1. 3-word shingles per doc (indexed ``transform`` — per-row, no
-         shuffle);
-      2. 16 min-hashes per doc from one xxhash64 via a mod-P universal
-         family — columnar min reduction, no 16× explosion;
-      3. 4 band keys per doc = xxhash64 of 4 consecutive min-hashes;
-      4. candidate pairs = docs sharing a band key (self-join on the
-         band key — bucket-local, never all-pairs);
-      5. exact shingle-Jaccard verification on candidates only.
-    """
-    # ``toks`` must be a materialized column, not the _tokens(text)
-    # expression tree: element_at re-evaluates its argument subtree per
-    # lambda element, so an inlined split() re-tokenizes the doc for
-    # every shingle — O(n²) per doc (measured 8× at sf0.1).
-    toks = F.col("toks")
-    shingles = F.array_distinct(
-        F.transform(
-            F.slice(toks, 1, F.greatest(F.size(toks) - 2, F.lit(0))),
-            lambda x, i: F.concat_ws(
-                " ", x, F.element_at(toks, i + 2), F.element_at(toks, i + 3)
-            ),
-        )
-    )
-    # The (doc, shingle) relation feeds three consumers (signatures +
-    # both sides of the Jaccard verify) — persist the diamond so the
-    # tokenize+explode runs once, not three times.  Shingles are carried
-    # as their 64-bit xxhash, not strings: the persisted payload shrinks
-    # ~6×, joins compare longs, and hashed-set Jaccard equals exact
-    # shingle Jaccard up to a ~2^-40 collision probability.  At cluster
-    # scale this is the stage you'd checkpoint.
-    doc_shingle = (
-        corpus.select("doc_id", _tokens(F.col("text")).alias("toks"))
-        .select(
-            "doc_id",
-            F.explode(F.transform(shingles, lambda s: F.xxhash64(s))).alias(
-                "shingle"
-            ),
-        )
-        .persist()
-    )
-
-    # 16 hash-family members derived from ONE xxhash64 via universal
-    # hashing h_i = (a_i·h + b_i) mod P, P = 2^31−1 (Mersenne prime):
-    # one string hash per shingle instead of 16, and the mins reduce
-    # columnar in a single pass — no 16× row explosion, no 16× string
-    # hashing.  The mod is REQUIRED: without it h_i is strictly monotone
-    # in h, every min-hash picks the same argmin shingle, and the banded
-    # LSH degenerates to 1-hash LSH (recall ≈ J instead of 1−(1−J⁴)⁴) —
-    # found by the r2 advisor (ADVICE.md #1), pinned by the recall test
-    # in tests/test_semantics.py.
-    # ANSI mode (Spark 4 default) forbids wrapping arithmetic, so bound
-    # the operands: h31 < 2^31 and a_i < P < 2^31 keep a_i·h31 + b_i
-    # < 2^62 + 2^31 < 2^63 — overflow-free in int64, then `% P` folds
-    # back to 31 uniform bits (ample for min-hash ranking).
-    _P = (1 << 31) - 1
-    _A = [(2654435761 * (2 * i + 1)) % _P or 1 for i in range(_N_HASHES)]
-    _B = [(40503 * i * i + 987654321 + i) % _P for i in range(_N_HASHES)]
-    h31 = F.col("shingle").bitwiseAND(F.lit(0x7FFFFFFF))
-    sig = doc_shingle.select(
-        "doc_id", h31.alias("h")
-    ).groupBy("doc_id").agg(
-        *[
-            F.min(
-                (F.col("h") * F.lit(_A[i]) + F.lit(_B[i])) % F.lit(_P)
-            ).alias(f"minh{i}")
-            for i in range(_N_HASHES)
-        ]
-    )
-
-    # One band key per 4 consecutive min-hashes; explode to (doc, band,
-    # band_key) rows for the bucket self-join.
-    band_keys = F.array(
-        *[
-            F.xxhash64(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"minh{i}").cast("string")
-                        for i in range(b * _BAND_SIZE, (b + 1) * _BAND_SIZE)
-                    ],
-                )
-            )
-            for b in range(_N_HASHES // _BAND_SIZE)
-        ]
-    )
-    band = sig.select(
-        "doc_id", F.posexplode(band_keys).alias("band", "band_key")
-    )
-
-    a = band.alias("a")
-    b = band.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-
-    # Exact Jaccard verification on the bounded candidate set.
-    # doc_shingle is already per-doc distinct (array_distinct upstream) —
-    # no dedup shuffle; set sizes are a tiny count over the persisted
-    # relation.
-    sh = doc_shingle
-    n_sh = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    sh_a = sh.withColumnRenamed("doc_id", "doc_a")
-    sh_b = sh.select(
-        F.col("doc_id").alias("b_id"), F.col("shingle").alias("shingle_b")
-    )
-    # No broadcast hint on cand: candidate-PAIR volume grows with corpus
-    # size × duplication density (a web crawl at 100 TB yields multi-GB
-    # pair lists) — a hard hint here is a forced-broadcast OOM.  AQE's
-    # size-based selection still broadcasts at bench scale and degrades
-    # to a shuffle join at cluster scale (r11 audit policy, composite.py).
-    common = (
-        sh_a.join(cand, "doc_a")
-        .join(
-            sh_b,
-            (F.col("doc_b") == F.col("b_id"))
-            & (F.col("shingle") == F.col("shingle_b")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_common"))
-    )
+    ``pipeline_corpus_clean`` composite.  Only the feature hash is its
+    own (:func:`_xx_shingles`); every step after it is the KR chain's:
+    16 min-hashes over the low 31 bits (:func:`_mh_mins`), base-131 band
+    keys (:func:`_mh_bands`), the bucket-local band self-join
+    (:func:`_mh_cand`), and the exact overlap over the full 64-bit
+    hashes (:func:`_kr_overlap`)."""
+    # sh feeds the signatures and both sides of the verify — persist the
+    # diamond so the tokenize+explode runs once, not three times.
+    sh = _xx_shingles(corpus).persist()
+    h31 = sh.select("doc_id", F.col("sh").bitwiseAND(F.lit(0x7FFFFFFF)).alias("sh"))
     return (
-        common.join(n_sh.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "n_a"), "doc_a")
-        .join(n_sh.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "n_b"), "doc_b")
+        _kr_overlap(sh, _mh_cand(_mh_bands(_mh_mins(h31))))
         .select(
             "doc_a",
             "doc_b",
@@ -371,65 +266,20 @@ _SIMHASH_BAND = 8  # 4 bands of 8 bits; verify gate is hamming ≤ 3
 
 
 def simhash_pairs(feat: DataFrame) -> DataFrame:
-    """(doc_id, token:long) hashed features → near-dup pairs
-    (doc_a, doc_b, hamming ≤ 3) via 32-bit SimHash + 8-bit banding.
+    """(doc_id, sh: long) xxhash64 features → near-dup pairs
+    (doc_a, doc_b, hamming: int ≤ 3): signature bit b is the sign of
+    Σ ±1 over bit b of each feature hash, and the signature → 4×8-band
+    → hamming-gate tail is the KR chain's
+    :func:`kr_simhash_pairs_from_sums`.
 
     Shared engine primitive: backs ``dedup_simhash`` (text shingle
-    features) and ``mm_simhash_bytes`` (binary byte-gram features).
-    Banded candidate generation — bucket-local self-join, never
-    all-pairs; see dedup_simhash's docstring for the band-size
-    measurement."""
-    h = F.col("token")
-    # per (doc, bit): Σ ±1 as 32 columnar sums, then sign → bit.
-    sums = feat.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"s{b}")
-            for b in range(_SIMHASH_BITS)
-        ]
+    features) and ``mm_simhash_bytes`` (binary byte-gram features); see
+    dedup_simhash's docstring for the band-size measurement."""
+    sums = _sign_sums(
+        feat, lambda b: F.shiftright(F.col("sh"), b).bitwiseAND(F.lit(1))
     )
-    sig_col = None
-    for b in range(_SIMHASH_BITS):
-        bit = F.when(F.col(f"s{b}") >= 0, F.lit(1 << b)).otherwise(F.lit(0))
-        sig_col = bit if sig_col is None else sig_col + bit
-    sigs = sums.select("doc_id", sig_col.alias("sig"))
-
-    n_bands = _SIMHASH_BITS // _SIMHASH_BAND
-    band_vals = F.array(
-        *[
-            F.shiftright(F.col("sig"), b * _SIMHASH_BAND).bitwiseAND(
-                F.lit((1 << _SIMHASH_BAND) - 1)
-            )
-            for b in range(n_bands)
-        ]
-    )
-    bands = sigs.select(
-        "doc_id", "sig", F.posexplode(band_vals).alias("band", "band_val")
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    hamming = F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig")))
-    # hamming gate BEFORE the pair-dedup: the bucket join over-generates
-    # (~C(bucket,2) per band value — ~800k rows at sf0.1), and the gate
-    # is a per-row codegen'd xor that kills almost all of them, so the
-    # distinct's exchange carries ~|true pairs|·bands rows instead
-    # (filter commutes with distinct; measured 3.2 → 1.5 s on the
-    # polyhash sibling).
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= 3)
-        .distinct()
+    return kr_simhash_pairs_from_sums(sums).select(
+        "doc_a", "doc_b", F.col("hamming").cast("int").alias("hamming")
     )
 
 
@@ -456,25 +306,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_minhash_near.
     """
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = _neardup_corpus(d)
-    # Materialized token column, not the _tokens(text) tree — see the
-    # O(n²) element_at note in minhash_near_pairs above.
-    toks = F.col("toks")
-    shingles = F.array_distinct(
-        F.transform(
-            F.slice(toks, 1, F.greatest(F.size(toks) - 2, F.lit(0))),
-            lambda x, i: F.concat_ws(
-                " ", x, F.element_at(toks, i + 2), F.element_at(toks, i + 3)
-            ),
-        )
-    )
-    # Explode pre-hashed shingles (longs, not strings) — the exploded
-    # relation and the groupBy shuffle carry 8 bytes per feature.
-    tok = corpus.select("doc_id", _tokens(F.col("text")).alias("toks")).select(
-        "doc_id",
-        F.explode(F.transform(shingles, lambda s: F.xxhash64(s))).alias("token"),
-    )
-    return simhash_pairs(tok)
+    return simhash_pairs(_xx_shingles(_neardup_corpus(d)))
 
 
 # ---------------------------------------------------------------------------
@@ -488,8 +320,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FP_MOD = 1_099_511_627_689  # prime < 2^40 (text.py char-fold modulus)
 _M31 = (1 << 31) - 1  # Mersenne prime: universal-hash modulus
 # Per-bit universal hash family g_b(x) = (A_b·x + C_b) mod M, bit = g_b
-# mod 2 — same (a, b) construction as minhash_near_pairs' family; the
-# `% _M31` is REQUIRED (see that function's degenerate-LSH note).
+# mod 2 — same (a, b) construction as the MinHash family _MH_A/_MH_B;
+# the `% _M31` is REQUIRED (see _mh_mins' degenerate-LSH note).
 _SH_A = [(2654435761 * (2 * b + 1)) % _M31 or 1 for b in range(_SIMHASH_BITS)]
 _SH_C = [(40503 * b * b + 987654321 + b) % _M31 for b in range(_SIMHASH_BITS)]
 
@@ -705,34 +537,41 @@ def dedup_simhash_polyhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kr_simhash_pairs(_kr_shingles(_neardup_corpus(d)))
 
 
-def kr_simhash_pairs(feat: DataFrame) -> DataFrame:
-    """(doc_id, sh: long) KR features → banded 32-bit SimHash pair set
-    (4×8-bit bands, hamming ≤ 3) — the signature tail shared by
-    ``dedup_simhash_polyhash`` (token shingles) and
-    ``mm_simhash_bytes_polyhash`` (byte grams).  Every op is
-    bit-identical in DuckDB (_SH_SUMS_SQL/_SH_SIG_SQL are the SQL
-    twins), so callers' oracles replay it verbatim."""
-    sums = feat.groupBy("doc_id").agg(
+def _sign_sums(feat: DataFrame, bit) -> DataFrame:
+    """(doc_id, feature) → (doc_id, s0..s31): per signature bit b, Σ ±1
+    over the doc's features by ``bit(b)``, the feature's 0/1 bit b.  The
+    one SimHash step that depends on the feature hash; its KR instance
+    is :data:`_SH_SUMS_SQL` in DuckDB."""
+    return feat.groupBy("doc_id").agg(
         *[
-            F.sum(
-                F.when(
-                    ((F.col("sh") * _SH_A[b] + _SH_C[b]) % _M31) % 2 == 1, 1
-                ).otherwise(-1)
-            ).alias(f"s{b}")
+            F.sum(F.when(bit(b) == 1, 1).otherwise(-1)).alias(f"s{b}")
             for b in range(_SIMHASH_BITS)
         ]
     )
-    return kr_simhash_pairs_from_sums(sums)
+
+
+def kr_simhash_pairs(feat: DataFrame) -> DataFrame:
+    """(doc_id, sh: long) KR features → banded 32-bit SimHash pair set
+    (4×8-bit bands, hamming ≤ 3) for ``dedup_simhash_polyhash``.  Every
+    op is bit-identical in DuckDB (_SH_SUMS_SQL/_SH_SIG_SQL are the SQL
+    twins), so its oracle replays it verbatim."""
+    return kr_simhash_pairs_from_sums(
+        _sign_sums(
+            feat, lambda b: ((F.col("sh") * _SH_A[b] + _SH_C[b]) % _M31) % 2
+        )
+    )
 
 
 def kr_simhash_pairs_from_sums(
     sums: DataFrame, eager: bool = False
 ) -> DataFrame:
-    """(doc_id, s0..s31) per-bit sign sums → banded pair set — the tail
-    of :func:`kr_simhash_pairs`, exposed so callers that compute the
-    32 sums inside an Arrow kernel (``mm_simhash_bytes_polyhash``: 32
-    vectorized ops over the per-doc gram array, zero shuffle) skip the
-    corpus-×-32 conditional-sum aggregation entirely.
+    """(doc_id, s0..s31) per-bit sign sums → banded pair set (doc_a,
+    doc_b, hamming: long) — the one SimHash signature tail, shared by
+    both feature hashes (:func:`kr_simhash_pairs`,
+    :func:`simhash_pairs`) and by callers that compute the 32 sums
+    inside an Arrow kernel (``mm_simhash_bytes_polyhash``: 32
+    vectorized ops over the per-doc gram array, zero shuffle), which
+    skip the corpus-×-32 conditional-sum aggregation entirely.
 
     ``eager`` materializes the signature cache with one count() BEFORE
     the band self-join builds.  A lazy persist gets RACED by the join's
@@ -741,8 +580,9 @@ def kr_simhash_pairs_from_sums(
     part above it races: dedup_simhash_polyhash's shingle kernel feeds
     the 32-sum groupBy's exchange, so the race is nearly free and the
     extra serialized pass LOSES (sf0.1 warm mins, 2 interleaved
-    sessions: 2.67 s lazy vs 3.00 s eager) — that caller stays lazy.
-    The mm byte-gram caller computes its sums inside the kernel with no
+    sessions: 2.67 s lazy vs 3.00 s eager) — that caller stays lazy, as
+    does :func:`simhash_pairs`, whose sums are a groupBy too.  The mm
+    byte-gram caller computes its sums inside the kernel with no
     exchange, so the race doubles the worker-limited kernel work (~8 s
     vs ~5 s) — it passes eager=True."""
     sig_col = None
@@ -772,8 +612,11 @@ def kr_simhash_pairs_from_sums(
     a = bands.alias("a")
     b = bands.alias("b")
     hamming = F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig"))).cast("long")
-    # hamming gate before the pair-dedup — see simhash_pairs (the
-    # distinct's exchange carries true pairs, not bucket candidates).
+    # hamming gate BEFORE the pair-dedup: the bucket join over-generates
+    # (~C(bucket,2) per band value — ~800k rows at sf0.1), and the gate
+    # is a per-row codegen'd xor that kills almost all of them, so the
+    # distinct's exchange carries ~|true pairs|·bands rows instead
+    # (filter commutes with distinct; measured 3.2 → 1.5 s).
     return (
         a.join(
             b,
@@ -951,9 +794,9 @@ def dedup_setsim_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# MinHash universal-hash family over KR shingles — same (a, b)
-# construction as minhash_near_pairs' local family (one xxhash64-free
-# chain end-to-end so DuckDB can replay it); module-level because the
+# The one MinHash universal-hash family h_i(x) = (a_i·x + b_i) mod M31,
+# for both feature hashes (KR shingles, and the low 31 bits of the
+# xxhash64 shingles of minhash_near_pairs); module-level because the
 # oracle SQL is built at decorator time.
 _MH_A = [(2654435761 * (2 * i + 1)) % _M31 or 1 for i in range(_N_HASHES)]
 _MH_B = [(40503 * i * i + 987654321 + i) % _M31 for i in range(_N_HASHES)]
@@ -997,7 +840,11 @@ def _mh_mins(sh: DataFrame) -> DataFrame:
     """(doc_id, sh) → (doc_id, m0..m15): the 16 universal-family
     min-hashes as ONE columnar, map-side-combinable groupBy (no 16× row
     explosion) — Spark twin of :data:`_MH_MINS_SQL`.  ANSI overflow
-    bound: sh < 2³¹ and a_i < M31 keep a_i·sh + b_i < 2⁶²."""
+    bound: sh < 2³¹ and a_i < M31 keep a_i·sh + b_i < 2⁶².  The
+    ``% M31`` inside the min is REQUIRED: without it h_i is strictly
+    monotone in sh, every min-hash picks the same argmin shingle, and
+    banding degenerates to 1-hash LSH (recall ≈ J instead of
+    1−(1−J⁴)⁴; r2 ADVICE #1)."""
     return sh.groupBy("doc_id").agg(
         *[
             F.min((F.col("sh") * F.lit(_MH_A[i]) + F.lit(_MH_B[i])) % F.lit(_M31))
@@ -1109,9 +956,9 @@ _KR_MH_PAIRS_CTES = f"""mins AS (
 
 def kr_minhash_near_pairs(corpus: DataFrame) -> DataFrame:
     """Exact-Jaccard ≥ 0.5 near-dup pairs over a (doc_id, text) corpus
-    via the DuckDB-replayable Karp-Rabin MinHash+LSH chain — the
-    hash-verifiable twin of :func:`minhash_near_pairs` (SQL twin:
-    :data:`_KR_MH_PAIRS_CTES` over an `sh` CTE).  Returns (doc_a,
+    via the DuckDB-replayable Karp-Rabin MinHash+LSH chain (SQL twin:
+    :data:`_KR_MH_PAIRS_CTES` over an `sh` CTE); :func:`minhash_near_pairs`
+    runs the same chain with xxhash64 as the feature hash.  Returns (doc_a,
     doc_b, n_common, n_a, n_b, jac_e6)."""
     return kr_pairs_from_sh(_kr_shingles(corpus))
 
@@ -1122,10 +969,9 @@ def kr_pairs_from_sh(sh: DataFrame, eager: bool = False) -> DataFrame:
     shingle-hash frame (SQL twin: :data:`_KR_MH_PAIRS_CTES` over an
     `sh` CTE) — factored out so keys that derive their shingle stream
     differently (e.g. the lexicon-normalized cross-lingual key) reuse
-    the identical pair chain.  Shuffle discipline is the
-    minhash_near_pairs shape: persisted shingle diamond, columnar
-    16-min reduce, bucket-local band self-join, unhinted
-    candidate-verify joins (AQE size-selects).
+    the identical pair chain.  Shuffle discipline: persisted shingle
+    diamond, columnar 16-min reduce, bucket-local band self-join,
+    unhinted candidate-verify joins (AQE size-selects).
 
     ``eager`` is the r12 lazy-persist-race dial
     (kr_simhash_pairs_from_sums precedent): the band self-join races a
@@ -1173,19 +1019,18 @@ def kr_pairs_from_sh(sh: DataFrame, eager: bool = False) -> DataFrame:
 )
 def dedup_minhash_polyhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + banded LSH near-dup, HASH-VERIFIED end-to-end (r10
-    VERDICT #4, completing the r10 SimHash precedent): identical
-    16-hash / 4×4-band construction to ``minhash_near_pairs`` with
-    every non-deterministic-across-engines hash replaced by the repo's
-    Karp-Rabin chain — KR 3-token shingles (:func:`_kr_shingles`),
-    min-hashes from the mod-M31 universal family (the `% M` is REQUIRED
-    or banding degenerates to 1-hash LSH — r2 ADVICE), and band keys as
-    a base-131 mod-M31 integer fold of 4 consecutive min-hashes instead
-    of xxhash64-of-concat.  The DuckDB oracle replays the FULL pipeline
+    VERDICT #4, completing the r10 SimHash precedent): the same
+    16-hash / 4×4-band chain as ``dedup_minhash_near`` with the
+    xxhash64 feature hash replaced by KR 3-token shingles
+    (:func:`_kr_shingles`) — min-hashes from the mod-M31 universal
+    family (:func:`_mh_mins`) and band keys as a base-131 mod-M31
+    integer fold of 4 consecutive min-hashes (:func:`_mh_bands`), both
+    shared with the xxhash64 key.  The DuckDB oracle replays the FULL pipeline
     (shingle → min → band → bucket join → exact-Jaccard verify), so the
     driver hash-proves candidate generation AND verification; recall vs
     the planted copies is floor-pinned in tests/test_unit_semantics.py.
 
-    Shuffle discipline (minhash_near_pairs shape): the persisted
+    Shuffle discipline: the persisted
     (doc_id, sh) diamond feeds signatures and both verify sides; the
     16 mins reduce COLUMNAR in one map-side-combinable groupBy (no 16×
     row explosion); the band self-join is bucket-local, never
@@ -1890,8 +1735,6 @@ def dedup_containment_excerpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scale — the organic arm is |corpus|/10 by construction);
     everything downstream is bounded by candidate count, never
     all-pairs."""
-    from engine.text import _tokens
-
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     excerpts = d.filter(F.col("doc_id") % 4 == 0).select(
         (F.col("doc_id") + _EXCERPT_OFFSET).alias("doc_id"),
@@ -2750,10 +2593,8 @@ def _selfsim_spans(spark: SparkSession, sf_dir: str):
 
 
 def _build_selfsim_spans(spark: SparkSession, sf_dir: str):
-    from engine.text import _tokens as _text_tokens
-
     d = load(spark, sf_dir, "documents")
-    toks = d.select("doc_id", _text_tokens(F.col("text")).alias("t"))
+    toks = d.select("doc_id", _tokens(F.col("text")).alias("t"))
     tok = toks.select(
         "doc_id", F.posexplode("t").alias("p0", "tok")
     ).select("doc_id", (F.col("p0") + 1).alias("pos"), "tok")

@@ -1454,9 +1454,10 @@ def source_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     `binary` column, `pathGlobFilter` pruning non-matching files at
     LISTING time (no read amplification).  The staged corpus is one
     `.bin` file per sampled document (UTF-8 text bytes; built once via
-    the staging-marker contract, pyarrow driver-side — bounded by the
-    residue sample, never a Spark collect); a decoy `.tmp` file proves
-    the glob filter excludes it.  doc_id is recovered from the file
+    the staging-marker contract from the ``load`` frame's doc_id % 10 = 0
+    sample, each file written by a ``mapInPandas`` kernel in the task
+    that holds the row — the driver holds no rows); a decoy `.tmp` file
+    proves the glob filter excludes it.  doc_id is recovered from the file
     NAME, and content integrity is proven end-to-end: Spark's
     md5(content) over raw bytes hash-matches DuckDB's md5(text) over
     the same UTF-8 string.
@@ -1472,17 +1473,22 @@ def source_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     `strlen` — `length` counts CHARACTERS and `octet_length` only
     accepts BLOBs."""
     def build(dst: str) -> None:
-        import pyarrow.parquet as pq
+        def write_docs(batches):
+            for pdf in batches:
+                for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                    with open(os.path.join(dst, f"doc_{doc_id}.bin"), "wb") as f:
+                        f.write(text.encode("utf-8"))
+                yield pdf[["doc_id"]]
 
-        tbl = pq.read_table(
-            os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
+        (
+            load(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % 10 == 0)
+            .select("doc_id", "text")
+            .mapInPandas(write_docs, "doc_id long")
+            .write.format("noop")
+            .mode("overwrite")
+            .save()
         )
-        for doc_id, text in zip(
-            tbl.column("doc_id").to_pylist(), tbl.column("text").to_pylist()
-        ):
-            if doc_id % 10 == 0:
-                with open(os.path.join(dst, f"doc_{doc_id}.bin"), "wb") as f:
-                    f.write(text.encode("utf-8"))
         with open(os.path.join(dst, "decoy.tmp"), "wb") as f:
             f.write(b"not a document")
 

@@ -212,9 +212,10 @@ _MM_COPY_OFFSET = 100_000
 @query("mm_simhash_bytes", oracle=None)  # rows-only: xxhash64 bit extraction
 def mm_simhash_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-level near-duplicate detection for binary media payloads:
-    12-byte sliding grams → xxhash64 features → the shared 32-bit
-    banded-SimHash primitive (engine.dedup.simhash_pairs).  This is the
-    codec-free half of image/audio dedup — it catches re-uploads,
+    12-byte sliding grams → xxhash64 features → engine.dedup's
+    simhash_pairs (xxhash64 sign sums, then the 32-bit banded signature
+    tail the KR keys share).  This is the codec-free half of
+    image/audio dedup — it catches re-uploads,
     re-muxes, and trailing-metadata edits without decoding anything;
     the decoded-feature path (perceptual hash over pixels) would feed
     the SAME primitive via mm_decode_features.
@@ -246,7 +247,7 @@ def mm_simhash_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f" i -> xxhash64(substring(payload, i, {_BYTE_GRAM})))"
                 )
             )
-        ).alias("token"),
+        ).alias("sh"),
     )
     from engine.dedup import simhash_pairs
 

@@ -107,7 +107,9 @@ def _staged_schema(spark: SparkSession, src: str):
 def _events_stream(
     spark: SparkSession, src: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """readStream over an events parquet directory with the ns→µs ts fix.
+    """readStream over a staged events parquet directory.  Every staged
+    source is written from a :func:`engine.io.load` frame, so ``ts`` is
+    already a µs TimestampType and needs no fold here.
 
     ``max_files_per_trigger`` is a SOURCE option: it splits the replay
     into one microbatch per file (oldest mtime first), which is what
@@ -118,10 +120,7 @@ def _events_stream(
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    sdf = reader.parquet(src)
-    if dict(sdf.dtypes).get("ts") == "bigint":
-        sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return sdf
+    return reader.parquet(src)
 
 
 def _run_to_memory(agg: DataFrame, mode: str, name: str):

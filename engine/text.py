@@ -529,8 +529,9 @@ def text_fingerprint_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _trigrams(toks: F.Column) -> F.Column:
     """3-word shingles over an ALREADY-MATERIALIZED token-array column
-    (same indexed-transform idiom as the MinHash shingler,
-    engine/dedup.py — per-row JVM work, no shuffle).  ``toks`` must be
+    (indexed transform — per-row JVM work, no shuffle); the one word
+    shingle builder, also behind the xxhash64 near-dup keys
+    (engine/dedup.py).  ``toks`` must be
     an attribute reference, not the _tokens(...) expression tree: each
     element_at re-evaluates its argument subtree per element, so an
     inlined split() makes shingling O(n²) per doc (measured 8× at

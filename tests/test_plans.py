@@ -311,22 +311,36 @@ def test_corpus_tables_are_read_only_through_io_load():
         r"\b(?:%s)\.parquet|os\.path\.join\(\s*sf_dir|\{sf_dir\}|sf_dir\s*\+"
         % "|".join(TABLES)
     )
+    srcs = {p.name: p.read_text() for p in pathlib.Path("engine").glob("*.py")}
+    # engine/io.py is checked too, outside load's own body; the one
+    # other match there is register_views' conf marker, which names the
+    # sf_dir but reads nothing.
+    io_src = srcs["io.py"]
+    start = io_src.index("\ndef load(")
+    end = io_src.index("\ndef ", start + 1)
+    srcs["io.py"] = io_src[:start] + io_src[end:]
+    marker = 'registered = f"{sf_dir}|{fingerprint(sf_dir)}"'
+    assert srcs["io.py"].count(marker) == 1
+    srcs["io.py"] = srcs["io.py"].replace(marker, "")
     bad = [
-        (p.name, m.group(0))
-        for p in pathlib.Path("engine").glob("*.py")
-        if p.name != "io.py"
-        for m in corpus_path.finditer(p.read_text())
+        (name, m.group(0))
+        for name, text in srcs.items()
+        for m in corpus_path.finditer(text)
     ]
     assert not bad, f"corpus read outside engine.io.load: {bad}"
 
 
 def test_kr_near_dup_chain_has_one_spark_home_per_step():
-    # Each step of the Karp-Rabin near-dup chain has one Spark function,
-    # as each has one SQL CTE: shingles come only from the Arrow kernel
-    # _kr_shingles (no second builder, no per-caller builder flag), the
-    # planted-copy corpus only from _neardup_corpus, and the 16-min
-    # signature only from _mh_mins (its one other use of _MH_A[i] is
-    # the _MH_MINS_SQL text).
+    # One near-dup chain, two feature hashes.  Each step of the
+    # Karp-Rabin chain has one Spark function, as each has one SQL CTE,
+    # and the xxhash64 keys run on the same steps: KR shingles come only
+    # from the Arrow kernel _kr_shingles (no second builder, no
+    # per-caller builder flag), word shingles only from text._trigrams,
+    # tokens only from text._tokens, the planted-copy corpus only from
+    # _neardup_corpus, the 16-min signature only from _mh_mins (its one
+    # other use of _MH_A[i] is the _MH_MINS_SQL text), and band keys
+    # only from the integer fold of _mh_bands (no xxhash64 of a string
+    # concat).
     import pathlib
     import re
 
@@ -337,17 +351,33 @@ def test_kr_near_dup_chain_has_one_spark_home_per_step():
     ]
     assert not bad, f"second shingle builder or builder flag in: {bad}"
 
+    def sites(pattern):
+        return [
+            (name, m.start())
+            for name, text in srcs.items()
+            for m in re.finditer(pattern, text)
+        ]
+
+    def only_in(pattern, name, fn):
+        src = srcs[name]
+        start = src.index(f"def {fn}(")
+        end = src.index("\ndef ", start + 1)
+        found = sites(pattern)
+        return len(found) == 1 and found[0][0] == name and start < found[0][1] < end
+
     src = srcs["dedup.py"]
-    planted = re.compile(
-        r'\(F\.col\("doc_id"\) \+ _COPY_OFFSET\)\.alias\("doc_id"\),\s*'
+    planted = (
+        r'\(F\.col\("doc_id"\) \+ [^)]+\)\.alias\("doc_id"\),\s*'
         r'F\.concat\(F\.col\("text"\), F\.lit\(" zz yy"\)\)'
     )
-    start = src.index("def _neardup_corpus(")
-    end = src.index("\ndef ", start + 1)
-    sites = [m.start() for m in planted.finditer(src)]
-    assert len(sites) == 1 and start < sites[0] < end, (
+    assert only_in(planted, "dedup.py", "_neardup_corpus"), (
         "planted copy union built outside _neardup_corpus"
     )
+    assert only_in(r"element_at\(toks, i \+ 3\)", "text.py", "_trigrams"), (
+        "word shingles built outside text._trigrams"
+    )
+    assert len(sites(r"\ndef _tokens\(")) == 1, "second token builder"
+    assert not sites(r"xxhash64\(\s*F\.concat_ws"), "xxhash64 band key"
     assert src.count("_MH_A[i]") == 2, "min-hash signature built twice"
 
 
