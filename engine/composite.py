@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from engine.core import query
 from engine.io import load
+from engine.similarity import _QR_Q, _qr_planes, _qr_proj_sql
 
 
 def _cents(col: F.Column) -> F.Column:
@@ -988,7 +989,6 @@ def pipeline_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from engine.dedup import _cc_propagate
-    from engine.similarity import _dot, _norm
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     perturbed = F.transform(
@@ -1092,11 +1092,9 @@ def pipeline_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EMBP_Q = 1 << 20  # quantization scale (power of two: exact double mult)
 _EMBP_TBL, _EMBP_BITS, _EMBP_VER = 2, 8, 32
 _EMBP_PLANES = _EMBP_TBL * _EMBP_BITS + _EMBP_VER  # 48
 _EMBP_HAM = 2  # max verify-signature hamming distance for an edge
-_EMBP_M31 = 2_147_483_647
 
 
 @query(
@@ -1123,24 +1121,7 @@ _EMBP_M31 = 2_147_483_647
                               ELSE x END)
         FROM embeddings WHERE vec_id % 5 = 0
     ),
-    q AS (
-        SELECT vec_id,
-               list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE) * {_EMBP_Q}) AS BIGINT))
-                   AS qv
-        FROM corpus
-    ),
-    proj AS (
-        SELECT q.vec_id, pl.p AS plane,
-               SUM((1 - 2 * (((((pl.p * 64 + dd.d) * 2654435761 + 97003999)
-                               % {_EMBP_M31})
-                              * (((pl.p * 64 + dd.d) * 2654435761 + 97003999)
-                                 % {_EMBP_M31}))
-                             % {_EMBP_M31} % 2))
-                   * qv[CAST(dd.d AS INTEGER) + 1]) AS y
-        FROM q, UNNEST(range({_EMBP_PLANES})) pl(p), UNNEST(range(64)) dd(d)
-        GROUP BY 1, 2
-    ),
+    {_qr_proj_sql("corpus", _EMBP_PLANES)},
     sigs AS (
         SELECT vec_id,
                SUM(CASE WHEN plane < {_EMBP_BITS} AND y >= 0
@@ -1199,7 +1180,9 @@ def pipeline_embedding_dedup_polyhash(
       identical BIGINTs;
     - hyperplane weights are a FORMULA, not a trained artifact:
       s(j) = 1 - 2*(h(j)² mod P mod 2) with h(j) = (j*2654435761 +
-      97003999) mod P, P = 2³¹−1, j = plane*64 + dim.  The square is
+      97003999) mod P, P = 2³¹−1, j = plane*64 + dim (one builder per
+      engine, shared with the LSH ANN keys: engine.similarity's
+      ``_qr_planes`` and ``_qr_proj_sql``).  The square is
       the load-bearing nonlinearity: the r11 JL key's LINEAR parity
       makes consecutive planes' sign rows equal-or-flipped copies of
       each other (parity(x+c) = parity(x) XOR parity(c) between
@@ -1263,17 +1246,12 @@ def pipeline_embedding_dedup_polyhash(
         )
     )
 
-    # ±1 plane matrix from the quadratic-hash formula — regenerated in
-    # the UDF closure from plane/dim indices (nothing broadcast, no
-    # model artifact; the formula IS the matrix, as in the JL key).
-    j = np.arange(_EMBP_PLANES * 64, dtype=np.int64).reshape(_EMBP_PLANES, 64)
-    h = (j * 2654435761 + 97003999) % _EMBP_M31
-    S = 1 - 2 * ((h * h) % _EMBP_M31 % 2)  # (48, 64) exact int64
+    S = _qr_planes(_EMBP_PLANES)  # (48, 64) exact int64
 
     @F.pandas_udf("array<long>")
     def _embp_sigs(emb):
         m = np.stack(emb.to_numpy()).astype(np.float64)  # float32 widens exactly
-        q = np.floor(m * _EMBP_Q).astype(np.int64)
+        q = np.floor(m * _QR_Q).astype(np.int64)
         bits = (q @ S.T >= 0).astype(np.int64)  # (batch, 48) exact
         sig0 = (bits[:, :_EMBP_BITS] * (1 << np.arange(_EMBP_BITS))).sum(axis=1)
         sig1 = (

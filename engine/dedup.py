@@ -335,6 +335,30 @@ _SH_SIG_SQL = " + ".join(
     f"ELSE CAST(0 AS BIGINT) END)"
     for b in range(_SIMHASH_BITS)
 )
+# The KR SimHash tail over an ``sh`` (doc_id, sh) CTE: sign sums →
+# 32-bit signature → 4×8-bit bands → hamming-gated ``sh_pairs`` (doc_a,
+# doc_b, hamming).  SQL twin of kr_simhash_pairs; each oracle that
+# splices it keeps only its output aliases.
+_SH_PAIRS_CTES = f"""sums AS (
+        SELECT doc_id,
+           {_SH_SUMS_SQL}
+        FROM sh GROUP BY doc_id
+    ),
+    sigs AS (
+        SELECT doc_id, {_SH_SIG_SQL} AS sig FROM sums
+    ),
+    bands AS (
+        SELECT doc_id, sig, b.band, (sig >> (b.band * 8)) & 255 AS band_val
+        FROM sigs, UNNEST([0, 1, 2, 3]) AS b(band)
+    ),
+    sh_pairs AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+               CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS hamming
+        FROM bands a JOIN bands b
+          ON a.band = b.band AND a.band_val = b.band_val AND a.doc_id < b.doc_id
+        WHERE bit_count(xor(a.sig, b.sig)) <= 3
+        GROUP BY 1, 2, 3
+    )"""
 
 
 # Shared Karp-Rabin shingle-set builder (SQL twin of _kr_shingles):
@@ -495,24 +519,8 @@ def _kr_shingles(corpus: DataFrame) -> DataFrame:
     "dedup_simhash_polyhash",
     oracle=f"""
     WITH {_KR_SHINGLES_SQL},
-    sums AS (
-        SELECT doc_id,
-           {_SH_SUMS_SQL}
-        FROM sh GROUP BY doc_id
-    ),
-    sigs AS (
-        SELECT doc_id, {_SH_SIG_SQL} AS sig FROM sums
-    ),
-    bands AS (
-        SELECT doc_id, sig, b.band, (sig >> (b.band * 8)) & 255 AS band_val
-        FROM sigs, UNNEST([0, 1, 2, 3]) AS b(band)
-    )
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS hamming
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.sig, b.sig)) <= 3
-    GROUP BY 1, 2, 3
+    {_SH_PAIRS_CTES}
+    SELECT doc_a, doc_b, hamming FROM sh_pairs
     """,
 )
 def dedup_simhash_polyhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -553,8 +561,8 @@ def _sign_sums(feat: DataFrame, bit) -> DataFrame:
 def kr_simhash_pairs(feat: DataFrame) -> DataFrame:
     """(doc_id, sh: long) KR features → banded 32-bit SimHash pair set
     (4×8-bit bands, hamming ≤ 3) for ``dedup_simhash_polyhash``.  Every
-    op is bit-identical in DuckDB (_SH_SUMS_SQL/_SH_SIG_SQL are the SQL
-    twins), so its oracle replays it verbatim."""
+    op is bit-identical in DuckDB (_SH_PAIRS_CTES is the SQL twin), so
+    its oracle replays it verbatim."""
     return kr_simhash_pairs_from_sums(
         _sign_sums(
             feat, lambda b: ((F.col("sh") * _SH_A[b] + _SH_C[b]) % _M31) % 2
@@ -1176,80 +1184,8 @@ _COS_BLOCK = 100
 _COS_THRESHOLD = 0.30
 
 
-@query(
-    "dedup_embedding_cosine",
-    oracle=f"""
-    WITH pairs AS (
-        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-               a.embedding AS ea, b.embedding AS eb
-        FROM embeddings a JOIN embeddings b
-          ON a.vec_id < b.vec_id
-         AND a.vec_id // {_COS_BLOCK} = b.vec_id // {_COS_BLOCK}
-    ),
-    comps AS (
-        SELECT vec_a, vec_b,
-               SUM(CAST(ea[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)) AS dot,
-               SUM(CAST(ea[i] AS DOUBLE) * CAST(ea[i] AS DOUBLE)) AS na2,
-               SUM(CAST(eb[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)) AS nb2
-        FROM pairs, (SELECT CAST(unnest(range(1, 65)) AS INTEGER) AS i) s
-        GROUP BY vec_a, vec_b
-    )
-    SELECT vec_a, vec_b,
-           FLOOR(dot / (SQRT(na2) * SQRT(nb2)) * 10000 + 0.5) / 10000 AS cosine
-    FROM comps
-    WHERE FLOOR(dot / (SQRT(na2) * SQRT(nb2)) * 10000 + 0.5) / 10000 >= {_COS_THRESHOLD}
-    """,
-)
-def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup: semantic duplicates = pairs above a
-    cosine threshold, computed over deterministic id-blocks (block join
-    key = vec_id div 100) so the candidate set is B·(n/B choose 2), not
-    (n choose 2).  At 100 TB the block key becomes an ANN bucket
-    (sim_ann_lsh_topk's tables); the verify math is identical."""
-    return _cosine_block_pairs(load(spark, sf_dir, "embeddings")).filter(
-        F.col("cosine") >= _COS_THRESHOLD
-    )
-
-
-def _cosine_block_pairs(e: DataFrame) -> DataFrame:
-    """(vec_a, vec_b, cosine) over deterministic id-blocks — the shared
-    candidate generator for dedup_embedding_cosine and the threshold
-    calibration sweep.  Cosine is fix4-pinned (hash-safe)."""
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.zip_with(c, c, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    # Norms are per-VECTOR: fold them once on each projection, not once
-    # per pair (3× fewer 64-element folds after the block join).
-    a = e.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("ea"),
-        F.expr(f"vec_id div {_COS_BLOCK}").alias("block_a"),
-        norm(F.col("embedding")).alias("norm_a"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("eb"),
-        F.expr(f"vec_id div {_COS_BLOCK}").alias("block_b"),
-        norm(F.col("embedding")).alias("norm_b"),
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("ea"), F.col("eb"), lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = F.floor(dot / (F.col("norm_a") * F.col("norm_b")) * 10000 + F.lit(0.5)) / 10000
-    return (
-        a.join(b, (F.col("block_a") == F.col("block_b")) & (F.col("vec_a") < F.col("vec_b")))
-        .select("vec_a", "vec_b", cos.alias("cosine"))
-    )
-
-
-_SWEEP_BP = (2000, 2500, 3000, 3500, 4000)
-
+# SQL twin of _cosine_block_pairs: blocked pairs → per-pair dot and
+# squared norms → ``cosines`` (vec_a, vec_b, fix4-pinned cosine).
 _COS_COMPS_SQL = f"""
     pairs AS (
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
@@ -1267,11 +1203,62 @@ _COS_COMPS_SQL = f"""
         GROUP BY vec_a, vec_b
     ),
     cosines AS (
-        SELECT FLOOR(dot / (SQRT(na2) * SQRT(nb2)) * 10000 + 0.5) / 10000
+        SELECT vec_a, vec_b,
+               FLOOR(dot / (SQRT(na2) * SQRT(nb2)) * 10000 + 0.5) / 10000
                    AS cosine
         FROM comps
     )
 """
+
+
+@query(
+    "dedup_embedding_cosine",
+    oracle=f"""
+    WITH {_COS_COMPS_SQL}
+    SELECT vec_a, vec_b, cosine FROM cosines
+    WHERE cosine >= {_COS_THRESHOLD}
+    """,
+)
+def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-cosine near-dup: semantic duplicates = pairs above a
+    cosine threshold, computed over deterministic id-blocks (block join
+    key = vec_id div 100) so the candidate set is B·(n/B choose 2), not
+    (n choose 2).  At 100 TB the block key becomes an ANN bucket
+    (sim_ann_lsh_topk's tables); the verify math is identical."""
+    return _cosine_block_pairs(load(spark, sf_dir, "embeddings")).filter(
+        F.col("cosine") >= _COS_THRESHOLD
+    )
+
+
+def _cosine_block_pairs(e: DataFrame) -> DataFrame:
+    """(vec_a, vec_b, cosine) over deterministic id-blocks — the shared
+    candidate generator for dedup_embedding_cosine and the threshold
+    calibration sweep.  Cosine is fix4-pinned (hash-safe) on the
+    similarity module's dot/norm fold.  SQL twin: _COS_COMPS_SQL."""
+    from engine.similarity import _dot, _fix, _norm
+
+    # Norms are per-VECTOR: fold them once on each projection, not once
+    # per pair (3× fewer 64-element folds after the block join).
+    a = e.select(
+        F.col("vec_id").alias("vec_a"),
+        F.col("embedding").alias("ea"),
+        F.expr(f"vec_id div {_COS_BLOCK}").alias("block_a"),
+        _norm(F.col("embedding")).alias("norm_a"),
+    )
+    b = e.select(
+        F.col("vec_id").alias("vec_b"),
+        F.col("embedding").alias("eb"),
+        F.expr(f"vec_id div {_COS_BLOCK}").alias("block_b"),
+        _norm(F.col("embedding")).alias("norm_b"),
+    )
+    cos = _fix(_dot(F.col("ea"), F.col("eb")) / (F.col("norm_a") * F.col("norm_b")), 10000)
+    return (
+        a.join(b, (F.col("block_a") == F.col("block_b")) & (F.col("vec_a") < F.col("vec_b")))
+        .select("vec_a", "vec_b", cos.alias("cosine"))
+    )
+
+
+_SWEEP_BP = (2000, 2500, 3000, 3500, 4000)
 
 
 @query(

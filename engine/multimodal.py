@@ -209,6 +209,22 @@ _BYTE_GRAM = 12
 _MM_COPY_OFFSET = 100_000
 
 
+def _mm_neardup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(media_id, payload) media plus one planted near-dup per payload:
+    the same bytes + ' zz yy' under media_id + 100000 — the byte-level
+    twin of engine.dedup._neardup_corpus, shared by both mm SimHash
+    keys."""
+    m = _media(spark, sf_dir).select("media_id", "payload")
+    return m.unionByName(
+        m.select(
+            (F.col("media_id") + _MM_COPY_OFFSET).alias("media_id"),
+            F.concat(F.col("payload"), F.encode(F.lit(" zz yy"), "utf-8")).alias(
+                "payload"
+            ),
+        )
+    )
+
+
 @query("mm_simhash_bytes", oracle=None)  # rows-only: xxhash64 bit extraction
 def mm_simhash_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-level near-duplicate detection for binary media payloads:
@@ -229,15 +245,7 @@ def mm_simhash_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     one transform over the materialized payload — no Python boundary);
     everything downstream is the banded self-join, bucket-local, never
     all-pairs."""
-    m = _media(spark, sf_dir).select("media_id", "payload")
-    corpus = m.unionByName(
-        m.select(
-            (F.col("media_id") + _MM_COPY_OFFSET).alias("media_id"),
-            F.concat(F.col("payload"), F.encode(F.lit(" zz yy"), "utf-8")).alias(
-                "payload"
-            ),
-        )
-    )
+    corpus = _mm_neardup_corpus(spark, sf_dir)
     feat = corpus.select(
         F.col("media_id").alias("doc_id"),
         F.explode(
@@ -260,8 +268,8 @@ def mm_simhash_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _mm_polyhash_oracle() -> str:
     """DuckDB twin of mm_simhash_bytes_polyhash (built at import so the
-    dedup module's proven _SH_SUMS_SQL/_SH_SIG_SQL fragments splice in)."""
-    from engine.dedup import _FP_MOD, _M31, _SH_SIG_SQL, _SH_SUMS_SQL
+    dedup module's proven _SH_PAIRS_CTES signature tail splices in)."""
+    from engine.dedup import _FP_MOD, _M31, _SH_PAIRS_CTES
 
     return f"""
     WITH corpus AS (
@@ -286,24 +294,8 @@ def _mm_polyhash_oracle() -> str:
                                             + {_BYTE_GRAM - 1})),
                     (h, c) -> (h * 31 + c) % {_FP_MOD}) % {_M31}))) AS g(sh)
     ),
-    sums AS (
-        SELECT doc_id,
-           {_SH_SUMS_SQL}
-        FROM sh GROUP BY doc_id
-    ),
-    sigs AS (
-        SELECT doc_id, {_SH_SIG_SQL} AS sig FROM sums
-    ),
-    bands AS (
-        SELECT doc_id, sig, b.band, (sig >> (b.band * 8)) & 255 AS band_val
-        FROM sigs, UNNEST([0, 1, 2, 3]) AS b(band)
-    )
-    SELECT a.doc_id AS media_a, b.doc_id AS media_b,
-           CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS hamming
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.sig, b.sig)) <= 3
-    GROUP BY 1, 2, 3
+    {_SH_PAIRS_CTES}
+    SELECT doc_a AS media_a, doc_b AS media_b, hamming FROM sh_pairs
     """
 
 
@@ -350,15 +342,7 @@ def mm_simhash_bytes_polyhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         kr_simhash_pairs_from_sums,
     )
 
-    m = _media(spark, sf_dir).select("media_id", "payload")
-    corpus = m.unionByName(
-        m.select(
-            (F.col("media_id") + _MM_COPY_OFFSET).alias("media_id"),
-            F.concat(F.col("payload"), F.encode(F.lit(" zz yy"), "utf-8")).alias(
-                "payload"
-            ),
-        )
-    )
+    corpus = _mm_neardup_corpus(spark, sf_dir)
     A = np.asarray(_SH_A, dtype=np.int64)[None, :]  # (1, 32)
     C = np.asarray(_SH_C, dtype=np.int64)[None, :]
 

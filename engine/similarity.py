@@ -8,6 +8,17 @@ All vector math is JVM-side higher-order functions (``zip_with`` +
 double exactly, products are exact (24-bit × 24-bit ⊂ 53-bit), and every
 accumulated float output is pinned with the deterministic
 floor(x*scale+0.5)/scale form before comparison or ranking.
+
+One exact-cosine chain: each step the embedding keys share has one
+Spark function next to one SQL fragment, and every oracle that uses the
+step splices the fragment in — the pinned-cosine top-5 (:func:`_top5` /
+:data:`_TOP5_SQL`, with the candidate re-rank :func:`_rerank_top5` /
+:data:`_RERANK_SQL`), fixed-IVF routing (:func:`_ivf_ranked` /
+:data:`_IVF_RANKED_SQL`) and the quadratic-residue hyperplanes
+(:func:`_qr_planes` / :func:`_qr_proj_sql`, also used by
+``composite.pipeline_embedding_dedup_polyhash``).  Keys that compose
+another key's result (``sim_ann_recall_eval``,
+``sim_ivf_probe_recall_curve``) call its function and splice its oracle.
 """
 
 from __future__ import annotations
@@ -15,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from engine.core import ORACLES as _ORACLES
 from engine.core import query, session_memo
 from engine.io import load
 
@@ -38,6 +50,72 @@ def _norm(a: Column) -> Column:
 # Oracle building block: dot products via a 64-slot range table (the
 # corpus embedding dim is fixed at 64 — FIXTURES.md).
 _DIMS = "(SELECT CAST(unnest(range(1, 65)) AS INTEGER) AS i)"
+
+
+def _top5(scored: DataFrame) -> DataFrame:
+    """The pinned-cosine top-5 of every exact-cosine key: row_number per
+    q_id over (cosine desc, neighbor_id asc), rn <= 5.  Ranking rides
+    the 4-decimal pinned cosine with an id tiebreak, so the order is
+    identical on both engines even where raw cosines differ in the last
+    ulp.  SQL twin: :data:`_TOP5_SQL`."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5)
+
+
+# SQL twin of _top5, fed by a `comps` CTE (q_id, neighbor_id, dot, nq2,
+# ne2): the e4-pinned cosine, then row_number <= 5 per query.
+_TOP5_SQL = """scored AS (
+        SELECT q_id, neighbor_id,
+               FLOOR(dot / (SQRT(nq2) * SQRT(ne2)) * 10000 + 0.5) / 10000
+                   AS cosine
+        FROM comps
+    )
+    SELECT q_id, neighbor_id, cosine, rn
+    FROM (SELECT q_id, neighbor_id, cosine,
+                 ROW_NUMBER() OVER (PARTITION BY q_id
+                                    ORDER BY cosine DESC, neighbor_id ASC) AS rn
+          FROM scored)
+    WHERE rn <= 5"""
+
+# Exact re-rank of a `cand` CTE of distinct (q_id, neighbor_id) pairs:
+# the pair's dot and squared norms, then _TOP5_SQL.  SQL twin of
+# _rerank_top5 (and of the re-rank in every exact-cosine key).
+_RERANK_SQL = f"""comps AS (
+        SELECT c.q_id, c.neighbor_id,
+               SUM(CAST(eq.embedding[i] AS DOUBLE)
+                   * CAST(en.embedding[i] AS DOUBLE)) AS dot,
+               SUM(CAST(eq.embedding[i] AS DOUBLE)
+                   * CAST(eq.embedding[i] AS DOUBLE)) AS nq2,
+               SUM(CAST(en.embedding[i] AS DOUBLE)
+                   * CAST(en.embedding[i] AS DOUBLE)) AS ne2
+        FROM cand c
+        JOIN embeddings eq ON eq.vec_id = c.q_id
+        JOIN embeddings en ON en.vec_id = c.neighbor_id,
+        {_DIMS} s
+        GROUP BY c.q_id, c.neighbor_id
+    ),
+    {_TOP5_SQL}"""
+
+
+def _rerank_top5(e: DataFrame, cand: DataFrame) -> DataFrame:
+    """Exact pinned-cosine top-5 of skinny (q_id, neighbor_id) candidate
+    pairs: the embeddings re-attach only after the candidates are
+    distinct, the q side is filtered to the query ids (q_id < 5 by
+    construction) and norms are folded once per row, not per pair."""
+    eq = e.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("eq"),
+        _norm(F.col("embedding")).alias("nq"),
+    )
+    en = e.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("en"),
+        _norm(F.col("embedding")).alias("nn"),
+    )
+    cos = _dot(F.col("eq"), F.col("en")) / (F.col("nq") * F.col("nn"))
+    return _top5(
+        cand.join(eq, "q_id")
+        .join(en, "neighbor_id")
+        .select("q_id", "neighbor_id", _fix(cos, 10000).alias("cosine"))
+    )
 
 
 @query(
@@ -81,27 +159,12 @@ def sim_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "sim_knn_topk",
     oracle=f"""
-    WITH q AS (SELECT vec_id AS q_id, embedding AS eq FROM embeddings WHERE vec_id < 5),
-    cand AS (
-        SELECT q.q_id, e.vec_id AS neighbor_id,
-               SUM(CAST(q.eq[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)) AS dot,
-               SUM(CAST(q.eq[i] AS DOUBLE) * CAST(q.eq[i] AS DOUBLE)) AS nq2,
-               SUM(CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)) AS ne2
-        FROM q, embeddings e, {_DIMS} s
-        WHERE e.vec_id <> q.q_id
-        GROUP BY q.q_id, e.vec_id
+    WITH cand AS (
+        SELECT q.vec_id AS q_id, e.vec_id AS neighbor_id
+        FROM embeddings q JOIN embeddings e ON e.vec_id <> q.vec_id
+        WHERE q.vec_id < 5
     ),
-    scored AS (
-        SELECT q_id, neighbor_id,
-               FLOOR(dot / (SQRT(nq2) * SQRT(ne2)) * 10000 + 0.5) / 10000 AS cosine
-        FROM cand
-    )
-    SELECT q_id, neighbor_id, cosine, rn
-    FROM (SELECT q_id, neighbor_id, cosine,
-                 ROW_NUMBER() OVER (PARTITION BY q_id
-                                    ORDER BY cosine DESC, neighbor_id ASC) AS rn
-          FROM scored)
-    WHERE rn <= 5
+    {_RERANK_SQL}
     """,
 )
 def sim_knn_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -134,8 +197,7 @@ def sim_knn_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             _fix(cos, 10000).alias("cosine"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5)
+    return _top5(scored)
 
 
 @query(
@@ -387,11 +449,60 @@ def sim_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5)
+    return _top5(scored)
 
 
-_ALSH_Q = 1 << 20  # quantization scale (power of two: exact double mult)
+# Quadratic-residue hyperplanes: the hash-verified sign-LSH family of
+# sim_ann_lsh_fixed_topk, sim_ann_lsh_multiprobe and
+# composite.pipeline_embedding_dedup_polyhash.  Embeddings quantize to
+# exact BIGINTs q = floor(float64(x) * _QR_Q) (a power-of-two scale, so
+# the multiply is exact on both engines); plane p weights dim d by
+# s(j) = 1 - 2*(h(j)^2 mod P mod 2), h a universal hash of j = p*64 + d
+# mod P = 2^31-1 (_qr_planes); a projection is an order-independent
+# int64 sum, so an Arrow matmul and DuckDB's UNNEST+SUM agree exactly.
+# Plane p is the same plane for every key and every plane count.
+_QR_Q = 1 << 20
+_QR_M31 = 2_147_483_647
+
+
+def _qr_planes(n_planes: int):
+    """(n_planes, 64) exact int64 ±1 plane matrix, built on the driver
+    for a UDF closure: the formula IS the matrix (nothing broadcast, no
+    model artifact).  SQL twin: :func:`_qr_proj_sql`."""
+    import numpy as np
+
+    j = np.arange(n_planes * 64, dtype=np.int64).reshape(n_planes, 64)
+    h = (j * 2654435761 + 97003999) % _QR_M31
+    return 1 - 2 * ((h * h) % _QR_M31 % 2)
+
+
+def _qr_proj_sql(src: str, n_planes: int) -> str:
+    """The ``q`` (vec_id, qv), ``planes`` (p, d, s: the ±1 matrix of
+    :func:`_qr_planes` as a relation) and ``proj`` (vec_id, plane, y)
+    CTEs: the quantized projections of ``src``'s embeddings onto planes
+    0..n_planes-1 — the SQL twin of ``floor(m * _QR_Q) @ _qr_planes(n).T``."""
+    return f"""q AS (
+        SELECT vec_id,
+               list_transform(embedding,
+                   x -> CAST(FLOOR(CAST(x AS DOUBLE) * {_QR_Q}) AS BIGINT))
+                   AS qv
+        FROM {src}
+    ),
+    planes AS (
+        SELECT p, d, 1 - 2 * ((h * h) % {_QR_M31} % 2) AS s
+        FROM (SELECT pl.p, dd.d,
+                     ((pl.p * 64 + dd.d) * 2654435761 + 97003999) % {_QR_M31}
+                         AS h
+              FROM UNNEST(range({n_planes})) pl(p), UNNEST(range(64)) dd(d))
+    ),
+    proj AS (
+        SELECT q.vec_id, pl.p AS plane,
+               SUM(pl.s * qv[CAST(pl.d AS INTEGER) + 1]) AS y
+        FROM q, planes pl
+        GROUP BY 1, 2
+    )"""
+
+
 # 8 tables x 4 bits — the md5 sibling's tuning: at this corpus' weak
 # structure (top cosines ~0.35, per-bit agreement ~0.61) recall needs
 # many LOW-resolution tables (p^4 ~ 0.14 per table, union ~0.70);
@@ -399,29 +510,25 @@ _ALSH_Q = 1 << 20  # quantization scale (power of two: exact double mult)
 # exact-top-k overlap here vs 19/25 (sf0.01) / 21/25 (sf0.1) for
 # this shape — above the md5 sibling's 15/25.
 _ALSH_TBL, _ALSH_BITS = 8, 4
-_ALSH_M31 = 2_147_483_647
 
 
 def _alsh_entries(e: DataFrame) -> DataFrame:
-    """(vec_id, t, b) LSH table entries for the hash-verified
-    quantized-hyperplane family — shared by ``sim_ann_lsh_fixed_topk``
-    (8 tables, single probe) and ``sim_ann_lsh_multiprobe`` (first 4
-    tables + Hamming-1 probes): one Arrow matmul per batch computes all
-    8 signatures; plane p's ±1 signs come from the
-    quadratic-residue hash over j = p·64 + d, so restricting to t < T
-    keeps plane identities stable across both keys and their oracles."""
+    """(vec_id, t, b) LSH table entries over the quadratic-residue
+    planes — shared by ``sim_ann_lsh_fixed_topk`` (8 tables, single
+    probe) and ``sim_ann_lsh_multiprobe`` (first 4 tables + Hamming-1
+    probes): one Arrow matmul per batch computes all 8 signatures, and
+    table t is planes 4t..4t+3, so restricting to t < T keeps table
+    identities stable across both keys.  SQL twin:
+    :func:`_alsh_entries_sql`."""
     import numpy as np
     import pandas as pd
 
-    n_planes = _ALSH_TBL * _ALSH_BITS
-    j = np.arange(n_planes * 64, dtype=np.int64).reshape(n_planes, 64)
-    h = (j * 2654435761 + 97003999) % _ALSH_M31
-    S = 1 - 2 * ((h * h) % _ALSH_M31 % 2)
+    S = _qr_planes(_ALSH_TBL * _ALSH_BITS)
 
     @F.pandas_udf("array<long>")
     def _alsh_sigs(emb):
         m = np.stack(emb.to_numpy()).astype(np.float64)
-        qm = np.floor(m * _ALSH_Q).astype(np.int64)
+        qm = np.floor(m * _QR_Q).astype(np.int64)
         bits = (qm @ S.T >= 0).astype(np.int64)
         return pd.Series(
             np.stack(
@@ -441,28 +548,10 @@ def _alsh_entries(e: DataFrame) -> DataFrame:
     ).select("vec_id", F.posexplode("sigs").alias("t", "b"))
 
 
-@query(
-    "sim_ann_lsh_fixed_topk",
-    oracle=f"""
-    WITH q AS (
-        SELECT vec_id,
-               list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE) * {_ALSH_Q}) AS BIGINT))
-                   AS qv
-        FROM embeddings
-    ),
-    proj AS (
-        SELECT q.vec_id, pl.p AS plane,
-               SUM((1 - 2 * (((((pl.p * 64 + dd.d) * 2654435761 + 97003999)
-                               % {_ALSH_M31})
-                              * (((pl.p * 64 + dd.d) * 2654435761 + 97003999)
-                                 % {_ALSH_M31}))
-                             % {_ALSH_M31} % 2))
-                   * qv[CAST(dd.d AS INTEGER) + 1]) AS y
-        FROM q, UNNEST(range({_ALSH_TBL * _ALSH_BITS})) pl(p),
-             UNNEST(range(64)) dd(d)
-        GROUP BY 1, 2
-    ),
+def _alsh_entries_sql(n_tables: int) -> str:
+    """SQL twin of :func:`_alsh_entries` restricted to t < n_tables:
+    the quantized projections, then ``entries`` (vec_id, t, b)."""
+    return f"""{_qr_proj_sql("embeddings", n_tables * _ALSH_BITS)},
     entries AS (
         SELECT vec_id, plane // {_ALSH_BITS} AS t,
                SUM(CASE WHEN y >= 0
@@ -470,53 +559,31 @@ def _alsh_entries(e: DataFrame) -> DataFrame:
                              << CAST(plane % {_ALSH_BITS} AS INTEGER)
                         ELSE 0 END) AS b
         FROM proj GROUP BY 1, 2
-    ),
+    )"""
+
+
+@query(
+    "sim_ann_lsh_fixed_topk",
+    oracle=f"""
+    WITH {_alsh_entries_sql(_ALSH_TBL)},
     cand AS (
         SELECT DISTINCT qe.vec_id AS q_id, e.vec_id AS neighbor_id
         FROM entries qe JOIN entries e
           ON e.t = qe.t AND e.b = qe.b AND e.vec_id <> qe.vec_id
         WHERE qe.vec_id < 5
     ),
-    comps AS (
-        SELECT c.q_id, c.neighbor_id,
-               SUM(CAST(eq.embedding[i] AS DOUBLE)
-                   * CAST(en.embedding[i] AS DOUBLE)) AS dot,
-               SUM(CAST(eq.embedding[i] AS DOUBLE)
-                   * CAST(eq.embedding[i] AS DOUBLE)) AS nq2,
-               SUM(CAST(en.embedding[i] AS DOUBLE)
-                   * CAST(en.embedding[i] AS DOUBLE)) AS ne2
-        FROM cand c
-        JOIN embeddings eq ON eq.vec_id = c.q_id
-        JOIN embeddings en ON en.vec_id = c.neighbor_id,
-        {_DIMS} s
-        GROUP BY c.q_id, c.neighbor_id
-    ),
-    scored AS (
-        SELECT q_id, neighbor_id,
-               FLOOR(dot / (SQRT(nq2) * SQRT(ne2)) * 10000 + 0.5) / 10000
-                   AS cosine
-        FROM comps
-    )
-    SELECT q_id, neighbor_id, cosine, rn
-    FROM (SELECT q_id, neighbor_id, cosine,
-                 ROW_NUMBER() OVER (PARTITION BY q_id
-                                    ORDER BY cosine DESC, neighbor_id ASC) AS rn
-          FROM scored)
-    WHERE rn <= 5
+    {_RERANK_SQL}
     """,
 )
 def sim_ann_lsh_fixed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HASH-VERIFIED hyperplane-LSH ANN top-k — the LSH sibling of
     ``sim_ivf_fixed_topk`` (r11), completing the pair: both ANN index
     families now have a driver-hashable twin next to their rows-only
-    trained/md5 variants.  Same construction as
-    ``pipeline_embedding_dedup_polyhash``'s candidate stage: embeddings
-    quantize to exact BIGINTs (floor(float64 · 2²⁰) — power-of-two
-    scale), hyperplane signs come from the quadratic-residue hash
-    s(j) = 1 − 2·(h(j)² mod P mod 2) (the square defeats the
-    linear-parity plane correlation — see that key), and each
-    projection is an order-independent int64 sum, so Spark's Arrow
-    matmul and DuckDB's UNNEST+SUM agree exactly.  Queries (vec_id<5)
+    trained/md5 variants.  Same quadratic-residue hyperplanes
+    (:func:`_qr_planes`) as ``pipeline_embedding_dedup_polyhash``'s
+    candidate stage (the square defeats the linear-parity plane
+    correlation — see that key), so Spark's Arrow matmul and DuckDB's
+    UNNEST+SUM agree exactly.  Queries (vec_id<5)
     probe their bucket in each of 8×4-bit tables; the bucket-mates
     union re-ranks on the PINNED 4-decimal cosine with a neighbor_id
     tiebreak (sim_ivf_fixed_topk discipline).
@@ -539,24 +606,7 @@ def sim_ann_lsh_fixed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", F.col("vec_id").alias("neighbor_id"))
         .distinct()
     )
-    # q side filtered to the query ids (cand.q_id < 5 by construction)
-    # and norms hoisted per row — not re-folded per candidate pair
-    eq = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("eq"),
-        _norm(F.col("embedding")).alias("nq"),
-    )
-    en = e.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("en"),
-        _norm(F.col("embedding")).alias("nn"),
-    )
-    cos = _dot(F.col("eq"), F.col("en")) / (F.col("nq") * F.col("nn"))
-    scored = (
-        cand.join(eq, "q_id")
-        .join(en, "neighbor_id")
-        .select("q_id", "neighbor_id", _fix(cos, 10000).alias("cosine"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5)
+    return _rerank_top5(e, cand)
 
 
 _MP_TBL = 4  # multiprobe uses HALF the tables (planes 0..15)
@@ -566,33 +616,7 @@ _MP_FLIPS = (0, 1, 2, 4, 8)  # exact bucket + the 4 Hamming-1 neighbors
 @query(
     "sim_ann_lsh_multiprobe",
     oracle=f"""
-    WITH q AS (
-        SELECT vec_id,
-               list_transform(embedding,
-                   x -> CAST(FLOOR(CAST(x AS DOUBLE) * {_ALSH_Q}) AS BIGINT))
-                   AS qv
-        FROM embeddings
-    ),
-    proj AS (
-        SELECT q.vec_id, pl.p AS plane,
-               SUM((1 - 2 * (((((pl.p * 64 + dd.d) * 2654435761 + 97003999)
-                               % {_ALSH_M31})
-                              * (((pl.p * 64 + dd.d) * 2654435761 + 97003999)
-                                 % {_ALSH_M31}))
-                             % {_ALSH_M31} % 2))
-                   * qv[CAST(dd.d AS INTEGER) + 1]) AS y
-        FROM q, UNNEST(range({_MP_TBL * _ALSH_BITS})) pl(p),
-             UNNEST(range(64)) dd(d)
-        GROUP BY 1, 2
-    ),
-    entries AS (
-        SELECT vec_id, plane // {_ALSH_BITS} AS t,
-               SUM(CASE WHEN y >= 0
-                        THEN CAST(1 AS BIGINT)
-                             << CAST(plane % {_ALSH_BITS} AS INTEGER)
-                        ELSE 0 END) AS b
-        FROM proj GROUP BY 1, 2
-    ),
+    WITH {_alsh_entries_sql(_MP_TBL)},
     probes AS (
         SELECT vec_id AS q_id, t, xor(b, f.flip) AS b
         FROM entries, UNNEST([{", ".join(str(f) for f in _MP_FLIPS)}]) f(flip)
@@ -603,32 +627,7 @@ _MP_FLIPS = (0, 1, 2, 4, 8)  # exact bucket + the 4 Hamming-1 neighbors
         FROM probes p JOIN entries e
           ON e.t = p.t AND e.b = p.b AND e.vec_id <> p.q_id
     ),
-    comps AS (
-        SELECT c.q_id, c.neighbor_id,
-               SUM(CAST(eq.embedding[i] AS DOUBLE)
-                   * CAST(en.embedding[i] AS DOUBLE)) AS dot,
-               SUM(CAST(eq.embedding[i] AS DOUBLE)
-                   * CAST(eq.embedding[i] AS DOUBLE)) AS nq2,
-               SUM(CAST(en.embedding[i] AS DOUBLE)
-                   * CAST(en.embedding[i] AS DOUBLE)) AS ne2
-        FROM cand c
-        JOIN embeddings eq ON eq.vec_id = c.q_id
-        JOIN embeddings en ON en.vec_id = c.neighbor_id,
-        {_DIMS} s
-        GROUP BY c.q_id, c.neighbor_id
-    ),
-    scored AS (
-        SELECT q_id, neighbor_id,
-               FLOOR(dot / (SQRT(nq2) * SQRT(ne2)) * 10000 + 0.5) / 10000
-                   AS cosine
-        FROM comps
-    )
-    SELECT q_id, neighbor_id, cosine, rn
-    FROM (SELECT q_id, neighbor_id, cosine,
-                 ROW_NUMBER() OVER (PARTITION BY q_id
-                                    ORDER BY cosine DESC, neighbor_id ASC) AS rn
-          FROM scored)
-    WHERE rn <= 5
+    {_RERANK_SQL}
     """,
 )
 def sim_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -672,24 +671,7 @@ def sim_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", F.col("vec_id").alias("neighbor_id"))
         .distinct()
     )
-    # q side filtered to the query ids (cand.q_id < 5 by construction)
-    # and norms hoisted per row — not re-folded per candidate pair
-    eq = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("eq"),
-        _norm(F.col("embedding")).alias("nq"),
-    )
-    en = e.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("en"),
-        _norm(F.col("embedding")).alias("nn"),
-    )
-    cos = _dot(F.col("eq"), F.col("en")) / (F.col("nq") * F.col("nn"))
-    scored = (
-        cand.join(eq, "q_id")
-        .join(en, "neighbor_id")
-        .select("q_id", "neighbor_id", _fix(cos, 10000).alias("cosine"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5)
+    return _rerank_top5(e, cand)
 
 
 _IVF_K = 16  # centroid count
@@ -758,8 +740,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", "neighbor_id", _fix(cos, 10000).alias("cosine"))
         .distinct()
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5)
+    return _top5(scored)
 
 
 def _build_ivf_index(spark: SparkSession, sf_dir: str):
@@ -844,25 +825,36 @@ def _build_ivf_index(spark: SparkSession, sf_dir: str):
 def _ivf_fixed_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fixed-IVF routing diamond shared by ``sim_ivf_fixed_topk``,
     ``sim_ivfpq_adc_topk``, ``sim_hard_negative_ivf`` and their tests:
-    pinned 6-decimal cosine against the 16 lowest-vec_id centroids, cid
-    tiebreak, rn <= 2 probes (extracted r15 — the block existed in
-    three hand-copies whose pinning constant / tiebreak / probe count
-    could silently desynchronize).  Persisted and materialized once per
-    session through :func:`engine.core.session_memo`: every consumer
-    fans it out (inverted lists, probes, a bounded artifact collect)."""
+    :func:`_ivf_ranked` at depth ``_IVF_PROBES``.  Persisted and
+    materialized once per session through
+    :func:`engine.core.session_memo`: every consumer fans it out
+    (inverted lists, probes, a bounded artifact collect)."""
     return session_memo(spark, "ivf_fixed_ranked", sf_dir,
                         lambda: _build_ivf_fixed_ranked(spark, sf_dir))
 
 
 def _build_ivf_fixed_ranked(spark: SparkSession, sf_dir: str):
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    ranked = _ivf_ranked(e, _IVF_PROBES).persist()
+    return ranked, [ranked]
+
+
+def _ivf_ranked(e: DataFrame, depth: int) -> DataFrame:
+    """Fixed-IVF routing: each vector's ``depth`` nearest of the 16
+    lowest-vec_id centroids, ranked on the pinned 6-decimal cosine with
+    a cid tiebreak — (vec_id, embedding, nrm, cid, cos_key, crn <=
+    depth).  crn = 1 is the vector's inverted list; a query probes its
+    crn <= p lists.  The one Spark home of the routing; SQL twin:
+    :data:`_IVF_RANKED_SQL` (which ranks every centroid, so a consumer
+    filters crn itself).  The 16-row centroid side broadcasts: map-only
+    per vector, one window shuffle on vec_id."""
     # Norms hoisted to per-ROW projections before the crossJoin (r17
     # opt): _norm is an interpreted ~128-lambda HOF, and inside the
     # per-pair cosine it re-ran once per (vector, centroid) pair — 3
     # aggregates/pair over 16x the row count.  Hoisting is bit-identical
     # (the same fold over the same array yields the same double
     # wherever it is evaluated) and measured ~1.8x on this stage.  The
-    # persisted frame carries nrm so downstream re-ranks reuse it.
+    # frame carries nrm so downstream re-ranks reuse it.
     en = e.select("vec_id", "embedding", _norm(F.col("embedding")).alias("nrm"))
     cents = e.filter(F.col("vec_id") < _IVF_K).select(
         F.col("vec_id").alias("cid"),
@@ -876,20 +868,17 @@ def _build_ivf_fixed_ranked(spark: SparkSession, sf_dir: str):
         + F.lit(0.5)
     )
     wc = Window.partitionBy("vec_id").orderBy(F.desc("cos_key"), F.asc("cid"))
-    ranked = (
+    return (
         en.crossJoin(F.broadcast(cents))
         .select("vec_id", "embedding", "nrm", "cid", cos_key.alias("cos_key"))
         .withColumn("crn", F.row_number().over(wc))
-        .filter(F.col("crn") <= _IVF_PROBES)
-        .persist()
+        .filter(F.col("crn") <= depth)
     )
-    return ranked, [ranked]
 
 
-@query(
-    "sim_ivf_fixed_topk",
-    oracle=f"""
-    WITH cents AS (
+# SQL twin of _ivf_ranked: ``ranked`` (vec_id, cid, crn) over all 16
+# centroids; consumers cut crn = 1 (lists) and crn <= p (probes).
+_IVF_RANKED_SQL = f"""cents AS (
         SELECT vec_id AS cid, embedding AS ec FROM embeddings
         WHERE vec_id < {_IVF_K}
     ),
@@ -909,38 +898,23 @@ def _build_ivf_fixed_ranked(spark: SparkSession, sf_dir: str):
                ROW_NUMBER() OVER (PARTITION BY vec_id
                                   ORDER BY cos_key DESC, cid ASC) AS crn
         FROM ac
-    ),
+    )"""
+
+
+@query(
+    "sim_ivf_fixed_topk",
+    oracle=f"""
+    WITH {_IVF_RANKED_SQL},
     inv AS (SELECT vec_id AS neighbor_id, cid AS list_id FROM ranked
             WHERE crn = 1),
     probes AS (SELECT vec_id AS q_id, cid AS list_id FROM ranked
                WHERE crn <= {_IVF_PROBES} AND vec_id < 5),
     cand AS (
-        SELECT p.q_id, i.neighbor_id,
-               SUM(CAST(eq.embedding[i] AS DOUBLE)
-                   * CAST(en.embedding[i] AS DOUBLE)) AS dot,
-               SUM(CAST(eq.embedding[i] AS DOUBLE)
-                   * CAST(eq.embedding[i] AS DOUBLE)) AS nq2,
-               SUM(CAST(en.embedding[i] AS DOUBLE)
-                   * CAST(en.embedding[i] AS DOUBLE)) AS ne2
+        SELECT p.q_id, i.neighbor_id
         FROM probes p
         JOIN inv i ON i.list_id = p.list_id AND i.neighbor_id <> p.q_id
-        JOIN embeddings eq ON eq.vec_id = p.q_id
-        JOIN embeddings en ON en.vec_id = i.neighbor_id,
-        {_DIMS} s
-        GROUP BY p.q_id, i.neighbor_id
     ),
-    scored AS (
-        SELECT q_id, neighbor_id,
-               FLOOR(dot / (SQRT(nq2) * SQRT(ne2)) * 10000 + 0.5) / 10000
-                   AS cosine
-        FROM cand
-    )
-    SELECT q_id, neighbor_id, cosine, rn
-    FROM (SELECT q_id, neighbor_id, cosine,
-                 ROW_NUMBER() OVER (PARTITION BY q_id
-                                    ORDER BY cosine DESC, neighbor_id ASC) AS rn
-          FROM scored)
-    WHERE rn <= 5
+    {_RERANK_SQL}
     """,
 )
 def sim_ivf_fixed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -986,8 +960,7 @@ def sim_ivf_fixed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("neighbor_id") != F.col("q_id"))
         .select("q_id", "neighbor_id", _fix(cos, 10000).alias("cosine"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5)
+    return _top5(scored)
 
 
 _PQ_M = 8  # subspaces (64 dims / 8)
@@ -1339,32 +1312,9 @@ def sim_pq_fixed_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return adc.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5)
 
 
-@query(
-    "sim_knn_topk_blocked",
-    oracle=f"""
-    WITH q AS (SELECT vec_id AS q_id, embedding AS eq FROM embeddings WHERE vec_id < 5),
-    cand AS (
-        SELECT q.q_id, e.vec_id AS neighbor_id,
-               SUM(CAST(q.eq[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)) AS dot,
-               SUM(CAST(q.eq[i] AS DOUBLE) * CAST(q.eq[i] AS DOUBLE)) AS nq2,
-               SUM(CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)) AS ne2
-        FROM q, embeddings e, {_DIMS} s
-        WHERE e.vec_id <> q.q_id
-        GROUP BY q.q_id, e.vec_id
-    ),
-    scored AS (
-        SELECT q_id, neighbor_id,
-               FLOOR(dot / (SQRT(nq2) * SQRT(ne2)) * 10000 + 0.5) / 10000 AS cosine
-        FROM cand
-    )
-    SELECT q_id, neighbor_id, cosine, rn
-    FROM (SELECT q_id, neighbor_id, cosine,
-                 ROW_NUMBER() OVER (PARTITION BY q_id
-                                    ORDER BY cosine DESC, neighbor_id ASC) AS rn
-          FROM scored)
-    WHERE rn <= 5
-    """,
-)
+# One semantic contract, two physical strategies: the blocked key is
+# checked against sim_knn_topk's oracle text itself.
+@query("sim_knn_topk_blocked", oracle=_ORACLES["sim_knn_topk"])
 def sim_knn_topk_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT top-k via BLOCKED matrix multiplication — the production
     exact-search physical plan, pinned to the SAME oracle (and the same
@@ -1425,14 +1375,8 @@ def sim_knn_topk_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out["cosine"].extend(cj[order])
             yield pd.DataFrame(out)
 
-    local = e.mapInPandas(
-        block_topk, "q_id long, neighbor_id long, cosine double"
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return local.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= K
+    return _top5(
+        e.mapInPandas(block_topk, "q_id long, neighbor_id long, cosine double")
     )
 
 
@@ -1455,7 +1399,7 @@ _MRL_PFX_SQL = "(SELECT CAST(unnest(range(1, 17)) AS INTEGER) AS i)"
         WHERE e.vec_id <> q.q_id
         GROUP BY q.q_id, e.vec_id
     ),
-    short AS (
+    cand AS (
         SELECT q_id, neighbor_id
         FROM (SELECT q_id, neighbor_id,
                      ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY
@@ -1465,26 +1409,7 @@ _MRL_PFX_SQL = "(SELECT CAST(unnest(range(1, 17)) AS INTEGER) AS i)"
               FROM coarse)
         WHERE rn <= {_MRL_SHORTLIST}
     ),
-    full_dim AS (
-        SELECT s.q_id, s.neighbor_id,
-               SUM(CAST(q.eq[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)) AS dot,
-               SUM(CAST(q.eq[i] AS DOUBLE) * CAST(q.eq[i] AS DOUBLE)) AS nq2,
-               SUM(CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)) AS ne2
-        FROM short s
-        JOIN q ON q.q_id = s.q_id
-        JOIN embeddings e ON e.vec_id = s.neighbor_id, {_DIMS} d
-        GROUP BY s.q_id, s.neighbor_id
-    )
-    SELECT q_id, neighbor_id,
-           FLOOR(dot / (SQRT(nq2) * SQRT(ne2)) * 10000 + 0.5) / 10000
-               AS cosine,
-           rn
-    FROM (SELECT q_id, neighbor_id, dot, nq2, ne2,
-                 ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY
-                     FLOOR(dot / (SQRT(nq2) * SQRT(ne2)) * 10000 + 0.5) DESC,
-                     neighbor_id ASC) AS rn
-          FROM full_dim)
-    WHERE rn <= 5
+    {_RERANK_SQL}
     """,
 )
 def sim_matryoshka_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1554,12 +1479,7 @@ def sim_matryoshka_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(q.select("q_id", "eq", "nq_full")), "q_id")
         .select("q_id", "neighbor_id", _fix(full_cos, 10000).alias("cosine"))
     )
-    w2 = Window.partitionBy("q_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return exact.withColumn("rn", F.row_number().over(w2)).filter(
-        F.col("rn") <= 5
-    )
+    return _top5(exact)
 
 
 _MMR_SHORTLIST = 20
@@ -3805,7 +3725,6 @@ def graph_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -- ANN recall evaluation (r14 breadth: index-quality eval harness) --------
-from engine.core import ORACLES as _ORACLES  # noqa: E402
 
 
 @query(
@@ -3888,27 +3807,7 @@ _IVFPQ_CB_N = 32  # residual-codebook source vectors (lowest vec_ids)
                    AS qv
         FROM embeddings
     ),
-    cents AS (
-        SELECT vec_id AS cid, embedding AS ec FROM embeddings
-        WHERE vec_id < {_IVF_K}
-    ),
-    ac AS (
-        SELECT e.vec_id, c.cid,
-               FLOOR(SUM(CAST(e.embedding[i] AS DOUBLE) * CAST(c.ec[i] AS DOUBLE))
-                     / (SQRT(SUM(CAST(e.embedding[i] AS DOUBLE)
-                                 * CAST(e.embedding[i] AS DOUBLE)))
-                        * SQRT(SUM(CAST(c.ec[i] AS DOUBLE)
-                                   * CAST(c.ec[i] AS DOUBLE))))
-                     * 1000000 + 0.5) AS cos_key
-        FROM embeddings e, cents c, {_DIMS} s
-        GROUP BY e.vec_id, c.cid
-    ),
-    ranked AS (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY cos_key DESC, cid ASC) AS crn
-        FROM ac
-    ),
+    {_IVF_RANKED_SQL},
     inv AS (SELECT vec_id, cid AS list_id FROM ranked WHERE crn = 1),
     probes AS (SELECT vec_id AS q_id, cid AS list_id FROM ranked
                WHERE crn <= {_IVF_PROBES} AND vec_id < 5),
@@ -4359,27 +4258,7 @@ def sim_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "sim_hard_negative_ivf",
     oracle=f"""
-    WITH cents AS (
-        SELECT vec_id AS cid, embedding AS ec FROM embeddings
-        WHERE vec_id < {_IVF_K}
-    ),
-    ac AS (
-        SELECT e.vec_id, c.cid,
-               FLOOR(SUM(CAST(e.embedding[i] AS DOUBLE) * CAST(c.ec[i] AS DOUBLE))
-                     / (SQRT(SUM(CAST(e.embedding[i] AS DOUBLE)
-                                 * CAST(e.embedding[i] AS DOUBLE)))
-                        * SQRT(SUM(CAST(c.ec[i] AS DOUBLE)
-                                   * CAST(c.ec[i] AS DOUBLE))))
-                     * 1000000 + 0.5) AS cos_key
-        FROM embeddings e, cents c, {_DIMS} s
-        GROUP BY e.vec_id, c.cid
-    ),
-    ranked AS (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY cos_key DESC, cid ASC) AS crn
-        FROM ac
-    ),
+    WITH {_IVF_RANKED_SQL},
     inv AS (SELECT vec_id AS cand_id, cid AS list_id FROM ranked
             WHERE crn = 1),
     qq AS MATERIALIZED (
@@ -4571,27 +4450,7 @@ _IVF_SWEEP = (1, 2, 4)  # probe counts swept by the recall curve
 @query(
     "sim_ivf_probe_recall_curve",
     oracle=f"""
-    WITH cents AS (
-        SELECT vec_id AS cid, embedding AS ec FROM embeddings
-        WHERE vec_id < {_IVF_K}
-    ),
-    ac AS (
-        SELECT e.vec_id, c.cid,
-               FLOOR(SUM(CAST(e.embedding[i] AS DOUBLE) * CAST(c.ec[i] AS DOUBLE))
-                     / (SQRT(SUM(CAST(e.embedding[i] AS DOUBLE)
-                                 * CAST(e.embedding[i] AS DOUBLE)))
-                        * SQRT(SUM(CAST(c.ec[i] AS DOUBLE)
-                                   * CAST(c.ec[i] AS DOUBLE))))
-                     * 1000000 + 0.5) AS cos_key
-        FROM embeddings e, cents c, {_DIMS} s
-        GROUP BY e.vec_id, c.cid
-    ),
-    ranked AS (
-        SELECT vec_id, cid,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY cos_key DESC, cid ASC) AS crn
-        FROM ac
-    ),
+    WITH {_IVF_RANKED_SQL},
     inv AS (SELECT vec_id AS neighbor_id, cid AS list_id FROM ranked
             WHERE crn = 1),
     qrank AS (
@@ -4627,28 +4486,7 @@ _IVF_SWEEP = (1, 2, 4)  # probe counts swept by the recall curve
                    ORDER BY s.cos_bp DESC, s.neighbor_id ASC) AS rn
         FROM g JOIN sc s ON s.lr <= g.n_probes
     ),
-    exact_sc AS (
-        SELECT q.vec_id AS q_id, e.vec_id AS neighbor_id,
-               FLOOR(SUM(CAST(q.embedding[i] AS DOUBLE)
-                         * CAST(e.embedding[i] AS DOUBLE))
-                     / (SQRT(SUM(CAST(q.embedding[i] AS DOUBLE)
-                                 * CAST(q.embedding[i] AS DOUBLE)))
-                        * SQRT(SUM(CAST(e.embedding[i] AS DOUBLE)
-                                   * CAST(e.embedding[i] AS DOUBLE))))
-                     * 10000 + 0.5) AS cos_bp
-        FROM embeddings q JOIN embeddings e ON e.vec_id <> q.vec_id,
-             {_DIMS} s
-        WHERE q.vec_id < 5
-        GROUP BY q.vec_id, e.vec_id
-    ),
-    exact5 AS (
-        SELECT q_id, neighbor_id FROM (
-            SELECT q_id, neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY q_id
-                       ORDER BY cos_bp DESC, neighbor_id ASC) AS rn
-            FROM exact_sc
-        ) WHERE rn <= 5
-    ),
+    exact5 AS (SELECT q_id, neighbor_id FROM ({_ORACLES["sim_knn_topk"]})),
     vol AS (
         SELECT g.n_probes, CAST(COUNT(*) AS BIGINT) AS n_cand
         FROM g JOIN sc s ON s.lr <= g.n_probes GROUP BY g.n_probes
@@ -4690,41 +4528,16 @@ def sim_ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ground truth costs 5 broadcast query rows against the
     collection (map-only + per-query top-5) — at 100 TB one evaluates
     recall on a sampled query set exactly like this; the IVF side
-    touches only probed lists (~p*N/K rows per query).  The centroid
-    ranking here extends to crn <= 4, wider than the shared rn<=2
-    routing diamond, so it is built locally with the SAME pinned
-    expression (one crossJoin against the broadcast 16-row centroid
-    table + one window)."""
+    touches only probed lists (~p*N/K rows per query).  The routing is
+    :func:`_ivf_ranked` at depth max(_IVF_SWEEP) (wider than the shared
+    crn <= 2 diamond), and the ground truth is ``sim_knn_topk`` itself,
+    in both engines."""
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # norms hoisted per row before the broadcast crossJoins (r17 opt:
-    # the interpreted-HOF fold ran once per pair; bit-identical hoist,
-    # measured ~1.8x on the routing stage) — nrm rides the persisted
-    # frame so inv/qrank reuse it in the probe scoring
-    ebn = e.select(
-        "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
-    )
-    cents = e.filter(F.col("vec_id") < _IVF_K).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ec"),
-        _norm(F.col("embedding")).alias("nrm_c"),
-    )
-    cos_key = F.floor(
-        _dot(F.col("embedding"), F.col("ec"))
-        / (F.col("nrm") * F.col("nrm_c"))
-        * 1000000
-        + F.lit(0.5)
-    )
-    wc = Window.partitionBy("vec_id").orderBy(F.desc("cos_key"), F.asc("cid"))
-    ranked = (
-        ebn.crossJoin(F.broadcast(cents))
-        .select("vec_id", "embedding", "nrm", "cid", cos_key.alias("cos_key"))
-        .withColumn("crn", F.row_number().over(wc))
-        .filter(F.col("crn") <= max(_IVF_SWEEP))
-    )
     # ranked feeds inv (crn=1, all vectors) and qrank (5 queries) — the
     # crossJoin+window subtree is nontrivial and read twice: persist +
-    # eager count (r12 rule; the shared rn<=2 diamond cannot serve the
-    # crn<=4 sweep).
-    ranked = ranked.persist()
+    # eager count (r12 rule; the shared crn<=2 diamond cannot serve the
+    # crn<=4 sweep).  nrm rides it, so inv/qrank reuse it in scoring.
+    ranked = _ivf_ranked(e, max(_IVF_SWEEP)).persist()
     ranked.count()
     inv = ranked.filter(F.col("crn") == 1).select(
         F.col("vec_id").alias("neighbor_id"),
@@ -4768,25 +4581,8 @@ def sim_ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     top5 = swept.withColumn("rn", F.row_number().over(wt)).filter(
         F.col("rn") <= 5
     )
-    qe = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("eq"),
-        _norm(F.col("embedding")).alias("nq"),
-    )
-    ee = e.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("e_emb"),
-        _norm(F.col("embedding")).alias("n_emb"),
-    )
-    exact_sc = (
-        ee.crossJoin(F.broadcast(qe))
-        .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select("q_id", "neighbor_id", cos_bp.alias("cos_bp"))
-    )
-    we = Window.partitionBy("q_id").orderBy(
-        F.desc("cos_bp"), F.asc("neighbor_id")
-    )
     exact5 = (
-        exact_sc.withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= 5)
+        sim_knn_topk(spark, sf_dir)
         .select("q_id", F.col("neighbor_id").alias("x_nid"))
         .withColumn("hit", F.lit(1))
         .persist()  # diamond: the n_q driver count AND the hit join —

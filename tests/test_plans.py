@@ -381,6 +381,76 @@ def test_kr_near_dup_chain_has_one_spark_home_per_step():
     assert src.count("_MH_A[i]") == 2, "min-hash signature built twice"
 
 
+def test_embedding_chain_has_one_home_per_step():
+    # One exact-cosine chain for the embedding keys.  Each shared step
+    # has one Spark function next to one SQL fragment that every oracle
+    # using the step splices in: fixed-IVF routing (_ivf_ranked /
+    # _IVF_RANKED_SQL), the quadratic-residue plane hash (_qr_planes /
+    # _qr_proj_sql) and the pinned-cosine top-5 (_top5 / _TOP5_SQL).
+    # sim_ivf_incremental_upsert's quantized routing is a different step
+    # and is allow-listed; the plane-hash pattern includes the 97003999
+    # offset, so relational.py's bootstrap hash does not match it.
+    import pathlib
+    import re
+
+    srcs = {p.name: p.read_text() for p in pathlib.Path("engine").glob("*.py")}
+
+    def sites(pattern):
+        return [
+            (name, m.start())
+            for name, text in srcs.items()
+            for m in re.finditer(pattern, text)
+        ]
+
+    def span(name, head):
+        start = srcs[name].find(head)  # a missing home matches nothing
+        return name, start, srcs[name].find("\n\n\n", start) if start >= 0 else -1
+
+    def inside(site, sp):
+        return site[0] == sp[0] and sp[1] < site[1] < sp[2]
+
+    def homes(pattern, *spans, allowed=()):
+        # exactly one match inside each span, none elsewhere
+        found = sorted(
+            s for s in sites(pattern) if not any(inside(s, a) for a in allowed)
+        )
+        return len(found) == len(spans) and all(
+            inside(s, sp) for s, sp in zip(found, sorted(spans))
+        )
+
+    sim = "similarity.py"
+    upsert = span(sim, '@query(\n    "sim_ivf_incremental_upsert"')
+    assert homes(
+        r"ORDER BY cos_key DESC, cid ASC",
+        span(sim, "_IVF_RANKED_SQL = "),
+        allowed=[upsert],
+    ), "fixed-IVF routing SQL outside _IVF_RANKED_SQL"
+    assert homes(
+        r'orderBy\(\s*F\.desc\("cos_key"\),\s*F\.asc\("cid"\)\s*\)',
+        span(sim, "def _ivf_ranked("),
+    ), "fixed-IVF routing window outside _ivf_ranked"
+    assert homes(
+        r"2654435761 \+ 97003999",
+        span(sim, "def _qr_planes("),
+        span(sim, "def _qr_proj_sql("),
+    ), "quadratic-residue plane hash outside _qr_planes/_qr_proj_sql"
+    assert homes(
+        r'orderBy\(\s*F\.desc\("cosine"\),\s*F\.asc\("neighbor_id"\)\s*\)',
+        span(sim, "def _top5("),
+    ), "pinned-cosine top-5 window outside _top5"
+    assert homes(
+        r"ORDER BY cosine DESC, neighbor_id ASC",
+        span(sim, "_TOP5_SQL = "),
+    ), "pinned-cosine top-5 SQL outside _TOP5_SQL"
+    assert engine.ORACLES["sim_knn_topk_blocked"] is engine.ORACLES[
+        "sim_knn_topk"
+    ], "sim_knn_topk_blocked keeps its own copy of the exact oracle"
+    assert homes(
+        r'F\.encode\(F\.lit\(" zz yy"\)',
+        span("multimodal.py", "def _mm_neardup_corpus("),
+    ), "planted media copy built outside _mm_neardup_corpus"
+
+
 @pytest.mark.parametrize(
     "key",
     [

@@ -20,7 +20,18 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Sized from the host, as perfbench/run.py does: one task slot per
+# usable CPU (an explicit SPARK_GRAFT_CPUS wins) and a driver heap of at
+# most a quarter of physical memory.
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def _driver_memory_mb() -> int:
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) // 1024 // 4
+    return 1024
 
 
 def main() -> None:
@@ -51,7 +62,7 @@ def main() -> None:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", f"{_driver_memory_mb()}m")
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
