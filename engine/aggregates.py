@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.core import query
+from engine.core import pin, pin_int, query
 from engine.io import load
 
 
@@ -51,17 +51,22 @@ def agg_groupby_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            (F.floor((F.sum("l_quantity")) * 100 + F.lit(0.5)) / 100).alias("sum_qty"),
-            (F.floor((F.sum("l_extendedprice")) * 100 + F.lit(0.5)) / 100).alias("sum_base_price"),
-            (F.floor((F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))) * 100 + F.lit(0.5)) / 100).alias("sum_disc_price"),
-            (F.floor((F.sum(
+            pin(F.sum("l_quantity"), 100).alias("sum_qty"),
+            pin(F.sum("l_extendedprice"), 100).alias("sum_base_price"),
+            pin(
+                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 100
+            ).alias("sum_disc_price"),
+            pin(
+                F.sum(
                     F.col("l_extendedprice")
                     * (1 - F.col("l_discount"))
                     * (1 + F.col("l_tax"))
-                )) * 100 + F.lit(0.5)) / 100).alias("sum_charge"),
-            (F.floor((F.avg("l_quantity")) * 10000 + F.lit(0.5)) / 10000).alias("avg_qty"),
-            (F.floor((F.avg("l_extendedprice")) * 10000 + F.lit(0.5)) / 10000).alias("avg_price"),
-            (F.floor((F.avg("l_discount")) * 10000 + F.lit(0.5)) / 10000).alias("avg_disc"),
+                ),
+                100,
+            ).alias("sum_charge"),
+            pin(F.avg("l_quantity"), 10000).alias("avg_qty"),
+            pin(F.avg("l_extendedprice"), 10000).alias("avg_price"),
+            pin(F.avg("l_discount"), 10000).alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
         .orderBy("l_returnflag", "l_linestatus")
@@ -84,10 +89,10 @@ def agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     return li.agg(
         F.count("*").alias("n_rows"),
-        (F.floor((F.sum("l_quantity")) * 100 + F.lit(0.5)) / 100).alias("sum_qty"),
-        (F.floor((F.avg("l_extendedprice")) * 10000 + F.lit(0.5)) / 10000).alias("avg_price"),
-        (F.floor((F.min("l_extendedprice")) * 100 + F.lit(0.5)) / 100).alias("min_price"),
-        (F.floor((F.max("l_extendedprice")) * 100 + F.lit(0.5)) / 100).alias("max_price"),
+        pin(F.sum("l_quantity"), 100).alias("sum_qty"),
+        pin(F.avg("l_extendedprice"), 10000).alias("avg_price"),
+        pin(F.min("l_extendedprice"), 100).alias("min_price"),
+        pin(F.max("l_extendedprice"), 100).alias("max_price"),
         F.countDistinct("l_orderkey").alias("n_orders"),
     )
 
@@ -128,7 +133,7 @@ def agg_multi_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.groupBy("l_linestatus").agg(
         F.countDistinct("l_partkey").alias("n_parts"),
         F.countDistinct("l_orderkey").alias("n_orders"),
-        (F.floor((F.sum("l_quantity")) * 100 + F.lit(0.5)) / 100).alias("sum_qty"),
+        pin(F.sum("l_quantity"), 100).alias("sum_qty"),
     )
 
 
@@ -161,9 +166,9 @@ def agg_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(part, li.l_partkey == part.p_partkey)
         .agg(
-            (F.floor((F.sum(promo)) * 100 + F.lit(0.5)) / 100).alias("promo_revenue"),
-            (F.floor((F.sum(revenue)) * 100 + F.lit(0.5)) / 100).alias("total_revenue"),
-            (F.floor((100.0 * F.sum(promo) / F.sum(revenue)) * 10000 + F.lit(0.5)) / 10000).alias("promo_pct"),
+            pin(F.sum(promo), 100).alias("promo_revenue"),
+            pin(F.sum(revenue), 100).alias("total_revenue"),
+            pin(100.0 * F.sum(promo) / F.sum(revenue), 10000).alias("promo_pct"),
         )
     )
 
@@ -183,7 +188,7 @@ def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.groupBy("o_custkey")
         .agg(
             F.count("*").alias("n_orders"),
-            (F.floor((F.sum("o_totalprice")) * 100 + F.lit(0.5)) / 100).alias("total_spent"),
+            pin(F.sum("o_totalprice"), 100).alias("total_spent"),
         )
         .filter(F.col("n_orders") > 12)
     )
@@ -237,7 +242,7 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.cube("l_returnflag", "l_linestatus")
         .agg(
             F.count("*").alias("n"),
-            (F.floor((F.sum("l_extendedprice")) * 100 + F.lit(0.5)) / 100).alias("sum_price"),
+            pin(F.sum("l_extendedprice"), 100).alias("sum_price"),
             F.grouping_id().alias("gid"),
         )
         .withColumn("gid", F.col("gid").cast("long"))
@@ -287,10 +292,10 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
-        (F.floor((F.stddev_samp("l_extendedprice")) * 10000 + F.lit(0.5)) / 10000).alias("sd_price"),
-        (F.floor((F.var_samp("l_quantity")) * 10000 + F.lit(0.5)) / 10000).alias("var_qty"),
-        (F.floor((F.corr("l_extendedprice", "l_quantity")) * 10000 + F.lit(0.5)) / 10000).alias("corr_pq"),
-        (F.floor((F.covar_samp("l_extendedprice", "l_quantity")) * 10000 + F.lit(0.5)) / 10000).alias("covar_pq"),
+        pin(F.stddev_samp("l_extendedprice"), 10000).alias("sd_price"),
+        pin(F.var_samp("l_quantity"), 10000).alias("var_qty"),
+        pin(F.corr("l_extendedprice", "l_quantity"), 10000).alias("corr_pq"),
+        pin(F.covar_samp("l_extendedprice", "l_quantity"), 10000).alias("covar_pq"),
     )
 
 
@@ -309,10 +314,10 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
     return orders.groupBy("o_orderstatus").agg(
-        (F.floor((F.percentile("o_totalprice", 0.5)) * 10000 + F.lit(0.5)) / 10000).alias("med_price"),
-        (F.floor((F.percentile("o_totalprice", 0.25)) * 10000 + F.lit(0.5)) / 10000).alias("p25"),
-        (F.floor((F.percentile("o_totalprice", 0.75)) * 10000 + F.lit(0.5)) / 10000).alias("p75"),
-        (F.floor((F.percentile("o_totalprice", 0.95)) * 10000 + F.lit(0.5)) / 10000).alias("p95"),
+        pin(F.percentile("o_totalprice", 0.5), 10000).alias("med_price"),
+        pin(F.percentile("o_totalprice", 0.25), 10000).alias("p25"),
+        pin(F.percentile("o_totalprice", 0.75), 10000).alias("p75"),
+        pin(F.percentile("o_totalprice", 0.95), 10000).alias("p95"),
     )
 
 
@@ -322,8 +327,10 @@ def agg_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact sort-based percentile would be a full shuffle of the column."""
     orders = load(spark, sf_dir, "orders")
     return orders.groupBy("o_orderstatus").agg(
-        (F.floor((F.percentile_approx("o_totalprice", 0.5, 10000)) * 10000 + F.lit(0.5)) / 10000).alias("med_approx"),
-        (F.floor((F.percentile_approx("o_totalprice", 0.95, 10000)) * 10000 + F.lit(0.5)) / 10000).alias("p95_approx"),
+        pin(F.percentile_approx("o_totalprice", 0.5, 10000), 10000).alias("med_approx"),
+        pin(F.percentile_approx("o_totalprice", 0.95, 10000), 10000).alias(
+            "p95_approx"
+        ),
     )
 
 
@@ -407,7 +414,7 @@ def agg_min_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.groupBy("c_mktsegment").agg(
         F.expr("max_by(c_name, struct(c_acctbal, c_custkey))").alias("richest_customer"),
         F.expr("min_by(c_name, struct(c_acctbal, c_custkey))").alias("poorest_customer"),
-        (F.floor((F.max("c_acctbal")) * 100 + F.lit(0.5)) / 100).alias("max_bal"),
+        pin(F.max("c_acctbal"), 100).alias("max_bal"),
     )
 
 
@@ -463,12 +470,8 @@ def agg_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric columns into the long form a metrics store ingests."""
     li = load(spark, sf_dir, "lineitem")
     wide = li.groupBy("l_returnflag").agg(
-        F.sum(F.floor(F.col("l_quantity") * 100 + F.lit(0.5)).cast("long")).alias(
-            "qty_cents"
-        ),
-        F.sum(
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-        ).alias("price_cents"),
+        F.sum(pin_int(F.col("l_quantity"), 100)).alias("qty_cents"),
+        F.sum(pin_int(F.col("l_extendedprice"), 100)).alias("price_cents"),
     )
     return wide.unpivot(
         ["l_returnflag"], ["qty_cents", "price_cents"], "metric", "val"
@@ -491,7 +494,7 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = F.least(F.floor(F.col("value") / 35.0), F.lit(9)).cast("long")
     return ev.groupBy(bucket.alias("bucket")).agg(
         F.count("*").alias("n"),
-        (F.floor((F.sum("value")) * 100 + F.lit(0.5)) / 100).alias("sum_value"),
+        pin(F.sum("value"), 100).alias("sum_value"),
     )
 
 
@@ -589,8 +592,8 @@ def agg_corr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics pattern every distributed stats engine uses (merge = add
     the power sums), the same shape a 1000-executor cluster wants."""
     li = load(spark, sf_dir, "lineitem")
-    x = F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long")
-    y = F.floor(F.col("l_extendedprice") + F.lit(0.5)).cast("long")
+    x = pin_int(F.col("l_quantity"), 1)
+    y = pin_int(F.col("l_extendedprice"), 1)
     s = li.groupBy("l_returnflag", "l_linestatus").agg(
         F.count("*").alias("n"),
         F.sum(x).alias("sx"),
@@ -607,11 +610,9 @@ def agg_corr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag",
         "l_linestatus",
         "n",
-        F.floor(num / F.sqrt(varx * vary) * 10000 + F.lit(0.5))
-        .cast("long")
+        pin_int(num / F.sqrt(varx * vary), 10000)
         .alias("corr_e4"),
-        F.floor(num / (nd * (nd - F.lit(1.0))) * 10000 + F.lit(0.5))
-        .cast("long")
+        pin_int(num / (nd * (nd - F.lit(1.0))), 10000)
         .alias("cov_e4"),
     ).orderBy("l_returnflag", "l_linestatus")
 
@@ -665,10 +666,7 @@ def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "c",
         "n",
-        F.floor(
-            -F.log(F.col("c").cast("double") / F.col("n")) * 10000 + F.lit(0.5)
-        )
-        .cast("long")
+        pin_int(-F.log(F.col("c").cast("double") / F.col("n")), 10000)
         .alias("nll_e4"),
     )
     return (
@@ -676,11 +674,7 @@ def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.max("n").alias("n_events"),
             F.count("*").alias("n_cells"),
-            F.floor(
-                F.sum(F.col("c") * F.col("nll_e4")).cast("double") / F.max("n")
-                + F.lit(0.5)
-            )
-            .cast("long")
+            pin_int(F.sum(F.col("c") * F.col("nll_e4")).cast("double") / F.max("n"), 1)
             .alias("entropy_e4"),
         )
         .orderBy("event_type")
@@ -978,7 +972,7 @@ def agg_exact_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     so moments over any segment union come from stored sums without
     rescanning."""
     ev = load(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = pin_int(F.col("value"), 100)
     dec = cents.cast("decimal(38,0)")
     s = ev.select("event_type", dec.alias("c")).groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -1001,14 +995,13 @@ def agg_exact_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         + 6 * m * m * (F.col("s2") / n)
         - 3 * m * m * m * m
     ) / (m2 * m2) - 3.0
-    e4 = lambda c: F.floor(c * 10000 + F.lit(0.5)).cast("long")  # noqa: E731
     return s.select(
         "event_type",
         "n",
-        e4(m).alias("mean_e4"),
-        e4(m2).alias("var_e4"),
-        e4(skew).alias("skew_e4"),
-        e4(kurt).alias("excess_kurt_e4"),
+        pin_int(m, 10000).alias("mean_e4"),
+        pin_int(m2, 10000).alias("var_e4"),
+        pin_int(skew, 10000).alias("skew_e4"),
+        pin_int(kurt, 10000).alias("excess_kurt_e4"),
     )
 
 
@@ -1103,10 +1096,9 @@ def agg_weighted_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions come from stored sums without rescanning."""
     li = load(spark, sf_dir, "lineitem")
     dec = "decimal(38,0)"
-    w = F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").cast(dec)
+    w = pin_int(F.col("l_quantity"), 1).cast(dec)
     x = (
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
+        pin_int(F.col("l_extendedprice"), 100)
         .cast(dec)
     )
     s = li.groupBy("l_returnflag").agg(
@@ -1114,13 +1106,12 @@ def agg_weighted_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(w * x).cast("double").alias("s1"),
         F.sum(w * x * x).cast("double").alias("s2"),
     )
-    e4 = lambda c: F.floor(c * 10000 + F.lit(0.5)).cast("long")  # noqa: E731
     wm = F.col("s1") / F.col("sw")
     return s.select(
         "l_returnflag",
         F.col("sw").cast("long").alias("sum_w"),
-        e4(wm).alias("wmean_e4"),
-        e4(F.col("s2") / F.col("sw") - wm * wm).alias("wvar_e4"),
+        pin_int(wm, 10000).alias("wmean_e4"),
+        pin_int(F.col("s2") / F.col("sw") - wm * wm, 10000).alias("wvar_e4"),
     )
 
 
@@ -1195,8 +1186,8 @@ def agg_salted_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's own AQE skew handling covers JOIN skew, not reduce-side agg
     skew with countDistinct — this rewrite is how you do it by hand."""
     li = load(spark, sf_dir, "lineitem")
-    qty_c = F.floor(F.col("l_quantity") * 100 + F.lit(0.5)).cast("long")
-    price_c = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
+    qty_c = pin_int(F.col("l_quantity"), 100)
+    price_c = pin_int(F.col("l_extendedprice"), 100)
     salt = F.pmod(F.hash("l_orderkey"), F.lit(16))
     partial = (
         li.select(
@@ -1243,7 +1234,6 @@ def agg_quantile_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     group (only viable on the sample), the sketch is mergeable constant
     memory; the report quantifies what the downgrade costs."""
     ev = load(spark, sf_dir, "events")
-    e6 = lambda c: F.floor(c * 1_000_000 + F.lit(0.5)).cast("long")  # noqa: E731
     g = ev.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.percentile("value", 0.5).alias("p50_exact"),
@@ -1260,11 +1250,11 @@ def agg_quantile_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.select(
         "event_type",
         "n",
-        e6(F.col("p50_exact")).alias("p50_exact_e6"),
-        e6(F.abs(F.col("p50_lo") - F.col("p50_exact"))).alias("p50_drift_lo_e6"),
-        e6(F.abs(F.col("p50_hi") - F.col("p50_exact"))).alias("p50_drift_hi_e6"),
-        e6(F.abs(F.col("p99_lo") - F.col("p99_exact"))).alias("p99_drift_lo_e6"),
-        e6(F.abs(F.col("p99_hi") - F.col("p99_exact"))).alias("p99_drift_hi_e6"),
+        pin_int(F.col("p50_exact"), 1_000_000).alias("p50_exact_e6"),
+        pin_int(F.abs(F.col("p50_lo") - F.col("p50_exact")), 1_000_000).alias("p50_drift_lo_e6"),
+        pin_int(F.abs(F.col("p50_hi") - F.col("p50_exact")), 1_000_000).alias("p50_drift_hi_e6"),
+        pin_int(F.abs(F.col("p99_lo") - F.col("p99_exact")), 1_000_000).alias("p99_drift_lo_e6"),
+        pin_int(F.abs(F.col("p99_hi") - F.col("p99_exact")), 1_000_000).alias("p99_drift_hi_e6"),
         ((F.col("p50_lo") >= F.col("p48")) & (F.col("p50_lo") <= F.col("p52")))
         .cast("int")
         .alias("p50_lo_in_band"),
@@ -1336,7 +1326,7 @@ def agg_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = (
         F.col("o_orderdate") < F.lit("1995-01-01").cast("date")
     ).cast("long")
-    v = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    v = pin_int(F.col("o_totalprice"), 100)
     pv = (
         o.select(v.alias("v"), a.alias("a"))
         .groupBy("v")
@@ -1577,8 +1567,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     v = li.select(
         F.col("l_returnflag").alias("flag"),
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
+        pin_int(F.col("l_extendedprice"), 100)
         .alias("cents"),
         F.floor("l_quantity").cast("long").alias("w"),
     ).select("flag", "cents", "w", F.expr("cents div 1048576").alias("bkt"))
@@ -1669,8 +1658,8 @@ def agg_regr_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one combinable groupBy shuffle, |groups| rows out — the
     same plan at any sf."""
     li = load(spark, sf_dir, "lineitem")
-    xc = F.floor(F.col("l_quantity") * 100 + F.lit(0.5)).cast("long")
-    yc = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
+    xc = pin_int(F.col("l_quantity"), 100)
+    yc = pin_int(F.col("l_extendedprice"), 100)
     s = (
         li.select(
             "l_returnflag",
@@ -1696,7 +1685,7 @@ def agg_regr_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return s.select(
         "l_returnflag", "n", "sx", "sy", "sxy", "sxx",
-        F.floor(slope * 1000000 + F.lit(0.5)).cast("long").alias("slope_e6"),
+        pin_int(slope, 1000000).alias("slope_e6"),
     )
 
 
@@ -1747,7 +1736,6 @@ def agg_benford_firstdigit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("digit")
     )
     tot = digits.agg(F.count("*").cast("long").alias("n_total"))
-    fix4 = lambda c: F.floor(c * 10000 + F.lit(0.5)) / 10000  # noqa: E731
     return (
         digits.crossJoin(F.broadcast(tot))
         .groupBy("digit", "n_total")
@@ -1755,10 +1743,10 @@ def agg_benford_firstdigit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "digit",
             "n",
-            fix4(F.col("n").cast("double") / F.col("n_total")).alias(
+            pin(F.col("n").cast("double") / F.col("n_total"), 10000).alias(
                 "observed_pct"
             ),
-            fix4(F.log10(1.0 + 1.0 / F.col("digit"))).alias("benford_pct"),
+            pin(F.log10(1.0 + 1.0 / F.col("digit")), 10000).alias("benford_pct"),
         )
     )
 
@@ -1840,8 +1828,8 @@ def agg_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_mktsegment",
             "o_orderpriority",
             "n",
-            (F.floor(exp * 10000 + F.lit(0.5)) / 10000).alias("expected"),
-            (F.floor((dev * dev / exp) * 1000000 + F.lit(0.5)) / 1000000)
+            pin(exp, 10000).alias("expected"),
+            pin(dev * dev / exp, 1000000)
             .alias("chi2_term"),
         )
     )
@@ -1944,8 +1932,8 @@ def agg_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return m.select(
         "n1", "n2", "s1", "s2", "q1", "q2",
-        (F.floor(t * 1000000 + F.lit(0.5)) / 1000000).alias("t_stat"),
-        (F.floor(dof * 10000 + F.lit(0.5)) / 10000).alias("welch_dof"),
+        pin(t, 1000000).alias("t_stat"),
+        pin(dof, 10000).alias("welch_dof"),
     )
 
 
@@ -2014,9 +2002,9 @@ def agg_ols_two_feature(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combinable groupBy; |flags| rows out; the same
     nine-moment pattern extends to k features as k(k+3)/2+1 sums."""
     li = load(spark, sf_dir, "lineitem")
-    x1 = F.floor(F.col("l_quantity") * 100 + F.lit(0.5)).cast("long")
-    x2 = F.floor(F.col("l_discount") * 10000 + F.lit(0.5)).cast("long")
-    y = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
+    x1 = pin_int(F.col("l_quantity"), 100)
+    x2 = pin_int(F.col("l_discount"), 10000)
+    y = pin_int(F.col("l_extendedprice"), 100)
     m = (
         li.select(
             "l_returnflag", x1.alias("x1"), x2.alias("x2"), y.alias("y")
@@ -2043,11 +2031,10 @@ def agg_ols_two_feature(spark: SparkSession, sf_dir: str) -> DataFrame:
     det = c11 * c22 - c12 * c12
     b1 = (c22 * c1y - c12 * c2y) / det
     b2 = (c11 * c2y - c12 * c1y) / det
-    fix6 = lambda c: F.floor(c * 1000000 + F.lit(0.5)) / 1000000  # noqa: E731
     return m.select(
         "l_returnflag", "n", "sx1", "sx2", "sy",
-        fix6(b1).alias("b_qty_e6"),
-        fix6(b2).alias("b_disc_e6"),
+        pin(b1, 1000000).alias("b_qty_e6"),
+        pin(b2, 1000000).alias("b_disc_e6"),
     )
 
 
@@ -2183,7 +2170,7 @@ def agg_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
     )
-    c = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    c = pin_int(F.col("value"), 100)
     roll = (
         ev.select(
             c.alias("c"),
@@ -2251,5 +2238,5 @@ def agg_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n2",
         u1_x2.alias("u1_x2"),
         "tie_cubes",
-        F.floor(z * 1000000 + F.lit(0.5)).cast("long").alias("z_e6"),
+        pin_int(z, 1000000).alias("z_e6"),
     )

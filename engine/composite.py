@@ -31,14 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.core import query
+from engine.core import pin, pin_int, query
 from engine.io import load
 from engine.similarity import _QR_Q, _qr_planes, _qr_proj_sql
-
-
-def _cents(col: F.Column) -> F.Column:
-    """Exact integer cents of a money double (deterministic both engines)."""
-    return F.floor(col * 100 + F.lit(0.5)).cast("long")
 
 
 _CENTS_SQL = "CAST(FLOOR(({expr}) * 100 + 0.5) AS BIGINT)"
@@ -83,7 +78,7 @@ def tpch_q3_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp")
     )
-    revenue = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    revenue = pin_int(F.col("l_extendedprice") * (1 - F.col("l_discount")), 100)
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -132,7 +127,7 @@ def tpch_q5_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     )
     li = load(spark, sf_dir, "lineitem")
-    revenue = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    revenue = pin_int(F.col("l_extendedprice") * (1 - F.col("l_discount")), 100)
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -191,7 +186,7 @@ def tpch_q10_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < F.lit("1997-07-01").cast("timestamp"))
     )
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    revenue = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    revenue = pin_int(F.col("l_extendedprice") * (1 - F.col("l_discount")), 100)
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -466,8 +461,7 @@ def split_train_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "n_docs",
         "sum_tokens",
-        F.floor(10000.0 * F.col("n_docs") / lang_total + F.lit(0.5))
-        .cast("long")
+        pin_int(10000.0 * F.col("n_docs") / lang_total, 1)
         .alias("lang_share_bp"),
     )
 
@@ -512,7 +506,7 @@ def tpch_q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     )
     p = load(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    rev = pin_int(F.col("l_extendedprice") * (1 - F.col("l_discount")), 100)
     promo = F.sum(
         F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0))
     ).alias("promo_cents")
@@ -529,10 +523,7 @@ def tpch_q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ship_month",
             "promo_cents",
             "total_cents",
-            F.floor(
-                10000.0 * F.col("promo_cents") / F.col("total_cents") + F.lit(0.5)
-            )
-            .cast("long")
+            pin_int(10000.0 * F.col("promo_cents") / F.col("total_cents"), 1)
             .alias("promo_share_bp"),
         )
     )
@@ -589,7 +580,7 @@ def tpch_q19_disjunct(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (q <= 50)
         )
     )
-    rev = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    rev = pin_int(F.col("l_extendedprice") * (1 - F.col("l_discount")), 100)
     return joined.filter(cond).agg(
         F.count("*").alias("n_items"), F.sum(rev).alias("revenue_cents")
     )
@@ -631,7 +622,7 @@ def tpch_q6_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_items"),
-            F.sum(_cents(F.col("l_extendedprice") * F.col("l_discount"))).alias(
+            F.sum(pin_int(F.col("l_extendedprice") * F.col("l_discount"), 100)).alias(
                 "revenue_delta_cents"
             ),
         )
@@ -762,7 +753,7 @@ def tpch_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     directed = (
         (F.col("supp_nation") == pair[0]) & (F.col("cust_nation") == pair[1])
     ) | ((F.col("supp_nation") == pair[1]) & (F.col("cust_nation") == pair[0]))
-    rev = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    rev = pin_int(F.col("l_extendedprice") * (1 - F.col("l_discount")), 100)
     return (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(sn, F.col("s_nationkey") == F.col("s_nk"))
@@ -825,8 +816,7 @@ def tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_name",
             "o_orderkey",
             F.col("o_orderdate").cast("date").alias("order_date"),
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
+            pin_int(F.col("o_totalprice"), 100)
             .alias("totalprice_cents"),
             "sum_qty",
         )
@@ -1074,11 +1064,11 @@ def pipeline_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = corpus.select("vec_id").select(
         F.col("vec_id").alias("doc_id"), F.col("vec_id").alias("label")
     )
-    from engine.core import scoped_shuffle_partitions
+    from engine.core import scoped_sql_conf
 
     # probe_from=0: the ≥0.999 gate admits only planted pairs (max
     # organic cosine ≈ 0.5) — star components converge in round 1.
-    with scoped_shuffle_partitions(spark, 8):
+    with scoped_sql_conf(spark, {"spark.sql.shuffle.partitions": 8}):
         labels = _cc_propagate(both, labels, probe_from=0)
     size = F.count("*").over(Window.partitionBy("label"))
     return labels.select(
@@ -1218,7 +1208,7 @@ def pipeline_embedding_dedup_polyhash(
     import numpy as np
     import pandas as pd
 
-    from engine.core import scoped_shuffle_partitions
+    from engine.core import scoped_sql_conf
     from engine.dedup import _cc_propagate
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1305,7 +1295,7 @@ def pipeline_embedding_dedup_polyhash(
     # probe_from=0: components here are stars/3-chains around an
     # original (diameter ≤ 2) — the fixpoint lands in round 1, so probe
     # every round instead of burning the text graph's 2 warmup rounds.
-    with scoped_shuffle_partitions(spark, 8):
+    with scoped_sql_conf(spark, {"spark.sql.shuffle.partitions": 8}):
         labels = _cc_propagate(both, labels, probe_from=0)
     size = F.count("*").over(Window.partitionBy("label"))
     return labels.select(
@@ -1454,9 +1444,7 @@ def join_drill_across_facts(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = o.groupBy(
         F.date_trunc("day", "o_orderdate").cast("date").alias("day")
     ).agg(
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-        ).alias("revenue_cents"),
+        F.sum(pin_int(F.col("o_totalprice"), 100)).alias("revenue_cents"),
         F.count("*").alias("n_orders"),
     )
     ev = load(spark, sf_dir, "events")
@@ -1549,7 +1537,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
-    rev_c = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    rev_c = pin_int(F.col("l_extendedprice") * (1 - F.col("l_discount")), 100)
     revenue = li.groupBy("l_suppkey").agg(
         F.sum(rev_c).alias("total_revenue_cents")
     )
@@ -1613,7 +1601,7 @@ def tpch_q17_small_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "l_partkey",
             F.floor("l_quantity").cast("long").alias("q"),
-            _cents(F.col("l_extendedprice")).alias("price_c"),
+            pin_int(F.col("l_extendedprice"), 100).alias("price_c"),
         )
     )
     w = Window.partitionBy("l_partkey")
@@ -1723,7 +1711,7 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "l_orderkey",
             "supp_nation",
-            _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+            pin_int(F.col("l_extendedprice") * (1 - F.col("l_discount")), 100)
             .alias("vol_c"),
         )
     )
@@ -1960,7 +1948,7 @@ def tpch_q22_dormant_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "c_custkey",
             "c_mktsegment",
-            _cents(F.col("c_acctbal")).alias("bal_c"),
+            pin_int(F.col("c_acctbal"), 100).alias("bal_c"),
         )
     )
     bar = pool.filter(F.col("bal_c") > 0).agg(
@@ -2041,7 +2029,7 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_suppkey",
             "s_name",
             "n_name",
-            _cents(F.col("s_acctbal")).alias("acctbal_cents"),
+            pin_int(F.col("s_acctbal"), 100).alias("acctbal_cents"),
         )
     )
     li = (
@@ -2050,7 +2038,7 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             eu.select("s_suppkey"),
             F.col("l_suppkey") == F.col("s_suppkey"),
         )
-        .select("l_partkey", "l_suppkey", _cents(F.col("l_extendedprice")).alias("pc"))
+        .select("l_partkey", "l_suppkey", pin_int(F.col("l_extendedprice"), 100).alias("pc"))
     )
     cost = (
         li.repartition("l_partkey")
@@ -2134,8 +2122,8 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", F.year("o_orderdate").cast("long").alias("o_year")
     )
-    rev_c = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    cost_c = _cents(F.lit(0.5) * F.col("p_retailprice") * F.col("l_quantity"))
+    rev_c = pin_int(F.col("l_extendedprice") * (1 - F.col("l_discount")), 100)
+    cost_c = pin_int(F.lit(0.5) * F.col("p_retailprice") * F.col("l_quantity"), 100)
     li = (
         load(spark, sf_dir, "lineitem")
         .join(p, F.col("l_partkey") == F.col("p_partkey"))
@@ -2204,7 +2192,7 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "lineitem")
         .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("l_partkey")
-        .agg(F.sum(_cents(F.col("l_extendedprice"))).alias("value_cents"))
+        .agg(F.sum(pin_int(F.col("l_extendedprice"), 100)).alias("value_cents"))
         .persist()
     )
     total = v.agg(F.sum("value_cents").alias("total_cents"))
@@ -2338,7 +2326,7 @@ def tpch_q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_nationkey") == F.col("n_nationkey"),
             "left_semi",
         )
-        .select("s_suppkey", "s_name", _cents(F.col("s_acctbal")).alias("acctbal_cents"))
+        .select("s_suppkey", "s_name", pin_int(F.col("s_acctbal"), 100).alias("acctbal_cents"))
     )
     return (
         qual.join(s, F.col("l_suppkey") == F.col("s_suppkey"))
@@ -2508,7 +2496,6 @@ def pack_attention_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     offs = t.withColumn("start_off", F.sum("n_tok").over(w) - F.col("n_tok"))
-    fix4 = lambda c: F.floor(c * 10000 + F.lit(0.5)) / 10000  # noqa: E731
     g = (
         offs.withColumn(
             "chunk_id", (F.col("start_off") / 512).cast("long")
@@ -2530,13 +2517,14 @@ def pack_attention_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         "chunk_tokens",
         "self_pairs",
         total_sq.alias("total_pairs"),
-        fix4(
+        pin(
             1.0
             - F.col("self_pairs").cast("double")
             / (
                 F.col("chunk_tokens").cast("double")
                 * F.col("chunk_tokens").cast("double")
-            )
+            ),
+            10000,
         ).alias("cross_frac"),
     )
 
@@ -2597,8 +2585,7 @@ def pipeline_cdc_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("op"),
         "ts",
         "event_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5))
-        .cast("long")
+        pin_int(F.col("value"), 100)
         .alias("val_cents"),
     )
     w = Window.partitionBy("user_id")
@@ -2872,8 +2859,7 @@ def dq_schema_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("c0"),
         F.when(F.col("o_orderkey") % 13 != 0, F.col("o_custkey")).alias("c1"),
         F.col("o_orderstatus").alias("c2"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
+        pin_int(F.col("o_totalprice"), 100)
         .alias("c3"),
         # o_orderdate loads as TIMESTAMP_NTZ; session tz is UTC, so the
         # cast is epoch-preserving and matches DuckDB's naive epoch_us.

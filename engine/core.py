@@ -15,7 +15,8 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import Dict, Set
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -47,6 +48,32 @@ def query(key: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
+def pin(col: Column, scale) -> Column:
+    """``col`` pinned to steps of ``1/scale``: ``floor(col*scale + 0.5) /
+    scale`` — the one JVM-side spelling of the rule for a float that gets
+    hash-compared.  Never ``ROUND()`` such a float: Spark and DuckDB
+    resolve half-way ties differently, while these IEEE ops are
+    bit-identical on both engines (tests/test_fp_pinning.py).  ``scale``
+    is used as given, so ``100``, ``10000.0`` and ``1_000_000`` keep their
+    literal types.  The SQL twin is :func:`pin_sql`."""
+    return F.floor(col * scale + F.lit(0.5)) / scale
+
+
+def pin_int(col: Column, scale) -> Column:
+    """The integer form of :func:`pin`, ``CAST(FLOOR(col*scale + 0.5) AS
+    BIGINT)`` — exact cents, basis points or e6 keys.  Scale 1 pins a
+    value that is already scaled (``10000.0 * num / den``) and adds no
+    multiply, so the caller's order of arithmetic is kept."""
+    if scale != 1:
+        col = col * scale
+    return F.floor(col + F.lit(0.5)).cast("long")
+
+
+def pin_sql(expr: str, scale) -> str:
+    """SQL twin of :func:`pin` for oracle text built in Python."""
+    return f"FLOOR(({expr}) * {scale} + 0.5) / {scale}"
+
+
 import atexit
 import contextlib
 import functools
@@ -57,31 +84,15 @@ import threading
 
 
 @contextlib.contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Temporarily narrow spark.sql.shuffle.partitions around a
-    driver-orchestrated job sequence (iterative loops, microbatch runs)
-    whose per-stage data is tiny: 32 tasks per reduce stage is pure
-    scheduling overhead when each stage carries a few thousand rows.
-    Restores the caller's setting on exit; plans executed AFTER the
-    block (e.g. the returned DataFrame's final action) see the original
-    conf."""
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
-
-
-@contextlib.contextmanager
 def scoped_sql_conf(spark: SparkSession, confs: dict):
     """Temporarily set runtime SQL confs around an EAGERLY-EXECUTED job
-    (a write, an iterative loop) — the generalization of
-    :func:`scoped_shuffle_partitions`.  Plans that execute AFTER the
-    block see the caller's settings, so any key using this must
-    materialize inside the scope (sink-key shape: write, then return a
-    read-back frame)."""
+    (a write, an iterative loop, microbatch runs).  A typical use narrows
+    spark.sql.shuffle.partitions around a driver-orchestrated job
+    sequence whose per-stage data is tiny: 32 tasks per reduce stage is
+    pure scheduling overhead when each stage carries a few thousand
+    rows.  Plans that execute AFTER the block see the caller's settings,
+    so any key using this must materialize inside the scope (sink-key
+    shape: write, then return a read-back frame)."""
     prev = {k: spark.conf.get(k) for k in confs}
     for k, v in confs.items():
         spark.conf.set(k, str(v))

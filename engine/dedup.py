@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.core import query, scoped_shuffle_partitions, session_memo
+from engine.core import pin, pin_int, query, scoped_sql_conf, session_memo
 from engine.io import load
 from engine.text import _TOKENS_SQL, _tokens, _trigrams
 
@@ -1184,16 +1184,21 @@ _COS_BLOCK = 100
 _COS_THRESHOLD = 0.30
 
 
-# SQL twin of _cosine_block_pairs: blocked pairs → per-pair dot and
-# squared norms → ``cosines`` (vec_a, vec_b, fix4-pinned cosine).
-_COS_COMPS_SQL = f"""
+# SQL twin of _cosine_block_pairs: blocked ``pairs``, then the shared
+# exact-cosine step.
+_COS_PAIRS_SQL = f"""
     pairs AS (
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
                a.embedding AS ea, b.embedding AS eb
         FROM embeddings a JOIN embeddings b
           ON a.vec_id < b.vec_id
          AND a.vec_id // {_COS_BLOCK} = b.vec_id // {_COS_BLOCK}
-    ),
+    )"""
+
+# The exact-cosine step over a ``pairs`` CTE (vec_a, vec_b, ea, eb):
+# per-pair dot and squared norms → ``cosines`` (vec_a, vec_b,
+# fix4-pinned cosine).  Each oracle keeps only its own pair rule.
+_COS_STEP_SQL = """
     comps AS (
         SELECT vec_a, vec_b,
                SUM(CAST(ea[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)) AS dot,
@@ -1214,7 +1219,7 @@ _COS_COMPS_SQL = f"""
 @query(
     "dedup_embedding_cosine",
     oracle=f"""
-    WITH {_COS_COMPS_SQL}
+    WITH {_COS_PAIRS_SQL},{_COS_STEP_SQL}
     SELECT vec_a, vec_b, cosine FROM cosines
     WHERE cosine >= {_COS_THRESHOLD}
     """,
@@ -1234,8 +1239,9 @@ def _cosine_block_pairs(e: DataFrame) -> DataFrame:
     """(vec_a, vec_b, cosine) over deterministic id-blocks — the shared
     candidate generator for dedup_embedding_cosine and the threshold
     calibration sweep.  Cosine is fix4-pinned (hash-safe) on the
-    similarity module's dot/norm fold.  SQL twin: _COS_COMPS_SQL."""
-    from engine.similarity import _dot, _fix, _norm
+    similarity module's dot/norm fold.  SQL twin: _COS_PAIRS_SQL, then
+    _COS_STEP_SQL."""
+    from engine.similarity import _dot, _norm
 
     # Norms are per-VECTOR: fold them once on each projection, not once
     # per pair (3× fewer 64-element folds after the block join).
@@ -1251,7 +1257,9 @@ def _cosine_block_pairs(e: DataFrame) -> DataFrame:
         F.expr(f"vec_id div {_COS_BLOCK}").alias("block_b"),
         _norm(F.col("embedding")).alias("norm_b"),
     )
-    cos = _fix(_dot(F.col("ea"), F.col("eb")) / (F.col("norm_a") * F.col("norm_b")), 10000)
+    cos = pin(
+        _dot(F.col("ea"), F.col("eb")) / (F.col("norm_a") * F.col("norm_b")), 10000
+    )
     return (
         a.join(b, (F.col("block_a") == F.col("block_b")) & (F.col("vec_a") < F.col("vec_b")))
         .select("vec_a", "vec_b", cos.alias("cosine"))
@@ -1264,7 +1272,7 @@ _SWEEP_BP = (2000, 2500, 3000, 3500, 4000)
 @query(
     "dedup_cosine_calibration",
     oracle=f"""
-    WITH {_COS_COMPS_SQL}
+    WITH {_COS_PAIRS_SQL},{_COS_STEP_SQL}
     SELECT CAST(g.threshold_bp AS BIGINT) AS threshold_bp,
            COUNT(c.cosine) AS n_pairs
     FROM (SELECT unnest([{", ".join(str(x) for x in _SWEEP_BP)}])
@@ -1498,7 +1506,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # jobs under 8 shuffle partitions (measured 8.3 s → 6.4 s at sf0.1;
     # 32 tasks per tiny reduce stage is pure scheduling overhead).  The
     # caller's conf is restored before the returned plan executes.
-    with scoped_shuffle_partitions(spark, 8):
+    with scoped_sql_conf(spark, {"spark.sql.shuffle.partitions": 8}):
         labels = _cc_propagate(both, labels)
 
     comp_size = F.count("*").over(Window.partitionBy("label"))
@@ -1760,7 +1768,6 @@ def dedup_containment_excerpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-    bp = lambda num, den: F.floor(10000.0 * num / den + F.lit(0.5)).cast("long")  # noqa: E731
     return (
         commons.join(sa, "doc_a")
         .join(sb, "doc_b")
@@ -1770,10 +1777,14 @@ def dedup_containment_excerpt(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_common").cast("int").alias("n_common"),
             F.col("n_a").cast("int").alias("n_a"),
             F.col("n_b").cast("int").alias("n_b"),
-            bp(F.col("n_common"), F.least("n_a", "n_b")).alias("containment_bp"),
-            bp(
-                F.col("n_common"),
-                F.col("n_a") + F.col("n_b") - F.col("n_common"),
+            pin_int(10000.0 * F.col("n_common") / F.least("n_a", "n_b"), 1).alias(
+                "containment_bp"
+            ),
+            pin_int(
+                10000.0
+                * F.col("n_common")
+                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
+                1,
             ).alias("jaccard_bp"),
         )
     )

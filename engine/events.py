@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.core import query
+from engine.core import pin, pin_int, query
 from engine.io import load
 
 _US_PER_S = 1_000_000
@@ -44,9 +44,7 @@ def evt_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n"),
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")).alias(
-                "sum_value_cents"
-            ),
+            F.sum(pin_int(F.col("value"), 100)).alias("sum_value_cents"),
             F.countDistinct("user_id").alias("n_users"),
         )
         .select(
@@ -390,7 +388,7 @@ def evt_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     doesn't change."""
     e = load(spark, sf_dir, "events").select(
         "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("vc"),
+        pin_int(F.col("value"), 100).alias("vc"),
     )
     med = e.groupBy("event_type").agg(
         F.percentile("vc", 0.5).alias("med_cents")
@@ -465,9 +463,7 @@ def evt_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
     ).agg(
         F.count("*").alias("n"),
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")).alias(
-            "cents"
-        ),
+        F.sum(pin_int(F.col("value"), 100)).alias("cents"),
     )
     bounds = hourly.groupBy("event_type").agg(
         F.min("hour").alias("h0"), F.max("hour").alias("h1")
@@ -775,9 +771,7 @@ def evt_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("h"),
     ).agg(
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")).alias(
-            "cents"
-        )
+        F.sum(pin_int(F.col("value"), 100)).alias("cents")
     )
     bounds = hourly.groupBy("event_type").agg(
         F.min("h").alias("h0"), F.max("h").alias("h1")
@@ -812,7 +806,7 @@ def evt_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.col("h").alias("hour_h"),
         F.col("observed").cast("int").alias("observed"),
-        (F.floor(interp * 10000 + F.lit(0.5)) / 10000).alias("cents_interp"),
+        pin(interp, 10000).alias("cents_interp"),
     )
 
 
@@ -856,7 +850,7 @@ def evt_ab_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact counts; the lift ratio is written with the identical
     operation order on both engines, then floor-pinned."""
     ev = load(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = pin_int(F.col("value"), 100)
     is_a = F.col("user_id") % 2 == 0
     n_a = F.sum(F.when(is_a, 1).otherwise(0)).alias("n_a")
     n_b = F.sum(F.when(~is_a, 1).otherwise(0)).alias("n_b")
@@ -871,8 +865,7 @@ def evt_ab_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_b",
         "cents_a",
         "cents_b",
-        F.floor(10000.0 * (mean_b / mean_a) + F.lit(0.5))
-        .cast("long")
+        pin_int(10000.0 * (mean_b / mean_a), 1)
         .alias("lift_bp"),
     )
 
@@ -968,9 +961,7 @@ def evt_pct_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = ev.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
     ).agg(
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")).alias(
-            "cents"
-        )
+        F.sum(pin_int(F.col("value"), 100)).alias("cents")
     )
     w = Window.partitionBy("event_type").orderBy("hour")
     prev = F.lag("cents").over(w)
@@ -979,8 +970,7 @@ def evt_pct_change(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hour",
         "cents",
         prev.alias("prev_cents"),
-        F.floor(10000.0 * (F.col("cents") - prev) / prev + F.lit(0.5))
-        .cast("long")
+        pin_int(10000.0 * (F.col("cents") - prev) / prev, 1)
         .alias("change_bp"),
     )
 
@@ -1066,8 +1056,7 @@ def evt_heatmap_dow_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
         "iso_dow",
         "hour_of_day",
         "n",
-        F.floor(10000.0 * F.col("n") / total + F.lit(0.5))
-        .cast("long")
+        pin_int(10000.0 * F.col("n") / total, 1)
         .alias("share_bp"),
     )
 
@@ -1203,7 +1192,7 @@ def evt_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("eid"),
         F.lit(None).cast("string").alias("t_type"),
         F.col("event_id").alias("conv_id"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+        pin_int(F.col("value"), 100).alias("cents"),
     )
     stream = touches.unionByName(convs)
     w = (
@@ -1507,20 +1496,14 @@ def evt_bot_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_gaps") >= 20)
     )
     m = F.col("s1") / F.col("n_gaps")
-    cv_e4 = F.floor(
-        F.sqrt(
-            F.greatest(
-                F.col("s2") / F.col("n_gaps") - m * m, F.lit(0.0)
-            )
-        )
-        / m
-        * 10000
-        + F.lit(0.5)
-    ).cast("long")
+    cv_e4 = pin_int(
+        F.sqrt(F.greatest(F.col("s2") / F.col("n_gaps") - m * m, F.lit(0.0))) / m,
+        10000,
+    )
     return s.select(
         "user_id",
         "n_gaps",
-        F.floor(m / 1_000_000 + F.lit(0.5)).cast("long").alias("mean_gap_s"),
+        pin_int(m / 1_000_000, 1).alias("mean_gap_s"),
         cv_e4.alias("cv_e4"),
         (cv_e4 < 2500).cast("int").alias("is_regular"),
     )
@@ -1582,7 +1565,7 @@ def evt_ewma_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "user_id",
         "event_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("c"),
+        pin_int(F.col("value"), 100).alias("c"),
         F.row_number().over(w).alias("rn"),
     )
 
@@ -1824,7 +1807,7 @@ def evt_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     smooths it by shrinking the step, not by switching to float
     exp."""
     e = load(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = pin_int(F.col("value"), 100)
     # F.shiftright takes a literal bit count — a Column shift needs the
     # SQL form
     weighted = e.select(
@@ -1901,7 +1884,7 @@ def evt_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n",
         "n_a",
-        F.floor(z * 1000000 + F.lit(0.5)).cast("long").alias("z_e6"),
+        pin_int(z, 1000000).alias("z_e6"),
         (F.abs(z) > 3.0).cast("int").alias("srm_alarm"),
     )
 
@@ -1955,7 +1938,7 @@ def evt_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("r_days"),
         F.count("*").alias("f_orders"),
-        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"))
+        F.sum(pin_int(F.col("o_totalprice"), 100))
         .cast("long")
         .alias("m_cents"),
     )
@@ -2073,7 +2056,7 @@ def evt_autocorr_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "n", "sx", "sy", "sxy", "sxx", "syy",
         F.when(
             den_sq > 0,
-            F.floor((num / F.sqrt(den_sq)) * 1000000 + F.lit(0.5)) / 1000000,
+            pin(num / F.sqrt(den_sq), 1000000),
         ).alias("acf1_e6"),
     )
 
@@ -2122,7 +2105,7 @@ def evt_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan; the same shape extends to per-cohort DiD by adding the
     cohort key to a groupBy."""
     ev = load(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = pin_int(F.col("value"), 100)
     cut = F.lit("2024-01-16").cast("timestamp")
     treat = F.col("user_id") % 2 == 0
     post = F.col("ts") >= cut
@@ -2144,7 +2127,7 @@ def evt_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     did = mean("tp") - mean("tb") - (mean("cp") - mean("cb"))
     return cells.select(
         "n_tp", "n_tb", "n_cp", "n_cb", "s_tp", "s_tb", "s_cp", "s_cb",
-        (F.floor(did * 10000 + F.lit(0.5)) / 10000).alias("did_cents_e4"),
+        pin(did, 10000).alias("did_cents_e4"),
     )
 
 
@@ -2287,9 +2270,7 @@ def evt_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
     ).agg(
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")).alias(
-            "cents"
-        )
+        F.sum(pin_int(F.col("value"), 100)).alias("cents")
     ).persist()
     actual = daily.select(
         "event_type", "day", F.col("cents").alias("actual")
@@ -2305,14 +2286,11 @@ def evt_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.abs(F.col("actual") - F.col("forecast"))).alias(
             "sum_abs_err_cents"
         ),
-        F.floor(
+        pin_int(
             F.sum(F.abs(F.col("actual") - F.col("forecast"))).cast("double")
-            / F.count("*")
-            * 100
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("mae_cents_e2"),
+            / F.count("*"),
+            100,
+        ).alias("mae_cents_e2"),
     )
 
 
@@ -2413,7 +2391,7 @@ def evt_xcorr_lagged(spark: SparkSession, sf_dir: str) -> DataFrame:
         # propagation — guard mirrored in the oracle.
         F.when(
             den > 0,
-            F.floor(num / den * 10000 + F.lit(0.5)).cast("long"),
+            pin_int(num / den, 10000),
         ).alias("xcorr_e4"),
     ).orderBy("lag")
 
@@ -2535,8 +2513,7 @@ def evt_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
             "d",
             "n_risk",
             "d_i",
-            F.floor(F.exp("lsum") * 1000000 + F.lit(0.5))
-            .cast("long")
+            pin_int(F.exp("lsum"), 1000000)
             .alias("surv_e6"),
         )
         .orderBy("d")
@@ -2651,10 +2628,10 @@ def evt_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return folded.select(
         "n_days",
-        F.floor(l * 1000000 + F.lit(0.5)).cast("long").alias("level_e6"),
-        F.floor(b * 1000000 + F.lit(0.5)).cast("long").alias("trend_e6"),
-        F.floor(sse * 100 + F.lit(0.5)).cast("long").alias("sse_e2"),
-        F.floor((l + b) * 1000000 + F.lit(0.5)).cast("long").alias("forecast_e6"),
+        pin_int(l, 1000000).alias("level_e6"),
+        pin_int(b, 1000000).alias("trend_e6"),
+        pin_int(sse, 100).alias("sse_e2"),
+        pin_int(l + b, 1000000).alias("forecast_e6"),
     )
 
 
@@ -2717,8 +2694,7 @@ def evt_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
             F.unix_micros(F.col("ts")).alias("us"),
             "event_id",
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
+            pin_int(F.col("value"), 100)
             .alias("cents"),
         )
     )

@@ -33,13 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.core import query
+from engine.core import pin, pin_int, query
 from engine.io import load
-
-
-def _cents(col: str) -> F.Column:
-    """Half-up integer cents — the repo-wide exact-money pin."""
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("long")
 
 
 @query(
@@ -81,13 +76,13 @@ def feat_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     per the driver row-budget rule."""
     orders = load(spark, sf_dir, "orders")
     stats = orders.groupBy("o_orderpriority").agg(
-        F.sum(_cents("o_totalprice")).alias("grp_sum"),
+        F.sum(pin_int(F.col("o_totalprice"), 100)).alias("grp_sum"),
         F.count(F.lit(1)).alias("grp_n"),
     )
     enc = orders.join(F.broadcast(stats), "o_orderpriority").select(
         "o_orderkey",
         "o_orderpriority",
-        _cents("o_totalprice").alias("target_cents"),
+        pin_int(F.col("o_totalprice"), 100).alias("target_cents"),
         "grp_n",
         F.when(
             F.col("grp_n") > 1,
@@ -157,7 +152,7 @@ def feat_quantile_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
         bin_col = bin_col + (F.col("c_acctbal") > F.col(f"e{q}")).cast("int")
     binned = cust.join(F.broadcast(edges)).select(
         bin_col.cast("long").alias("bin"),
-        _cents("c_acctbal").alias("bal_cents"),
+        pin_int(F.col("c_acctbal"), 100).alias("bal_cents"),
     )
     return (
         binned.groupBy("bin")
@@ -251,9 +246,9 @@ def feat_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
         "good",
         "bad",
-        F.when(defined, F.floor(woe * 1000000 + F.lit(0.5)).cast("long"))
+        F.when(defined, pin_int(woe, 1000000))
         .alias("woe_e6"),
-        F.when(defined, F.floor(iv * 1000000 + F.lit(0.5)).cast("long"))
+        F.when(defined, pin_int(iv, 1000000))
         .alias("iv_contrib_e6"),
     ).orderBy("o_orderpriority")
 
@@ -308,7 +303,7 @@ def feat_standard_scaler(spark: SparkSession, sf_dir: str) -> DataFrame:
     embarrassingly map-side.  At 100 TB the fit is the only shuffle and
     it moves three longs per segment per partition."""
     cents = load(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment", _cents("c_acctbal").alias("bal_cents")
+        "c_custkey", "c_mktsegment", pin_int(F.col("c_acctbal"), 100).alias("bal_cents")
     )
     stats = cents.groupBy("c_mktsegment").agg(
         F.count("*").alias("n"),
@@ -328,7 +323,7 @@ def feat_standard_scaler(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_custkey",
             "c_mktsegment",
             "bal_cents",
-            F.when(defined, F.floor(z * 10000 + F.lit(0.5)) / 10000).alias("z"),
+            F.when(defined, pin(z, 10000)).alias("z"),
         )
     )
 
@@ -484,7 +479,7 @@ def feat_robust_scaler(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = load(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
-        _cents("o_totalprice").alias("price_cents"),
+        pin_int(F.col("o_totalprice"), 100).alias("price_cents"),
     )
     stats = cents.groupBy("o_orderpriority").agg(
         F.percentile("price_cents", 0.25).alias("q1"),
@@ -500,11 +495,11 @@ def feat_robust_scaler(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
             "o_orderpriority",
             "price_cents",
-            (F.floor(F.col("med") * 100 + F.lit(0.5)) / 100).alias("med_cents"),
-            (F.floor(iqr * 100 + F.lit(0.5)) / 100).alias("iqr_cents"),
+            pin(F.col("med"), 100).alias("med_cents"),
+            pin(iqr, 100).alias("iqr_cents"),
             F.when(
                 F.col("q3") > F.col("q1"),
-                F.floor(z * 10000 + F.lit(0.5)) / 10000,
+                pin(z, 10000),
             ).alias("robust_z"),
         )
     )

@@ -25,16 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.core import query
+from engine.core import pin, pin_int, pin_sql, query
 from engine.io import load, register_views
 
-
-def _fix4(col: F.Column) -> F.Column:
-    """Deterministic 4-decimal fix of a double (bit-identical both engines)."""
-    return F.floor(col * 10000 + F.lit(0.5)) / 10000
-
-
-_FIX4_SQL = "FLOOR(({expr}) * 10000 + 0.5) / 10000"
 
 
 @query(
@@ -208,9 +201,9 @@ def fn_timestamp_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(CEIL(p_retailprice) AS BIGINT)    AS price_ceil,
            ABS(p_size - 25)                       AS size_dist,
            SQRT(p_retailprice)                    AS price_sqrt,
-           {_FIX4_SQL.format(expr="LN(p_retailprice)")}    AS price_ln,
-           {_FIX4_SQL.format(expr="LOG10(p_retailprice)")} AS price_log10,
-           {_FIX4_SQL.format(expr="POWER(1.0 + p_size / 100.0, 2)")} AS size_pow,
+           {pin_sql("LN(p_retailprice)", 10000)}    AS price_ln,
+           {pin_sql("LOG10(p_retailprice)", 10000)} AS price_log10,
+           {pin_sql("POWER(1.0 + p_size / 100.0, 2)", 10000)} AS size_pow,
            CAST(SIGN(p_size - 25) AS INTEGER)     AS size_sign,
            CAST(p_partkey % 7 AS BIGINT)          AS key_mod
     FROM part
@@ -227,9 +220,9 @@ def fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.ceil(price).alias("price_ceil"),
         F.abs(F.col("p_size") - 25).alias("size_dist"),
         F.sqrt(price).alias("price_sqrt"),
-        _fix4(F.log(price)).alias("price_ln"),
-        _fix4(F.log10(price)).alias("price_log10"),
-        _fix4(F.pow(1.0 + F.col("p_size") / 100.0, 2)).alias("size_pow"),
+        pin(F.log(price), 10000).alias("price_ln"),
+        pin(F.log10(price), 10000).alias("price_log10"),
+        pin(F.pow(1.0 + F.col("p_size") / 100.0, 2), 10000).alias("size_pow"),
         F.signum(F.col("p_size") - 25).cast("int").alias("size_sign"),
         (F.col("p_partkey") % 7).alias("key_mod"),
     )
@@ -357,7 +350,7 @@ def fn_array_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT vec_id,
            CAST(len(list_filter(embedding, x -> x > 0)) AS INTEGER) AS n_pos,
-           {_FIX4_SQL.format(expr="list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))")}
+           {pin_sql("list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))", 10000)}
                AS sum_sq,
            list_max(embedding) AS max_comp,
            list_min(embedding) AS min_comp
@@ -378,7 +371,7 @@ def fn_array_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.select(
         "vec_id",
         F.size(F.filter(emb, lambda x: x > 0)).alias("n_pos"),
-        _fix4(sum_sq).alias("sum_sq"),
+        pin(sum_sq, 10000).alias("sum_sq"),
         F.array_max(emb).alias("max_comp"),
         F.array_min(emb).alias("min_comp"),
     )
@@ -511,10 +504,8 @@ def fn_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.select(
         "l_orderkey",
         "l_linenumber",
-        F.floor(qpp * 10000 + F.lit(0.5)).cast("long").alias(
-            "qty_per_prior_line_e4"
-        ),
-        F.floor(unit * 100 + F.lit(0.5)).cast("long").alias("unit_cents"),
+        pin_int(qpp, 10000).alias("qty_per_prior_line_e4"),
+        pin_int(unit, 100).alias("unit_cents"),
         (F.floor("l_quantity").cast("long") % 7).alias("qty_mod7"),
     )
 
@@ -559,7 +550,7 @@ def fn_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit('","k":'),
         F.get_json_object("props", "$.k"),
         F.lit('},"vals":['),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").cast("string"),
+        pin_int(F.col("value"), 100).cast("string"),
         F.lit(","),
         F.col("user_id").cast("string"),
         F.lit("]}"),
@@ -690,9 +681,7 @@ def fn_geo_haversine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "key_a",
             "key_b",
-            F.floor(dist * 10000 + F.lit(0.5)).cast("long").alias(
-                "dist_km_e4"
-            ),
+            pin_int(dist, 10000).alias("dist_km_e4"),
         )
     )
 
@@ -1264,8 +1253,8 @@ def fn_map_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     # truncates in ANSI Spark — identical today (quantities are integral)
     # but the corpus regenerates between rounds; floor is floor everywhere.
     qty = F.floor("l_quantity").cast("int")
-    disc_i = F.floor(F.col("l_discount") * 100 + 0.5).cast("int")
-    tax_i = F.floor(F.col("l_tax") * 100 + 0.5).cast("int")
+    disc_i = pin_int(F.col("l_discount"), 100).cast("int")
+    tax_i = pin_int(F.col("l_tax"), 100).cast("int")
     m1 = F.create_map(F.lit("qty"), qty, F.lit("line"), F.col("l_linenumber"))
     m2 = F.create_map(F.lit("qty"), disc_i, F.lit("line"), tax_i)
     doubled = F.element_at(

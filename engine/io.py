@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 
 from engine.core import (
     fingerprint,
+    pin,
+    pin_int,
     query,
     scratch,
     scratch_path,
@@ -250,7 +252,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return back.groupBy("l_returnflag", "l_linestatus").agg(
         F.count("*").alias("n"),
-        (F.floor((F.sum("l_quantity")) * 100 + F.lit(0.5)) / 100).alias("sum_qty"),
+        pin(F.sum("l_quantity"), 100).alias("sum_qty"),
     )
 
 
@@ -286,7 +288,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     file count, so production pins the merged schema in a catalog —
     noted here, exercised via the on-read path."""
     o = load(spark, sf_dir, "orders")
-    price_cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    price_cents = pin_int(F.col("o_totalprice"), 100)
     path = scratch("schema_evolution")
     # batch 1: original schema (no priority column).  coalesce(4): the
     # sf0.01 batch is ~1.5k rows; 32 shuffle-partition-sized files would
@@ -333,7 +335,7 @@ def source_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_id",
             "event_type",
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("value_cents"),
+            pin_int(F.col("value"), 100).alias("value_cents"),
             F.unix_timestamp("ts").alias("epoch_s"),
         )
     )
@@ -367,7 +369,7 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.parquet(path)
     return back.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),
-        (F.floor((F.sum("o_totalprice")) * 100 + F.lit(0.5)) / 100).alias("sum_price"),
+        pin(F.sum("o_totalprice"), 100).alias("sum_price"),
     )
 
 
@@ -398,9 +400,7 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.orc(path)
     return back.groupBy("l_linestatus").agg(
         F.count("*").alias("n"),
-        F.sum(F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")).alias(
-            "sum_price_cents"
-        ),
+        F.sum(pin_int(F.col("l_extendedprice"), 100)).alias("sum_price_cents"),
     )
 
 
@@ -450,9 +450,7 @@ def sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_custkey")
         .agg(
             F.count("*").alias("n_orders"),
-            F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")).alias(
-                "spend_cents"
-            ),
+            F.sum(pin_int(F.col("o_totalprice"), 100)).alias("spend_cents"),
             F.max("c_mktsegment").alias("segment"),
         )
     )
@@ -518,13 +516,12 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("I").alias("st"),
     )
     updates = upd.unionByName(ins)
-    cents = lambda c: F.floor(c * 100 + F.lit(0.5)).cast("long")  # noqa: E731
     matched = base.join(
         F.broadcast(updates), base.o_orderkey == updates.k, "left"
     ).select(
         "o_orderkey",
         F.when(F.col("k").isNotNull(), "update").otherwise("keep").alias("action"),
-        cents(F.coalesce("p", "o_totalprice")).alias("price_cents"),
+        pin_int(F.coalesce("p", "o_totalprice"), 100).alias("price_cents"),
         F.coalesce("st", "o_orderstatus").alias("status"),
     )
     inserts = updates.join(
@@ -532,7 +529,7 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("k").alias("o_orderkey"),
         F.lit("insert").alias("action"),
-        cents(F.col("p")).alias("price_cents"),
+        pin_int(F.col("p"), 100).alias("price_cents"),
         F.col("st").alias("status"),
     )
     return matched.unionByName(inserts).filter(F.col("o_orderkey") % 3 == 0)
@@ -648,9 +645,7 @@ def scan_partition_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("order_month")
         .agg(
             F.count("*").alias("n"),
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-            ).alias("cents"),
+            F.sum(pin_int(F.col("o_totalprice"), 100)).alias("cents"),
         )
     )
 
@@ -834,8 +829,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "o_orderkey",
             "o_orderstatus",
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
+            pin_int(F.col("o_totalprice"), 100)
             .alias("price_cents"),
         )
     )
@@ -898,8 +892,7 @@ def sink_idempotent_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "o_orderkey",
             "o_orderstatus",
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
+            pin_int(F.col("o_totalprice"), 100)
             .alias("price_cents"),
         )
         .repartition(8, "o_orderkey")
@@ -1044,8 +1037,7 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
         .filter(F.col("o_orderkey") % 10 == 0)
         .select(
             "o_orderkey",
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
+            pin_int(F.col("o_totalprice"), 100)
             .alias("cents"),
             F.year("o_orderdate").cast("int").alias("yr"),
         )
@@ -1119,8 +1111,7 @@ def scan_files_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     return df.select(
         shard.alias("shard"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
+        pin_int(F.col("o_totalprice"), 100)
         .alias("cents"),
     ).groupBy("shard").agg(
         F.count("*").alias("n"),
@@ -1271,7 +1262,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_id",
             "event_type",
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+            pin_int(F.col("value"), 100)
             .alias("value_cents"),
             F.unix_timestamp("ts").alias("epoch_s"),
         )
@@ -1344,9 +1335,7 @@ def scan_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed = li.observe(
         obs,
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(
-            F.floor(F.col("l_quantity") * 100 + F.lit(0.5)).cast("long")
-        ).alias("sum_qty_cents"),
+        F.sum(pin_int(F.col("l_quantity"), 100)).alias("sum_qty_cents"),
         F.count_if(F.col("l_discount") > 0.05).alias("n_high_disc"),
         (F.count(F.lit(1)) - F.count("l_shipdate")).alias("n_null_shipdate"),
     )
@@ -1417,8 +1406,7 @@ def sink_managed_table_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.select(
             "o_orderkey",
             "o_orderstatus",
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
+            pin_int(F.col("o_totalprice"), 100)
             .alias("price_cents"),
         )
         .write.mode("overwrite")
@@ -1545,8 +1533,7 @@ def sink_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_returnflag",
         "l_quantity",
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
+        pin_int(F.col("l_extendedprice"), 100)
         .alias("cents"),
     )
     # Derby creates the database directory itself, so it is a child of
@@ -1653,7 +1640,7 @@ def source_glob_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return back.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),
-        F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"))
+        F.sum(pin_int(F.col("o_totalprice"), 100))
         .alias("sum_cents"),
     )
 
@@ -1698,8 +1685,7 @@ def source_file_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("int")
             .alias("tier"),
             F.col("_metadata.row_index").alias("row_index"),
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
+            pin_int(F.col("o_totalprice"), 100)
             .alias("cents"),
             F.col("_metadata.file_name").alias("fname"),
         )
@@ -1773,8 +1759,7 @@ def sink_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (
         li.select(
             F.col("l_quantity").cast("long").alias("qty"),
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("long")
+            pin_int(F.col("l_extendedprice"), 100)
             .alias("price_cents"),
         )
         .write.mode("overwrite")
@@ -1966,8 +1951,7 @@ def source_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("o_orderkey"),
                     F.col("o_custkey"),
                     F.col("o_orderstatus"),
-                    F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-                    .cast("long"),
+                    pin_int(F.col("o_totalprice"), 100),
                     F.date_format(F.col("o_orderdate"), "yyyy-MM-dd"),
                     F.col("o_orderpriority"),
                 ).alias("value")

@@ -22,13 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.core import query
+from engine.core import pin_int, query
 from engine.io import load
-
-
-def _cents(col: F.Column) -> F.Column:
-    """Exact integer cents of a double money expression (deterministic)."""
-    return F.floor(col * 100 + F.lit(0.5)).cast("long")
 
 
 _CENTS_SQL = "CAST(FLOOR(({expr}) * 100 + 0.5) AS BIGINT)"
@@ -87,7 +82,7 @@ def join_multiway_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, li.l_orderkey == o.o_orderkey)
         .groupBy("o_orderkey", F.col("o_orderdate").cast("date").alias("order_date"))
-        .agg(F.sum(_cents(revenue)).alias("revenue_cents"))
+        .agg(F.sum(pin_int(revenue, 100)).alias("revenue_cents"))
         .orderBy(F.desc("revenue_cents"), F.asc("o_orderkey"))
         .limit(10)
     )
@@ -124,7 +119,7 @@ def join_broadcast_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("r_name").alias("region_name"), F.col("n_name").alias("nation_name"))
         .agg(
             F.count("*").alias("n_items"),
-            F.sum(_cents(revenue)).alias("revenue_cents"),
+            F.sum(pin_int(revenue, 100)).alias("revenue_cents"),
         )
     )
 
@@ -535,7 +530,7 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("join_key")
         .agg(
             F.count("*").alias("n"),
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")).alias("sum_cents"),
+            F.sum(pin_int(F.col("value"), 100)).alias("sum_cents"),
             F.max("user_orders").alias("dim_val"),
         )
     )
@@ -678,8 +673,7 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     ords = o.select(
         "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
+        pin_int(F.col("o_totalprice"), 100)
         .alias("cents"),
         F.col("o_orderdate").cast("date").alias("lo"),
         F.date_add(
@@ -771,8 +765,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact = load(spark, sf_dir, "lineitem").select(
         "l_partkey",
         "l_returnflag",
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
+        pin_int(F.col("l_extendedprice"), 100)
         .alias("cents"),
     )
     f1 = fact.join(
@@ -809,8 +802,7 @@ def _runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = p.filter(F.col("p_size") == 1).select("p_partkey", "p_brand")
     fact = load(spark, sf_dir, "lineitem").select(
         "l_partkey",
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
+        pin_int(F.col("l_extendedprice"), 100)
         .alias("cents"),
     )
     return (
@@ -1147,7 +1139,7 @@ def join_point_in_time_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "event_type",
         us.alias("us"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+        pin_int(F.col("value"), 100).alias("cents"),
     )
     w = Window.partitionBy("user_id").orderBy("us", "event_id")
     seg = (
@@ -1250,10 +1242,7 @@ def join_salted_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = e.join(dim, ["event_type", "salt"])
     per_salt = joined.groupBy("event_type", "salt").agg(
         F.count("*").alias("n"),
-        F.sum(
-            F.floor(F.col("value") * F.col("weight") * 100 + F.lit(0.5))
-            .cast("long")
-        ).alias("wc"),
+        F.sum(pin_int(F.col("value") * F.col("weight"), 100)).alias("wc"),
     )
     return per_salt.groupBy("event_type").agg(
         F.sum("n").alias("n_events"),
@@ -1437,7 +1426,7 @@ def join_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot push below the join (it spans both sides), but the column
     pruning does — only (key, hash) cross the shuffle."""
     o = load(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = pin_int(F.col("o_totalprice"), 100)
     prev = o.filter(F.col("o_orderkey") % 89 != 0).select(
         F.col("o_orderkey").alias("pk"), cents.alias("old_cents")
     )
@@ -1661,9 +1650,7 @@ def join_strategy_hints(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(
             F.count("*").alias("n_orders"),
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-            ).alias("sum_price_cents"),
+            F.sum(pin_int(F.col("o_totalprice"), 100)).alias("sum_price_cents"),
         )
     )
 
@@ -1786,8 +1773,7 @@ def join_spatial_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         * F.sin(dlo / 2) * F.sin(dlo / 2)
     )
     dist_e4 = (
-        F.floor(2 * 6371.0088 * F.asin(F.sqrt(hav)) * 10000 + F.lit(0.5))
-        .cast("long")
+        pin_int(2 * 6371.0088 * F.asin(F.sqrt(hav)), 10000)
     )
     return (
         pairs.select("key_a", "key_b", dist_e4.alias("dist_km_e4"))

@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.core import query
+from engine.core import pin, query
 from engine.io import load
 
 _MEDIA_TYPES = ["image", "audio", "video"]
@@ -195,13 +195,12 @@ def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema="media_id long, media_type string, n_bytes long, "
         "byte_mean double, byte_entropy double",
     )
-    fix4 = lambda c: F.floor(c * 10000 + F.lit(0.5)) / 10000  # noqa: E731
     return out.select(
         "media_id",
         "media_type",
         "n_bytes",
-        fix4(F.col("byte_mean")).alias("byte_mean"),
-        fix4(F.col("byte_entropy")).alias("byte_entropy"),
+        pin(F.col("byte_mean"), 10000).alias("byte_mean"),
+        pin(F.col("byte_entropy"), 10000).alias("byte_entropy"),
     )
 
 
@@ -768,7 +767,7 @@ def _wds_tar_dir(spark: SparkSession, sf_dir: str) -> str:
     import os
     import tarfile
 
-    from engine.core import scoped_shuffle_partitions, staged_build_once
+    from engine.core import scoped_sql_conf, staged_build_once
     from engine.io import load as _load
 
     def _build(d: str) -> None:
@@ -818,7 +817,7 @@ def _wds_tar_dir(spark: SparkSession, sf_dir: str) -> str:
                 f.write(buf.getvalue())
             return pd.DataFrame({"shard": [shard]})
 
-        with scoped_shuffle_partitions(spark, 8):
+        with scoped_sql_conf(spark, {"spark.sql.shuffle.partitions": 8}):
             (
                 docs.withColumn(
                     "shard", (F.col("doc_id") % _TAR_SHARDS).cast("long")

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.core import query
+from engine.core import pin, pin_int, query
 from engine.io import load
 
 # ---------------------------------------------------------------------------
@@ -42,9 +42,9 @@ def project_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.select(
         "l_orderkey",
         "l_linenumber",
-        (F.floor(revenue * 100 + F.lit(0.5)) / 100).alias("revenue"),
-        (F.floor(revenue * (1 + F.col("l_tax")) * 100 + F.lit(0.5)) / 100).alias("charge"),
-        (F.floor(F.col("l_extendedprice") / F.col("l_quantity") * 10000 + F.lit(0.5)) / 10000).alias("unit_price"),
+        pin(revenue, 100).alias("revenue"),
+        pin(revenue * (1 + F.col("l_tax")), 100).alias("charge"),
+        pin(F.col("l_extendedprice") / F.col("l_quantity"), 10000).alias("unit_price"),
     )
 
 
@@ -222,7 +222,7 @@ def sort_multi_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sort_nulls_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer")
-    bal = F.when(F.col("c_acctbal") < 0, F.lit(None)).otherwise((F.floor((F.col("c_acctbal")) * 100 + F.lit(0.5)) / 100))
+    bal = F.when(F.col("c_acctbal") < 0, F.lit(None)).otherwise(pin(F.col("c_acctbal"), 100))
     return (
         c.select("c_custkey", bal.alias("bal_or_null"))
         .orderBy(F.asc_nulls_first("bal_or_null"), F.asc("c_custkey"))
@@ -336,7 +336,7 @@ def limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on the driver — no global sort, the right top-k plan at any scale.
     o = load(spark, sf_dir, "orders")
     return (
-        o.select("o_orderkey", "o_custkey", (F.floor((F.col("o_totalprice")) * 100 + F.lit(0.5)) / 100).alias("total_price"))
+        o.select("o_orderkey", "o_custkey", pin(F.col("o_totalprice"), 100).alias("total_price"))
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
         .limit(20)
     )
@@ -372,8 +372,7 @@ def limit_offset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.select(
             "o_orderkey",
             "o_custkey",
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
+            pin_int(F.col("o_totalprice"), 100)
             .alias("price_cents"),
         )
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
@@ -445,8 +444,7 @@ def limit_keyset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "o_orderkey",
             "o_custkey",
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
+            pin_int(F.col("o_totalprice"), 100)
             .alias("price_cents"),
         )
     )
@@ -472,7 +470,7 @@ def sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag")
         .agg(
             F.count("*").alias("n"),
-            (F.floor((F.sum("l_extendedprice")) * 100 + F.lit(0.5)) / 100).alias("sum_price"),
+            pin(F.sum("l_extendedprice"), 100).alias("sum_price"),
         )
     )
 
@@ -612,7 +610,7 @@ def sample_stratified_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(2)
     )
     keep = (F.col("o_orderkey") % rate) == 0
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = pin_int(F.col("o_totalprice"), 100)
     return o.groupBy("o_orderstatus").agg(
         F.count("*").alias("n_total"),
         F.sum(F.when(keep, 1).otherwise(0)).alias("n_kept"),
@@ -773,8 +771,7 @@ def sample_group_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "c_mktsegment",
             "c_custkey",
-            F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
-            .cast("long")
+            pin_int(F.col("c_acctbal"), 100)
             .alias("acctbal_cents"),
             "rn",
         )
@@ -878,11 +875,11 @@ def sample_weighted_aes(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted sample of a 100 TB fact table moves ~nothing through the
     exchange.  The final row_number runs on the 100 surviving rows."""
     o = load(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = pin_int(F.col("o_totalprice"), 100)
     u = ((F.col("o_orderkey") * 506952114 + 40503) % 2147483647 + 1).cast(
         "double"
     ) / F.lit(2147483648.0)
-    key_e9 = F.floor(F.log(u) / cents * 1000000000 + F.lit(0.5)).cast("long")
+    key_e9 = pin_int(F.log(u) / cents, 1000000000)
     top = (
         o.select(
             "o_orderkey",
@@ -953,7 +950,7 @@ def sample_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     The naive alternative (R shuffled samples) moves the table R
     times."""
     o = load(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = pin_int(F.col("o_totalprice"), 100)
     rows = o.select(
         F.col("o_orderkey").cast("long").alias("k"),
         cents.alias("cents"),
@@ -1031,7 +1028,7 @@ def sample_aqp_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate PUSHES DOWN and the sampled branch reads ~1% of rows,
     which is the entire point of AQP).  The final join is 3 rows."""
     o = load(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = pin_int(F.col("o_totalprice"), 100)
     in_sample = (
         F.col("o_orderkey").cast("long") * F.lit(2654435761)
     ) % 1048576 < 10486
@@ -1103,8 +1100,7 @@ def set_union_by_name_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("c_custkey").alias("id"),
             F.col("c_mktsegment").alias("segment"),
-            F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
-            .cast("long")
+            pin_int(F.col("c_acctbal"), 100)
             .alias("bal_cents"),
         )
     )
@@ -1113,8 +1109,7 @@ def set_union_by_name_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderkey") % 53 == 0)
         .select(
             F.col("o_custkey").alias("id"),
-            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-            .cast("long")
+            pin_int(F.col("o_totalprice"), 100)
             .alias("order_cents"),
         )
     )

@@ -27,12 +27,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from engine.core import ORACLES as _ORACLES
-from engine.core import query, session_memo
+from engine.core import pin, pin_int, query, session_memo
+from engine.dedup import _COS_STEP_SQL
 from engine.io import load
-
-
-def _fix(col: Column, scale: int) -> Column:
-    return F.floor(col * scale + F.lit(0.5)) / scale
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -114,7 +111,7 @@ def _rerank_top5(e: DataFrame, cand: DataFrame) -> DataFrame:
     return _top5(
         cand.join(eq, "q_id")
         .join(en, "neighbor_id")
-        .select("q_id", "neighbor_id", _fix(cos, 10000).alias("cosine"))
+        .select("q_id", "neighbor_id", pin(cos, 10000).alias("cosine"))
     )
 
 
@@ -126,18 +123,8 @@ def _rerank_top5(e: DataFrame, cand: DataFrame) -> DataFrame:
                a.embedding AS ea, b.embedding AS eb
         FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
         WHERE a.vec_id % 10 = 0
-    ),
-    comps AS (
-        SELECT vec_a, vec_b,
-               SUM(CAST(ea[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)) AS dot,
-               SUM(CAST(ea[i] AS DOUBLE) * CAST(ea[i] AS DOUBLE)) AS na2,
-               SUM(CAST(eb[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)) AS nb2
-        FROM pairs, {_DIMS} s
-        GROUP BY vec_a, vec_b
-    )
-    SELECT vec_a, vec_b,
-           FLOOR(dot / (SQRT(na2) * SQRT(nb2)) * 10000 + 0.5) / 10000 AS cosine
-    FROM comps
+    ),{_COS_STEP_SQL}
+    SELECT vec_a, vec_b, cosine FROM cosines
     """,
 )
 def sim_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -152,7 +139,7 @@ def sim_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
     return (
         a.join(b, a.vec_a == b.join_id)
-        .select("vec_a", "vec_b", _fix(cos, 10000).alias("cosine"))
+        .select("vec_a", "vec_b", pin(cos, 10000).alias("cosine"))
     )
 
 
@@ -194,7 +181,7 @@ def sim_knn_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
-            _fix(cos, 10000).alias("cosine"),
+            pin(cos, 10000).alias("cosine"),
         )
     )
     return _top5(scored)
@@ -218,7 +205,7 @@ def sim_centroid_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.select("label", F.posexplode("embedding").alias("pos", "comp"))
         .groupBy("label", "pos")
-        .agg(_fix(F.avg(F.col("comp").cast("double")), 10000).alias("centroid_comp"))
+        .agg(pin(F.avg(F.col("comp").cast("double")), 10000).alias("centroid_comp"))
     )
 
 
@@ -239,7 +226,7 @@ def sim_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
     return e.select(
         "vec_id",
-        _fix(_norm(F.col("embedding")), 10000).alias("l2_norm"),
+        pin(_norm(F.col("embedding")), 10000).alias("l2_norm"),
         F.size("embedding").alias("n_dims"),
     )
 
@@ -291,11 +278,8 @@ def sim_label_knn_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # norms per row (200 evals/side), not per pair (2 x ~40k) —
     # bit-identical hoist of the interpreted HOF fold
-    cos_key = F.floor(
-        _dot(F.col("ea"), F.col("eb"))
-        / (F.col("na") * F.col("nb"))
-        * 1000000
-        + F.lit(0.5)
+    cos_key = pin_int(
+        _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 1000000
     )
     w = Window.partitionBy("a_id").orderBy(F.desc("cos_key"), F.asc("b_id"))
     nn = (
@@ -340,7 +324,7 @@ def multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     e = load(spark, sf_dir, "embeddings")
     norms = e.select(
-        "vec_id", _fix(_norm(F.col("embedding")), 10000).alias("l2_norm")
+        "vec_id", pin(_norm(F.col("embedding")), 10000).alias("l2_norm")
     )
     return (
         d.join(norms, d.doc_id == norms.vec_id)
@@ -348,7 +332,7 @@ def multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_docs"),
             F.sum("n_chars").alias("sum_chars"),
-            _fix(F.sum("l2_norm"), 10000).alias("sum_norm"),
+            pin(F.sum("l2_norm"), 10000).alias("sum_norm"),
         )
     )
 
@@ -445,7 +429,7 @@ def sim_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
-            _fix(cos, 10000).alias("cosine"),
+            pin(cos, 10000).alias("cosine"),
         )
         .distinct()
     )
@@ -737,7 +721,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         inverted.join(F.broadcast(probes), "list_id")
         .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select("q_id", "neighbor_id", _fix(cos, 10000).alias("cosine"))
+        .select("q_id", "neighbor_id", pin(cos, 10000).alias("cosine"))
         .distinct()
     )
     return _top5(scored)
@@ -752,7 +736,7 @@ def _build_ivf_index(spark: SparkSession, sf_dir: str):
     import numpy as np
     import pandas as pd
 
-    from engine.core import collect_model_artifact, scoped_shuffle_partitions
+    from engine.core import collect_model_artifact, scoped_sql_conf
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
@@ -798,7 +782,7 @@ def _build_ivf_index(spark: SparkSession, sf_dir: str):
     ))
     # Each round's tiny 16×64 reduces run at 8 shuffle partitions, and
     # the next round needs only the collected matrix in its closure.
-    with scoped_shuffle_partitions(spark, 8):
+    with scoped_sql_conf(spark, {"spark.sql.shuffle.partitions": 8}):
         for _ in range(_IVF_ITERS):
             rows = collect_model_artifact(
                 assign(router(rows))
@@ -861,11 +845,9 @@ def _ivf_ranked(e: DataFrame, depth: int) -> DataFrame:
         F.col("embedding").alias("ec"),
         _norm(F.col("embedding")).alias("nrm_c"),
     )
-    cos_key = F.floor(
-        _dot(F.col("embedding"), F.col("ec"))
-        / (F.col("nrm") * F.col("nrm_c"))
-        * 1000000
-        + F.lit(0.5)
+    cos_key = pin_int(
+        _dot(F.col("embedding"), F.col("ec")) / (F.col("nrm") * F.col("nrm_c")),
+        1000000,
     )
     wc = Window.partitionBy("vec_id").orderBy(F.desc("cos_key"), F.asc("cid"))
     return (
@@ -958,7 +940,7 @@ def sim_ivf_fixed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         inv.join(F.broadcast(probes), "list_id")
         .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select("q_id", "neighbor_id", _fix(cos, 10000).alias("cosine"))
+        .select("q_id", "neighbor_id", pin(cos, 10000).alias("cosine"))
     )
     return _top5(scored)
 
@@ -1072,9 +1054,9 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    from engine.core import scoped_shuffle_partitions
+    from engine.core import scoped_sql_conf
 
-    with scoped_shuffle_partitions(spark, 8):
+    with scoped_sql_conf(spark, {"spark.sql.shuffle.partitions": 8}):
         cb = cb.localCheckpoint(eager=True)
         # the (vec, subspace, component) explosion is codebook-independent
         # — materialize once, reuse across Lloyd passes (bench clears it)
@@ -1165,8 +1147,7 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             "neighbor_id",
             "adc_dist_e6",
-            F.floor(diff2 * 1_000_000 + F.lit(0.5))
-            .cast("long")
+            pin_int(diff2, 1_000_000)
             .alias("l2_dist_e6"),
         )
     )
@@ -1455,8 +1436,7 @@ def sim_matryoshka_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "neighbor_id",
-            F.floor(coarse_cos * 1_000_000 + F.lit(0.5))
-            .cast("long")
+            pin_int(coarse_cos, 1_000_000)
             .alias("pfx_e6"),
         )
     )
@@ -1477,7 +1457,7 @@ def sim_matryoshka_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         short.select("q_id", "neighbor_id")
         .join(nb, "neighbor_id")
         .join(F.broadcast(q.select("q_id", "eq", "nq_full")), "q_id")
-        .select("q_id", "neighbor_id", _fix(full_cos, 10000).alias("cosine"))
+        .select("q_id", "neighbor_id", pin(full_cos, 10000).alias("cosine"))
     )
     return _top5(exact)
 
@@ -1709,15 +1689,14 @@ def sim_mmr_fixed_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"), F.col("qv").alias("q_qv")
     )
     cands = quant.filter(F.col("vec_id") >= 3)
-    rel_e4 = F.floor(
+    rel_e4 = pin_int(
         idot(F.col("q_qv"), F.col("qv")).cast("double")
         / (
             F.sqrt(idot(F.col("q_qv"), F.col("q_qv")).cast("double"))
             * F.sqrt(idot(F.col("qv"), F.col("qv")).cast("double"))
-        )
-        * 10000
-        + F.lit(0.5)
-    ).cast("long")
+        ),
+        10000,
+    )
     w = Window.partitionBy("q_id").orderBy(F.desc("rel_e4"), F.asc("vec_id"))
     short = (
         cands.crossJoin(qs)
@@ -1828,11 +1807,8 @@ def _cos_block_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("blk").alias("blk_b"),
         F.col("nrm").alias("nrm_b"),
     )
-    cos_bp = F.floor(
-        _dot(F.col("ea"), F.col("eb"))
-        / (F.col("nrm_a") * F.col("nrm_b"))
-        * 10000
-        + F.lit(0.5)
+    cos_bp = pin_int(
+        _dot(F.col("ea"), F.col("eb")) / (F.col("nrm_a") * F.col("nrm_b")), 10000
     )
     return (
         a.join(b, (a.blk == b.blk_b) & (a.src < b.dst))
@@ -2070,7 +2046,7 @@ def graph_reachability_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (doc_id, root_id, depth) — one row per document, exact, so
     the recursive-CTE oracle hash-proves the unrolled plan."""
-    from engine.core import scoped_shuffle_partitions
+    from engine.core import scoped_sql_conf
 
     d = load(spark, sf_dir, "documents").select("doc_id")
     # The pointer-doubling join (state ⋈ state on ptr = node) requires
@@ -2109,7 +2085,7 @@ def graph_reachability_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("dist"),
     )
-    with scoped_shuffle_partitions(spark, 8):
+    with scoped_sql_conf(spark, {"spark.sql.shuffle.partitions": 8}):
         state = state.localCheckpoint(eager=True)
         prev_sum = None
         for it in range(_REACH_MAX_ITERS):
@@ -2205,7 +2181,7 @@ def sim_random_projection_jl(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ks.select(
         "vec_id",
         F.col("k").cast("long").alias("k"),
-        F.floor(y * 1000000 + F.lit(0.5)).cast("long").alias("y_e6"),
+        pin_int(y, 1000000).alias("y_e6"),
     )
 
 
@@ -2316,16 +2292,16 @@ def graph_bfs_min_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     the self-join, so build #1 is one exchange; ``repartition(src)``
     likewise covers the edge dedup and every round's ``frontier ⨝
     edges`` probe, so only the tiny frontier moves per round.  The
-    whole loop runs under ``scoped_shuffle_partitions(8)`` with each
-    round forced inside the scope (the rounds carry ≤ |V| rows; 32
+    whole loop runs under 8 shuffle partitions (``scoped_sql_conf``) with
+    each round forced inside the scope (the rounds carry ≤ |V| rows; 32
     tasks per reduce stage was pure scheduling overhead — measured
     7.7 s → ~2 s cold at sf0.1).  Path enumeration in the oracle is
     exponential in k and exists only as the sf0.01 proof.  For
     unbounded-depth reachability the star-contraction CC key is the
     O(log d) answer."""
-    from engine.core import scoped_shuffle_partitions
+    from engine.core import scoped_sql_conf
 
-    with scoped_shuffle_partitions(spark, 8):
+    with scoped_sql_conf(spark, {"spark.sql.shuffle.partitions": 8}):
         li = (
             load(spark, sf_dir, "lineitem")
             .filter(F.col("l_partkey") % 4 == 0)
@@ -2470,11 +2446,8 @@ def sim_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         _norm(F.col("embedding")).alias("nc"),
     )
     # norms per row, not per (candidate, query) pair — bit-identical
-    cos_key = F.floor(
-        _dot(F.col("eq"), F.col("ec"))
-        / (F.col("nq") * F.col("nc"))
-        * 1000000
-        + F.lit(0.5)
+    cos_key = pin_int(
+        _dot(F.col("eq"), F.col("ec")) / (F.col("nq") * F.col("nc")), 1000000
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_key"), F.asc("c_id")
@@ -2974,14 +2947,11 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("t_degree") * F.col("t_degree"))
             .cast("long")
             .alias("q_den"),
-            F.floor(
+            pin_int(
                 q_num.cast("double")
-                / (F.col("t_degree").cast("double") * F.col("t_degree"))
-                * 1000000000
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("q_e9"),
+                / (F.col("t_degree").cast("double") * F.col("t_degree")),
+                1000000000,
+            ).alias("q_e9"),
         )
     )
 
@@ -3052,9 +3022,7 @@ def sim_int8_quantize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(
             F.transform(
                 F.col("embedding"),
-                lambda x: F.floor(
-                    x.cast("double") * 127 / F.col("amax") + F.lit(0.5)
-                ).cast("long"),
+                lambda x: pin_int(x.cast("double") * 127 / F.col("amax"), 1),
             )
         )
         .alias("q"),
@@ -3069,15 +3037,14 @@ def sim_int8_quantize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return qv.select(
         "vec_id",
-        F.floor(F.col("amax") * 1000000 + F.lit(0.5)).cast("long").alias("amax_e6"),
+        pin_int(F.col("amax"), 1000000).alias("amax_e6"),
         F.aggregate(F.col("q"), F.lit(0).cast("long"), lambda a, v: a + v)
         .alias("q_sum"),
         F.aggregate(F.col("q"), F.lit(0).cast("long"), lambda a, v: a + F.abs(v))
         .alias("q_l1"),
-        F.floor(
-            F.aggregate(err, F.lit(0.0), lambda a, x: a + x) / 64 * 1000000000
-            + F.lit(0.5)
-        ).cast("long").alias("mse_e9"),
+        pin_int(
+            F.aggregate(err, F.lit(0.0), lambda a, x: a + x) / 64, 1000000000
+        ).alias("mse_e9"),
     )
 
 
@@ -3681,10 +3648,10 @@ def graph_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth) rounds; rounds run under 8 shuffle partitions
     (driver-orchestrated tiny reduces) with eager per-round
     checkpoints truncating the lineage, the CC/IVF loop discipline."""
-    from engine.core import scoped_shuffle_partitions
+    from engine.core import scoped_sql_conf
 
     edges = _cos_block_edges(spark, sf_dir)
-    with scoped_shuffle_partitions(spark, 8):
+    with scoped_sql_conf(spark, {"spark.sql.shuffle.partitions": 8}):
         E = edges.localCheckpoint(eager=True)
         n_edges = E.count()
         for _ in range(_KCORE_UNROLL):
@@ -4406,12 +4373,11 @@ def sim_hard_negative_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    cos_e6 = F.floor(
+    cos_e6 = pin_int(
         dot.cast("double")
-        / (F.sqrt(F.col("nq2").cast("double")) * F.sqrt(F.col("nc2").cast("double")))
-        * 1000000
-        + F.lit(0.5)
-    ).cast("long")
+        / (F.sqrt(F.col("nq2").cast("double")) * F.sqrt(F.col("nc2").cast("double"))),
+        1000000,
+    )
     scored = (
         cand.join(F.broadcast(qs), "q_id")
         .join(cside, "cand_id")
@@ -4552,12 +4518,9 @@ def sim_ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cid").alias("list_id"),
         F.col("crn").alias("lr"),
     )
-    cos_bp = F.floor(
-        _dot(F.col("eq"), F.col("e_emb"))
-        / (F.col("nq") * F.col("n_emb"))
-        * 10000
-        + F.lit(0.5)
-    ).cast("long")
+    cos_bp = pin_int(
+        _dot(F.col("eq"), F.col("e_emb")) / (F.col("nq") * F.col("n_emb")), 10000
+    )
     sc = (
         inv.join(F.broadcast(qrank), "list_id")
         .filter(F.col("neighbor_id") != F.col("q_id"))
@@ -4585,10 +4548,8 @@ def sim_ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         sim_knn_topk(spark, sf_dir)
         .select("q_id", F.col("neighbor_id").alias("x_nid"))
         .withColumn("hit", F.lit(1))
-        .persist()  # diamond: the n_q driver count AND the hit join —
-        # unpersisted, the exact ground-truth crossJoin ran twice
     )
-    n_q = exact5.select("q_id").distinct().count()
+    n_q = exact5.agg(F.countDistinct("q_id").alias("n_q"))
     vol = swept.groupBy("n_probes").agg(F.count("*").alias("n_cand"))
     return (
         top5.join(
@@ -4605,12 +4566,13 @@ def sim_ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_hits"),
         )
         .join(F.broadcast(vol), "n_probes")
+        .crossJoin(F.broadcast(n_q))
         .select(
             "n_probes",
             F.col("n_cand").cast("long").alias("n_cand"),
             "n_ret",
             "n_hits",
-            F.expr(f"10000 * n_hits div (5 * {n_q})")
+            F.expr("10000 * n_hits div (5 * n_q)")
             .cast("long")
             .alias("recall_bp"),
         )

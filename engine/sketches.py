@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.core import query
+from engine.core import pin_int, query
 from engine.io import load
 
 
@@ -211,11 +211,7 @@ def sketch_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             # floor-pinned e6 (r9 VERDICT): every declared double in the
             # repo is pinned; keeps this key upgrade-ready should the
             # exact audit columns ever gain an oracle twin.
-            F.floor(
-                F.abs(F.col("p50_kll") - F.col("p50_exact")) * 1000000
-                + F.lit(0.5)
-            )
-            .cast("long")
+            pin_int(F.abs(F.col("p50_kll") - F.col("p50_exact")), 1000000)
             .alias("p50_abs_err_e6"),
         )
         .orderBy("event_type")
@@ -326,7 +322,7 @@ def sketch_histogram_quantile_merge(
     from pyspark.sql import Window as W
 
     ev = load(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = pin_int(F.col("value"), 100)
     base = ev.select(
         "event_type",
         F.date_trunc("day", F.col("ts")).cast("date").alias("day"),

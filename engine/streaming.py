@@ -33,8 +33,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.core import (
+    pin_int,
     query,
-    scoped_shuffle_partitions,
+    scoped_sql_conf,
     scratch,
     session_memo,
     staged_build_once,
@@ -54,7 +55,8 @@ _STREAM_SHUFFLE_PARTITIONS = 8
 
 @contextlib.contextmanager
 def _stream_shuffle(spark: SparkSession):
-    with scoped_shuffle_partitions(spark, _STREAM_SHUFFLE_PARTITIONS):
+    confs = {"spark.sql.shuffle.partitions": _STREAM_SHUFFLE_PARTITIONS}
+    with scoped_sql_conf(spark, confs):
         yield
 
 
@@ -174,9 +176,7 @@ def stream_smoke_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n"),
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")).alias(
-                "sum_value_cents"
-            ),
+            F.sum(pin_int(F.col("value"), 100)).alias("sum_value_cents"),
         )
     )
     qname = _run_to_memory(agg, "complete", "smoke_tumbling").name
@@ -374,9 +374,7 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(
             F.count("*").alias("n"),
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")).alias(
-                "sum_value_cents"
-            ),
+            F.sum(pin_int(F.col("value"), 100)).alias("sum_value_cents"),
         )
     )
 
@@ -523,9 +521,7 @@ def stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n"),
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            ).alias("sum_value_cents"),
+            F.sum(pin_int(F.col("value"), 100)).alias("sum_value_cents"),
         )
     )
     prov_key = "spark.sql.streaming.stateStore.providerClass"
@@ -836,9 +832,7 @@ def stream_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
         .agg(
             F.count("*").alias("n"),
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")).alias(
-                "sum_value_cents"
-            ),
+            F.sum(pin_int(F.col("value"), 100)).alias("sum_value_cents"),
         )
     )
     qname = _run_to_memory(agg, "complete", "sliding_agg").name
@@ -1066,7 +1060,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ev = _events_stream(spark, src).select(
         "user_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+        pin_int(F.col("value"), 100).alias("cents"),
     )
     agg = (
         ev.join(F.broadcast(cust), "user_id")
@@ -1087,7 +1081,7 @@ def stream_static_enrich_batch_twin(spark: SparkSession, sf_dir: str) -> DataFra
     )
     ev = load(spark, sf_dir, "events").select(
         "user_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+        pin_int(F.col("value"), 100).alias("cents"),
     )
     return (
         ev.join(F.broadcast(cust), "user_id")
@@ -1326,9 +1320,7 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     return recovered.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.countDistinct("event_id").alias("n_distinct_ids"),
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")).alias(
-            "sum_value_cents"
-        ),
+        F.sum(pin_int(F.col("value"), 100)).alias("sum_value_cents"),
     )
 
 

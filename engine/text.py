@@ -12,15 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.core import query, session_memo
+from engine.core import pin, pin_int, pin_sql, query, session_memo
 from engine.io import load
 
-
-def _fix4(col: F.Column) -> F.Column:
-    return F.floor(col * 10000 + F.lit(0.5)) / 10000
-
-
-_FIX4_SQL = "FLOOR(({expr}) * 10000 + 0.5) / 10000"
 
 STOPWORDS = ["a", "the", "and", "of", "to", "in", "is"]
 
@@ -150,8 +144,8 @@ def text_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     n AS (SELECT COUNT(*) AS n_docs FROM documents)
     SELECT tf.doc_id, tf.tok AS token,
-           {_FIX4_SQL.format(expr="LN(CAST(n.n_docs AS DOUBLE) / df.df)")} AS idf,
-           {_FIX4_SQL.format(expr="tf.tf * (FLOOR(LN(CAST(n.n_docs AS DOUBLE) / df.df) * 10000 + 0.5) / 10000)")} AS tf_idf
+           {pin_sql("LN(CAST(n.n_docs AS DOUBLE) / df.df)", 10000)} AS idf,
+           {pin_sql("tf.tf * (FLOOR(LN(CAST(n.n_docs AS DOUBLE) / df.df) * 10000 + 0.5) / 10000)", 10000)} AS tf_idf
     FROM tf JOIN df ON tf.tok = df.tok CROSS JOIN n
     WHERE tf.doc_id % 2 = 0
     """,
@@ -188,7 +182,7 @@ def _tfidf_scored(d: DataFrame) -> DataFrame:
     )
     df_tbl = tok.groupBy("token").agg(F.countDistinct("doc_id").alias("df"))
     n_docs = d.agg(F.count("*").alias("n_docs"))
-    idf = _fix4(F.log(F.col("n_docs").cast("double") / F.col("df")))
+    idf = pin(F.log(F.col("n_docs").cast("double") / F.col("df")), 10000)
     return (
         # df_tbl is VOCABULARY-sized — Heaps' law grows it with corpus
         # size (multi-GB token-type table at 100 TB), so no hard hint:
@@ -200,7 +194,7 @@ def _tfidf_scored(d: DataFrame) -> DataFrame:
             "doc_id",
             "token",
             idf.alias("idf"),
-            _fix4(F.col("tf") * idf).alias("tf_idf"),
+            pin(F.col("tf") * idf, 10000).alias("tf_idf"),
         )
     )
 
@@ -453,7 +447,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         p["ttr"].alias("type_token_ratio"),
         p["stop"].alias("stop_ratio"),
         p["avg_len"].alias("avg_word_len"),
-        _fix4(p["raw"]).alias("quality"),
+        pin(p["raw"], 10000).alias("quality"),
     )
 
 
@@ -782,10 +776,9 @@ def text_corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_docs",
         "sum_tokens",
-        F.floor(10000.0 * F.col("sum_tokens") / total + F.lit(0.5))
-        .cast("long")
+        pin_int(10000.0 * F.col("sum_tokens") / total, 1)
         .alias("share_bp"),
-        _fix4((total.cast("double") / n_src) / F.col("sum_tokens")).alias(
+        pin((total.cast("double") / n_src) / F.col("sum_tokens"), 10000).alias(
             "uniform_boost"
         ),
     )
@@ -809,7 +802,7 @@ def text_corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     n AS (SELECT COUNT(*) AS n_docs FROM documents),
     scored AS (
         SELECT tf.doc_id, tf.tok AS token,
-               {_FIX4_SQL.format(expr="tf.tf * (FLOOR(LN(CAST(n.n_docs AS DOUBLE) / df.df) * 10000 + 0.5) / 10000)")} AS tf_idf
+               {pin_sql("tf.tf * (FLOOR(LN(CAST(n.n_docs AS DOUBLE) / df.df) * 10000 + 0.5) / 10000)", 10000)} AS tf_idf
         FROM tf JOIN df ON tf.tok = df.tok CROSS JOIN n
         WHERE tf.doc_id % 4 = 0
     ),
@@ -989,10 +982,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = tok.agg(F.count("*").alias("n"))
     lp = cnt.crossJoin(F.broadcast(tot)).select(
         "tok",
-        F.floor(
-            -F.log(F.col("c").cast("double") / F.col("n")) * 10000 + F.lit(0.5)
-        )
-        .cast("long")
+        pin_int(-F.log(F.col("c").cast("double") / F.col("n")), 10000)
         .alias("nll_e4"),
     )
     return (
@@ -1011,11 +1001,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "n_tokens",
             "total_nll_e4",
-            F.floor(
-                F.col("total_nll_e4").cast("double") / F.col("n_tokens")
-                + F.lit(0.5)
-            )
-            .cast("long")
+            pin_int(F.col("total_nll_e4").cast("double") / F.col("n_tokens"), 1)
             .alias("avg_nll_e4"),
         )
         .orderBy("doc_id")
@@ -1091,19 +1077,25 @@ def text_vocab_truncate_unk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = tok.agg(F.count("*").alias("n"))
     wv = Window.orderBy(F.desc("c"), F.asc("tok"))
     ranked = cnt.select("tok", "c", F.row_number().over(wv).alias("vrank"))
-    nll = lambda c: F.floor(  # noqa: E731
-        -F.log(c.cast("double") / F.col("n")) * 10000 + F.lit(0.5)
-    ).cast("long")
     lp = (
         ranked.filter(F.col("vrank") <= _UNK_VOCAB_K)
         .crossJoin(F.broadcast(tot))
-        .select("tok", nll(F.col("c")).alias("nll_e4"))
+        .select(
+            "tok",
+            pin_int(-F.log(F.col("c").cast("double") / F.col("n")), 10000).alias(
+                "nll_e4"
+            ),
+        )
     )
     unk_lp = (
         ranked.filter(F.col("vrank") > _UNK_VOCAB_K)
         .agg(F.coalesce(F.sum("c"), F.lit(0)).alias("unk_c"))
         .crossJoin(F.broadcast(tot))
-        .select(nll(F.col("unk_c")).alias("unk_nll_e4"))
+        .select(
+            pin_int(
+                -F.log(F.col("unk_c").cast("double") / F.col("n")), 10000
+            ).alias("unk_nll_e4")
+        )
     )
     return (
         tok.join(lp, "tok", "left")
@@ -1121,11 +1113,7 @@ def text_vocab_truncate_unk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_tokens",
             "n_unk",
             "total_nll_e4",
-            F.floor(
-                F.col("total_nll_e4").cast("double") / F.col("n_tokens")
-                + F.lit(0.5)
-            )
-            .cast("long")
+            pin_int(F.col("total_nll_e4").cast("double") / F.col("n_tokens"), 1)
             .alias("avg_nll_e4"),
         )
     )
@@ -1319,10 +1307,10 @@ def text_url_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_tok").cast("long").alias("sum_tokens"),
         F.max("path_depth").cast("int").alias("max_depth"),
     )
-    share = F.floor(
-        10000.0 * F.col("sum_tokens") / F.sum("sum_tokens").over(Window.partitionBy())
-        + F.lit(0.5)
-    ).cast("long")
+    share = pin_int(
+        10000.0 * F.col("sum_tokens") / F.sum("sum_tokens").over(Window.partitionBy()),
+        1,
+    )
     return g.select(
         "domain", "tld", "n_docs", "sum_tokens", "max_depth",
         share.alias("token_share_bp"),
@@ -1639,9 +1627,9 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("c"))
     )
     w = Window.orderBy(F.desc("c"), F.asc("tok"))
-    e6 = lambda col: F.floor(F.log(col.cast("double")) * 1_000_000 + F.lit(0.5)).cast("long")  # noqa: E731
     pinned = cnt.select(F.row_number().over(w).alias("rank"), "c").select(
-        e6(F.col("rank")).alias("x_e6"), e6(F.col("c")).alias("y_e6")
+        pin_int(F.log(F.col("rank").cast("double")), 1_000_000).alias("x_e6"),
+        pin_int(F.log(F.col("c").cast("double")), 1_000_000).alias("y_e6"),
     )
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     s = pinned.agg(
@@ -1653,11 +1641,10 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n, sx, sy, sxy, sxx = (F.col(c) for c in ("n", "sx", "sy", "sxy", "sxx"))
     slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    e4 = lambda c: F.floor(c * 10000 + F.lit(0.5)).cast("long")  # noqa: E731
     return s.select(
         "n",
-        e4(slope).alias("zipf_slope_e4"),
-        e4((sy / n - slope * (sx / n)) / 1_000_000).alias("intercept_e4"),
+        pin_int(slope, 10000).alias("zipf_slope_e4"),
+        pin_int((sy / n - slope * (sx / n)) / 1_000_000, 10000).alias("intercept_e4"),
     )
 
 
@@ -2256,13 +2243,10 @@ def text_bigram_lm_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     uni = tok.groupBy(F.col("tok").alias("w1")).agg(F.count("*").alias("c1"))
     bic = bg.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
     v = tok.agg(F.countDistinct("tok").alias("vs"))
-    term = F.floor(
-        -F.log(
-            (F.col("c12") + 1).cast("double") / (F.col("c1") + F.col("vs"))
-        )
-        * 10000
-        + F.lit(0.5)
-    ).cast("long")
+    term = pin_int(
+        -F.log((F.col("c12") + 1).cast("double") / (F.col("c1") + F.col("vs"))),
+        10000,
+    )
     return (
         # uni is vocabulary-sized and bic is BIGRAM-TYPE-sized (near-
         # linear in corpus size) — both unhinted per the broadcast-audit
@@ -2722,9 +2706,8 @@ def _bm25_scores(spark: SparkSession, sf_dir: str,
     dfD = F.col("df").cast("double")
     idf = dfb.crossJoin(F.broadcast(st)).select(
         "token",
-        F.floor(
-            F.log((nD - dfD + F.lit(0.5)) / (dfD + F.lit(0.5)) + F.lit(1.0))
-            * 10000 + F.lit(0.5)
+        pin_int(
+            F.log((nD - dfD + F.lit(0.5)) / (dfD + F.lit(0.5)) + F.lit(1.0)), 10000
         ).alias("idf_e4"),
     )
     q_base, q_col = (
@@ -2747,10 +2730,7 @@ def _bm25_scores(spark: SparkSession, sf_dir: str,
     den = cntD + F.lit(1.25) * (
         F.lit(0.25) + F.lit(0.75) * (F.col("dl").cast("double") / avg)
     )
-    term_e4 = F.floor(
-        F.col("idf_e4").cast("double") * ((cntD * F.lit(2.25)) / den)
-        + F.lit(0.5)
-    )
+    term_e4 = pin_int(F.col("idf_e4").cast("double") * ((cntD * F.lit(2.25)) / den), 1)
     hits = (
         tf.join(F.broadcast(qt), "token")
         .join(idf, "token")  # vocabulary-sized — AQE size-selects
@@ -2930,9 +2910,7 @@ def sample_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     (phase, shard, h, doc_id) — the hash match proves the distributed
     two-level assembly equals the total order exactly."""
     d = load(spark, sf_dir, "documents")
-    q_e4 = F.floor(
-        _quality_parts(_tokens(F.col("text")))["raw"] * 10000 + F.lit(0.5)
-    )
+    q_e4 = pin_int(_quality_parts(_tokens(F.col("text")))["raw"], 10000)
     phase = (
         F.when(F.col("q_e4") >= _CURR_T1, 1)
         .when(F.col("q_e4") >= _CURR_T2, 2)
@@ -3082,33 +3060,19 @@ def _build_nb_model(spark: SparkSession, sf_dir: str):
         "hq",
         "tok",
         F.col("n_tc").cast("long").alias("n_tc"),
-        F.floor(
-            F.log(
-                (F.col("n_tc") + 1).cast("double")
-                / (F.col("t_c") + F.col("v"))
-            )
-            * 10000
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("ll_e4"),
+        pin_int(
+            F.log((F.col("n_tc") + 1).cast("double") / (F.col("t_c") + F.col("v"))),
+            10000,
+        ).alias("ll_e4"),
     )
     cls = tc.crossJoin(F.broadcast(v)).crossJoin(F.broadcast(nd)).select(
         "hq",
         F.col("t_c").cast("long").alias("t_c"),
         F.col("d_c").cast("long").alias("d_c"),
         F.col("v").cast("long").alias("v"),
-        F.floor(
-            F.log(F.col("d_c").cast("double") / F.col("n")) * 10000
-            + F.lit(0.5)
-        )
-        .cast("long")
+        pin_int(F.log(F.col("d_c").cast("double") / F.col("n")), 10000)
         .alias("prior_e4"),
-        F.floor(
-            F.log(F.lit(1.0) / (F.col("t_c") + F.col("v"))) * 10000
-            + F.lit(0.5)
-        )
-        .cast("long")
+        pin_int(F.log(F.lit(1.0) / (F.col("t_c") + F.col("v"))), 10000)
         .alias("ll0_e4"),
     )
     return (lab, ll, cls), [lab, tr]

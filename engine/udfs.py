@@ -21,12 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udf, udtf
 
-from engine.core import query
+from engine.core import pin, pin_int, query
 from engine.io import load, register_views
-
-
-def _fix4(col: F.Column) -> F.Column:
-    return F.floor(col * 10000 + F.lit(0.5)) / 10000
 
 
 @query(
@@ -109,7 +105,7 @@ def udf_pandas_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # residue filter bounds the verified output only (engine/io.py note)
     ev = load(spark, sf_dir, "events").filter(F.col("event_id") % 2 == 0)
-    return ev.select("event_id", _fix4(sigmoid("value")).alias("sigmoid"))
+    return ev.select("event_id", pin(sigmoid("value"), 10000).alias("sigmoid"))
 
 
 @query(
@@ -141,7 +137,7 @@ def udf_pandas_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts"))
     return ev.groupBy("user_id").agg(
-        _fix4(wmean(us, F.col("event_id"), F.col("value"))).alias("wmean")
+        pin(wmean(us, F.col("event_id"), F.col("value")), 10000).alias("wmean")
     )
 
 
@@ -182,7 +178,7 @@ def udf_apply_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     # group stats computed over ALL rows; residue filter bounds only the
     # verified output (engine/io.py note)
     return out.select(
-        "event_id", "event_type", _fix4(F.col("z")).alias("z")
+        "event_id", "event_type", pin(F.col("z"), 10000).alias("z")
     ).filter(F.col("event_id") % 2 == 0)
 
 
@@ -248,7 +244,7 @@ def udf_cogroup_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id",
         F.col("ts").alias("p_ts"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+        pin_int(F.col("value"), 100).alias("cents"),
     )
     clicks = ev.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_uid"), F.col("ts").alias("c_ts")
@@ -363,7 +359,7 @@ def udf_map_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema="event_id long, value_bucket long, vlog double, is_err int",
     )
     return out.select(
-        "event_id", "value_bucket", _fix4(F.col("vlog")).alias("vlog"), "is_err"
+        "event_id", "value_bucket", pin(F.col("vlog"), 10000).alias("vlog"), "is_err"
     )
 
 
@@ -741,7 +737,7 @@ def udf_pandas_scalar_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     ev = load(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = pin_int(F.col("value"), 100)
     return (
         ev.select(cents.alias("cents"))
         .select(bracketize("cents").alias("bracket"), "cents")
@@ -798,7 +794,7 @@ def udf_pandas_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("ts", "event_id")
         .rowsBetween(-2, W.currentRow)
     )
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = pin_int(F.col("value"), 100)
     out = ev.select(
         "event_id", frame_sum(cents).over(w).alias("roll_cents")
     )

@@ -16,12 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.core import query
+from engine.core import pin, pin_int, query
 from engine.io import load
-
-
-def _cents(col: F.Column) -> F.Column:
-    return F.floor(col * 100 + F.lit(0.5)).cast("long")
 
 
 @query(
@@ -133,7 +129,7 @@ def win_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.select(
         "o_custkey",
         "o_orderkey",
-        F.sum(_cents(F.col("o_totalprice"))).over(w).alias("cum_spent_cents"),
+        F.sum(pin_int(F.col("o_totalprice"), 100)).over(w).alias("cum_spent_cents"),
     ).filter(F.col("o_orderkey") % 3 == 0)
 
 
@@ -163,7 +159,7 @@ def win_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-integer sum divided once — deterministic on both engines."""
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
-        F.sum(_cents(F.col("o_totalprice"))).alias("day_cents")
+        F.sum(pin_int(F.col("o_totalprice"), 100)).alias("day_cents")
     )
     w = Window.orderBy("day").rowsBetween(-6, Window.currentRow)
     ma_sum = F.sum("day_cents").over(w)
@@ -205,7 +201,7 @@ def win_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_orderstatus",
         "o_totalprice",
-        F.sum(_cents(F.col("o_totalprice"))).over(w).alias("band_sum_cents"),
+        F.sum(pin_int(F.col("o_totalprice"), 100)).over(w).alias("band_sum_cents"),
         F.count("*").over(w).alias("band_n"),
     ).filter(F.col("o_orderkey") % 3 == 0)
 
@@ -357,9 +353,7 @@ def win_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = ev.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
     ).agg(
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")).alias(
-            "cents"
-        )
+        F.sum(pin_int(F.col("value"), 100)).alias("cents")
     )
     w = (
         Window.partitionBy("event_type")
@@ -384,9 +378,7 @@ def win_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "hour",
             "cents",
-            F.when(disc > 0, F.floor(z * 10000 + F.lit(0.5)) / 10000).alias(
-                "zscore"
-            ),
+            F.when(disc > 0, pin(z, 10000)).alias("zscore"),
         )
     )
 
@@ -447,7 +439,7 @@ def win_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy(F.col("c_mktsegment").alias("segment"), "c_custkey")
         .agg(
-            F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"))
+            F.sum(pin_int(F.col("o_totalprice"), 100))
             .alias("rev_cents")
         )
     )
@@ -457,9 +449,8 @@ def win_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     tot_w = Window.partitionBy("segment")
-    share_bp = F.floor(
-        10000.0 * F.sum("rev_cents").over(cum_w) / F.sum("rev_cents").over(tot_w)
-        + F.lit(0.5)
+    share_bp = pin_int(
+        10000.0 * F.sum("rev_cents").over(cum_w) / F.sum("rev_cents").over(tot_w), 1
     )
     return (
         rev.select(
@@ -548,12 +539,11 @@ def win_percent_rank_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
     range-partition internally (Spark sorts spill-safely)."""
     c = load(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal")
-    e6 = lambda col: F.floor(col * 1000000 + F.lit(0.5)).cast("long")  # noqa: E731
     return c.select(
         "c_custkey",
         "c_mktsegment",
-        e6(F.percent_rank().over(w)).alias("pct_rank_e6"),
-        e6(F.cume_dist().over(w)).alias("cume_dist_e6"),
+        pin_int(F.percent_rank().over(w), 1000000).alias("pct_rank_e6"),
+        pin_int(F.cume_dist().over(w), 1000000).alias("cume_dist_e6"),
     )
 
 
@@ -669,7 +659,7 @@ def win_reset_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "ts",
         "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+        pin_int(F.col("value"), 100).alias("cents"),
     )
     w = (
         Window.partitionBy("user_id")
@@ -741,7 +731,7 @@ def win_sliding_median_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames (say 10k rows) the scale path is the two-heap / order-
     statistic-tree `applyInPandas` kernel, documented not built."""
     ev = load(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", _cents(F.col("value")).alias("cents")
+        "user_id", "ts", "event_id", pin_int(F.col("value"), 100).alias("cents")
     )
     w = (
         Window.partitionBy("user_id")

@@ -3,9 +3,10 @@ for every hash-compared float: floor(x*scale + 0.5)/scale must be
 BIT-IDENTICAL between Spark and DuckDB, including at half-way ties and
 one-ulp neighbors — exactly where ROUND() diverged in round 1.
 
-This test feeds both engines an adversarial grid of boundary doubles
+These tests feed both engines an adversarial grid of boundary doubles
 (exact .xx5 ties, their one-ulp neighbors, negatives, large magnitudes)
-and asserts cell equality of the pinned outputs.
+and assert cell equality of the pinned outputs of the engine's one
+pinning helper, engine.core.pin / pin_int, against the SQL form.
 """
 
 from __future__ import annotations
@@ -28,7 +29,7 @@ def _grid() -> list[float]:
         for frac in (0.005, 0.015, 0.125, 0.495, 0.505, 0.995):
             for sign in (1.0, -1.0):
                 vals.extend(_ulp_neighbors(sign * (base + frac)))
-    # 4-decimal pin boundaries (the _fix4 form)
+    # 4-decimal pin boundaries (scale 10000)
     for base in (0.0, 0.5, 3.0):
         for frac in (0.00005, 0.12345, 0.99995):
             vals.extend(_ulp_neighbors(base + frac))
@@ -37,22 +38,21 @@ def _grid() -> list[float]:
     return vals
 
 
-@pytest.mark.parametrize("scale", [100, 10000])
+@pytest.mark.parametrize("scale", [100, 10000, 1_000_000])
 def test_floor_pin_bit_identical_spark_vs_duckdb(spark, scale):
-    vals = _grid()
-    sdf = spark.createDataFrame([(v,) for v in vals], "x double")
+    # core.pin on the Spark side against its SQL twin core.pin_sql.
     from pyspark.sql import functions as F
 
+    from engine.core import pin, pin_sql
+
+    vals = _grid()
+    sdf = spark.createDataFrame([(v,) for v in vals], "x double")
     spark_out = [
-        r.p for r in sdf.select(
-            (F.floor(F.col("x") * scale + F.lit(0.5)) / scale).alias("p")
-        ).collect()
+        r.p for r in sdf.select(pin(F.col("x"), scale).alias("p")).collect()
     ]
     con = duckdb.connect()
     duck_out = [
-        con.execute(
-            f"SELECT FLOOR(? * {scale} + 0.5) / {scale}", [v]
-        ).fetchone()[0]
+        con.execute(f"SELECT {pin_sql('?', scale)}", [v]).fetchone()[0]
         for v in vals
     ]
     for v, s, d in zip(vals, spark_out, duck_out):
@@ -62,21 +62,23 @@ def test_floor_pin_bit_identical_spark_vs_duckdb(spark, scale):
 
 
 def test_cents_long_identical_spark_vs_duckdb(spark):
-    # The integer-cents form: CAST(FLOOR(x*100 + 0.5) AS BIGINT).
-    vals = [v for v in _grid() if abs(v) < 9e13]  # keep within long cents
-    sdf = spark.createDataFrame([(v,) for v in vals], "x double")
+    # core.pin_int against CAST(FLOOR(x*S + 0.5) AS BIGINT): exact cents
+    # and the e6 keys.
     from pyspark.sql import functions as F
 
-    spark_out = [
-        r.c for r in sdf.select(
-            F.floor(F.col("x") * 100 + F.lit(0.5)).cast("long").alias("c")
-        ).collect()
-    ]
+    from engine.core import pin_int
+
     con = duckdb.connect()
-    duck_out = [
-        con.execute(
-            "SELECT CAST(FLOOR(? * 100 + 0.5) AS BIGINT)", [v]
-        ).fetchone()[0]
-        for v in vals
-    ]
-    assert spark_out == duck_out
+    for scale in (100, 1_000_000):
+        vals = [v for v in _grid() if abs(v) * scale < 9e15]  # within long
+        sdf = spark.createDataFrame([(v,) for v in vals], "x double")
+        spark_out = [
+            r.c for r in sdf.select(pin_int(F.col("x"), scale).alias("c")).collect()
+        ]
+        duck_out = [
+            con.execute(
+                f"SELECT CAST(FLOOR(? * {scale} + 0.5) AS BIGINT)", [v]
+            ).fetchone()[0]
+            for v in vals
+        ]
+        assert spark_out == duck_out, f"scale={scale}"

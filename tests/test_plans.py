@@ -451,6 +451,69 @@ def test_embedding_chain_has_one_home_per_step():
     ), "planted media copy built outside _mm_neardup_corpus"
 
 
+def test_float_pin_has_one_home():
+    # The rule "never ROUND() a hash-compared float" has one JVM-side
+    # home: core.pin / core.pin_int (SQL twin core.pin_sql).  No other
+    # engine module builds a floor(x*S + 0.5) pin, and no private
+    # spelling of the helper (_fix4, _FIX4_SQL, a named lambda or a
+    # one-line def around pin/pin_int) exists.  UDF/UDTF worker closures
+    # cannot import engine, so their numpy, math and pandas pins are
+    # allowed by name.
+    import ast
+    import pathlib
+
+    worker = {"np.floor", "math.floor", ".floordiv"}
+
+    def is_half(n):
+        if isinstance(n, ast.Call) and getattr(n.func, "attr", "") == "lit":
+            n = n.args[0] if n.args else None
+        return isinstance(n, ast.Constant) and n.value == 0.5
+
+    def has_half_add(n):
+        return any(
+            isinstance(b, ast.BinOp)
+            and isinstance(b.op, ast.Add)
+            and (is_half(b.left) or is_half(b.right))
+            for b in ast.walk(n)
+        )
+
+    def wraps_pin(n):
+        return isinstance(n, ast.Call) and getattr(n.func, "id", "") in (
+            "pin",
+            "pin_int",
+        )
+
+    pins, spellings = [], []
+    for path in sorted(pathlib.Path("engine").glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            site = f"{path.name}:{getattr(node, 'lineno', 0)}"
+            if isinstance(node, ast.Call) and getattr(
+                node.func, "attr", ""
+            ) in ("floor", "floordiv"):
+                recv = node.func.value
+                name = f"{getattr(recv, 'id', '')}.{node.func.attr}"
+                if name not in worker and has_half_add(node):
+                    pins.append((path.name, site))
+            if isinstance(node, ast.FunctionDef):
+                body = [s for s in node.body if not isinstance(s, ast.Expr)]
+                if node.name in ("_fix", "_fix4") or (
+                    path.name != "core.py"
+                    and len(body) == 1
+                    and isinstance(body[0], ast.Return)
+                    and wraps_pin(body[0].value)
+                ):
+                    spellings.append(site)
+            if isinstance(node, ast.Assign):
+                names = {getattr(t, "id", "") for t in node.targets}
+                if "_FIX4_SQL" in names or (
+                    isinstance(node.value, ast.Lambda) and wraps_pin(node.value.body)
+                ):
+                    spellings.append(site)
+    assert [p for p in pins if p[0] != "core.py"] == [], "float pin outside core.py"
+    assert len(pins) == 2, "core.pin / core.pin_int lost their pin"
+    assert spellings == [], "private spelling of the pin helper"
+
+
 @pytest.mark.parametrize(
     "key",
     [
