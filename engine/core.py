@@ -92,15 +92,20 @@ def scoped_sql_conf(spark: SparkSession, confs: dict):
     pure scheduling overhead when each stage carries a few thousand
     rows.  Plans that execute AFTER the block see the caller's settings,
     so any key using this must materialize inside the scope (sink-key
-    shape: write, then return a read-back frame)."""
-    prev = {k: spark.conf.get(k) for k in confs}
+    shape: write, then return a read-back frame).  A key that was unset
+    before the scope is unset again after it, so the caller's conf map
+    comes back exactly as it was, also when the body raises."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
     for k, v in confs.items():
         spark.conf.set(k, str(v))
     try:
         yield
     finally:
         for k, v in prev.items():
-            spark.conf.set(k, v)
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 _MODEL_ARTIFACT_MAX_ROWS = 4096

@@ -24,6 +24,7 @@ from engine.core import (
     pin,
     pin_int,
     query,
+    scoped_sql_conf,
     scratch,
     scratch_path,
     session_memo,
@@ -1047,16 +1048,10 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     fix = base.filter(F.col("yr") == 1997).withColumn(
         "cents", F.col("cents") * 2
     )
-    _MODE = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(_MODE, None)
-    spark.conf.set(_MODE, "dynamic")
-    try:
+    with scoped_sql_conf(
+        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
         fix.write.mode("overwrite").partitionBy("yr").parquet(path)
-    finally:
-        if prev is None:
-            spark.conf.unset(_MODE)
-        else:
-            spark.conf.set(_MODE, prev)
     back = spark.read.parquet(path)
     return back.groupBy(F.col("yr").cast("int").alias("yr")).agg(
         F.count("*").alias("n"),

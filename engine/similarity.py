@@ -4500,11 +4500,10 @@ def sim_ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     in both engines."""
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # ranked feeds inv (crn=1, all vectors) and qrank (5 queries) — the
-    # crossJoin+window subtree is nontrivial and read twice: persist +
-    # eager count (r12 rule; the shared crn<=2 diamond cannot serve the
-    # crn<=4 sweep).  nrm rides it, so inv/qrank reuse it in scoring.
+    # crossJoin+window subtree is nontrivial and read twice: persist (the
+    # shared crn<=2 diamond cannot serve the crn<=4 sweep).  nrm rides
+    # it, so inv/qrank reuse it in scoring.
     ranked = _ivf_ranked(e, max(_IVF_SWEEP)).persist()
-    ranked.count()
     inv = ranked.filter(F.col("crn") == 1).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("e_emb"),
@@ -4528,7 +4527,6 @@ def sim_ivf_probe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # One scored frame serves every p: grid join on lr <= p.
     sc = sc.persist()
-    sc.count()
     grid = spark.range(1).select(
         F.explode(
             F.array(*[F.lit(p).cast("long") for p in _IVF_SWEEP])

@@ -47,16 +47,51 @@ from engine.io import configure, load
 # at query start (recorded in the checkpoint).  The staged sources replay
 # a handful of small files, so 32 state-store instances per microbatch
 # are pure commit overhead — 8 measured 2-3× faster per stream key at
-# sf0.1 (smoke 2.8 s → 0.9 s).  In production this knob is sized to state
-# volume; here every query starts on a fresh checkpoint, so the narrower
-# setting never conflicts with stored state.
+# sf0.1 (smoke 2.8 s → 0.9 s).  Most of that gap was process forks, not
+# scheduling: on a JVM without libhadoop every state file a task creates
+# or renames forks a `chmod` or `readlink`, so the count of forks scaled
+# with the count of state stores.  In production this knob is sized to
+# state volume; here every query starts on a fresh checkpoint, so the
+# narrower setting never conflicts with stored state.
 _STREAM_SHUFFLE_PARTITIONS = 8
+
+_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 @contextlib.contextmanager
-def _stream_shuffle(spark: SparkSession):
-    confs = {"spark.sql.shuffle.partitions": _STREAM_SHUFFLE_PARTITIONS}
-    with scoped_sql_conf(spark, confs):
+def _stream_scope(spark: SparkSession, confs: dict | None = None):
+    """Runtime SQL confs for starting an engine stream; every
+    ``writeStream...start()`` in the engine runs inside this scope
+    (tests/test_plans.py guards it), and the caller's confs come back
+    when it exits.  ``confs`` adds per-key stream-start confs (the
+    RocksDB provider).
+
+    - ``checkpointFileManagerClass`` = the FileSystem manager.  Every
+      engine checkpoint lives under ``engine.core.scratch``, which is
+      local disk or tmpfs, where its rename is one ``rename(2)``.  The
+      default FileContext manager calls ``getFileLinkStatus`` on every
+      rename, and a JVM without libhadoop forks a ``readlink`` for each
+      (``stream_dedup_state``: 320 ``readlink`` and 96 ``chmod`` per
+      call without this scope, 60 ``chmod`` with it).  A checkpoint on
+      a remote store would keep Spark's default manager.
+    - ``stateStore.unloadOnCommit`` = true.  Every engine stream is an
+      ``availableNow`` drain into a fresh checkpoint, resumed at most
+      inside the call that made it, so a state-store provider kept
+      loaded after its commit only holds maps and threads (4
+      checksum-manager threads per provider, alive until the 60-s
+      maintenance pass).
+    - ``shuffle.partitions`` = min(8, default parallelism): the state
+      tasks of a microbatch run in one wave."""
+    parts = min(_STREAM_SHUFFLE_PARTITIONS, spark.sparkContext.defaultParallelism)
+    scope = {
+        "spark.sql.streaming.checkpointFileManagerClass": _CHECKPOINT_FILE_MANAGER,
+        "spark.sql.streaming.stateStore.unloadOnCommit": "true",
+        "spark.sql.shuffle.partitions": parts,
+    }
+    with scoped_sql_conf(spark, {**scope, **(confs or {})}):
         yield
 
 
@@ -125,21 +160,25 @@ def _events_stream(
     return reader.parquet(src)
 
 
-def _run_to_memory(agg: DataFrame, mode: str, name: str):
+def _run_to_memory(
+    agg: DataFrame, mode: str, name: str, confs: dict | None = None
+):
     """Drain ``agg`` (availableNow) into the memory sink named ``name``
-    and return the terminated StreamingQuery.  The name is fixed per
-    key, so a repeat call replaces the previous temp view and its
-    checkpoint: a long-lived session keeps at most one sink and one
-    checkpoint per key.  A frame a caller already holds from an
-    earlier call keeps reading the sink it was resolved against."""
-    with _stream_shuffle(agg.sparkSession):
+    and return the terminated StreamingQuery; ``confs`` go to
+    :func:`_stream_scope`.  The name is fixed per key, so a repeat call
+    replaces the previous temp view and its checkpoint: a long-lived
+    session keeps at most one sink and one checkpoint per key.  A frame
+    a caller already holds from an earlier call keeps reading the sink
+    it was resolved against."""
+    with _stream_scope(agg.sparkSession, confs):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
-            # Explicit checkpoint on the fast scratch base: without it
-            # Spark puts the temp checkpoint under java.io.tmpdir (the
-            # disk-backed /tmp) — the fsync-per-microbatch tax the
-            # engine.core.scratch_path docstring quantifies.
+            # Explicit checkpoint in engine scratch (one area per key,
+            # removed at exit); without it Spark leaves a temp
+            # checkpoint under java.io.tmpdir.  What a checkpoint costs
+            # is a forked `chmod`/`readlink` per state file on a JVM
+            # without libhadoop (see _stream_scope), not its fsyncs.
             .option("checkpointLocation", scratch(f"ckpt_{name}"))
             .outputMode(mode)
             .trigger(availableNow=True)
@@ -147,6 +186,26 @@ def _run_to_memory(agg: DataFrame, mode: str, name: str):
         )
         q.awaitTermination()
     return q
+
+
+_ROCKSDB_PROVIDER = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider"
+    )
+}
+
+
+def _require_rocksdb(q) -> None:
+    """Raise unless ``q``'s last progress reports RocksDB custom
+    metrics, so a silently ignored provider conf cannot pass."""
+    ops = (q.lastProgress or {}).get("stateOperators") or []
+    metrics = {k for op in ops for k in (op.get("customMetrics") or {})}
+    if not any("rocksdb" in m.lower() for m in metrics):
+        raise RuntimeError(
+            "RocksDB state store provider did not engage — no "
+            f"rocksdb custom metrics in progress: {sorted(metrics)}"
+        )
 
 
 @query(
@@ -360,7 +419,7 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(sink)
 
-    with _stream_shuffle(spark):
+    with _stream_scope(spark):
         q = (
             _events_stream(spark, src)
             .writeStream.foreachBatch(write_batch)
@@ -524,28 +583,8 @@ def stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(pin_int(F.col("value"), 100)).alias("sum_value_cents"),
         )
     )
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prev = spark.conf.get(prov_key, None)
-    spark.conf.set(prov_key, rocksdb)
-    try:
-        q = _run_to_memory(agg, "complete", "rocksdb_state")
-        progress = q.lastProgress or {}
-        ops = progress.get("stateOperators") or []
-        metrics = {k for op in ops for k in (op.get("customMetrics") or {})}
-        if not any("rocksdb" in m.lower() for m in metrics):
-            raise RuntimeError(
-                "RocksDB state store provider did not engage — no "
-                f"rocksdb custom metrics in progress: {sorted(metrics)}"
-            )
-    finally:
-        if prev is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev)
+    q = _run_to_memory(agg, "complete", "rocksdb_state", _ROCKSDB_PROVIDER)
+    _require_rocksdb(q)
     return spark.table(q.name).select(
         F.col("w.start").alias("hour_start"),
         "event_type",
@@ -608,7 +647,7 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    with _stream_shuffle(spark):
+    with _stream_scope(spark):
         q = (
             counted.writeStream.format("noop")
             .option("checkpointLocation", ckpt)
@@ -687,37 +726,17 @@ def stream_rocksdb_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prev = spark.conf.get(prov_key, None)
-    spark.conf.set(prov_key, rocksdb)
-    try:
-        with _stream_shuffle(spark):
-            q = (
-                acc.writeStream.format("noop")
-                .option("checkpointLocation", ckpt)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        progress = q.lastProgress or {}
-        ops = progress.get("stateOperators") or []
-        metrics = {k for op in ops for k in (op.get("customMetrics") or {})}
-        if not any("rocksdb" in m.lower() for m in metrics):
-            raise RuntimeError(
-                "RocksDB state store provider did not engage — no "
-                f"rocksdb custom metrics in progress: {sorted(metrics)}"
-            )
-        state = spark.read.format("statestore").load(ckpt)
-    finally:
-        if prev is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev)
+    with _stream_scope(spark, _ROCKSDB_PROVIDER):
+        q = (
+            acc.writeStream.format("noop")
+            .option("checkpointLocation", ckpt)
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    _require_rocksdb(q)
+    state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.user_id").alias("user_id"),
         F.col("value.groupState.n").cast("long").alias("n_events"),
@@ -778,7 +797,7 @@ def stream_join_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("v_ts"),
     )
     joined = clicks.join(views, F.col("c_user") == F.col("v_user"), "inner")
-    with _stream_shuffle(spark):
+    with _stream_scope(spark):
         q = (
             joined.writeStream.format("noop")
             .option("checkpointLocation", ckpt)
@@ -995,7 +1014,7 @@ def stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     qname = "rate_source"
-    with _stream_shuffle(spark):
+    with _stream_scope(spark):
         q = (
             agg.writeStream.format("memory")
             .queryName(qname)
@@ -1288,7 +1307,7 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         return write_batch
 
     def start(poison: bool):
-        with _stream_shuffle(spark):
+        with _stream_scope(spark):
             return (
                 _events_stream(spark, src, max_files_per_trigger=1)
                 .select("event_id", "event_type", "value")
@@ -1374,7 +1393,7 @@ def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(batch_id).cast("long").alias("batch_id"), "n_rows"
         ).write.mode("append").parquet(sink)
 
-    with _stream_shuffle(spark):
+    with _stream_scope(spark):
         q = (
             _events_stream(spark, src, max_files_per_trigger=1)
             .writeStream.foreachBatch(record_batch)
@@ -1471,7 +1490,7 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "seq", "grp", "amount",
         ).write.mode("append").parquet(sink)
 
-    with _stream_shuffle(spark):
+    with _stream_scope(spark):
         for _run in range(4):
             q = (
                 spark.readStream.format("synthetic_ledger_stream").load()

@@ -11,10 +11,12 @@ import sys
 import threading
 import time
 
+import statistics
+
 import pytest
 
 import engine
-from engine.core import scratch_path, staged_build_once
+from engine.core import scoped_sql_conf, scratch_path, staged_build_once
 from tests.conftest import SF_DIR
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -57,6 +59,68 @@ def test_repeat_calls_leave_no_residue(spark, key):
     assert first_rows == last_rows
     if not key.startswith("sink_"):
         assert sorted(first.collect()) == last_rows
+
+
+def _forks_so_far():
+    """The host's count of processes forked since boot, or None where
+    /proc/stat is absent."""
+    try:
+        with open("/proc/stat") as f:
+            for line in f:
+                if line.startswith("processes "):
+                    return int(line.split()[1])
+    except OSError:
+        return None
+
+
+def test_stream_warm_calls_leave_no_state_threads_confs_or_forks(spark):
+    """Warm calls of a stateful stream key leave no checksum-manager
+    thread of a loaded state-store provider behind, leave the session's
+    conf map as it was, and fork few processes: on a JVM without
+    libhadoop the default checkpoint manager forked a `readlink` per
+    rename and a `chmod` per create (~870 processes and threads per
+    call).  /proc/stat counts the whole host, so the bound is on the
+    median of three calls."""
+    run = engine.QUERIES["stream_dedup_state"]
+    run(spark, SF_DIR).collect()
+    confs = spark.conf.getAll
+    forks = []
+    for _ in range(3):
+        before = _forks_so_far()
+        run(spark, SF_DIR).collect()
+        if before is not None:
+            forks.append(_forks_so_far() - before)
+    threads = spark.sparkContext._jvm.java.lang.Thread.getAllStackTraces()
+    left = [
+        t.getName()
+        for t in threads.keySet().toArray()
+        if t.isAlive() and t.getName().startswith("ChecksumCheckpointFileManager")
+    ]
+    assert left == []
+    assert spark.conf.getAll == confs
+    if forks:
+        assert statistics.median(forks) < 400, forks
+
+
+def test_scoped_sql_conf_restores_set_and_unset_keys(spark):
+    """A key unset before the scope is unset after it, and a set key
+    gets its value back, also when the body raises."""
+    unset = "spark.sql.sources.partitionOverwriteMode"
+    held = "spark.sql.shuffle.partitions"
+    assert spark.conf.get(unset, None) is None
+    value = spark.conf.get(held, None)
+    assert value is not None
+    flipped = str(int(value) + 1)
+    with scoped_sql_conf(spark, {unset: "dynamic", held: flipped}):
+        assert spark.conf.get(unset) == "dynamic"
+        assert spark.conf.get(held) == flipped
+    assert spark.conf.get(unset, None) is None
+    assert spark.conf.get(held) == value
+    with pytest.raises(RuntimeError):
+        with scoped_sql_conf(spark, {unset: "dynamic", held: flipped}):
+            raise RuntimeError("body fails")
+    assert spark.conf.get(unset, None) is None
+    assert spark.conf.get(held) == value
 
 
 def _run_python(code: str, scratch_base: str) -> str:

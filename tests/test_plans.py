@@ -514,6 +514,49 @@ def test_float_pin_has_one_home():
     assert spellings == [], "private spelling of the pin helper"
 
 
+def test_stream_starts_run_inside_stream_scope():
+    # Every writeStream...start() in engine/ sits inside `with
+    # _stream_scope(...)`, the one owner of stream-start confs: a stream
+    # started outside it writes its checkpoint through Spark's default
+    # FileContext manager (a forked `readlink` per rename on a JVM
+    # without libhadoop) and keeps its state stores loaded after commit.
+    import ast
+    import pathlib
+
+    def chain_has_write_stream(n):
+        while isinstance(n, (ast.Attribute, ast.Call)):
+            if isinstance(n, ast.Attribute) and n.attr == "writeStream":
+                return True
+            n = n.func if isinstance(n, ast.Call) else n.value
+        return False
+
+    def is_scope(item):
+        c = item.context_expr
+        return isinstance(c, ast.Call) and getattr(c.func, "id", "") == "_stream_scope"
+
+    starts, outside = [], []
+    for path in sorted(pathlib.Path("engine").glob("*.py")):
+        tree = ast.parse(path.read_text())
+        parent = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", "") == "start"
+                and chain_has_write_stream(node.func.value)
+            ):
+                continue
+            starts.append(f"{path.name}:{node.lineno}")
+            p = parent.get(node)
+            while p is not None and not (
+                isinstance(p, ast.With) and any(map(is_scope, p.items))
+            ):
+                p = parent.get(p)
+            if p is None:
+                outside.append(f"{path.name}:{node.lineno}")
+    assert starts, "no writeStream...start() found: the guard lost its target"
+    assert outside == [], "stream started outside _stream_scope"
+
+
 @pytest.mark.parametrize(
     "key",
     [
