@@ -1,4 +1,5 @@
-"""Sources, sinks, and session configuration (SURVEY.md §2.1).
+"""Sources and sinks (SURVEY.md §2.1); the session is configured by
+:func:`engine.core.configure`, which the registry runs before every key.
 
 All loaders go through :func:`load` so the events ns-timestamp fix
 (SURVEY.md §7.3 item 2) is applied exactly once, in one place.
@@ -44,39 +45,6 @@ TABLES = [
     "embeddings",
 ]
 
-def configure(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable session tuning.
-
-    The driver owns the SparkSession, so only dynamic SQL confs are used:
-    - ``nanosAsLong``: events.ts is parquet timestamp[ns], which PySpark
-      4.1.2 refuses to read natively (PARQUET_TYPE_ILLEGAL).
-    - UTC session timezone: keeps collected timestamps equal to the stored
-      wall-clock values DuckDB returns.
-    - AQE + Arrow on; these are Spark-4 defaults but pinned defensively.
-
-    Idempotence is probed from the session's own conf, NOT an id(spark)
-    cache: CPython reuses id() after GC, so a fresh session could alias a
-    dead one's cache entry and silently skip the nanosAsLong fix
-    (ADVICE r2 #3 — same defect class as register_views).
-    """
-    if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None) == "true":
-        return spark
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    # The driver hands us a DEFAULT session: shuffle.partitions=200.
-    # 200 reduce tasks per stage over sf0.01-sf0.1 inputs is pure
-    # scheduling overhead (measured: the all-key sf0.01 sweep drops
-    # ~35% with 32) and directly burns the driver's verify budget.
-    # Only the UNTOUCHED default is overridden: a session whose owner
-    # set partitions explicitly (the 8-partition test fixture, a scoped
-    # override already in effect) keeps its value.
-    if spark.conf.get("spark.sql.shuffle.partitions") == "200":
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-    return spark
-
-
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Read one corpus table; normalizes events.ts to µs TimestampType.
 
@@ -85,8 +53,8 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     with isAdjustedToUTC=false (round 4: reads as TIMESTAMP_NTZ).  Every
     downstream operator assumes session-UTC TimestampType (unix_micros
     rejects NTZ), so both encodings fold to the same LTZ wall-clock here
-    — the session timezone is pinned UTC by configure(), which makes the
-    NTZ→LTZ cast value-preserving and DuckDB-identical.
+    — the session timezone is pinned UTC by core.configure, which makes
+    the NTZ→LTZ cast value-preserving and DuckDB-identical.
 
     Each table is resolved once per session (``core.session_memo``,
     keyed on the table file's fingerprint, nothing persisted): a repeat
@@ -95,7 +63,6 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     and a footer probe per query.  Two loads of one table are therefore
     ONE frame: a self-join must alias both sides (``a.alias("x")``).
     """
-    configure(spark)
     path = os.path.join(sf_dir, f"{table}.parquet")
 
     def build():
@@ -122,20 +89,22 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Temp views named exactly like the driver's DuckDB oracle views.
 
-    Idempotence marker lives IN the session conf (not a Python-side
-    id(spark) cache — CPython reuses id() after GC, so a later session
-    could alias a dead session's entry and silently skip registration,
-    ADVICE r2 #3).  The marker stores the registered sf_dir and its
-    corpus fingerprint, so switching scale factors or regenerating the
-    corpus re-registers instead of serving stale views.
+    Registered once per session and corpus state: ONE
+    ``core.session_memo`` entry, versioned on the sf_dir, its corpus
+    fingerprint and the session (temp views are per session), so a
+    switch of scale factor, a regenerated corpus or another session
+    re-registers.  The entry is not keyed per sf_dir: sf A → B → A would
+    then hit A's stale entry while the views still name B's tables.
     """
-    marker = "spark.graft.registered_sf_dir"
-    registered = f"{sf_dir}|{fingerprint(sf_dir)}"
-    if spark.conf.get(marker, None) == registered:
-        return
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
-    spark.conf.set(marker, registered)
+
+    def build():
+        for t in TABLES:
+            load(spark, sf_dir, t).createOrReplaceTempView(t)
+        return None, []
+
+    session_memo(
+        spark, "views", "", build, version=(sf_dir, fingerprint(sf_dir), spark)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -431,7 +400,6 @@ def sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the plain join on the original tables (bucketing never
     changes results).
     """
-    configure(spark)
     path = scratch("bucketed")
     for table, key_col in (("orders", "o_custkey"), ("customer", "c_custkey")):
         tbl_name = f"eng_bucketed_{table}"
@@ -619,8 +587,6 @@ def scan_partition_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan itself skips non-qualifying partitions — I/O proportional
     to the dim filter, not the fact size.  The partitioned table stages
     build-once per corpus (immutable input → marker-cached)."""
-    configure(spark)
-
     def build(dst: str) -> None:
         # ONE file per month partition: the default write parallelism
         # sprays ~32 small files into each of ~80 partitions, and a
@@ -710,11 +676,11 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rid = base + r
                 yield (partition.value, rid, (rid * 37) % 10000)
 
-    configure(spark)
-    marker = "spark.graft.pyds_registered"
-    if spark.conf.get(marker, None) != "true":
-        spark.dataSource.register(_SyntheticLedgerSource)
-        spark.conf.set(marker, "true")
+    session_memo(
+        spark, "ds:synthetic_ledger", "",
+        lambda: (spark.dataSource.register(_SyntheticLedgerSource), []),
+        version=spark,
+    )
     src = spark.read.format("synthetic_ledger").load()
     return src.groupBy("part_id").agg(
         F.count("*").alias("n"),
@@ -816,11 +782,11 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         def abort(self, messages):  # noqa: ANN001 — API signature
             pass
 
-    configure(spark)
-    marker = "spark.graft.pyds_sink_registered"
-    if spark.conf.get(marker, None) != "true":
-        spark.dataSource.register(_JsonlDirSink)
-        spark.conf.set(marker, "true")
+    session_memo(
+        spark, "ds:jsonl_dir_sink", "",
+        lambda: (spark.dataSource.register(_JsonlDirSink), []),
+        version=spark,
+    )
 
     dst = scratch("pyds_sink")
 
@@ -978,7 +944,6 @@ def source_csv_malformed_permissive(spark: SparkSession, sf_dir: str) -> DataFra
             f.write("\n".join(lines) + "\n")
 
     src = staged_build_once("csv_malformed", sf_dir, build)
-    configure(spark)
     df = spark.read.csv(
         src,
         header=True,
@@ -1032,7 +997,6 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     full table, no window where other partitions are missing.  The
     oracle reconstructs the expected post-backfill table arithmetically.
     """
-    configure(spark)
     base = (
         load(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 10 == 0)
@@ -1089,8 +1053,6 @@ def scan_files_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ``_metadata`` is populated by the scan operator itself (no
     join against a listing); grouping by a value parsed from it is a
     plain map-side-combinable aggregate."""
-    configure(spark)
-
     def build(dst: str) -> None:
         o = load(spark, sf_dir, "orders")
         for i in range(4):
@@ -1338,17 +1300,11 @@ def scan_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # flow through every executor and are dropped; metrics accumulate).
     observed.write.format("noop").mode("overwrite").save()
     m = obs.get  # bounded: exactly one metrics row, the observe idiom
-    return spark.createDataFrame(
-        [
-            (
-                int(m["n_rows"]),
-                int(m["sum_qty_cents"]),
-                int(m["n_high_disc"]),
-                int(m["n_null_shipdate"]),
-            )
-        ],
-        "n_rows long, sum_qty_cents long, n_high_disc long,"
-        " n_null_shipdate long",
+    return spark.range(1).select(
+        *(
+            F.lit(int(m[c])).cast("long").alias(c)
+            for c in ("n_rows", "sum_qty_cents", "n_high_disc", "n_null_shipdate")
+        )
     )
 
 
@@ -1476,7 +1432,6 @@ def source_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write(b"not a document")
 
     src = staged_build_once("binaryfiles", sf_dir, build)
-    configure(spark)
     df = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.bin")

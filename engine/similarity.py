@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from engine.core import ORACLES as _ORACLES
-from engine.core import pin, pin_int, query, session_memo
+from engine.core import fingerprint, pin, pin_int, query, session_memo
 from engine.dedup import _COS_STEP_SQL
 from engine.io import load
 
@@ -2057,10 +2057,10 @@ def graph_reachability_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole subtrees — fail loudly instead (r6 ADVICE).  The guard is
     # an eager agg + driver job (exempt from the no-collect rule as an
     # input-validation probe, like collect_model_artifact), so it is
-    # MEMOIZED per corpus dir via session conf (r7 ADVICE: it was
-    # re-scanning documents on every invocation, inflating bench).
-    marker = "spark.graft.reachContiguous"
-    if spark.conf.get(marker, None) != sf_dir:
+    # MEMOIZED per corpus state (r7 ADVICE: it was re-scanning documents
+    # on every invocation, inflating bench), versioned on the corpus
+    # fingerprint: a regenerated corpus is probed again.
+    def probe():
         lo, hi, n = d.agg(
             F.min("doc_id"), F.max("doc_id"), F.count("*")
         ).first()
@@ -2071,7 +2071,11 @@ def graph_reachability_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "ancestor join drops subtrees — synthesize the ancestor "
                 "closure before re-enabling"
             )
-        spark.conf.set(marker, sf_dir)
+        return True, []
+
+    session_memo(
+        spark, "reach_contiguous", sf_dir, probe, version=fingerprint(sf_dir)
+    )
     state = d.select(
         F.col("doc_id").alias("node"),
         F.when(
@@ -4675,23 +4679,17 @@ def sim_pca_power_topcomp(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver work on a bounded artifact.  Guards: every product bound
     asserted < 2^52 in-kernel and in-iteration; a zero rescaled norm
     raises loudly rather than emitting a degenerate direction."""
-    import numpy as np
-    import pandas as pd
-
     v, num, den, trace = _pca_topdir(spark, sf_dir)
-    out = pd.DataFrame(
-        {
-            "dim": np.arange(1, 65, dtype=np.int64),
-            "loading_q": np.array(v, dtype=np.int64),
-            "ray_num": np.int64(num),
-            "ray_den": np.int64(den),
-            "trace": np.int64(trace),
-            # num >= 0 always (A is PSD) — plain trunc-div matches both
-            # engines on the nonnegative domain.
-            "share_bp": np.int64(10000 * num // (den * trace)),
-        }
+    return spark.range(1, 65).select(
+        F.col("id").alias("dim"),
+        F.lit(v).cast("array<bigint>")[F.col("id") - 1].alias("loading_q"),
+        F.lit(num).cast("long").alias("ray_num"),
+        F.lit(den).cast("long").alias("ray_den"),
+        F.lit(trace).cast("long").alias("trace"),
+        # num >= 0 always (A is PSD) — plain trunc-div matches both
+        # engines on the nonnegative domain.
+        F.lit(10000 * num // (den * trace)).cast("long").alias("share_bp"),
     )
-    return spark.createDataFrame(out)
 
 
 def _pca_topdir(spark: SparkSession, sf_dir: str):

@@ -41,7 +41,7 @@ from engine.core import (
     staged_build_once,
     staged_marker,
 )
-from engine.io import configure, load
+from engine.io import load
 
 # Stateful-streaming parallelism is fixed by spark.sql.shuffle.partitions
 # at query start (recorded in the checkpoint).  The staged sources replay
@@ -152,7 +152,6 @@ def _events_stream(
     into one microbatch per file (oldest mtime first), which is what
     lets the watermark advance between phases.
     """
-    configure(spark)
     schema = _staged_schema(spark, src)
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
@@ -995,7 +994,6 @@ def stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import time
 
-    configure(spark)
     ckpt = scratch("rate_source_ckpt")
     src = (
         spark.readStream.format("rate-micro-batch")
@@ -1476,11 +1474,11 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         def simpleStreamReader(self, schema):  # noqa: ANN001 — API sig
             return _LedgerStreamReader()
 
-    configure(spark)
-    marker = "spark.graft.pyds_stream_registered"
-    if spark.conf.get(marker, None) != "true":
-        spark.dataSource.register(_LedgerStreamSource)
-        spark.conf.set(marker, "true")
+    session_memo(
+        spark, "ds:synthetic_ledger_stream", "",
+        lambda: (spark.dataSource.register(_LedgerStreamSource), []),
+        version=spark,
+    )
     sink = scratch("python_stream_sink")
     ckpt = os.path.join(sink, "_checkpoint")
 

@@ -1,11 +1,14 @@
 """Lifecycle of what the engine leaves behind: repeat calls add no temp
-views, scratch areas or cached blocks; the per-process scratch root is
-removed at exit and swept once its process is gone; concurrent staged
-builds never see each other's half-built directories."""
+views, scratch areas or cached blocks; every key runs on a configured
+session, and per-session state follows the session and the corpus it
+was built from; the per-process scratch root is removed at exit and
+swept once its process is gone; concurrent staged builds never see each
+other's half-built directories."""
 
 from __future__ import annotations
 
 import os
+import shutil
 import subprocess
 import sys
 import threading
@@ -17,7 +20,7 @@ import pytest
 
 import engine
 from engine.core import scoped_sql_conf, scratch_path, staged_build_once
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, SMOKE_SF_DIR
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -121,6 +124,56 @@ def test_scoped_sql_conf_restores_set_and_unset_keys(spark):
             raise RuntimeError("body fails")
     assert spark.conf.get(unset, None) is None
     assert spark.conf.get(held) == value
+
+
+def test_a_key_configures_a_fresh_session(spark):
+    """The registry configures the session before every key, so a key
+    that reads nothing through io.load sees the same session as one
+    that does, whichever keys ran before it."""
+    fresh = spark.newSession()
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    assert fresh.conf.get(nanos, None) != "true"
+    engine.QUERIES["source_range_synthetic"](fresh, SF_DIR).collect()
+    assert fresh.conf.get(nanos) == "true"
+
+
+def test_register_views_follows_the_last_sf_dir(spark):
+    """sf A → B → A: the views read A's tables again after the last
+    call (an entry per sf_dir would hit A's stale entry while the views
+    still named B's tables)."""
+    from engine.io import register_views
+
+    other = spark.newSession()
+
+    def n_lineitem():
+        return other.sql("SELECT count(*) FROM lineitem").first()[0]
+
+    register_views(other, SF_DIR)
+    n_a = n_lineitem()
+    register_views(other, SMOKE_SF_DIR)
+    assert n_lineitem() != n_a
+    register_views(other, SF_DIR)
+    assert n_lineitem() == n_a
+
+
+def test_reachability_guard_probes_a_regenerated_corpus(spark, tmp_path):
+    """A corpus regenerated in a live session with a gap in doc_id is
+    probed again and raises, instead of the ancestor join silently
+    dropping the subtree under the missing id."""
+    import duckdb
+
+    path = tmp_path / "documents.parquet"
+    shutil.copy(f"{SF_DIR}/documents.parquet", path)
+    run = engine.QUERIES["graph_reachability_roots"]
+    assert run(spark, str(tmp_path)).count() > 0
+    tmp = tmp_path / "documents.tmp"
+    duckdb.execute(
+        f"COPY (SELECT * FROM read_parquet('{path}') WHERE doc_id <> 7) "
+        f"TO '{tmp}' (FORMAT PARQUET)"
+    )
+    tmp.replace(path)
+    with pytest.raises(RuntimeError, match="contiguous doc_ids"):
+        run(spark, str(tmp_path)).collect()
 
 
 def _run_python(code: str, scratch_base: str) -> str:

@@ -15,6 +15,7 @@ import math
 import pytest
 
 import engine
+from engine.core import configure
 from tests.conftest import SF_DIR
 
 KEYS = sorted(engine.QUERIES)
@@ -86,8 +87,19 @@ def test_oracle_output_types(key, duck):
     )
 
 
+def _session_state(spark):
+    """The SQL conf map and the ids of the active streams."""
+    return spark.conf.getAll, sorted(str(q.id) for q in spark.streams.active)
+
+
 @pytest.mark.parametrize("key", KEYS)
 def test_parity(key, spark, duck):
+    # A key leaves the session as it found it: no conf set or unset, no
+    # stream left running.  The session is configured first (the
+    # registry does so before every key), so configure's own keys need
+    # no exemption and no key gets an allow-list.
+    configure(spark)
+    before = _session_state(spark)
     df = engine.QUERIES[key](spark, SF_DIR)
 
     if key not in engine.ROWS_ONLY:
@@ -122,6 +134,7 @@ def test_parity(key, spark, duck):
     proj = df.select(*sorted(df.columns))
     spark_rows = [tuple(r) for r in proj.collect()]
     spark_cols = proj.columns
+    assert _session_state(spark) == before, f"{key}: session state changed"
 
     if key in engine.ROWS_ONLY:
         assert len(spark_rows) >= 0  # rows-only: executes without error

@@ -255,21 +255,38 @@ def test_no_driver_side_collect_in_engine_source():
 
 
 def test_session_state_has_one_owner_in_engine_source():
-    # Session-lifetime frames are held only through
+    # Session-lifetime frames and "done once" facts are held only through
     # engine.core.session_memo, and memory sinks take fixed per-key
-    # names: a hand-rolled memo (keyed on applicationId) or a per-call
-    # sink counter anywhere else would regrow the per-module copies and
-    # the per-call residue they replaced.
+    # names: a hand-rolled memo (keyed on applicationId), a marker in
+    # the caller's SQL conf or a per-call sink counter anywhere else
+    # would regrow the per-module copies and the per-session residue
+    # they replaced.  Confs are written only by core.configure and
+    # core.scoped_sql_conf, and configure runs from one place: the
+    # registry's wrapper around every key.
+    import ast
     import pathlib
 
+    srcs = {p.name: p.read_text() for p in pathlib.Path("engine").glob("*.py")}
     bad = [
-        (p.name, needle)
-        for p in pathlib.Path("engine").glob("*.py")
-        if p.name != "core.py"
-        for needle in ("applicationId", "_SINK_IDS")
-        if needle in p.read_text()
+        (name, needle)
+        for name, text in srcs.items()
+        if name != "core.py"
+        for needle in (
+            "applicationId", "_SINK_IDS", "spark.graft.", "spark.conf.set(",
+            "spark.conf.unset(",
+        )
+        if needle in text
     ]
     assert not bad, f"session state held outside engine.core: {bad}"
+    calls = [
+        f"{name}:{node.lineno}"
+        for name, text in srcs.items()
+        for node in ast.walk(ast.parse(text))
+        if isinstance(node, ast.Call)
+        and "configure" in (getattr(node.func, "id", None),
+                            getattr(node.func, "attr", None))
+    ]
+    assert len(calls) == 1, f"configure called from {calls}"
 
 
 def test_scratch_and_staging_have_one_owner_in_engine_source():
@@ -312,16 +329,11 @@ def test_corpus_tables_are_read_only_through_io_load():
         % "|".join(TABLES)
     )
     srcs = {p.name: p.read_text() for p in pathlib.Path("engine").glob("*.py")}
-    # engine/io.py is checked too, outside load's own body; the one
-    # other match there is register_views' conf marker, which names the
-    # sf_dir but reads nothing.
+    # engine/io.py is checked too, outside load's own body.
     io_src = srcs["io.py"]
     start = io_src.index("\ndef load(")
     end = io_src.index("\ndef ", start + 1)
     srcs["io.py"] = io_src[:start] + io_src[end:]
-    marker = 'registered = f"{sf_dir}|{fingerprint(sf_dir)}"'
-    assert srcs["io.py"].count(marker) == 1
-    srcs["io.py"] = srcs["io.py"].replace(marker, "")
     bad = [
         (name, m.group(0))
         for name, text in srcs.items()
