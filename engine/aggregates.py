@@ -729,19 +729,6 @@ _CMS_A = [(2654435761 * (2 * j + 1)) % _CMS_P or 1 for j in range(_CMS_D)]
 _CMS_B = [(40503 * j * j + 987654321 + j) % _CMS_P for j in range(_CMS_D)]
 
 
-def _cms_positions(keys):
-    """(n,) int64 keys -> (n, D) int32 counter positions; pure integer
-    math inside proven bit-widths (a·x + b < 2^62 + 2^31, ANSI-safe
-    pattern shared with the MinHash family in engine/dedup.py)."""
-    import numpy as np
-
-    x = np.abs(keys.astype(np.int64)) % _CMS_P
-    return np.stack(
-        [((_CMS_A[j] * x + _CMS_B[j]) % _CMS_P) % _CMS_W for j in range(_CMS_D)],
-        axis=1,
-    )
-
-
 def _cms_oracle() -> str:
     """DuckDB twin of agg_cms_heavy_hitters — exact because the whole
     sketch is the repo's deterministic universal-hash family (NOT
@@ -832,10 +819,25 @@ def agg_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.col("user_id"))
     keyed = ev.select(hh.alias("key"))
 
+    # One kernel for the sketch build and the point queries, a closure
+    # so the Python workers get it by value (they cannot import engine).
+    def positions(keys):
+        """(n,) int64 keys -> (n, D) int32 counter positions; pure integer
+        math inside proven bit-widths (a·x + b < 2^62 + 2^31, ANSI-safe
+        pattern shared with the MinHash family in engine/dedup.py)."""
+        x = np.abs(keys.astype(np.int64)) % _CMS_P
+        return np.stack(
+            [
+                ((_CMS_A[j] * x + _CMS_B[j]) % _CMS_P) % _CMS_W
+                for j in range(_CMS_D)
+            ],
+            axis=1,
+        )
+
     def build(batches):
         for pdf in batches:
             cnt = np.zeros((_CMS_D, _CMS_W), dtype=np.int64)
-            pos = _cms_positions(pdf["key"].to_numpy())
+            pos = positions(pdf["key"].to_numpy())
             for j in range(_CMS_D):
                 np.add.at(cnt[j], pos[:, j], 1)
             yield pd.DataFrame(
@@ -860,7 +862,7 @@ def agg_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     @F.pandas_udf("array<int>")
     def cand_pos(keys):
-        pos = _cms_positions(keys.to_numpy())
+        pos = positions(keys.to_numpy())
         base = np.arange(_CMS_D, dtype=np.int64) * _CMS_W
         return pd.Series(list((pos + base[None, :]).astype(np.int32)))
 

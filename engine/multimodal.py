@@ -9,8 +9,8 @@ from the documents table (UTF-8 bytes of the text) — the point is that
 the Spark-side plumbing (BinaryType schema, byte-level functions, Arrow
 binary batches through mapInPandas, frame chunking) is real and tested.
 
-The actual codec decode (JPEG/PNG/ffmpeg) is STUBBED: see
-:func:`_decode_media` — it raises ``NotImplementedError`` for real
+The actual codec decode (JPEG/PNG/ffmpeg) is STUBBED: see ``decode``
+in :func:`mm_decode_features` — it raises ``NotImplementedError`` for real
 codecs (the libraries aren't in this container) and provides a
 deterministic fake for the synthetic payloads.
 """
@@ -130,23 +130,6 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _decode_media(media_type: str, payload: bytes) -> bytes:
-    """STUB decode step — clearly marked.
-
-    A production deployment decodes here (PIL for images, soundfile for
-    audio, ffmpeg frame extraction for video); none of those libraries
-    exist in this container, and the corpus payloads are synthetic.  The
-    deterministic fake returns the raw bytes (identity "decode") so the
-    downstream feature extraction exercises the full Arrow path.
-    """
-    if media_type not in _MEDIA_TYPES:
-        raise NotImplementedError(
-            f"no codec for media_type={media_type!r}; real codecs (PIL/"
-            "ffmpeg/soundfile) are intentionally not wired in this sandbox"
-        )
-    return payload
-
-
 @query("mm_decode_features", oracle=None)  # rows-only: Python-side decode
 def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode + feature-extract via mapInPandas: Arrow ships the binary
@@ -156,6 +139,23 @@ def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     a real image/audio featurizer plugs into."""
     import numpy as np
 
+    def decode(media_type: str, payload: bytes) -> bytes:
+        """STUB decode step — clearly marked.
+
+        A production deployment decodes here (PIL for images, soundfile
+        for audio, ffmpeg frame extraction for video); none of those
+        libraries are installed, and the corpus payloads are synthetic.
+        The deterministic fake returns the raw bytes (identity "decode")
+        so the downstream feature extraction exercises the full Arrow
+        path.  A closure, so the Python workers get it by value.
+        """
+        if media_type not in _MEDIA_TYPES:
+            raise NotImplementedError(
+                f"no codec for media_type={media_type!r}; real codecs (PIL/"
+                "ffmpeg/soundfile) are intentionally not wired in"
+            )
+        return payload
+
     def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             # Per-item decode (the honest codec shape), then ONE
@@ -164,7 +164,7 @@ def mm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             # (items × 256) joint bincount gives every item's byte
             # histogram in a single numpy call.
             raws = [
-                _decode_media(t, bytes(p))
+                decode(t, bytes(p))
                 for t, p in zip(pdf["media_type"], pdf["payload"])
             ]
             k = len(raws)

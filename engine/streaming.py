@@ -1,15 +1,19 @@
 """Structured Streaming operators (SURVEY.md §2.10, ``stream_*`` keys).
 
-All keys replay the events parquet through ``readStream`` with an
-``availableNow`` trigger and return the materialized sink as a batch
-DataFrame.  Keys whose drained result is DETERMINISTIC regardless of
-microbatch split (complete-mode aggs, exhaustive dedup, final state)
-carry full DuckDB oracles — the streaming path is hash-verified; so do
-keys whose watermark phasing is FIXED by explicit staged mtimes +
+Every key runs its stream through :func:`_drain`, the one stream start
+in the engine: an ``availableNow`` trigger drains what the source holds
+at start in exactly-once microbatches, then stops — Structured
+Streaming's run-once form of a stream as a bounded batch job (Armbrust
+et al., SIGMOD 2018).  Most keys replay the events parquet through
+``readStream``; the rate key drains one batch of the built-in rate
+source and the Python-source key one page per drain.  Keys whose
+drained result is DETERMINISTIC regardless of microbatch split
+(complete-mode aggs, exhaustive dedup, final state) carry full DuckDB
+oracles — the streaming path is hash-verified; so do keys whose
+watermark phasing is FIXED by explicit staged mtimes +
 maxFilesPerTrigger (``stream_watermark_late``: the emitted append-mode
 set is a pure function of the staging).  Keys whose output genuinely
-depends on runtime batch boundaries (stream-stream joins under
-eviction, rate/offset mechanics) stay rows-only; their gate is
+depends on runtime batch boundaries stay rows-only; their gate is
 tests/test_streaming.py, which asserts each result equals (or is the
 watermark-consistent subset of) its batch twin from engine.events.
 
@@ -18,16 +22,18 @@ by swapping the trigger; state stores (window aggs, dedup state) live on
 executors and are bounded by the watermark horizon, not by stream length.
 
 On-disk layout has two owners in engine.core.  Replay sources are
-INPUTS, staged once per corpus fingerprint by ``staged_build_once``.
-Checkpoints, WALs, state stores and file sinks are SCRATCH from
-``scratch(name)``: wiped per call, one area per key name (a repeat call
-replaces its predecessor) under a per-process root removed at exit.
+INPUTS, staged once per corpus fingerprint by :func:`_stage_phases`
+(``staged_build_once`` underneath), one parquet file per phase with a
+pinned phase mtime.  Checkpoints, WALs, state stores and file sinks are
+SCRATCH from ``scratch(name)``: wiped per call, one area per key name (a
+repeat call replaces its predecessor) under a per-process root removed
+at exit.
 """
 
 from __future__ import annotations
 
-import contextlib
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,14 +66,33 @@ _CHECKPOINT_FILE_MANAGER = (
     "FileSystemBasedCheckpointFileManager"
 )
 
+_ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
 
-@contextlib.contextmanager
-def _stream_scope(spark: SparkSession, confs: dict | None = None):
-    """Runtime SQL confs for starting an engine stream; every
-    ``writeStream...start()`` in the engine runs inside this scope
-    (tests/test_plans.py guards it), and the caller's confs come back
-    when it exits.  ``confs`` adds per-key stream-start confs (the
-    RocksDB provider).
+
+def _drain(
+    df: DataFrame,
+    ckpt: str,
+    mode: str = "append",
+    sink="noop",
+    name: str | None = None,
+    rocksdb: bool = False,
+):
+    """Run the stream ``df`` to its end and return the terminated
+    StreamingQuery — the only stream start in the engine
+    (tests/test_plans.py guards it).  The trigger is always
+    ``availableNow``: the query drains what its source holds at start in
+    exactly-once microbatches, then stops.  ``sink`` is a sink format
+    (``"noop"``, ``"memory"``) or a function run per microbatch
+    (foreachBatch); ``name`` names the query (the memory sink's temp
+    view).  ``ckpt`` is the caller's checkpoint (an
+    ``engine.core.scratch`` area): without one Spark leaves a temp
+    checkpoint under java.io.tmpdir.  A query still active when the
+    await raises is stopped, so an op that fails leaves no stream
+    running, and the caller's confs come back either way.
+
+    Runtime SQL confs held while the query runs:
 
     - ``checkpointFileManagerClass`` = the FileSystem manager.  Every
       engine checkpoint lives under ``engine.core.scratch``, which is
@@ -75,24 +100,67 @@ def _stream_scope(spark: SparkSession, confs: dict | None = None):
       default FileContext manager calls ``getFileLinkStatus`` on every
       rename, and a JVM without libhadoop forks a ``readlink`` for each
       (``stream_dedup_state``: 320 ``readlink`` and 96 ``chmod`` per
-      call without this scope, 60 ``chmod`` with it).  A checkpoint on
+      call without this conf, 60 ``chmod`` with it).  A checkpoint on
       a remote store would keep Spark's default manager.
-    - ``stateStore.unloadOnCommit`` = true.  Every engine stream is an
-      ``availableNow`` drain into a fresh checkpoint, resumed at most
-      inside the call that made it, so a state-store provider kept
-      loaded after its commit only holds maps and threads (4
-      checksum-manager threads per provider, alive until the 60-s
-      maintenance pass).
+    - ``stateStore.unloadOnCommit`` = true.  Every drain starts on a
+      fresh checkpoint, resumed at most inside the call that made it,
+      so a state-store provider kept loaded after its commit only holds
+      maps and threads (4 checksum-manager threads per provider, alive
+      until the 60-s maintenance pass).
     - ``shuffle.partitions`` = min(8, default parallelism): the state
-      tasks of a microbatch run in one wave."""
-    parts = min(_STREAM_SHUFFLE_PARTITIONS, spark.sparkContext.defaultParallelism)
-    scope = {
+      tasks of a microbatch run in one wave.
+    - ``rocksdb``: the RocksDB state-store provider.  The drain then
+      raises unless the query's last progress reports RocksDB custom
+      metrics, so a silently ignored provider conf cannot pass."""
+    spark = df.sparkSession
+    confs = {
         "spark.sql.streaming.checkpointFileManagerClass": _CHECKPOINT_FILE_MANAGER,
         "spark.sql.streaming.stateStore.unloadOnCommit": "true",
-        "spark.sql.shuffle.partitions": parts,
+        "spark.sql.shuffle.partitions": min(
+            _STREAM_SHUFFLE_PARTITIONS, spark.sparkContext.defaultParallelism
+        ),
     }
-    with scoped_sql_conf(spark, {**scope, **(confs or {})}):
-        yield
+    if rocksdb:
+        confs["spark.sql.streaming.stateStore.providerClass"] = _ROCKSDB_PROVIDER
+    with scoped_sql_conf(spark, confs):
+        w = df.writeStream.outputMode(mode).option("checkpointLocation", ckpt)
+        w = w.foreachBatch(sink) if callable(sink) else w.format(sink)
+        if name is not None:
+            w = w.queryName(name)
+        q = w.trigger(availableNow=True).start()
+        try:
+            q.awaitTermination()
+        finally:
+            if q.isActive:
+                q.stop()
+    if rocksdb:
+        _require_rocksdb(q)
+    return q
+
+
+def _require_rocksdb(q) -> None:
+    """Raise unless ``q``'s last progress reports RocksDB custom
+    metrics."""
+    ops = (q.lastProgress or {}).get("stateOperators") or []
+    metrics = {k for op in ops for k in (op.get("customMetrics") or {})}
+    if not any("rocksdb" in m.lower() for m in metrics):
+        raise RuntimeError(
+            "RocksDB state store provider did not engage — no "
+            f"rocksdb custom metrics in progress: {sorted(metrics)}"
+        )
+
+
+def _drain_to_memory(
+    df: DataFrame, mode: str, name: str, rocksdb: bool = False
+) -> DataFrame:
+    """:func:`_drain` ``df`` into the memory sink ``name`` and return the
+    sink as a batch frame.  The name is fixed per key, so a repeat call
+    replaces the previous temp view and its checkpoint (``ckpt_<name>``):
+    a long-lived session keeps at most one sink and one checkpoint per
+    key.  A frame a caller already holds from an earlier call keeps
+    reading the sink it was resolved against."""
+    _drain(df, scratch(f"ckpt_{name}"), mode, "memory", name, rocksdb)
+    return df.sparkSession.table(name)
 
 
 _PHASE_EPOCH = 1_600_000_000  # fixed base for explicit phase mtimes
@@ -114,17 +182,36 @@ def _stamp_phase(src: str, phase: int, stamped: set[str]) -> None:
             stamped.add(p)
 
 
+def _stage_phases(name: str, sf_dir: str, phases) -> str:
+    """The staged replay source ``name``: ``phases()`` returns the phase
+    frames in replay order, and each is written as one parquet file
+    (``coalesce(1)``) whose mtime is pinned to its phase, so a stream
+    with ``maxFilesPerTrigger=1`` reads phase ``i`` as microbatch ``i``.
+    Built once per corpus through ``staged_build_once``, so ``phases``
+    runs only on a staging miss."""
+
+    def build(src: str) -> None:
+        stamped: set[str] = set()
+        for i, frame in enumerate(phases()):
+            frame.coalesce(1).write.mode("append").parquet(src)
+            _stamp_phase(src, i, stamped)
+
+    return staged_build_once(name, sf_dir, build)
+
+
+def _us_bounds(ev: DataFrame):
+    """(min, max) of ``ev.ts`` in epoch µs — the span a phased replay
+    splits."""
+    return ev.agg(F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))).first()
+
+
 def _stage_events_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Copy the events table into a scratch *directory* (the streaming
+    """The events table as a one-phase staged *directory* (the streaming
     file source requires a directory, and the corpus ships single files;
     a production deployment would already have a partitioned directory).
     The batch rewrite also bakes in the ns→µs timestamp normalization.
-    Build-once per corpus via the `_STAGING_DONE` marker."""
-
-    def build(dst: str) -> None:
-        load(spark, sf_dir, "events").coalesce(1).write.mode("overwrite").parquet(dst)
-
-    return staged_build_once("src", sf_dir, build)
+    Every consumer reads it in one batch."""
+    return _stage_phases("src", sf_dir, lambda: [load(spark, sf_dir, "events")])
 
 
 def _staged_schema(spark: SparkSession, src: str):
@@ -144,8 +231,8 @@ def _staged_schema(spark: SparkSession, src: str):
 def _events_stream(
     spark: SparkSession, src: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """readStream over a staged events parquet directory.  Every staged
-    source is written from a :func:`engine.io.load` frame, so ``ts`` is
+    """readStream over a staged parquet directory.  Every staged source
+    is written from an :func:`engine.io.load` frame, so ``ts`` is
     already a µs TimestampType and needs no fold here.
 
     ``max_files_per_trigger`` is a SOURCE option: it splits the replay
@@ -157,54 +244,6 @@ def _events_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(src)
-
-
-def _run_to_memory(
-    agg: DataFrame, mode: str, name: str, confs: dict | None = None
-):
-    """Drain ``agg`` (availableNow) into the memory sink named ``name``
-    and return the terminated StreamingQuery; ``confs`` go to
-    :func:`_stream_scope`.  The name is fixed per key, so a repeat call
-    replaces the previous temp view and its checkpoint: a long-lived
-    session keeps at most one sink and one checkpoint per key.  A frame
-    a caller already holds from an earlier call keeps reading the sink
-    it was resolved against."""
-    with _stream_scope(agg.sparkSession, confs):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            # Explicit checkpoint in engine scratch (one area per key,
-            # removed at exit); without it Spark leaves a temp
-            # checkpoint under java.io.tmpdir.  What a checkpoint costs
-            # is a forked `chmod`/`readlink` per state file on a JVM
-            # without libhadoop (see _stream_scope), not its fsyncs.
-            .option("checkpointLocation", scratch(f"ckpt_{name}"))
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return q
-
-
-_ROCKSDB_PROVIDER = {
-    "spark.sql.streaming.stateStore.providerClass": (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-}
-
-
-def _require_rocksdb(q) -> None:
-    """Raise unless ``q``'s last progress reports RocksDB custom
-    metrics, so a silently ignored provider conf cannot pass."""
-    ops = (q.lastProgress or {}).get("stateOperators") or []
-    metrics = {k for op in ops for k in (op.get("customMetrics") or {})}
-    if not any("rocksdb" in m.lower() for m in metrics):
-        raise RuntimeError(
-            "RocksDB state store provider did not engage — no "
-            f"rocksdb custom metrics in progress: {sorted(metrics)}"
-        )
 
 
 @query(
@@ -237,8 +276,7 @@ def stream_smoke_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(pin_int(F.col("value"), 100)).alias("sum_value_cents"),
         )
     )
-    qname = _run_to_memory(agg, "complete", "smoke_tumbling").name
-    return spark.table(qname).select(
+    return _drain_to_memory(agg, "complete", "smoke_tumbling").select(
         F.col("w.start").alias("hour_start"), "event_type", "n", "sum_value_cents"
     )
 
@@ -286,8 +324,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", F.session_window(F.col("ts"), "30 minutes").alias("w"))
         .agg(F.count("*").alias("n_events"))
     )
-    qname = _run_to_memory(agg, "complete", "session_window").name
-    return spark.table(qname).select(
+    return _drain_to_memory(agg, "complete", "session_window").select(
         "user_id",
         F.unix_micros(F.col("w.start")).alias("start_us"),
         F.unix_micros(F.col("w.end")).alias("window_end_us"),
@@ -328,26 +365,21 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "event_type")
     us = F.unix_micros(F.col("ts"))
 
-    def build(src: str) -> None:
-        lo, hi = ev.agg(
-            F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-        ).first()
+    def phases():
+        lo, hi = _us_bounds(ev)
         quarter = (hi - lo) // 4 + 1
-        stamped: set[str] = set()
+        on_time = []
         for i in range(3):  # three in-order phases cover the full range
             phase_lo = lo + i * quarter
             phase_hi = lo + (i + 1) * quarter + (quarter * 2 if i == 2 else 0)
-            ev.filter((us >= phase_lo) & (us < phase_hi)).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            _stamp_phase(src, i, stamped)
+            on_time.append(ev.filter((us >= phase_lo) & (us < phase_hi)))
         # late phase: first-quarter events replayed with new ids
-        ev.filter(us < lo + quarter).withColumn(
+        late = ev.filter(us < lo + quarter).withColumn(
             "event_id", F.col("event_id") + 1_000_000
-        ).coalesce(1).write.mode("append").parquet(src)
-        _stamp_phase(src, 3, stamped)
+        )
+        return on_time + [late]
 
-    src = staged_build_once("watermark_late", sf_dir, build)
+    src = _stage_phases("watermark_late", sf_dir, phases)
 
     agg = (
         _events_stream(spark, src, max_files_per_trigger=1)
@@ -355,8 +387,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n"))
     )
-    qname = _run_to_memory(agg, "append", "watermark_late").name
-    return spark.table(qname).select(
+    return _drain_to_memory(agg, "append", "watermark_late").select(
         F.col("w.start").alias("hour_start"), "n"
     )
 
@@ -377,19 +408,14 @@ def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     exhaustive and the expected count is exactly the distinct ids)."""
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "event_type")
 
-    def build(src: str) -> None:
-        ev.coalesce(1).write.mode("append").parquet(src)
-        ev.coalesce(1).write.mode("append").parquet(src)
-
-    src = staged_build_once("dedup_state", sf_dir, build)
+    src = _stage_phases("dedup_state", sf_dir, lambda: [ev, ev])
 
     deduped = (
         _events_stream(spark, src)
         .withWatermark("ts", "1 hour")
         .dropDuplicates(["event_id"])
     )
-    qname = _run_to_memory(deduped, "append", "dedup_state").name
-    return spark.table(qname).agg(
+    return _drain_to_memory(deduped, "append", "dedup_state").agg(
         F.count("*").alias("n_rows"),
         F.countDistinct("event_id").alias("n_distinct_ids"),
     )
@@ -418,15 +444,10 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(sink)
 
-    with _stream_scope(spark):
-        q = (
-            _events_stream(spark, src)
-            .writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", os.path.join(sink, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        _events_stream(spark, src), os.path.join(sink, "_checkpoint"),
+        sink=write_batch,
+    )
     return (
         spark.read.parquet(sink)
         .groupBy("event_type")
@@ -462,19 +483,13 @@ def stream_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "user_id")
 
-    def build(src: str) -> None:
-        lo, hi = ev.agg(
-            F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-        ).first()
+    def phases():
+        lo, hi = _us_bounds(ev)
         mid = lo + (hi - lo) // 2
         us = F.unix_micros(F.col("ts"))
-        stamped: set[str] = set()
-        ev.filter(us <= mid).coalesce(1).write.mode("append").parquet(src)
-        _stamp_phase(src, 0, stamped)
-        ev.filter(us > mid).coalesce(1).write.mode("append").parquet(src)
-        _stamp_phase(src, 1, stamped)
+        return [ev.filter(us <= mid), ev.filter(us > mid)]
 
-    src = staged_build_once("stateful_counter", sf_dir, build)
+    src = _stage_phases("stateful_counter", sf_dir, phases)
 
     def count_events(key, pdfs, state: GroupState):
         # Bounded-bucket state (r10 rule; r17 opt — the
@@ -533,12 +548,10 @@ def stream_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    qname = _run_to_memory(counted, "update", "stateful_counter").name
     # update mode emits one row per (user, batch): the final state is the
     # max (counts are monotone).
-    return spark.table(qname).groupBy("user_id").agg(
-        F.max("n_events").alias("n_events")
-    )
+    final = _drain_to_memory(counted, "update", "stateful_counter")
+    return final.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
 
 
 @query(
@@ -582,9 +595,7 @@ def stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(pin_int(F.col("value"), 100)).alias("sum_value_cents"),
         )
     )
-    q = _run_to_memory(agg, "complete", "rocksdb_state", _ROCKSDB_PROVIDER)
-    _require_rocksdb(q)
-    return spark.table(q.name).select(
+    return _drain_to_memory(agg, "complete", "rocksdb_state", rocksdb=True).select(
         F.col("w.start").alias("hour_start"),
         "event_type",
         "n",
@@ -646,15 +657,7 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    with _stream_scope(spark):
-        q = (
-            counted.writeStream.format("noop")
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(counted, ckpt, "update")
     state = spark.read.format("statestore").load(ckpt)
     # applyInPandasWithState nests the user-declared state struct under
     # value.groupState (measured: value: struct<groupState: struct<n>>)
@@ -725,16 +728,7 @@ def stream_rocksdb_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    with _stream_scope(spark, _ROCKSDB_PROVIDER):
-        q = (
-            acc.writeStream.format("noop")
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _require_rocksdb(q)
+    _drain(acc, ckpt, "update", rocksdb=True)
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.user_id").alias("user_id"),
@@ -795,16 +789,7 @@ def stream_join_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("view_id"),
         F.col("ts").alias("v_ts"),
     )
-    joined = clicks.join(views, F.col("c_user") == F.col("v_user"), "inner")
-    with _stream_scope(spark):
-        q = (
-            joined.writeStream.format("noop")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(clicks.join(views, F.col("c_user") == F.col("v_user"), "inner"), ckpt)
 
     def side(name: str, user: str, eid: str, ts: str) -> DataFrame:
         st = (
@@ -853,8 +838,7 @@ def stream_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(pin_int(F.col("value"), 100)).alias("sum_value_cents"),
         )
     )
-    qname = _run_to_memory(agg, "complete", "sliding_agg").name
-    return spark.table(qname).select(
+    return _drain_to_memory(agg, "complete", "sliding_agg").select(
         (F.unix_micros(F.col("w.start")) / 1_000_000).cast("long").alias(
             "win_start_s"
         ),
@@ -915,22 +899,18 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     us = F.unix_micros(F.col("ts"))
 
-    def build(src: str) -> None:
-        lo, hi = ev.agg(
-            F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-        ).first()
+    def phases():
+        lo, hi = _us_bounds(ev)
         half = (hi - lo) // 2 + 1
-        stamped: set[str] = set()
-        for i in range(2):
-            ev.filter(
-                (us >= lo + i * half) & (us < lo + (i + 1) * half)
-            ).coalesce(1).write.mode("append").parquet(src)
-            _stamp_phase(src, i, stamped)
+        return [
+            ev.filter((us >= lo + i * half) & (us < lo + (i + 1) * half))
+            for i in range(2)
+        ]
 
     # name bumped ss_join -> ss_join_2p: staged_build_once caches by
     # (name, corpus fingerprint) only — a build-fn change needs a new
     # name or stale 3-phase staging replays forever.
-    src = staged_build_once("ss_join_2p", sf_dir, build)
+    src = _stage_phases("ss_join_2p", sf_dir, phases)
 
     def side(prefix: str, etype: str) -> DataFrame:
         return (
@@ -951,12 +931,11 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "AND r_ts <= l_ts + INTERVAL 30 MINUTES"
         ),
     )
-    qname = _run_to_memory(joined, "append", "ss_join").name
     # lag in whole seconds via integer div (both engines truncate
     # toward zero; the lag is non-negative by the join band) — the
     # double-division + ANSI-cast form this replaced was also exact
     # here but fails the never-round-a-hashed-float rule by shape.
-    return spark.table(qname).select(
+    return _drain_to_memory(joined, "append", "ss_join").select(
         F.col("l_user").alias("user_id"),
         F.col("l_id").alias("click_id"),
         F.col("r_id").alias("purchase_id"),
@@ -980,24 +959,20 @@ def stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark's NATIVE rate-micro-batch source — the built-in generator a
     streaming deployment smoke-tests throughput with (no file staging at
     all).  Each microbatch emits exactly ``rowsPerBatch`` consecutive
-    values, so the stream's content is a pure function of the batch
-    count — this is the ONE streaming key whose output is
-    SQL-expressible, and its oracle is DuckDB ``range(3000)``: the agg
-    filters to the first three batches' values (0..2999), which are
-    guaranteed complete once batchId ≥ 3, making the complete-mode
-    sink independent of when the query is stopped.
+    values, and an ``availableNow`` drain of this source runs exactly
+    ONE batch (``RatePerMicroBatchStream`` supports the trigger), so the
+    stream's content is one batch of 3000 rows, values 0..2999 — this
+    is the ONE streaming key whose output is SQL-expressible, and its
+    oracle is DuckDB ``range(3000)``.  The ``value < 3000`` filter
+    states that range in the plan.  No batch-id loop and no wall-clock
+    deadline: the drain ends by itself like every other engine stream.
 
     Scale design: the rate source partitions its value range across
-    ``numPartitions``; the residue agg is map-side-combinable.  The
-    stop-by-batch-id loop is driver-side QUERY control (streaming
-    queries are driver-managed by definition), not data iteration.
+    ``numPartitions``; the residue agg is map-side-combinable.
     """
-    import time
-
-    ckpt = scratch("rate_source_ckpt")
     src = (
         spark.readStream.format("rate-micro-batch")
-        .option("rowsPerBatch", 1000)
+        .option("rowsPerBatch", 3000)
         .option("numPartitions", 4)
         .option("startTimestamp", 0)
         .option("advanceMillisPerBatch", 1000)
@@ -1011,37 +986,8 @@ def stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("value").cast("long").alias("total"),
         )
     )
-    qname = "rate_source"
-    with _stream_scope(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        # Unbounded source: stop once the deterministic prefix (3
-        # batches = values 0..2999) has been processed.
-        deadline = time.time() + 120
-        while True:
-            p = q.lastProgress
-            if p is not None and p["batchId"] >= 3:
-                break
-            if time.time() >= deadline:
-                # Loud failure (same convention as _cc_propagate): a
-                # silent partial complete-mode sink would surface as a
-                # confusing driver hash mismatch instead of an error.
-                q.stop()
-                raise RuntimeError(
-                    "stream_rate_source: batchId >= 3 not reached within "
-                    f"120s (lastProgress={p!r}); refusing to return a "
-                    "partial complete-mode aggregate"
-                )
-            time.sleep(0.2)
-        q.stop()
-        q.awaitTermination()
-    return spark.table(qname)
+    _drain(agg, scratch("rate_source_ckpt"), "complete", "memory", "rate_source")
+    return spark.table("rate_source")
 
 
 @query(
@@ -1087,8 +1033,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("cents").alias("sum_cents"),
         )
     )
-    qname = _run_to_memory(agg, "complete", "static_enrich").name
-    return spark.table(qname)
+    return _drain_to_memory(agg, "complete", "static_enrich")
 
 
 def stream_static_enrich_batch_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1155,21 +1100,17 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     us = F.unix_micros(F.col("ts"))
 
-    def build(src: str) -> None:
-        lo, hi = ev.agg(
-            F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-        ).first()
+    def phases():
+        lo, hi = _us_bounds(ev)
         # 2 data phases, not 3 (r18 opt — the ss_join rationale: the
         # emitted set is phase-count-invariant under time-ordered
         # phasing + lag > band + the flush sentinel, and per-microbatch
         # fixed cost dominates; one seam proves cross-batch state).
         half = (hi - lo) // 2 + 1
-        stamped: set[str] = set()
-        for i in range(2):
-            ev.filter(
-                (us >= lo + i * half) & (us < lo + (i + 1) * half)
-            ).coalesce(1).write.mode("append").parquet(src)
-            _stamp_phase(src, i, stamped)
+        data = [
+            ev.filter((us >= lo + i * half) & (us < lo + (i + 1) * half))
+            for i in range(2)
+        ]
         # flush phase: one sentinel per JOIN SIDE, 10 days past the
         # horizon, with the side's exact event_type so it SURVIVES the
         # side filter and reaches the watermark operator (a filtered-out
@@ -1178,7 +1119,7 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         # drops user_id < 0.  Without this phase the last window's
         # unmatched clicks sit in state forever.
         flush_us = hi + 10 * 86400 * 1_000_000
-        spark.createDataFrame(
+        flush = spark.createDataFrame(
             [(9_000_001, -1, "click"), (9_000_002, -2, "purchase")],
             "event_id long, user_id long, event_type string",
         ).select(
@@ -1186,11 +1127,11 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.timestamp_micros(F.lit(flush_us)).alias("ts"),
             "user_id",
             "event_type",
-        ).coalesce(1).write.mode("append").parquet(src)
-        _stamp_phase(src, 2, stamped)
+        )
+        return data + [flush]
 
     # name bumped (staged_build_once caches by name + corpus fingerprint)
-    src = staged_build_once("ss_left_outer_2p", sf_dir, build)
+    src = _stage_phases("ss_left_outer_2p", sf_dir, phases)
 
     def side(prefix: str, etype: str) -> DataFrame:
         # sentinels pass this filter by construction (exact event_type)
@@ -1213,10 +1154,10 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "left_outer",
     )
-    qname = _run_to_memory(joined, "append", "ss_left_outer").name
     # lag via integer div (truncation agrees across engines; NULL rides
     # through div for unmatched rows on both sides).
-    return spark.table(qname).filter(F.col("l_user") >= 0).select(
+    sink = _drain_to_memory(joined, "append", "ss_left_outer")
+    return sink.filter(F.col("l_user") >= 0).select(
         F.col("l_user").alias("user_id"),
         F.col("l_id").alias("click_id"),
         F.col("r_id").alias("purchase_id"),
@@ -1275,18 +1216,12 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
     us = F.unix_micros(F.col("ts"))
 
-    def build(src: str) -> None:
-        lo, hi = ev.agg(
-            F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-        ).first()
+    def phases():
+        lo, hi = _us_bounds(ev)
         mid = (lo + hi) // 2
-        stamped: set[str] = set()
-        ev.filter(us < mid).coalesce(1).write.mode("append").parquet(src)
-        _stamp_phase(src, 0, stamped)
-        ev.filter(us >= mid).coalesce(1).write.mode("append").parquet(src)
-        _stamp_phase(src, 1, stamped)
+        return [ev.filter(us < mid), ev.filter(us >= mid)]
 
-    src = staged_build_once("ckpt_halves", sf_dir, build)
+    src = _stage_phases("ckpt_halves", sf_dir, phases)
     # Sink and checkpoint are NOT cached (staged_build_once is for
     # inputs only — engine.core contract): fresh scratch per invocation
     # so the crash/recover cycle is self-contained and repeatable.
@@ -1304,32 +1239,26 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         return write_batch
 
-    def start(poison: bool):
-        with _stream_scope(spark):
-            return (
-                _events_stream(spark, src, max_files_per_trigger=1)
-                .select("event_id", "event_type", "value")
-                .writeStream.foreachBatch(writer(poison))
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
+    def run(poison: bool) -> None:
+        _drain(
+            _events_stream(spark, src, max_files_per_trigger=1).select(
+                "event_id", "event_type", "value"
+            ),
+            ckpt,
+            sink=writer(poison),
+        )
 
-    q1 = start(poison=True)
-    crashed = False
     try:
-        q1.awaitTermination()
+        run(poison=True)
     except StreamingQueryException as e:
         if "spark_graft_injected_crash" not in str(e):
             raise
-        crashed = True
-    if not crashed:
+    else:
         raise RuntimeError(
             "stream_checkpoint_recovery: injected crash did not fire — "
             "the replay collapsed into one microbatch; recovery untested"
         )
-    q2 = start(poison=False)
-    q2.awaitTermination()
+    run(poison=False)
 
     recovered = spark.read.option("basePath", sink).parquet(
         os.path.join(sink, "batch_id=*")
@@ -1375,15 +1304,10 @@ def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the production catch-up configuration."""
     ev = load(spark, sf_dir, "events").select("event_id", "event_type", "ts")
 
-    def build(src: str) -> None:
-        stamped: set[str] = set()
-        for r in range(5):
-            ev.filter(F.col("event_id") % 5 == r).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            _stamp_phase(src, r, stamped)
-
-    src = staged_build_once("rate_limit", sf_dir, build)
+    src = _stage_phases(
+        "rate_limit", sf_dir,
+        lambda: [ev.filter(F.col("event_id") % 5 == r) for r in range(5)],
+    )
     sink = scratch("rate_limit_ledger")
 
     def record_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1391,15 +1315,11 @@ def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(batch_id).cast("long").alias("batch_id"), "n_rows"
         ).write.mode("append").parquet(sink)
 
-    with _stream_scope(spark):
-        q = (
-            _events_stream(spark, src, max_files_per_trigger=1)
-            .writeStream.foreachBatch(record_batch)
-            .option("checkpointLocation", os.path.join(sink, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        _events_stream(spark, src, max_files_per_trigger=1),
+        os.path.join(sink, "_checkpoint"),
+        sink=record_batch,
+    )
     return spark.read.parquet(sink).select("batch_id", "n_rows")
 
 
@@ -1488,27 +1408,22 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "seq", "grp", "amount",
         ).write.mode("append").parquet(sink)
 
-    with _stream_scope(spark):
-        for _run in range(4):
-            q = (
-                spark.readStream.format("synthetic_ledger_stream").load()
-                .writeStream.foreachBatch(write_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            try:
-                done = spark.read.parquet(sink).count() >= 500
-            except Exception:
-                done = False
-            if done:
-                break
-        else:
-            raise RuntimeError(
-                "python stream source did not drain 500 rows in 4 "
-                "availableNow runs — offset continuation broken"
-            )
+    for _run in range(4):
+        _drain(
+            spark.readStream.format("synthetic_ledger_stream").load(), ckpt,
+            sink=write_batch,
+        )
+        try:
+            done = spark.read.parquet(sink).count() >= 500
+        except Exception:
+            done = False
+        if done:
+            break
+    else:
+        raise RuntimeError(
+            "python stream source did not drain 500 rows in 4 "
+            "availableNow runs — offset continuation broken"
+        )
     return (
         spark.read.parquet(sink)
         .groupBy("grp")
@@ -1561,7 +1476,7 @@ def stream_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
     over all history is impossible."""
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "event_type")
 
-    def build(src: str) -> None:
+    def phases():
         # The closed-form oracle bakes in three corpus assumptions; a
         # regenerated testdata drop that violates any of them must fail
         # LOUDLY here (one bounded agg at build time), not as a silent
@@ -1589,35 +1504,31 @@ def stream_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
             f"corpus max ts {chk['max_ts']} reaches the advancer horizon"
         )
         assert chk["day1"] > 0, "pre-2024-01-02 replay subset is empty"
-        stamped: set[str] = set()
-        ev.unionAll(ev).coalesce(1).write.mode("append").parquet(src)
-        _stamp_phase(src, 0, stamped)
-        spark.range(1).select(
+        advancer = spark.range(1).select(
             F.lit(100000000).cast("long").alias("event_id"),
             F.lit("2024-02-01").cast("timestamp").alias("ts"),
             F.lit("advancer").alias("event_type"),
-        ).coalesce(1).write.mode("append").parquet(src)
-        _stamp_phase(src, 1, stamped)
-        ev.filter(F.col("ts") < F.lit("2024-01-02").cast("timestamp")).select(
+        )
+        shifted = ev.filter(
+            F.col("ts") < F.lit("2024-01-02").cast("timestamp")
+        ).select(
             "event_id",
             (F.col("ts") + F.expr("INTERVAL 40 DAYS")).alias("ts"),
             "event_type",
-        ).coalesce(1).write.mode("append").parquet(src)
-        _stamp_phase(src, 2, stamped)
+        )
+        return [ev.unionAll(ev), advancer, shifted]
 
-    src = staged_build_once("dropdup_within_wm", sf_dir, build)
+    src = _stage_phases("dropdup_within_wm", sf_dir, phases)
     deduped = (
         _events_stream(spark, src, max_files_per_trigger=1)
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    qname = _run_to_memory(deduped, "append", "dropdup_within_wm").name
-    agg = spark.table(qname).agg(
+    return _drain_to_memory(deduped, "append", "dropdup_within_wm").agg(
         F.count("*").alias("n_rows"),
         F.countDistinct("event_id").alias("n_distinct_ids"),
         (F.count("*") - F.countDistinct("event_id")).alias("n_reemitted"),
     )
-    return agg
 
 
 @query(
@@ -1644,14 +1555,13 @@ def stream_listener_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     metrics describe the same run the sink saw.
 
     Delivery discipline: progress events arrive on the listener bus
-    ASYNCHRONOUSLY after awaitTermination — the key polls bounded
-    (≤15 s) until the terminal event lands, then unsubscribes inside a
-    finally so no listener leaks into other keys' queries.
+    ASYNCHRONOUSLY after awaitTermination — the key waits (≤15 s) on a
+    condition the listener notifies when the terminal event lands, then
+    unsubscribes inside a finally so no listener leaks into other keys'
+    queries.
 
     Scale: listener cost is per-microbatch, not per-row — the
     observability path adds zero work to the data plane."""
-    import time as _time
-
     from pyspark.sql.streaming import StreamingQueryListener
 
     src = _stage_events_dir(spark, sf_dir)
@@ -1668,6 +1578,7 @@ def stream_listener_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         def __init__(self):
             self.progress = []  # (query_id, numInputRows, max state rows)
             self.terminated_ids = set()
+            self.terminated = threading.Condition()
 
         def onQueryStarted(self, event):
             # Deliberately empty (r9 ADVICE): subscribing here would
@@ -1693,7 +1604,9 @@ def stream_listener_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             pass
 
         def onQueryTerminated(self, event):
-            self.terminated_ids.add(str(event.id))
+            with self.terminated:
+                self.terminated_ids.add(str(event.id))
+                self.terminated.notify_all()
 
     cap = _Capture()
     spark.streams.addListener(cap)
@@ -1703,12 +1616,16 @@ def stream_listener_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type")
             .agg(F.count("*").alias("n"))
         )
-        q = _run_to_memory(agg, "complete", "listener_metrics")
+        q = _drain(
+            agg, scratch("ckpt_listener_metrics"), "complete", "memory",
+            "listener_metrics",
+        )
         qid = str(q.id)
-        deadline = _time.time() + 15
-        while qid not in cap.terminated_ids and _time.time() < deadline:
-            _time.sleep(0.2)
-        if qid not in cap.terminated_ids:
+        with cap.terminated:
+            seen = cap.terminated.wait_for(
+                lambda: qid in cap.terminated_ids, timeout=15
+            )
+        if not seen:
             raise RuntimeError(
                 "listener never observed QueryTerminatedEvent within 15 s"
             )
@@ -1762,19 +1679,13 @@ def stream_match_recognize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type"
     )
 
-    def build(src: str) -> None:
-        lo, hi = ev.agg(
-            F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-        ).first()
+    def phases():
+        lo, hi = _us_bounds(ev)
         mid = lo + (hi - lo) // 2
         us = F.unix_micros(F.col("ts"))
-        stamped: set[str] = set()
-        ev.filter(us <= mid).coalesce(1).write.mode("append").parquet(src)
-        _stamp_phase(src, 0, stamped)
-        ev.filter(us > mid).coalesce(1).write.mode("append").parquet(src)
-        _stamp_phase(src, 1, stamped)
+        return [ev.filter(us <= mid), ev.filter(us > mid)]
 
-    src = staged_build_once("match_recognize", sf_dir, build)
+    src = _stage_phases("match_recognize", sf_dir, phases)
 
     def detect(key, pdfs, state: GroupState):
         # BOUNDED-BUCKET state (r10 rule; r17 opt): grouping per USER
@@ -1850,8 +1761,7 @@ def stream_match_recognize(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    qname = _run_to_memory(matched, "append", "match_recognize").name
-    return spark.table(qname)
+    return _drain_to_memory(matched, "append", "match_recognize")
 
 
 # -- state TTL / eviction audit (r16: surface EventTimeTimeout semantics
@@ -1973,28 +1883,22 @@ def stream_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     ev = load(spark, sf_dir, "events").select("ts", "user_id")
-    lo, hi = ev.agg(
-        F.min(F.unix_micros("ts")), F.max(F.unix_micros("ts"))
-    ).first()
+    lo, hi = _us_bounds(ev)
     b1 = lo + (hi - lo) // 3
     b2 = lo + (2 * (hi - lo)) // 3
     half0 = lo + (hi - lo) // 6
     ttl_ms = ((hi - lo) // 10) // 1000
 
-    def build(src: str) -> None:
+    def phases():
         us = F.unix_micros(F.col("ts"))
         u3 = F.col("user_id") % 3 == 0
-        phases = [
+        return [
             ev.filter((us < b1) & ~(u3 & (us >= half0))),
             ev.filter((us >= b1) & (us < b2) & ~u3),
             ev.filter((us >= b2) & (F.col("user_id") % 5 != 0)),
         ]
-        stamped: set[str] = set()
-        for i, ph in enumerate(phases):
-            ph.coalesce(1).write.mode("append").parquet(src)
-            _stamp_phase(src, i, stamped)
 
-    src = staged_build_once("state_ttl", sf_dir, build)
+    src = _stage_phases("state_ttl", sf_dir, phases)
 
     # Per-user grouping is the SEMANTICS here (EventTimeTimeout fires
     # per state row) — ~1500 kernel calls per microbatch are the price
@@ -2035,8 +1939,9 @@ def stream_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    qname = _run_to_memory(audited, "update", "state_ttl").name
-    return spark.table(qname).select("user_id", "n", "last_us", "evicted")
+    return _drain_to_memory(audited, "update", "state_ttl").select(
+        "user_id", "n", "last_us", "evicted"
+    )
 
 
 # -- streaming bloom ingest gate (r17: the dedup_bloom_seen_gate bit set
@@ -2175,15 +2080,10 @@ def stream_bloom_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     ing = _bloom_ingest_rows(d)
 
-    def build(src: str) -> None:
-        stamped: set[str] = set()
-        for b in range(3):
-            ing.filter(F.col("batch_id") == b).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            _stamp_phase(src, b, stamped)
-
-    src = staged_build_once("bloom_ingest", sf_dir, build)
+    src = _stage_phases(
+        "bloom_ingest", sf_dir,
+        lambda: [ing.filter(F.col("batch_id") == b) for b in range(3)],
+    )
 
     def gate(key, pdfs, state: GroupState):
         # Vectorized (r18, guide §4.2): probes answered with one
@@ -2213,12 +2113,7 @@ def stream_bloom_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"row_id": rid, "batch_id": bid, "j": j, "hit": hit}
         )
 
-    schema = _staged_schema(spark, src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = _events_stream(spark, src, max_files_per_trigger=1)
     pos_of = [
         ((F.lit(_BG_A[j]) * (F.col("k") % _M31) + F.lit(_BG_B[j])) % _M31)
         % _BG_M
@@ -2239,9 +2134,8 @@ def stream_bloom_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    qname = _run_to_memory(gated, "append", "bloom_ingest").name
     hits = (
-        spark.table(qname)
+        _drain_to_memory(gated, "append", "bloom_ingest")
         .groupBy("row_id", "batch_id")
         .agg(F.sum("hit").cast("long").alias("n_prev_hits"))
     )

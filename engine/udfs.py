@@ -444,32 +444,6 @@ def udf_apply_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-class _UnnestTyped:
-    """Polymorphic Python UDTF (Spark 4 ``analyze``): unnests ANY array
-    argument to (pos, val) rows, with the output VALUE TYPE derived from
-    the argument's element type at plan time — one registration serves
-    every array column in the warehouse.  ``analyze`` is the static
-    schema-inference hook the plain ``returnType=`` UDTF
-    (``_SplitExpand``) lacks."""
-
-    @staticmethod
-    def analyze(arg):
-        from pyspark.sql.types import IntegerType, StructType
-        from pyspark.sql.udtf import AnalyzeResult
-
-        return AnalyzeResult(
-            schema=StructType()
-            .add("pos", IntegerType())
-            .add("val", arg.dataType.elementType)
-        )
-
-    def eval(self, arr):
-        if arr is None:
-            return
-        for i, v in enumerate(arr):
-            yield i, v
-
-
 @query(
     "udtf_analyze_polymorphic",
     oracle="""
@@ -510,10 +484,36 @@ def udtf_analyze_polymorphic(spark: SparkSession, sf_dir: str) -> DataFrame:
     udf_python_scalar — the API-surface demo; production unnesting of
     typed arrays stays with the native ``explode``/``posexplode``
     (fn_array_explode), which this key's oracle equivalence licenses."""
+
+    class UnnestTyped:
+        """Polymorphic Python UDTF (Spark 4 ``analyze``): unnests ANY array
+        argument to (pos, val) rows, with the output VALUE TYPE derived from
+        the argument's element type at plan time — one registration serves
+        every array column in the warehouse.  ``analyze`` is the static
+        schema-inference hook the plain ``returnType=`` UDTF
+        (``_SplitExpand``) lacks."""
+
+        @staticmethod
+        def analyze(arg):
+            from pyspark.sql.types import IntegerType, StructType
+            from pyspark.sql.udtf import AnalyzeResult
+
+            return AnalyzeResult(
+                schema=StructType()
+                .add("pos", IntegerType())
+                .add("val", arg.dataType.elementType)
+            )
+
+        def eval(self, arr):
+            if arr is None:
+                return
+            for i, v in enumerate(arr):
+                yield i, v
+
     register_views(spark, sf_dir)
     # analyze-based UDTFs take NO returnType — the wrapped class's
     # analyze() supplies the schema per call site.
-    spark.udtf.register("unnest_typed", udtf(_UnnestTyped))
+    spark.udtf.register("unnest_typed", udtf(UnnestTyped))
     return spark.sql(
         """
         WITH arrs AS (
@@ -532,41 +532,6 @@ def udtf_analyze_polymorphic(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE n.pos = s.pos
         """
     )
-
-
-class _RunningTotals:
-    """Per-partition stateful UDTF: running count + running cents sum.
-
-    With ``TABLE(v) PARTITION BY user_id ORDER BY event_id`` Spark
-    instantiates a FRESH instance per partition key group and feeds
-    rows in ORDER BY order, so plain instance attributes are correct
-    per-user accumulators — the table-function analogue of a running
-    window.  The single-key guard raises loudly if the partitioning
-    contract were ever violated (two users in one instance would
-    silently merge their running sums)."""
-
-    def __init__(self):
-        self.key = None
-        self.n = 0
-        self.cents = 0
-
-    def eval(self, row):
-        import math
-
-        uid = row["user_id"]
-        if self.key is None:
-            self.key = uid
-        elif self.key != uid:
-            raise RuntimeError(
-                "PARTITION BY contract violated: one UDTF instance saw "
-                f"user_ids {self.key} and {uid}"
-            )
-        self.n += 1
-        # identical IEEE ops to the SQL FLOOR(value*100 + 0.5) on both
-        # engines (CLAUDE.md rounding rule); value ≥ 0 in this corpus
-        # but math.floor == SQL FLOOR for negatives too.
-        self.cents += int(math.floor(row["value"] * 100 + 0.5))
-        yield uid, row["event_id"], self.n, self.cents
 
 
 @query(
@@ -601,11 +566,46 @@ def udtf_table_arg_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on the partition key (same as the window twin);
     state is O(1) per group instance.  Row-at-a-time Python boundary —
     API-surface key; hot paths use the native window (win_running_sum)."""
+
+    class RunningTotals:
+        """Per-partition stateful UDTF: running count + running cents sum.
+
+        With ``TABLE(v) PARTITION BY user_id ORDER BY event_id`` Spark
+        instantiates a FRESH instance per partition key group and feeds
+        rows in ORDER BY order, so plain instance attributes are correct
+        per-user accumulators — the table-function analogue of a running
+        window.  The single-key guard raises loudly if the partitioning
+        contract were ever violated (two users in one instance would
+        silently merge their running sums)."""
+
+        def __init__(self):
+            self.key = None
+            self.n = 0
+            self.cents = 0
+
+        def eval(self, row):
+            import math
+
+            uid = row["user_id"]
+            if self.key is None:
+                self.key = uid
+            elif self.key != uid:
+                raise RuntimeError(
+                    "PARTITION BY contract violated: one UDTF instance saw "
+                    f"user_ids {self.key} and {uid}"
+                )
+            self.n += 1
+            # identical IEEE ops to the SQL FLOOR(value*100 + 0.5) on both
+            # engines (CLAUDE.md rounding rule); value ≥ 0 in this corpus
+            # but math.floor == SQL FLOOR for negatives too.
+            self.cents += int(math.floor(row["value"] * 100 + 0.5))
+            yield uid, row["event_id"], self.n, self.cents
+
     register_views(spark, sf_dir)
     spark.udtf.register(
         "running_totals",
         udtf(
-            _RunningTotals,
+            RunningTotals,
             returnType=(
                 "user_id bigint, event_id bigint, "
                 "running_n bigint, running_cents bigint"

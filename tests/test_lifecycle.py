@@ -3,7 +3,9 @@ views, scratch areas or cached blocks; every key runs on a configured
 session, and per-session state follows the session and the corpus it
 was built from; the per-process scratch root is removed at exit and
 swept once its process is gone; concurrent staged builds never see each
-other's half-built directories."""
+other's half-built directories; an op whose stream fails leaves confs
+and streams as it found them; UDF kernels run where workers cannot
+import engine."""
 
 from __future__ import annotations
 
@@ -174,6 +176,66 @@ def test_reachability_guard_probes_a_regenerated_corpus(spark, tmp_path):
     tmp.replace(path)
     with pytest.raises(RuntimeError, match="contiguous doc_ids"):
         run(spark, str(tmp_path)).collect()
+
+
+@pytest.mark.parametrize("key", ["stream_dedup_state", "stream_state_reader"])
+def test_a_failing_stream_leaves_confs_and_no_stream(spark, monkeypatch, key):
+    """A stream whose first microbatch raises makes its op raise, and
+    leaves the conf map as configure left it and no stream running:
+    the memory-sink drain (stream_dedup_state) and the noop-sink drain
+    (stream_state_reader) alike."""
+    from pyspark.errors import StreamingQueryException
+
+    from engine import streaming
+    from engine.core import configure
+
+    staged = streaming._events_stream
+
+    def failing(*args, **kwargs):
+        sdf = staged(*args, **kwargs)
+
+        def boom(batches):
+            raise RuntimeError("injected microbatch fault")
+
+        return sdf.mapInPandas(boom, schema=sdf.schema)
+
+    monkeypatch.setattr(streaming, "_events_stream", failing)
+    configure(spark)
+    confs = spark.conf.getAll
+    with pytest.raises(StreamingQueryException, match="injected microbatch fault"):
+        engine.QUERIES[key](spark, SF_DIR)
+    assert spark.conf.getAll == confs
+    assert spark.streams.active == []
+
+
+def test_worker_kernels_run_outside_the_checkout(tmp_path):
+    """UDF and UDTF kernels reach the Python workers by value.  The
+    driver here has the checkout on sys.path but runs from another
+    directory with no PYTHONPATH, so the workers cannot import engine:
+    a kernel that is a module-level engine function or class (pickled
+    by reference) fails with ModuleNotFoundError."""
+    keys = [
+        "agg_cms_heavy_hitters",
+        "mm_decode_features",
+        "udtf_analyze_polymorphic",
+        "udtf_table_arg_partitioned",
+    ]
+    code = (
+        f"import sys\nsys.path.insert(0, {REPO!r})\n"
+        "from pyspark.sql import SparkSession\n"
+        "import engine\n"
+        "spark = (SparkSession.builder.master('local[2]')\n"
+        "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
+        f"for key in {keys!r}:\n"
+        f"    assert engine.QUERIES[key](spark, {SMOKE_SF_DIR!r}).collect(), key\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
 
 
 def _run_python(code: str, scratch_base: str) -> str:

@@ -527,46 +527,79 @@ def test_float_pin_has_one_home():
 
 
 def test_stream_starts_run_inside_stream_scope():
-    # Every writeStream...start() in engine/ sits inside `with
-    # _stream_scope(...)`, the one owner of stream-start confs: a stream
-    # started outside it writes its checkpoint through Spark's default
-    # FileContext manager (a forked `readlink` per rename on a JVM
-    # without libhadoop) and keeps its state stores loaded after commit.
+    # streaming._drain is the one stream start in engine/ and the stream
+    # scope every start runs inside: it holds the stream-start confs
+    # (FileSystem checkpoint manager, unload on commit, one wave of
+    # state tasks), triggers availableNow only and stops a query its
+    # await left running.  A writer built anywhere else would skip all
+    # three, and a wall-clock trigger or a sleep loop would make a drain
+    # depend on host speed.  Phase files are written and stamped only by
+    # _stage_phases, and the ts-bounds probe the phased replays split
+    # has one home, _us_bounds.
     import ast
     import pathlib
 
-    def chain_has_write_stream(n):
-        while isinstance(n, (ast.Attribute, ast.Call)):
-            if isinstance(n, ast.Attribute) and n.attr == "writeStream":
-                return True
-            n = n.func if isinstance(n, ast.Call) else n.value
-        return False
-
-    def is_scope(item):
-        c = item.context_expr
-        return isinstance(c, ast.Call) and getattr(c.func, "id", "") == "_stream_scope"
-
-    starts, outside = [], []
-    for path in sorted(pathlib.Path("engine").glob("*.py")):
-        tree = ast.parse(path.read_text())
+    def defs_around(tree):
         parent = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+
+        def defs(n):
+            out = []
+            while n in parent:
+                n = parent[n]
+                if isinstance(n, ast.FunctionDef):
+                    out.append(n.name)
+            return out
+
+        return defs
+
+    def is_call(n, name):
+        return isinstance(n, ast.Call) and name in (
+            getattr(n.func, "id", None), getattr(n.func, "attr", None)
+        )
+
+    def is_ts_min_probe(n):
+        return (
+            is_call(n, "min")
+            and len(n.args) == 1
+            and is_call(n.args[0], "unix_micros")
+            and [getattr(a, "value", None) for a in n.args[0].args] == ["ts"]
+        )
+
+    sites = {k: [] for k in ("start", "writeStream", "trigger", "stamp",
+                             "staged", "probe")}
+    for path in sorted(pathlib.Path("engine").glob("*.py")):
+        text = path.read_text()
+        tree = ast.parse(text)
+        defs = defs_around(tree)
         for node in ast.walk(tree):
-            if not (
-                isinstance(node, ast.Call)
-                and getattr(node.func, "attr", "") == "start"
-                and chain_has_write_stream(node.func.value)
-            ):
-                continue
-            starts.append(f"{path.name}:{node.lineno}")
-            p = parent.get(node)
-            while p is not None and not (
-                isinstance(p, ast.With) and any(map(is_scope, p.items))
-            ):
-                p = parent.get(p)
-            if p is None:
-                outside.append(f"{path.name}:{node.lineno}")
-    assert starts, "no writeStream...start() found: the guard lost its target"
-    assert outside == [], "stream started outside _stream_scope"
+            site = (path.name, defs(node))
+            if is_call(node, "start") and isinstance(node.func, ast.Attribute):
+                sites["start"].append(site)
+            if isinstance(node, ast.Attribute) and node.attr == "writeStream":
+                sites["writeStream"].append(site)
+            if is_call(node, "trigger"):
+                kw = [(k.arg, getattr(k.value, "value", None)) for k in node.keywords]
+                sites["trigger"].append((path.name, kw))
+            if is_call(node, "_stamp_phase"):
+                sites["stamp"].append(site)
+            if path.name == "streaming.py" and is_call(node, "staged_build_once"):
+                sites["staged"].append(site)
+            if is_ts_min_probe(node):
+                sites["probe"].append(site)
+        for needle in ("processingTime", "sleep("):
+            assert needle not in text, f"{path.name} holds {needle!r}"
+
+    def only_in(found, home):
+        return len(found) == 1 and home in found[0][1]
+
+    assert only_in(sites["start"], "_drain"), sites["start"]
+    assert only_in(sites["writeStream"], "_drain"), sites["writeStream"]
+    assert sites["trigger"] == [("streaming.py", [("availableNow", True)])], sites[
+        "trigger"
+    ]
+    assert only_in(sites["stamp"], "_stage_phases"), sites["stamp"]
+    assert only_in(sites["staged"], "_stage_phases"), sites["staged"]
+    assert only_in(sites["probe"], "_us_bounds"), sites["probe"]
 
 
 @pytest.mark.parametrize(
