@@ -28,11 +28,19 @@ _COPY_OFFSET = 100_000
 def _neardup_corpus(d: DataFrame) -> DataFrame:
     """(doc_id, text) documents ∪ planted near-copies at doc_id + 100000
     with text + ' zz yy' — the one Spark home of the planted corpus (SQL
-    twin: the ``corpus`` CTE of :data:`_KR_SHINGLES_SQL`)."""
-    return d.unionByName(
-        d.select(
-            (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
+    twin: the ``corpus`` CTE of :data:`_KR_SHINGLES_SQL`).  Each scanned
+    row emits itself and its copy (``inline`` of a 2-struct array), so
+    the corpus costs one scan of ``documents``, not the two of a
+    union."""
+    return d.select(
+        F.inline(
+            F.array(
+                F.struct("doc_id", "text"),
+                F.struct(
+                    (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"),
+                    F.concat(F.col("text"), F.lit(" zz yy")).alias("text"),
+                ),
+            )
         )
     )
 
@@ -1638,9 +1646,10 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale, content-ranked selection is reproducible.
 
     Scale design: fingerprint is per-row map work; ranking and cluster
-    size share ONE fp partitioning (single shuffle, two window reads);
-    no join at all — the grouped-ranking form of dedup_exact's
-    hash-first design."""
+    size are ONE window operator over one fp partitioning (single
+    shuffle; the count runs over the whole partition frame of the
+    rank's spec); no join at all — the grouped-ranking form of
+    dedup_exact's hash-first design."""
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     fp = _neardup_corpus(d).select(
         "doc_id",
@@ -1648,12 +1657,12 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("text").alias("n_chars"),
     )
     w = Window.partitionBy("fp").orderBy(F.asc("n_chars"), F.asc("doc_id"))
-    ws = Window.partitionBy("fp")
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return (
         fp.select(
             "doc_id",
             F.row_number().over(w).alias("rk"),
-            F.count("*").over(ws).alias("cluster_size"),
+            F.count("*").over(whole).alias("cluster_size"),
         )
         .filter(F.col("rk") == 1)
         .select(

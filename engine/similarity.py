@@ -718,11 +718,12 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos = _dot(F.col("eq"), F.col("e_emb")) / (
         F.col("nq") * _norm(F.col("e_emb"))
     )
+    # No distinct: the pairs are unique, since inverted holds one row
+    # per vector (its nearest cid) and a query probes distinct cids.
     scored = (
         inverted.join(F.broadcast(probes), "list_id")
         .filter(F.col("neighbor_id") != F.col("q_id"))
         .select("q_id", "neighbor_id", pin(cos, 10000).alias("cosine"))
-        .distinct()
     )
     return _top5(scored)
 

@@ -4,7 +4,10 @@ Every key runs its stream through :func:`_drain`, the one stream start
 in the engine: an ``availableNow`` trigger drains what the source holds
 at start in exactly-once microbatches, then stops — Structured
 Streaming's run-once form of a stream as a bounded batch job (Armbrust
-et al., SIGMOD 2018).  Most keys replay the events parquet through
+et al., SIGMOD 2018).  A drain whose only stateful operator is a
+deduplication stops after its last data batch; every other drain keeps
+Spark's trailing no-data batch, in which append-mode outer joins and
+state timeouts emit.  Most keys replay the events parquet through
 ``readStream``; the rate key drains one batch of the built-in rate
 source and the Python-source key one page per drain.  Keys whose
 drained result is DETERMINISTIC regardless of microbatch split
@@ -33,6 +36,7 @@ at exit.
 from __future__ import annotations
 
 import os
+import re
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,6 +73,30 @@ _CHECKPOINT_FILE_MANAGER = (
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+
+# Logical operators that keep state in a streaming plan (Spark's
+# UnsupportedOperationChecker.isStatefulOperation, plus Distinct, which
+# the optimizer rewrites into an Aggregate).  A stream-static Join is
+# counted too, which at worst keeps a drain on Spark's default.
+_DEDUP_NODES = frozenset({"Deduplicate", "DeduplicateWithinWatermark"})
+_STATEFUL_NODES = _DEDUP_NODES | {
+    "Aggregate", "Distinct", "Join", "FlatMapGroupsWithState",
+    "FlatMapGroupsInPandasWithState", "TransformWithState",
+    "TransformWithStateInPySpark",
+}
+# A node's name opens its line of the tree string, after the branch
+# marks; a streaming node's name carries a "~" prefix.
+_NODE_NAME = re.compile(r"^[\s:+\-~]*(\w+)", re.M)
+
+
+def _state_is_dedup_only(df: DataFrame) -> bool:
+    """True when every stateful operator of ``df``'s analyzed plan is a
+    deduplication.  Such a drain needs no trailing no-data microbatch:
+    that batch only evicts dedup state the watermark has passed, emits
+    nothing, and the drain's checkpoint is thrown away after it."""
+    tree = df._jdf.queryExecution().analyzed().toString()
+    stateful = set(_NODE_NAME.findall(tree)) & _STATEFUL_NODES
+    return bool(stateful) and stateful <= _DEDUP_NODES
 
 
 def _drain(
@@ -109,6 +137,12 @@ def _drain(
       until the 60-s maintenance pass).
     - ``shuffle.partitions`` = min(8, default parallelism): the state
       tasks of a microbatch run in one wave.
+    - ``noDataMicroBatches.enabled`` = false when
+      :func:`_state_is_dedup_only`: no trailing microbatch (planning,
+      state-store commits, offset and commit logs) that only evicts
+      dedup state from a checkpoint the caller discards.  Every other
+      plan keeps Spark's default: append-mode window aggregates, outer
+      stream-stream joins and state timeouts emit in that batch.
     - ``rocksdb``: the RocksDB state-store provider.  The drain then
       raises unless the query's last progress reports RocksDB custom
       metrics, so a silently ignored provider conf cannot pass."""
@@ -120,6 +154,8 @@ def _drain(
             _STREAM_SHUFFLE_PARTITIONS, spark.sparkContext.defaultParallelism
         ),
     }
+    if _state_is_dedup_only(df):
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     if rocksdb:
         confs["spark.sql.streaming.stateStore.providerClass"] = _ROCKSDB_PROVIDER
     with scoped_sql_conf(spark, confs):

@@ -1839,8 +1839,12 @@ def text_hashing_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ONE shuffle on the output keys (map-side combinable); no UDF,
     no vocabulary state."""
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    toks = d.select("doc_id", _tokens(F.col("text")).alias("toks"))
-    tok = toks.select("doc_id", F.explode("toks").alias("tok"))
+    # _tokens' filter lambda, unrolled past the explode: no lambda stops
+    # the scan, split and explode sharing one whole-stage stage, and no
+    # inferred size(<tokens>) > 0 filter tokenizes each text twice.
+    tok = d.select(
+        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("tok")
+    ).filter(F.col("tok") != "")
     slot = (
         F.aggregate(
             F.split(F.col("tok"), ""),

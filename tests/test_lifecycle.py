@@ -5,10 +5,12 @@ was built from; the per-process scratch root is removed at exit and
 swept once its process is gone; concurrent staged builds never see each
 other's half-built directories; an op whose stream fails leaves confs
 and streams as it found them; UDF kernels run where workers cannot
-import engine."""
+import engine; the curation_ingest ops compile their generated classes
+once and fit a codegen-cache budget."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import subprocess
@@ -236,6 +238,93 @@ def test_worker_kernels_run_outside_the_checkout(tmp_path):
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
     )
     assert out.returncode == 0, out.stderr[-3000:]
+
+
+# Classes each curation_ingest op compiles on its first call in a fresh
+# JVM, in the workload's op order (sim_ivf_topk's include the index
+# training it runs once per session).  A whole-stage stage counts twice
+# in local mode: the driver compiles it once as a fallback check under
+# the py4j thread's class loader, and the task again under the
+# executor's.
+_CURATION_FIRST_PASS = {
+    "udf_pandas_scalar": 6,
+    "text_hashing_tf": 11,
+    "dedup_keep_best": 17,
+    "mm_phash_bits": 3,
+    "sim_ivf_topk": 53,
+    "stream_dedup_state": 16,
+    "sink_parquet_partitioned": 15,
+}
+# Codegen-cache entries one steady curation_ingest pass holds.  Spark's
+# default cache has 100 entries in 4 Guava segments of 25, and a
+# segment fills by the class loaders' identity hashes, so a pass near
+# 100 entries overflows one segment in most JVMs and recompiles every
+# pass.
+_CURATION_STEADY_ENTRIES = 90
+
+
+def test_curation_codegen_census(tmp_path):
+    """In a fresh JVM with a codegen cache too large to evict, the
+    curation_ingest ops compile at most their pinned classes on pass 1
+    and none on pass 2 (no op's classes change from call to call), and
+    after the cache is emptied one pass refills at most the budget."""
+    code = (
+        f"import json, sys\nsys.path.insert(0, {REPO!r})\n"
+        "from pyspark.sql import SparkSession\n"
+        "from perfbench import run as perfbench\n"
+        "from perfbench.workloads import WORKLOADS\n"
+        f"corpus = {str(tmp_path / 'corpus')!r}\n"
+        "perfbench.corpus.generate(corpus, perfbench.CORPUS_SF,"
+        " perfbench.CORPUS_SEED)\n"
+        "spark = (SparkSession.builder.master('local[4]')\n"
+        "         .config('spark.sql.shuffle.partitions', '4')\n"
+        "         .config('spark.sql.session.timeZone', 'UTC')\n"
+        "         .config('spark.ui.enabled', 'false')\n"
+        "         .config('spark.sql.codegen.cache.maxEntries', '1000')\n"
+        "         .getOrCreate())\n"
+        "import engine\n"
+        "jvm = spark._jvm\n"
+        "compiled = jvm.org.apache.spark.metrics.source.CodegenMetrics"
+        ".METRIC_COMPILATION_TIME()\n"
+        "gen = jvm.java.lang.Class.forName("
+        "'org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$')\n"
+        "field = gen.getDeclaredField('cache')\n"
+        "field.setAccessible(True)\n"
+        "cache = field.get(gen.getField('MODULE$').get(None))\n"
+        "def run_pass():\n"
+        "    counts = {}\n"
+        "    for op in WORKLOADS['curation_ingest']['ops']:\n"
+        "        before = compiled.getCount()\n"
+        "        df = engine.QUERIES[op](spark, corpus)\n"
+        "        df.write.format('noop').mode('overwrite').save()\n"
+        "        counts[op] = compiled.getCount() - before\n"
+        "    return counts\n"
+        "first, second = run_pass(), run_pass()\n"
+        "cache.invalidateAll()\n"
+        "steady = sum(run_pass().values())\n"
+        "print(json.dumps({'first': first, 'second': second,"
+        " 'steady': steady, 'entries': cache.size()}))\n"
+        "spark.stop()\n"
+    )
+    # A fresh TMPDIR: pass 1 stages the replay sources, as in a perfbench run.
+    (tmp_path / "tmp").mkdir()
+    env = dict(os.environ, TMPDIR=str(tmp_path / "tmp"))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=900,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    census = json.loads(out.stdout.strip().splitlines()[-1])
+    first = census["first"]
+    assert list(first) == list(_CURATION_FIRST_PASS)
+    over = {
+        op: (n, _CURATION_FIRST_PASS[op])
+        for op, n in first.items()
+        if n > _CURATION_FIRST_PASS[op]
+    }
+    assert not over, over
+    assert set(census["second"].values()) == {0}, census["second"]
+    assert census["steady"] == census["entries"] <= _CURATION_STEADY_ENTRIES, census
 
 
 def _run_python(code: str, scratch_base: str) -> str:

@@ -6,6 +6,8 @@ fails HERE, not at the judge's bench.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 import engine
@@ -761,10 +763,24 @@ def test_streaks_single_shuffle_no_join(spark):
 
 
 def test_keep_best_single_shuffle_no_join(spark):
-    # Representative selection: rank and cluster size share one fp
-    # partitioning; no join anywhere in the plan.
+    # Representative selection: rank and cluster size are one Window
+    # operator over one fp partitioning; no join anywhere in the plan;
+    # the planted corpus costs one documents scan, not a union of two.
     plan = _plan(spark, "dedup_keep_best")
     assert "Join" not in plan
+    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("FileScan") == 1 and "documents.parquet" in plan, plan
+
+
+def test_ivf_topk_ranks_join_output_without_aggregate(spark):
+    # The (q_id, neighbor_id) pairs out of the probe join are unique
+    # (test_unit_semantics: the inverted lists partition the
+    # collection), so no distinct aggregate sits between the broadcast
+    # join and the top-5 window.
+    plan = _plan(spark, "sim_ivf_topk")
+    between = plan.split("BroadcastHashJoin", 1)[0].split("Window [", 1)[1]
+    assert "Aggregate" not in between, plan
 
 
 def test_dpp_prunes_fact_scan(spark):

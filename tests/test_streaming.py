@@ -65,6 +65,34 @@ def test_stream_dedup_state(spark):
     assert row.n_rows == row.n_distinct_ids == n_events
 
 
+def _drained_batches(spark, monkeypatch, key):
+    """The progress of every microbatch each of ``key``'s drains ran."""
+    from engine import streaming
+
+    drain, runs = streaming._drain, []
+
+    def recording(*args, **kwargs):
+        q = drain(*args, **kwargs)
+        runs.append(q.recentProgress)
+        return q
+
+    monkeypatch.setattr(streaming, "_drain", recording)
+    engine.QUERIES[key](spark, SF_DIR).collect()
+    return runs
+
+
+def test_dedup_drain_skips_the_trailing_batch(spark, monkeypatch):
+    # A dedup-only drain stops after its data: no trailing no-data batch
+    # whose only work is evicting the state of a discarded checkpoint.
+    # An outer stream-stream join still gets its own: it is the batch
+    # that emits the unmatched rows the final watermark closes.
+    (dedup,) = _drained_batches(spark, monkeypatch, "stream_dedup_state")
+    assert [p["numInputRows"] > 0 for p in dedup] == [True]
+    (outer,) = _drained_batches(spark, monkeypatch, "stream_stream_left_outer")
+    assert outer[-1]["numInputRows"] == 0
+    assert all(p["numInputRows"] > 0 for p in outer[:-1])
+
+
 def test_stream_foreach_batch_equals_batch(spark):
     sink = engine.QUERIES["stream_foreach_batch_sink"](spark, SF_DIR)
     batch = (

@@ -1927,6 +1927,28 @@ def test_session_memo_revalidates_after_clear_cache(spark, memo, key):
         assert all(map(_cached, frames))
 
 
+def test_ivf_inverted_lists_partition_the_collection(spark):
+    # sim_ivf_topk's probe join emits each (q_id, neighbor_id) pair at
+    # most once only because every vector sits in exactly one inverted
+    # list and a query's probed lists are distinct.
+    import numpy as np
+
+    from engine import similarity
+    from engine.core import session_memo
+
+    inverted, route = session_memo(
+        spark, "ivf_index", SF_DIR,
+        lambda: similarity._build_ivf_index(spark, SF_DIR),
+    )
+    n_vectors = load(spark, SF_DIR, "embeddings").count()
+    ids = inverted.groupBy("neighbor_id").count()
+    assert ids.count() == n_vectors
+    assert ids.filter(F.col("count") != 1).count() == 0
+    q = load(spark, SF_DIR, "embeddings").filter(F.col("vec_id") < 5).collect()
+    lists = route(np.stack([np.asarray(r["embedding"]) for r in q]))
+    assert all(len(set(top)) == len(top) == similarity._IVF_PROBES for top in lists)
+
+
 def test_sim_ivf_topk_warm_call_collects_only_its_queries(spark, monkeypatch):
     # The IVF index is trained once per session (core.session_memo
     # "ivf_index"): a warm call collects its 5 query rows to route them
