@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from engine.core import pin, pin_int, query
+from engine.dedup import _cc_propagate
 from engine.io import load
 from engine.similarity import _QR_Q, _qr_planes, _qr_proj_sql
 
@@ -952,6 +953,38 @@ _SEM_BITS = 8
 _SEM_VERIFY = 0.999
 
 
+def _cluster_and_keep_min(
+    spark: SparkSession, corpus: DataFrame, verified: DataFrame
+) -> DataFrame:
+    """The embedding-dedup pipelines' shared tail: connected components
+    (engine.dedup._cc_propagate) over the verified (src < dst) pairs in
+    both directions, then every ``corpus`` vector labelled
+    ``(vec_id, component_id, comp_size, kept)``; the component's min
+    vec_id is the kept representative.
+
+    Both verify gates admit only planted copies, so components are
+    stars or 3-chains around an original (diameter ≤ 2) and the
+    fixpoint lands in round 1: the label sum is probed from round 1 on,
+    not after the text graph's 2 warm-up rounds."""
+    both = verified.unionByName(
+        verified.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    labels = corpus.select(
+        F.col("vec_id").alias("doc_id"), F.col("vec_id").alias("label")
+    )
+    labels = _cc_propagate(spark, both, labels, probe_from=1)
+    size = F.count("*").over(Window.partitionBy("label"))
+    return labels.select(
+        F.col("doc_id").alias("vec_id"),
+        F.col("label").alias("component_id"),
+        size.alias("comp_size"),
+        F.when(F.col("doc_id") == F.col("label"), 1)
+        .otherwise(0)
+        .cast("int")
+        .alias("kept"),
+    )
+
+
 @query("pipeline_embedding_dedup", oracle=None)  # rows-only: LSH + iterative CC
 def pipeline_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SEMANTIC dedup end-to-end over the embedding table — the
@@ -977,8 +1010,6 @@ def pipeline_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import numpy as np
     import pandas as pd
-
-    from engine.dedup import _cc_propagate
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     perturbed = F.transform(
@@ -1058,28 +1089,7 @@ def pipeline_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .persist()
     )
-    both = verified.unionByName(
-        verified.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    labels = corpus.select("vec_id").select(
-        F.col("vec_id").alias("doc_id"), F.col("vec_id").alias("label")
-    )
-    from engine.core import scoped_sql_conf
-
-    # probe_from=0: the ≥0.999 gate admits only planted pairs (max
-    # organic cosine ≈ 0.5) — star components converge in round 1.
-    with scoped_sql_conf(spark, {"spark.sql.shuffle.partitions": 8}):
-        labels = _cc_propagate(both, labels, probe_from=0)
-    size = F.count("*").over(Window.partitionBy("label"))
-    return labels.select(
-        F.col("doc_id").alias("vec_id"),
-        F.col("label").alias("component_id"),
-        size.alias("comp_size"),
-        F.when(F.col("doc_id") == F.col("label"), 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("kept"),
-    )
+    return _cluster_and_keep_min(spark, corpus, verified)
 
 
 _EMBP_TBL, _EMBP_BITS, _EMBP_VER = 2, 8, 32
@@ -1208,9 +1218,6 @@ def pipeline_embedding_dedup_polyhash(
     import numpy as np
     import pandas as pd
 
-    from engine.core import scoped_sql_conf
-    from engine.dedup import _cc_propagate
-
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
     def _perturbed(shift: int):
@@ -1286,27 +1293,7 @@ def pipeline_embedding_dedup_polyhash(
         .persist()  # diamond: feeds both edge directions of CC
     )
     verified.count()  # EAGER (probe): kill the self-join persist race
-    both = verified.unionByName(
-        verified.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    labels = corpus.select(
-        F.col("vec_id").alias("doc_id"), F.col("vec_id").alias("label")
-    )
-    # probe_from=0: components here are stars/3-chains around an
-    # original (diameter ≤ 2) — the fixpoint lands in round 1, so probe
-    # every round instead of burning the text graph's 2 warmup rounds.
-    with scoped_sql_conf(spark, {"spark.sql.shuffle.partitions": 8}):
-        labels = _cc_propagate(both, labels, probe_from=0)
-    size = F.count("*").over(Window.partitionBy("label"))
-    return labels.select(
-        F.col("doc_id").alias("vec_id"),
-        F.col("label").alias("component_id"),
-        size.alias("comp_size"),
-        F.when(F.col("doc_id") == F.col("label"), 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("kept"),
-    )
+    return _cluster_and_keep_min(spark, corpus, verified)
 
 
 @query(

@@ -151,6 +151,59 @@ def scoped_sql_conf(spark: SparkSession, confs: dict):
                 spark.conf.set(k, v)
 
 
+_UNPROBED = object()
+
+
+def fixpoint(spark: SparkSession, seed: DataFrame, step, *, max_iters: int,
+             probe=None, probe_from: int = 0, what: str) -> DataFrame:
+    """The one checkpointed driver loop: ``step`` applied from ``seed``
+    until ``probe`` repeats, each round an eager ``localCheckpoint``.
+
+    Rounds count from 0, the seed (never checkpointed).  ``probe(state)``
+    (a tiny driver-side job) runs from round ``probe_from`` on, and the
+    first round whose probe equals the last one probed is returned.
+    ``probe=None`` runs exactly ``max_iters`` rounds.  At the cap it
+    raises, naming ``what`` (the loop and its cap's constant), rather
+    than return a state that has not converged.
+
+    Rounds run under 8 shuffle partitions: their reduce stages carry a
+    few thousand rows (connected components measured 8.3 s → 6.4 s at
+    sf0.1 against 32).  A local checkpoint's blocks go only when the
+    JVM's ContextCleaner happens to collect its RDD, so each round frees
+    its predecessor's once its own has materialized, and the raise path
+    frees the last.  The returned round's stays: the caller's frame
+    reads it."""
+
+    def release(df: DataFrame) -> None:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(True)
+
+    state, last, kept = seed, _UNPROBED, None
+    with scoped_sql_conf(spark, {"spark.sql.shuffle.partitions": 8}):
+        try:
+            for r in range(max_iters + 1):
+                if r:
+                    nxt = step(state).localCheckpoint(eager=True)
+                    if kept is not None:
+                        release(kept)
+                    state = kept = nxt
+                if probe is None or r < probe_from:
+                    continue
+                value = probe(state)
+                if value == last:
+                    return state
+                last = value
+            if probe is None:
+                return state
+            raise RuntimeError(
+                f"{what} did not converge within {max_iters} rounds — "
+                "raise its cap"
+            )
+        except BaseException:
+            if kept is not None:
+                release(kept)
+            raise
+
+
 _MODEL_ARTIFACT_MAX_ROWS = 4096
 
 

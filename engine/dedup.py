@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.core import pin, pin_int, query, scoped_sql_conf, session_memo
+from engine.core import fixpoint, pin, pin_int, query, session_memo
 from engine.io import load
 from engine.text import _TOKENS_SQL, _tokens, _trigrams
 
@@ -1494,10 +1494,12 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     over its neighborhood, then each label-GROUP takes the min over its
     members' candidates (star contraction — see the loop comment for why
     hop-min + pointer jumping alone degrades to one-hop creep), until a
-    fixpoint; labels localCheckpoint per iteration (lineage truncation),
-    and the convergence probe is a tiny label-sum aggregate (labels are
+    fixpoint; the rounds run in ``core.fixpoint`` (a checkpoint per
+    round, each freed once the next one has materialized), and the
+    convergence probe is a tiny label-sum aggregate (labels are
     monotone non-increasing, so equal consecutive sums ⇔ fixpoint) —
-    the Pregel-style halting check without the probe join.  Bounded by _CC_MAX_ITERS; raises if the cap is hit.
+    the Pregel-style halting check without the probe join.  Bounded by
+    _CC_MAX_ITERS; raises if the cap is hit.
 
     Output: (doc_id, component_id = min doc_id reachable, comp_size).
     """
@@ -1510,12 +1512,9 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).persist()
 
     labels = corpus.select("doc_id", F.col("doc_id").alias("label"))
-    # The loop's per-stage data is ~10k rows: run its driver-orchestrated
-    # jobs under 8 shuffle partitions (measured 8.3 s → 6.4 s at sf0.1;
-    # 32 tasks per tiny reduce stage is pure scheduling overhead).  The
-    # caller's conf is restored before the returned plan executes.
-    with scoped_sql_conf(spark, {"spark.sql.shuffle.partitions": 8}):
-        labels = _cc_propagate(both, labels)
+    # The first rounds always change on the text graph (measured
+    # 9437/7860/5641 at sf0.1): probe from round 3.
+    labels = _cc_propagate(spark, both, labels, probe_from=3)
 
     comp_size = F.count("*").over(Window.partitionBy("label"))
     return labels.select(
@@ -1526,7 +1525,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cc_propagate(
-    both: DataFrame, labels: DataFrame, probe_from: int = 2
+    spark: SparkSession, both: DataFrame, labels: DataFrame, probe_from: int
 ) -> DataFrame:
     """Star-contraction label propagation to the fixpoint.
 
@@ -1542,9 +1541,13 @@ def _cc_propagate(
     round.  This is the star-contraction kernel of the MapReduce CC
     family (Kiveris et al., "Connected Components in MapReduce and
     Beyond"); measured fixpoint in 7 rounds at sf0.1.
+
+    ``probe_from`` is the first round (``core.fixpoint`` counts the seed
+    as round 0) whose label sum is probed: rounds a caller knows will
+    change need no probe job.
     """
-    prev_sum = None
-    for it in range(_CC_MAX_ITERS):
+
+    def step(labels: DataFrame) -> DataFrame:
         # 1. hop-min: each vertex's candidate = min over own + neighbor
         #    labels.  The vertex's OWN label rides along as a tagged row
         #    (own=1) and is recovered inside the same aggregation — no
@@ -1577,35 +1580,24 @@ def _cc_propagate(
         parents = new.select(
             F.col("doc_id").alias("p_id"), F.col("label").alias("p_label")
         )
-        new = new.join(parents, new.label == parents.p_id, "left").select(
+        return new.join(parents, new.label == parents.p_id, "left").select(
             "doc_id",
             F.least(F.col("label"), F.coalesce("p_label", "label")).alias("label"),
         )
-        new_labels = new.localCheckpoint(eager=True)
-        labels = new_labels
-        # Convergence probe: labels are MONOTONE non-increasing (every
-        # step takes a min including the own label), so the label sum
-        # strictly decreases until the fixpoint — equal consecutive
-        # sums ⇔ no vertex changed.  One tiny aggregate job over the
-        # checkpointed labels replaces the old join+filter+count probe
-        # (one join fewer per probed round).  Sum accumulates in long
-        # (vertices × max-label ≪ 2^63) — ANSI-safe.  The first
-        # rounds always change on the text graph (measured
-        # 9437/7860/5641 at sf0.1) — skip their probes via probe_from
-        # (default 2); star-shaped graphs (one hub per component, e.g.
-        # the planted embedding-dedup clusters) converge in ROUND 1,
-        # so their callers pass probe_from=0 and exit after 2 rounds
-        # instead of 4.
-        if it < probe_from:
-            continue
-        cur_sum = labels.agg(F.sum("label")).first()[0]
-        if cur_sum == prev_sum:
-            return labels
-        prev_sum = cur_sum
-    # Better loud than silently returning non-canonical labels.
-    raise RuntimeError(
-        "connected components did not converge within "
-        f"{_CC_MAX_ITERS} rounds — raise _CC_MAX_ITERS (diameter cap)"
+
+    # Convergence probe: labels are MONOTONE non-increasing (every step
+    # takes a min including the own label), so the label sum strictly
+    # decreases until the fixpoint — equal consecutive sums ⇔ no vertex
+    # changed.  One tiny aggregate job over the checkpointed labels
+    # replaces the old join+filter+count probe (one join fewer per
+    # probed round).  Sum accumulates in long (vertices × max-label ≪
+    # 2^63) — ANSI-safe.
+    return fixpoint(
+        spark, labels, step,
+        max_iters=_CC_MAX_ITERS,
+        probe=lambda labels: labels.agg(F.sum("label")).first()[0],
+        probe_from=probe_from,
+        what="connected components (_CC_MAX_ITERS, the diameter cap)",
     )
 
 

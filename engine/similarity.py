@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from engine.core import ORACLES as _ORACLES
-from engine.core import fingerprint, pin, pin_int, query, session_memo
+from engine.core import fingerprint, fixpoint, pin, pin_int, query, session_memo
 from engine.dedup import _COS_STEP_SQL
 from engine.io import load
 
@@ -969,9 +969,8 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the K lowest vec_ids) + bounded per-subspace Lloyd passes, all as
     DataFrame aggregations (assign via one Arrow-batched argmin pass,
     re-center via posexplode → (m,code,pos) means; empty clusters keep
-    their previous codeword).  Same driver-orchestrated-iteration shape
-    as the IVF key; tiny reduces run under 8 shuffle partitions with
-    eager checkpoints.
+    their previous codeword).  The passes run in ``core.fixpoint`` (8
+    shuffle partitions, a checkpoint per pass).
 
     Search is the production two-stage shape: ADC SHORTLIST (top-100
     by table-lookup distance — measured quantization error on this
@@ -1055,42 +1054,41 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    from engine.core import scoped_sql_conf
+    # the (vec, subspace, component) explosion is codebook-independent
+    # — materialize once, reuse across Lloyd passes (bench clears it)
+    sub_all = sub_of(e).persist()
 
-    with scoped_sql_conf(spark, {"spark.sql.shuffle.partitions": 8}):
-        cb = cb.localCheckpoint(eager=True)
-        # the (vec, subspace, component) explosion is codebook-independent
-        # — materialize once, reuse across Lloyd passes (bench clears it)
-        sub_all = sub_of(e).persist()
-        for _ in range(_PQ_LLOYD):
-            coded = e.select(
-                "vec_id", _encode_udf(_cb_array(cb))("embedding").alias("codes")
+    def lloyd(cb: DataFrame) -> DataFrame:
+        coded = e.select(
+            "vec_id", _encode_udf(_cb_array(cb))("embedding").alias("codes")
+        )
+        means = (
+            sub_all
+            .join(coded, "vec_id")
+            .select(
+                "m",
+                "p",
+                "comp",
+                F.element_at("codes", F.col("m") + 1).alias("k"),
             )
-            means = (
-                sub_all
-                .join(coded, "vec_id")
-                .select(
-                    "m",
-                    "p",
-                    "comp",
-                    F.element_at("codes", F.col("m") + 1).alias("k"),
-                )
-                .groupBy("m", "k", "p")
-                .agg(F.avg("comp").alias("mc"))
-                .groupBy("m", "k")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("p", "mc"))),
-                        lambda s: s["mc"],
-                    ).alias("sv_new")
-                )
+            .groupBy("m", "k", "p")
+            .agg(F.avg("comp").alias("mc"))
+            .groupBy("m", "k")
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("p", "mc"))),
+                    lambda s: s["mc"],
+                ).alias("sv_new")
             )
-            # empty clusters keep their previous codeword
-            cb = (
-                cb.join(means, ["m", "k"], "left")
-                .select("m", "k", F.coalesce("sv_new", "sv").alias("sv"))
-                .localCheckpoint(eager=True)
-            )
+        )
+        # empty clusters keep their previous codeword
+        return cb.join(means, ["m", "k"], "left").select(
+            "m", "k", F.coalesce("sv_new", "sv").alias("sv")
+        )
+
+    cb = fixpoint(
+        spark, cb, lloyd, max_iters=_PQ_LLOYD, what="PQ Lloyd passes (_PQ_LLOYD)"
+    )
 
     Cfin = _cb_array(cb)
     coded = e.select(
@@ -1976,8 +1974,8 @@ def graph_pagerank_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     out-degree) persists once and is re-read by all three iterations
     — exactly the RDD-era `links.cache()` idiom, DataFrame-native.
     Bounded iterations = bounded plan depth; a convergence-driven
-    variant would wrap this step in the dedup_connected_components
-    loop harness (localCheckpoint per round, loud non-convergence)."""
+    variant would run this step in ``core.fixpoint`` (a checkpoint per
+    round, loud non-convergence)."""
     edges = _cos_block_edges(spark, sf_dir)
     und = edges.select(
         F.col("src").alias("u"), F.col("dst").alias("v")
@@ -2042,13 +2040,12 @@ def graph_reachability_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
     Convergence: ptr is monotone non-increasing (parents have strictly
     smaller ids), so equal consecutive ptr-sums ⇔ every pointer reached
     its root — the same tiny-aggregate probe as the CC kernel
-    (dedup_connected_components), localCheckpoint per round for lineage
-    truncation, loud failure at the cap.
+    (dedup_connected_components), in the same harness: the rounds run
+    in ``core.fixpoint`` (a checkpoint per round, loud failure at the
+    cap).
 
     Output: (doc_id, root_id, depth) — one row per document, exact, so
     the recursive-CTE oracle hash-proves the unrolled plan."""
-    from engine.core import scoped_sql_conf
-
     d = load(spark, sf_dir, "documents").select("doc_id")
     # The pointer-doubling join (state ⋈ state on ptr = node) requires
     # every ancestor id to EXIST as a node row; the recursive-CTE
@@ -2090,34 +2087,27 @@ def graph_reachability_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("dist"),
     )
-    with scoped_sql_conf(spark, {"spark.sql.shuffle.partitions": 8}):
-        state = state.localCheckpoint(eager=True)
-        prev_sum = None
-        for it in range(_REACH_MAX_ITERS):
-            p = state.select(
-                F.col("node").alias("p_node"),
-                F.col("ptr").alias("p_ptr"),
-                F.col("dist").alias("p_dist"),
-            )
-            state = (
-                state.join(p, state.ptr == p.p_node)
-                .select(
-                    "node",
-                    F.col("p_ptr").alias("ptr"),
-                    (F.col("dist") + F.col("p_dist")).alias("dist"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            cur_sum = state.agg(F.sum("ptr")).first()[0]
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-        else:
-            raise RuntimeError(
-                "reachability did not converge within "
-                f"{_REACH_MAX_ITERS} doubling rounds (depth > "
-                f"{2 ** _REACH_MAX_ITERS}) — raise _REACH_MAX_ITERS"
-            )
+
+    def double(state: DataFrame) -> DataFrame:
+        p = state.select(
+            F.col("node").alias("p_node"),
+            F.col("ptr").alias("p_ptr"),
+            F.col("dist").alias("p_dist"),
+        )
+        return state.join(p, state.ptr == p.p_node).select(
+            "node",
+            F.col("p_ptr").alias("ptr"),
+            (F.col("dist") + F.col("p_dist")).alias("dist"),
+        )
+
+    state = fixpoint(
+        spark, state, double,
+        max_iters=_REACH_MAX_ITERS,
+        probe=lambda state: state.agg(F.sum("ptr")).first()[0],
+        probe_from=1,
+        what="reachability pointer doubling (_REACH_MAX_ITERS, "
+        f"depth cap {2 ** _REACH_MAX_ITERS})",
+    )
     return state.select(
         F.col("node").alias("doc_id"),
         F.col("ptr").alias("root_id"),
@@ -3650,50 +3640,33 @@ def graph_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each round is one degree aggregate (map-side combined,
     edge-proportional exchange) + two semi-joins against the surviving
     node set — the Pregel message shape, O(E) per round, O(peel
-    depth) rounds; rounds run under 8 shuffle partitions
-    (driver-orchestrated tiny reduces) with eager per-round
-    checkpoints truncating the lineage, the CC/IVF loop discipline."""
-    from engine.core import scoped_sql_conf
+    depth) rounds, run in ``core.fixpoint`` like the CC kernel; the
+    final degree aggregate returns lazily, as CC's window does."""
 
-    edges = _cos_block_edges(spark, sf_dir)
-    with scoped_sql_conf(spark, {"spark.sql.shuffle.partitions": 8}):
-        E = edges.localCheckpoint(eager=True)
-        n_edges = E.count()
-        for _ in range(_KCORE_UNROLL):
-            deg = (
-                E.select(F.col("src").alias("node"))
-                .unionAll(E.select(F.col("dst").alias("node")))
-                .groupBy("node")
-                .agg(F.count("*").alias("deg"))
-            )
-            keep = deg.filter(F.col("deg") >= _KCORE_K).select("node")
-            E = (
-                E.join(keep, E.src == keep.node, "left_semi")
-                .join(keep, F.col("dst") == keep.node, "left_semi")
-                .localCheckpoint(eager=True)
-            )
-            n_new = E.count()
-            if n_new == n_edges:
-                break
-            n_edges = n_new
-        else:
-            raise RuntimeError(
-                f"k-core peeling did not converge within {_KCORE_UNROLL} "
-                "rounds — the unrolled oracle would diverge; raise "
-                "_KCORE_UNROLL (and re-measure the margin) instead of "
-                "serving a non-converged core"
-            )
-        # Final degree aggregate EXECUTES INSIDE the scope (eager
-        # checkpoint): a lazily returned frame would run this tiny
-        # reduce after the conf restores, at 32 partitions — the
-        # documented scoped-conf trap.
+    def degrees(E: DataFrame, name: str) -> DataFrame:
         return (
             E.select(F.col("src").alias("node"))
             .unionAll(E.select(F.col("dst").alias("node")))
             .groupBy("node")
-            .agg(F.count("*").alias("core_deg"))
-            .localCheckpoint(eager=True)
+            .agg(F.count("*").alias(name))
         )
+
+    def peel(E: DataFrame) -> DataFrame:
+        keep = degrees(E, "deg").filter(F.col("deg") >= _KCORE_K).select("node")
+        return E.join(keep, E.src == keep.node, "left_semi").join(
+            keep, F.col("dst") == keep.node, "left_semi"
+        )
+
+    # A cap hit means the unrolled oracle would diverge: raise
+    # _KCORE_UNROLL (and re-measure the margin) rather than serve a
+    # core that has not converged.
+    E = fixpoint(
+        spark, _cos_block_edges(spark, sf_dir), peel,
+        max_iters=_KCORE_UNROLL,
+        probe=DataFrame.count,
+        what="k-core peeling (_KCORE_UNROLL)",
+    )
+    return degrees(E, "core_deg")
 
 
 # -- ANN recall evaluation (r14 breadth: index-quality eval harness) --------

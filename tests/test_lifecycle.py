@@ -68,6 +68,73 @@ def test_repeat_calls_leave_no_residue(spark, key):
         assert sorted(first.collect()) == last_rows
 
 
+def _cached_rdds(spark) -> set:
+    """Ids of the RDDs that hold cached blocks."""
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "graph_reachability_roots",
+        "graph_kcore_decompose",
+        "dedup_connected_components",
+        "sim_pq_adc_topk",
+        "pipeline_embedding_dedup",
+        "pipeline_embedding_dedup_polyhash",
+    ],
+)
+def test_fixpoint_keys_keep_one_checkpoint_per_call(spark, key):
+    """A key whose rounds run in core.fixpoint keeps at most one
+    checkpoint per call, the returned round's, which its frame reads:
+    from call 2 to call 5 the cached RDD count grows by at most 1 per
+    call, and the frame of call 1 still reads its rows.  Without the
+    harness every round's checkpoint stayed until the JVM's
+    ContextCleaner collected it."""
+    run = engine.QUERIES[key]
+    first = run(spark, SF_DIR)
+    first_rows = sorted(first.collect())
+    run(spark, SF_DIR).collect()
+    after_second = len(_cached_rdds(spark))
+    for n in range(1, 4):
+        run(spark, SF_DIR).collect()
+        assert len(_cached_rdds(spark)) <= after_second + n
+    assert sorted(first.collect()) == first_rows
+
+
+@pytest.mark.parametrize("preset", ["3", None])
+def test_fixpoint_cap_raises_and_frees_its_rounds(spark, preset):
+    """A loop that does not converge within its cap raises, names the
+    loop, leaves the conf map as it was (shuffle partitions set or
+    unset before the call) and frees every round it checkpointed."""
+    from pyspark.sql import functions as F
+
+    from engine.core import fixpoint
+
+    key = "spark.sql.shuffle.partitions"
+    held = spark.conf.get(key)
+    try:
+        if preset is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, preset)
+        confs = spark.conf.getAll
+        before = _cached_rdds(spark)
+        seed = spark.range(100).select(F.col("id").alias("x"))
+        with pytest.raises(RuntimeError, match="never-converging test loop"):
+            fixpoint(
+                spark, seed, lambda df: df.select((F.col("x") + 1).alias("x")),
+                max_iters=3,
+                probe=lambda df: df.agg(F.sum("x")).first()[0],
+                what="never-converging test loop",
+            )
+        assert spark.conf.getAll == confs
+        assert spark.conf.get(key, None) == preset
+        assert _cached_rdds(spark) <= before
+    finally:
+        spark.conf.set(key, held)
+
+
 def _forks_so_far():
     """The host's count of processes forked since boot, or None where
     /proc/stat is absent."""

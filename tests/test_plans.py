@@ -219,41 +219,65 @@ def test_no_unpartitioned_window_over_unbounded_input():
     assert found <= allowed, f"new unpartitioned Window sites: {found - allowed}"
 
 
+def _top_level_body(src: str, name: str) -> str:
+    """Source of top-level function ``name``: from its def to the next
+    top-level def."""
+    rest = src[src.index(f"def {name}("):]
+    end = rest.find("\ndef ", 1)
+    return rest if end < 0 else rest[:end]
+
+
 def test_no_driver_side_collect_in_engine_source():
     # Operators must stay distributed: no .collect()/.toPandas()/RDD use
     # anywhere in engine source (bench/test code may collect).
     #
-    # ONE narrow exemption: engine.core.collect_model_artifact — a
-    # row-count-guarded collect of a TRAINED MODEL ARTIFACT (codebook /
-    # centroid table, bounded by construction at K·M rows) for closure
-    # capture in Arrow UDFs.  The alternative (crossJoin(broadcast) +
-    # artifact-as-column) duplicated the artifact into every Arrow row.
-    # The exemption is exactly one `.collect()` token inside that
-    # function body in core.py; operator modules must call the helper,
-    # never collect directly.
+    # TWO narrow exemptions, each exactly one token inside one function
+    # body in core.py; operator modules must call the helper instead:
+    # - `.collect()` in engine.core.collect_model_artifact — a
+    #   row-count-guarded collect of a TRAINED MODEL ARTIFACT (codebook /
+    #   centroid table, bounded by construction at K·M rows) for closure
+    #   capture in Arrow UDFs.  The alternative (crossJoin(broadcast) +
+    #   artifact-as-column) duplicated the artifact into every Arrow row.
+    # - `.rdd` in engine.core.fixpoint — the RDD under a round's local
+    #   checkpoint, unpersisted once the next round has materialized; a
+    #   checkpoint's blocks are otherwise held until the JVM's
+    #   ContextCleaner happens to collect it.  No rows leave the JVM.
     import pathlib
 
+    exempt = {".collect()": "collect_model_artifact", ".rdd": "fixpoint"}
     bad = []
     for p in pathlib.Path("engine").glob("*.py"):
         src = p.read_text()
         for needle in (".collect()", ".toPandas()", ".rdd", "sparkContext.parallelize"):
             n = src.count(needle)
-            if p.name == "core.py" and needle == ".collect()":
-                # The single token must sit INSIDE collect_model_artifact's
-                # body (between its def and the next top-level def), not
+            if p.name == "core.py" and needle in exempt:
+                # The single token must sit INSIDE its owner's body, not
                 # merely coexist with it somewhere in core.py.
-                start = src.index("def collect_model_artifact")
-                rest = src[start:]
-                end = rest.index("\ndef ", 1) if "\ndef " in rest[1:] else len(rest)
-                body = rest[:end]
-                assert n == 1 and body.count(needle) == 1, (
-                    "core.py may contain exactly one collect, inside "
-                    "collect_model_artifact's body"
+                owner = exempt[needle]
+                assert n == 1 and _top_level_body(src, owner).count(needle) == 1, (
+                    f"core.py may contain exactly one {needle}, inside "
+                    f"{owner}'s body"
                 )
                 continue
             if n:
                 bad.append((p.name, needle))
     assert not bad, f"driver-side materialization in engine/: {bad}"
+
+
+def test_local_checkpoints_only_in_fixpoint():
+    # Every checkpointed driver loop runs in engine.core.fixpoint, which
+    # frees each round's checkpoint once the next has materialized.  A
+    # localCheckpoint anywhere else would keep its blocks until the
+    # JVM's ContextCleaner happens to collect it: a long-lived session
+    # grew its block manager on every call of the loop keys.
+    import pathlib
+
+    srcs = {p.name: p.read_text() for p in pathlib.Path("engine").glob("*.py")}
+    inside = _top_level_body(srcs["core.py"], "fixpoint").count("localCheckpoint")
+    assert inside
+    outside = {n: t.count("localCheckpoint") for n, t in srcs.items()}
+    outside["core.py"] -= inside
+    assert not {n: c for n, c in outside.items() if c}, outside
 
 
 def test_session_state_has_one_owner_in_engine_source():
@@ -1879,3 +1903,51 @@ def test_tar_index_plan_map_only(spark):
     assert "Exchange" not in plan, f"mm_tar_index plans a shuffle:\n{plan}"
     plan = _plan(spark, "mm_wds_sample_group")
     assert plan.count("Exchange") == 1, plan
+
+
+def test_plan_fingerprint_renumbers_distinct_aggregate_groups():
+    # RewriteDistinctAggregates orders its Expand columns and numbers
+    # its gid groups by hash-map iteration over expression ids, so
+    # dq_schema_profile printed these two plans (ids already stripped)
+    # depending on which keys the session had planned before it.  The
+    # all-key "nothing changed" check must print one text for both.
+    from tools.plan_fingerprint import normalise
+
+    def plan(filter_gids, cols, rows):
+        filters = ", ".join(
+            f"count(c{i}#) FILTER (WHERE (gid# = {g})) AS nd{i}#"
+            for i, g in enumerate(filter_gids)
+        )
+        return "\n".join([
+            "+- Join Cross",
+            f"   +- Aggregate [{filters}]",
+            f"      +- Aggregate [{cols}], [{cols}]",
+            f"         +- Expand [{rows}], [{cols}]",
+            "            +- Project [o_orderkey#12L AS c0#40L]",
+        ])
+
+    after_other_keys = plan(
+        [5, 1, 3, 2, 6, 4],
+        "c0#, c5#, c1#, c2#, c3#, c4#, gid#",
+        "[null, null, c1#, null, null, null, 1], "
+        "[null, null, null, null, c3#, null, 2], "
+        "[null, null, null, c2#, null, null, 3], "
+        "[null, c5#, null, null, null, null, 4], "
+        "[c0#, null, null, null, null, null, 5], "
+        "[null, null, null, null, null, c4#, 6]",
+    )
+    alone = plan(
+        [4, 1, 5, 2, 3, 6],
+        "c3#, c0#, c1#, c4#, c2#, c5#, gid#",
+        "[null, null, c1#, null, null, null, 1], "
+        "[c3#, null, null, null, null, null, 2], "
+        "[null, null, null, c4#, null, null, 3], "
+        "[null, c0#, null, null, null, null, 4], "
+        "[null, null, null, null, c2#, null, 5], "
+        "[null, null, null, null, null, c5#, 6]",
+    )
+    canonical = normalise(alone)
+    assert normalise(after_other_keys) == canonical
+    assert canonical == normalise(canonical)
+    assert "count(c0#) FILTER (WHERE (gid# = 1)) AS nd0#" in canonical
+    assert "Aggregate [c0#, c1#, c2#, c3#, c4#, c5#, gid#]" in canonical

@@ -10,9 +10,10 @@ The first form writes one JSON file with, for every key in
 diff flagged), built on the sf0.001 corpus:
 
 - ``plan``: the optimized logical plan of the key's DataFrame, with
-  expression ids (``#123L``), lambda-variable suffixes, plan ids and the
-  per-process scratch directory normalised, so two runs of the same code
-  print the same text;
+  expression ids (``#123L``), lambda-variable suffixes, plan ids, the
+  per-process scratch directory and the column and group-id order of a
+  distinct aggregate's ``Expand`` normalised, so two runs of the same
+  code print the same text whatever keys ran before;
 - ``oracle``: DuckDB's ``json_serialize_sql`` AST of the key's oracle
   (``query_location`` stripped), which ignores parentheses and
   whitespace, or null for a rows-only key.
@@ -40,10 +41,76 @@ _NORMALISE = [
 ]
 
 
+_EXPAND = re.compile(r"^(?P<head>.*\bExpand )\[(?P<rows>.*)\], \[(?P<out>[^\[\]]*)\]$")
+_GID_TEST = re.compile(r"\bgid# = (\d+)")
+
+
+def _split_top(s: str) -> list[str]:
+    """``s`` split at each ", " outside brackets and parentheses."""
+    parts, depth, start = [], 0, 0
+    for i, ch in enumerate(s):
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        elif depth == 0 and s.startswith(", ", i):
+            parts.append(s[start:i])
+            start = i + 2
+    parts.append(s[start:])
+    return parts
+
+
+def _node_column(line: str) -> int:
+    return len(line) - len(line.lstrip(" :|+-"))
+
+
+def _canonical_expand(lines: list[str], i: int) -> None:
+    """Renumber the ``Expand`` of ``RewriteDistinctAggregates`` at
+    ``lines[i]`` in place.  Spark orders its columns and numbers its
+    ``gid`` groups by hash-map iteration over expressions whose ids
+    depend on the plans built earlier in the session, so the same query
+    prints permuted.  Here the columns go in name order, the projection
+    rows in the order of their entries, and the gids are reassigned in
+    that row order; the parent's grouping list and the first ancestor's
+    ``gid# = N`` filters are rewritten to match."""
+    m = _EXPAND.match(lines[i])
+    if not m:
+        return
+    out = _split_top(m["out"])
+    rows = [_split_top(r[1:-1]) for r in _split_top(m["rows"])]
+    if out[-1] != "gid#" or any(
+        len(r) != len(out) or not r[-1].isdigit() for r in rows
+    ):
+        return
+    order = sorted(range(len(out) - 1), key=out.__getitem__)
+    rows = sorted(([r[j] for j in order] + r[-1:] for r in rows), key=lambda r: r[:-1])
+    gids = sorted((r[-1] for r in rows), key=int)
+    new_gid = {r[-1]: g for r, g in zip(rows, gids)}
+    for r, g in zip(rows, gids):
+        r[-1] = g
+    canon = ", ".join([out[j] for j in order] + ["gid#"])
+    lines[i] = (
+        m["head"] + "[" + ", ".join(f"[{', '.join(r)}]" for r in rows) + f"], [{canon}]"
+    )
+    col = _node_column(lines[i])
+    for j in range(i - 1, -1, -1):
+        if _node_column(lines[j]) >= col:
+            continue
+        col = _node_column(lines[j])
+        if "gid# = " in lines[j]:
+            lines[j] = _GID_TEST.sub(lambda g: f"gid# = {new_gid[g[1]]}", lines[j])
+            return
+        lines[j] = lines[j].replace(f"[{m['out']}]", f"[{canon}]")
+
+
 def normalise(plan: str) -> str:
     for pat, rep in _NORMALISE:
         plan = pat.sub(rep, plan)
-    return plan
+    lines = plan.split("\n")
+    for i, line in enumerate(lines):
+        if "Expand [" in line:
+            _canonical_expand(lines, i)
+    return "\n".join(lines)
 
 
 def _strip_location(node):
